@@ -281,7 +281,10 @@ object SketchExpressions {
   * U_(K) the buffer max — the SAME double-typed expression the DuckDB
   * oracle evaluates, so the streamed estimate hash-matches a batch
   * recomputation. Hashes must be uniform on [0, 2^60) (md5-derived
-  * upstream). */
+  * upstream). `reduce`/`merge` double as the sketch fold of the snapshot
+  * manifest's per-column NDV (`#ndv:` lines): `graft.sources.StatsFold`,
+  * the one per-file stats fold, calls them directly inside each write
+  * task and in `analyze`, and the sketches merge driver-side. */
 object KmvDistinctAgg
     extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Double] {
   val K = 64
@@ -338,37 +341,21 @@ object KmvDistinctAgg
     org.apache.spark.sql.Encoders.scalaDouble
 }
 
-/** [[KmvDistinctAgg]]'s sketch-returning twin: same bottom-K fold, but
-  * `finish` hands back the SKETCH (sorted ascending) instead of the
-  * estimate — for callers that persist the sketch to merge with later
-  * data (the snapshot manifest's cumulative `#ndv:` lines). */
-object KmvSketchAgg
-    extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Seq[Long]] {
-  override def zero: Array[Long] = KmvDistinctAgg.zero
-  override def reduce(b: Array[Long], h: Long): Array[Long] =
-    KmvDistinctAgg.reduce(b, h)
-  override def merge(x: Array[Long], y: Array[Long]): Array[Long] =
-    KmvDistinctAgg.merge(x, y)
-  override def finish(b: Array[Long]): Seq[Long] = b.toSeq
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-}
-
 /** Fixed-size per-file membership Bloom for the snapshot manifest's
   * zone maps (`SnapshotTable` declared-column file skipping): 8192 bits
   * (1 KiB) per (file, declared column), k = 4 probes. The four bit
   * positions are four disjoint 13-bit SLICES of one xxhash64 — so the
-  * aggregation input is simply the hash's low 52 bits (one hash per
-  * row, no rehash per probe), and the read side recomputes the same
-  * slices from the literal's hash. State is a fixed 1 KiB bitmap no
-  * matter how many rows a file holds; a high-distinct file saturates
-  * the filter, which degrades to "cannot refute" — never unsound.
-  * Input contract: `hash & Mask52` for a non-null value, [[Skip]] for
-  * a null row (nulls must not set bits — `x = v` never matches null). */
-object BloomBitsAgg
-    extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Byte], Array[Byte]] {
+  * fold's input is simply the hash's low 52 bits (one hash per row, no
+  * rehash per probe), and the read side recomputes the same slices
+  * from the literal's hash. State is a fixed 1 KiB bitmap no matter how
+  * many rows a file holds; a high-distinct file saturates the filter,
+  * which degrades to "cannot refute" — never unsound. The bitmap is
+  * built by `graft.sources.StatsFold`, the one per-file stats fold
+  * (inside the write job of every commit layout, and in `analyze`);
+  * an empty bitmap means no Bloom recorded. Input contract:
+  * `hash & Mask52` for a non-null value, [[Skip]] for a null row
+  * (nulls must not set bits — `x = v` never matches null). */
+object BloomBits {
   val Bits = 8192
   val SliceBits = 13
   val K = 4
@@ -400,8 +387,9 @@ object BloomBitsAgg
     true
   }
 
-  override def zero: Array[Byte] = Array.empty
-  override def reduce(b: Array[Byte], packed: Long): Array[Byte] =
+  /** Set `packed`'s four bits in `b` (allocating the bitmap on the
+    * first non-null value); [[Skip]] leaves `b` as it is. */
+  def add(b: Array[Byte], packed: Long): Array[Byte] =
     if (packed == Skip) b
     else {
       val buf = if (b.length == Bits / 8) b else new Array[Byte](Bits / 8)
@@ -414,7 +402,9 @@ object BloomBitsAgg
       }
       buf
     }
-  override def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
+
+  /** Bitwise OR of two bitmaps of one file (either may be empty). */
+  def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
     if (x.isEmpty) y
     else if (y.isEmpty) x
     else {
@@ -422,43 +412,4 @@ object BloomBitsAgg
       while (i < x.length) { x(i) = (x(i) | y(i)).toByte; i += 1 }
       x
     }
-  /** null (no bloom recorded) for a file with no non-null values. */
-  override def finish(b: Array[Byte]): Array[Byte] =
-    if (b.isEmpty) null else b
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
-  override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
-}
-
-/** [[BloomBitsAgg]] over ARRAY columns: one input row carries the
-  * packed element hashes of its WHOLE array (null elements are
-  * pre-filtered by the collection SQL), so a single 1 KiB bitmap
-  * memberships every element of every row in the file — what the
-  * manifest's `array_contains(col, v)` file-skipping probes
-  * ([[graft.sources.SnapshotTable]] StatsPruning). A null row (null
-  * array) contributes nothing; a NON-NULL but EMPTY array allocates
-  * the (all-zero) bitmap — it is evidence that the row holds no
-  * element, so a file of empty arrays records a Bloom that refutes
-  * every probe rather than "no bloom recorded" which refutes none.
-  * Same bitmap geometry and read-side probe as the scalar aggregate. */
-object BloomBitsArrayAgg
-    extends org.apache.spark.sql.expressions.Aggregator[
-      Seq[Long], Array[Byte], Array[Byte]] {
-  override def zero: Array[Byte] = BloomBitsAgg.zero
-  override def reduce(b: Array[Byte], hs: Seq[Long]): Array[Byte] =
-    if (hs == null) b
-    else {
-      val buf =
-        if (b.length == BloomBitsAgg.Bits / 8) b
-        else new Array[Byte](BloomBitsAgg.Bits / 8)
-      hs.foldLeft(buf)(BloomBitsAgg.reduce)
-    }
-  override def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-    BloomBitsAgg.merge(x, y)
-  override def finish(b: Array[Byte]): Array[Byte] = BloomBitsAgg.finish(b)
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
-  override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
 }

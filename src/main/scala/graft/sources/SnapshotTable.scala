@@ -88,6 +88,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    independent of table size for appends.
   */
 object SnapshotTable {
+  import StatsFold.b64e
 
   /** Data-file-manifest reads performed since process start — the
     * instrumentation hook for the O(1)-reads-per-commit contract
@@ -194,8 +195,6 @@ object SnapshotTable {
     e.rows.contains(0L) || e.stats.contains(physName(f)) ||
       e.statsVer.exists(_ >= kindSinceVersion(f.dataType))
 
-  private def b64e(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
   private def b64d(s: String): Array[Byte] =
     java.util.Base64.getDecoder.decode(s)
 
@@ -601,7 +600,7 @@ object SnapshotTable {
             Some(XxHash64Function.hash(u, StringType, 42L))
           case _ => None
         }
-        h.forall(graft.functions.BloomBitsAgg.mightContain(bl, _))
+        h.forall(graft.functions.BloomBits.mightContain(bl, _))
       }
 
     private def mayEq(e: FileEntry, key: String, v: Any): Boolean =
@@ -1286,179 +1285,6 @@ object SnapshotTable {
     val full = schema.fields.toSeq.flatMap(nestedPathsOf).size ==
       statCols(schema).count(_.since >= 3)
     if (full) StatsFormatVersion else 2
-  }
-
-  /** Per-file zone maps for the just-written commit: ONE distributed
-    * aggregation over the batch keyed by `input_file_name()` — no
-    * driver-side footer reads, no per-file RPCs. Cost is O(batch) at
-    * every commit, never O(table). Returns fs-path →
-    * (rows, encoded column stats). Non-finite float bounds are
-    * dropped (stored as unknown — NaN/±Inf cannot anchor a sound
-    * range); float bounds are widened to double BEFORE encoding so the
-    * stored decimal round-trips exactly. */
-  private def collectFileStats(s: SparkSession, dataDir: String,
-      schema: StructType, partitioned: Boolean = false,
-      bloomCols: Set[String] = Set.empty,
-      mapKeys: Map[String, Seq[String]] = Map.empty)
-      : Option[(Map[String, (Long, String)], Map[String, Seq[Long]])] = {
-    // partitioned layouts reconstruct the partition column via hive
-    // directory discovery — the EXPLICIT schema pins its type (string
-    // values that look numeric must not be re-inferred as ints, or the
-    // recorded stat kind would contradict the table schema). The flat
-    // layout passes the schema too — the files were JUST written from
-    // exactly this schema, and the explicit schema skips the one-task
-    // footer-inference job Spark otherwise runs per commit.
-    val reader = if (partitioned) s.read.schema(storedSchema(schema))
-      else s.read.schema(schema)
-    statsAggregate(s, reader.parquet(dataDir), schema, bloomCols, mapKeys)
-  }
-
-  /** The one-pass per-file stats aggregation behind [[collectFileStats]]
-    * (fresh commits) and [[analyze]] (recollection over a live
-    * snapshot's files): rows, zone maps, string byte totals, and KMV
-    * NDV sketches per `input_file_name()`, keyed by normalized fs
-    * path. None when no column of `schema` is stat-eligible. */
-  private def statsAggregate(s: SparkSession, data: DataFrame,
-      schema: StructType, bloomCols: Set[String] = Set.empty,
-      mapKeys: Map[String, Seq[String]] = Map.empty)
-      : Option[(Map[String, (Long, String)], Map[String, Seq[Long]])] = {
-    import org.apache.spark.sql.functions._
-    // top-level atomic columns AND struct leaves (dotted keys) — one
-    // enumeration shared with the pruner's key resolution — plus the
-    // DECLARED array-element paths (keyed `top[]`, element bounds +
-    // element Bloom), appended last so scalar decoding is unchanged
-    val cols = statCols(schema) ++ mapStatPaths(schema, mapKeys) ++
-      arrayElemStatPaths(schema, bloomCols)
-    if (cols.isEmpty) return None // no eligible columns: pass skipped
-    // per-column NDV sketch rides the SAME pass: the bottom-64 KMV of
-    // md5 value hashes (nulls skip — NDV counts non-null distincts),
-    // collected per file and min-K-merged driver-side to ONE table-level
-    // sketch per column (mergeable, so appends later fold into it)
-    val kmv = udaf(graft.functions.KmvSketchAgg)
-    val bloomAgg = udaf(graft.functions.BloomBitsAgg)
-    def wantBloom(n: String, k: Char): Boolean =
-      bloomCols.contains(n) && (k == 'l' || k == 's')
-    val arrayBloom = udaf(graft.functions.BloomBitsArrayAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
-    val perCol: Seq[Seq[org.apache.spark.sql.Column]] =
-      cols.map { sp =>
-      if (sp.key.endsWith("[]")) {
-        // array-element stats: bounds over elements (array_min/max —
-        // null and empty arrays contribute no bound), null count =
-        // null-ARRAY rows (a null array can never satisfy
-        // array_contains), no byte/NDV accounting, and the element
-        // Bloom — one xxhash64 per element, packed like the scalar
-        // Bloom so the read-side probe replays it exactly
-        val ref = sp.sql
-        val elemHash =
-          if (sp.kind == 's') "xxhash64(x)"
-          else "xxhash64(CAST(x AS BIGINT))"
-        Seq(min(expr(s"array_min($ref)")),
-          max(expr(s"array_max($ref)")),
-          sum(when(expr(ref).isNull, 1L).otherwise(0L)),
-          sum(lit(null).cast("bigint")),
-          kmv(lit(graft.functions.KmvDistinctAgg.Skip)),
-          arrayBloom(expr(
-            s"transform(filter($ref, x -> x IS NOT NULL), " +
-              s"x -> $elemHash & ${graft.functions.BloomBitsAgg.Mask52}L)")))
-      } else {
-      val (n, k, sql) = (sp.key, sp.kind, sp.sql)
-      // canonical value rendering for the NDV hash; float-family values
-      // are normalized with +0.0 first so -0.0 and 0.0 — SQL-equal, and
-      // counted once by count(DISTINCT) — hash identically (NaN + 0.0
-      // stays NaN: one rendering, one hash). Date/timestamp render
-      // through their stored long form — timezone-independent, so the
-      // hash of an instant never varies with the session zone.
-      val canon =
-        if (k == 'd') s"CAST(($sql + CAST(0.0 AS DOUBLE)) AS STRING)"
-        else s"CAST($sql AS STRING)"
-      val base = Seq(min(expr(sql)), max(expr(sql)),
-        sum(when(expr(sql).isNull, 1L).otherwise(0L)),
-        // total payload bytes (string kind only): feeds the avg-width
-        // column statistic Catalyst's row-count-based sizing uses.
-        // expr(sql) not col(n): a string kind's stored form IS the
-        // column reference, already quoted for dotted leaf paths
-        if (k == 's') sum(octet_length(expr(sql)).cast("bigint"))
-        else sum(lit(null).cast("bigint")),
-        kmv(when(expr(sql).isNull, lit(graft.functions.KmvDistinctAgg.Skip))
-          .otherwise(expr(s"CAST(conv(substring(md5($canon), " +
-            "1, 15), 16, 10) AS BIGINT)"))))
-      if (!wantBloom(n, k)) base
-      else {
-        // declared-column Bloom: ONE xxhash64 per row; its low 52 bits
-        // carry all four 13-bit bit positions (BloomBitsAgg's slicing).
-        // Long kinds hash the stored long form CAST to BIGINT so the
-        // read-side probe (XxHash64 of the literal's long) matches
-        // exactly; strings hash their UTF-8 bytes directly.
-        val hashSql =
-          if (k == 's') s"xxhash64($sql)"
-          else s"xxhash64(CAST(($sql) AS BIGINT))"
-        base :+ bloomAgg(
-          when(expr(sql).isNull, lit(graft.functions.BloomBitsAgg.Skip))
-            .otherwise(expr(
-              s"$hashSql & ${graft.functions.BloomBitsAgg.Mask52}L")))
-      }
-      }
-    }
-    // variable per-column stride (5, or 6 with a Bloom): offsets(i) is
-    // column i's first agg position; 0 = __f, 1 = __rows
-    val offsets = perCol.map(_.size).scanLeft(2)(_ + _)
-    val rows = data
-      .groupBy(input_file_name().as("__f"))
-      .agg(count(lit(1)).as("__rows"), perCol.flatten: _*)
-      .collect()
-    val fileMap = rows.map { r =>
-      val fields = cols.zipWithIndex.map { case (sp, i) =>
-        val o = offsets(i)
-        statFieldString(sp.key, sp.kind, r.get(o), r.get(o + 1),
-          r.getLong(o + 2),
-          bytes = if (r.isNullAt(o + 3)) None else Some(r.getLong(o + 3)),
-          bloom = if (perCol(i).size < 6 || r.isNullAt(o + 5)) None
-            else Some(r.getAs[Array[Byte]](o + 5)))
-      }
-      new HPath(r.getString(0)).toUri.getPath ->
-        (r.getLong(1), fields.mkString(";"))
-    }.toMap
-    // array-element paths carry no NDV sketch (their kmv slot is a
-    // skip placeholder) — exclude them from the cumulative map
-    val ndv = cols.zipWithIndex.filterNot(_._1.key.endsWith("[]"))
-      .map { case (sp, i) =>
-      val name = sp.key
-      name -> rows.map(r =>
-          if (r.isNullAt(offsets(i) + 4)) Array.empty[Long]
-          else r.getSeq[Long](offsets(i) + 4).toArray)
-        .foldLeft(Array.empty[Long])(graft.functions.KmvDistinctAgg.merge)
-        .toSeq
-    }.toMap
-    Some((fileMap, ndv))
-  }
-
-  /** Manifest stat-value rendering shared by the read-back aggregation
-    * ([[statsAggregate]], which collects EXTERNAL values) and the fused
-    * single-pass collector (INTERNAL values — numerics box identically
-    * and `UTF8String.toString` is the same string, so both paths render
-    * the same text): "" for null and non-finite double bounds, floats
-    * widened to double BEFORE encoding so the stored decimal
-    * round-trips exactly. */
-  private def encStatValue(v: Any): String = v match {
-    case null => ""
-    case d: java.lang.Double if d.isNaN || d.isInfinite => ""
-    case fl: java.lang.Float => encStatValue(Double.box(fl.doubleValue))
-    case other => b64e(other.toString)
-  }
-
-  /** One manifest stats FIELD (`name:kind:min:max:nulls:bytes[:bloom]`)
-    * — the single encoder both stats paths share, so equivalence is by
-    * construction at the text level. */
-  private def statFieldString(name: String, kind: Char, minV: Any,
-      maxV: Any, nulls: Long, bytes: Option[Long],
-      bloom: Option[Array[Byte]]): String = {
-    val bytesStr = bytes.map(_.toString).getOrElse("")
-    val head = s"${b64e(name)}:$kind:${encStatValue(minV)}:" +
-      s"${encStatValue(maxV)}:$nulls:$bytesStr"
-    val bl = bloom.filter(_ != null)
-      .map(java.util.Base64.getEncoder.encodeToString).getOrElse("")
-    if (bl.isEmpty) head else s"$head:$bl"
   }
 
   /** The manifest-planned relation over an explicit entry subset —
@@ -2420,22 +2246,22 @@ object SnapshotTable {
     val uniq = java.util.UUID.randomUUID.toString.take(8)
     val staging = new HPath(tableDir, s".staging-$uniq")
     val delDir = new HPath(tableDir, s"data/del-$uniq")
-    matched
-      .repartitionByRange(4, col("__path"), col("__pos"))
-      .sortWithinPartitions(col("__path"), col("__pos"))
-      .write.mode("overwrite").parquet(staging.toString)
+    // rows per vector file from the count-only stats fold inside the
+    // write job: no read-back of what was just written
+    val counter = new StatsFoldJobTracker(new StatsFold(Array.empty), Nil, 0)
+    org.apache.spark.sql.graft.GraftSqlShims.writeParquet(matched
+        .repartitionByRange(4, col("__path"), col("__pos"))
+        .sortWithinPartitions(col("__path"), col("__pos")),
+      staging.toString, Nil, Some(counter))
     f.mkdirs(delDir.getParent)
     require(f.rename(staging, delDir),
       s"deletion-vector rename failed $staging -> $delDir")
-    val counts = s.read.parquet(delDir.toString)
-      .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => new HPath(r.getString(0)).toUri.getPath -> r.getLong(1)).toMap
+    val counts = counter.fold.result(counter.files.toMap)._1
     val statuses = f.listStatus(delDir).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     val lines = statuses.flatMap { st =>
-      counts.get(st.getPath.toUri.getPath) match {
-        case Some(n) => Some(s"${st.getPath.toString}\t${st.getLen}\t$n\t")
+      counts.get(st.getPath.getName) match {
+        case Some((n, _)) => Some(s"${st.getPath.toString}\t${st.getLen}\t$n\t")
         case None => f.delete(st.getPath, false); None // zero-row part
       }
     }
@@ -2551,207 +2377,103 @@ object SnapshotTable {
       ok
     }
 
-  /** Write `df` into a fresh, race-free uniquely-named data directory
-    * (staged + renamed) and return it with the manifest entries
-    * (path, size, rows, zone maps) of its files. With `bucket` set,
-    * the batch is hash-clustered into `n` buckets first
-    * (`repartition(n, col)` — partition index i IS Spark's bucket id:
-    * both are `pmod(murmur3(key), n)`), sorted within each bucket, and
-    * each output file is renamed to carry its bucket id in Spark's
-    * `_%05d` bucket-file convention so the scan can group by bucket. */
-  /** `preShaped`: the caller already laid the rows out (a per-partition
-    * Z-order rewrite range-partitions by (partition cols, z)) — skip
-    * the hive-writer clustering repartition that would destroy it. */
-  /** Kill switch for the fused single-pass commit stats (spec/testing
-    * doorway, like [[delDiffCollectRows]]): `false` restores the
-    * read-back [[collectFileStats]] job on every commit. */
-  private[sources] var fuseCommitStats: Boolean = true
-
-  /** Per-write-task stats container for the FUSED single-pass commit
-    * (guide §6/§2.4: the commit's stats ride the write job instead of
-    * re-reading what it just wrote): one instance per task, shipped to
-    * the driver on a collection accumulator keyed by the task's
-    * partition index — which, for a flat non-bucketed write with
-    * `maxRecordsPerFile` off, IS the `part-NNNNN` index of the one
-    * file the task writes. */
-  private[sources] final class CommitPartStats(nCols: Int)
-      extends Serializable {
-    var rows: Long = 0L
-    val minV = new Array[Any](nCols)
-    val maxV = new Array[Any](nCols)
-    val nulls = new Array[Long](nCols)
-    val bytes = new Array[Long](nCols)
-    val bytesSeen = new Array[Boolean](nCols)
-    val kmv: Array[Array[Long]] = Array.fill(nCols)(Array.empty[Long])
-    val bloom: Array[Array[Byte]] = Array.fill(nCols)(Array.empty[Byte])
-  }
-
-  /** One stat column's layout inside the fused probe projection:
-    * ordinals of its evaluated input columns (-1 = absent). Scalar
-    * paths read value/kmv/bloom; array-element paths read
-    * min/max/null-flag/element-hash-array. The INPUT EXPRESSIONS are
-    * the exact SQL fragments [[statsAggregate]] feeds its aggregate
-    * functions, so both paths evaluate identical Spark semantics; only
-    * the FOLD (min/max/sum/bottom-K/bloom-bits) moves into the task. */
-  private final case class FusedColSpec(key: String, kind: Char,
-    isArray: Boolean, valIdx: Int, minIdx: Int, maxIdx: Int,
-    nullFlagIdx: Int, kmvIdx: Int, bloomIdx: Int, bloomArrIdx: Int,
-    valueType: DataType)
-
-  /** Spark-identical comparison for the types [[statSql]] can produce
-    * (every date/timestamp/decimal kind reduces to int/long there;
-    * doubles order with NaN greatest and ±0.0 equal, exactly
-    * Catalyst's SQLOrderingUtil rule the Min/Max aggregates use). */
-  private def statCompare(dt: DataType): (Any, Any) => Int = dt match {
-    case org.apache.spark.sql.types.ByteType =>
-      (a, b) => java.lang.Byte.compare(a.asInstanceOf[Byte], b.asInstanceOf[Byte])
-    case org.apache.spark.sql.types.ShortType =>
-      (a, b) => java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short])
-    case org.apache.spark.sql.types.IntegerType =>
-      (a, b) => java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-    case org.apache.spark.sql.types.LongType =>
-      (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    case org.apache.spark.sql.types.FloatType =>
-      (a, b) => org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-        .compareFloats(a.asInstanceOf[Float], b.asInstanceOf[Float])
-    case org.apache.spark.sql.types.DoubleType =>
-      (a, b) => org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-        .compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double])
-    case org.apache.spark.sql.types.StringType =>
-      (a, b) => a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-        .compareTo(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    case other => throw new IllegalStateException(
-      s"fused commit stats: unexpected stat value type $other")
-  }
-
-  /** Retain an internal value beyond its (possibly reused) row buffer. */
-  private def statRetain(v: Any): Any = v match {
-    case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-    case other => other
-  }
-
-  /** Build the fused probe's extra input columns + specs. `base` is the
-    * ordinal where the extra columns start. Mirrors [[statsAggregate]]'s
-    * per-column expression list exactly. */
-  private def fusedStatInputs(cols: Seq[StatPath], bloomCols: Set[String],
-      base: Int): (Seq[org.apache.spark.sql.Column], Seq[FusedColSpec]) = {
+  /** The stat INPUT columns of the per-file [[StatsFold]] for `paths`,
+    * laid out from ordinal `base` of the row the fold reads: per scalar
+    * path its stored-form value, the KMV value hash (md5 of a canonical
+    * rendering; nulls skip) and, for a declared Bloom, the packed
+    * xxhash64; per declared ARRAY path the element bounds, the
+    * null-array flag and the packed element hashes. Only the
+    * order-insensitive fold runs outside Spark; every value the stats
+    * record is computed by these Spark expressions. */
+  private def statInputs(paths: Seq[StatPath], bloomCols: Set[String],
+      base: Int): (Seq[org.apache.spark.sql.Column], Seq[FoldSlot]) = {
     import org.apache.spark.sql.functions._
+    import graft.functions.{BloomBits, KmvDistinctAgg}
     val exprs = Seq.newBuilder[org.apache.spark.sql.Column]
-    val specs = Seq.newBuilder[FusedColSpec]
     var at = base
-    def add(c: org.apache.spark.sql.Column): Int = {
-      exprs += c.as(s"__graft_stat_$at"); val i = at; at += 1; i
+    def add(c: org.apache.spark.sql.Column): Unit = {
+      exprs += c.as(s"__graft_stat_$at"); at += 1
     }
-    def wantBloom(n: String, k: Char): Boolean =
-      bloomCols.contains(n) && (k == 'l' || k == 's')
-    cols.foreach { sp =>
+    val slots = paths.map { sp =>
+      val first = at
       if (sp.key.endsWith("[]")) {
+        // element bounds (null and empty arrays contribute none), null
+        // count = null-ARRAY rows (a null array never satisfies
+        // array_contains), and one xxhash64 per non-null element,
+        // packed like the scalar Bloom so the read-side probe replays it
         val ref = sp.sql
         val elemHash =
-          if (sp.kind == 's') "xxhash64(x)"
-          else "xxhash64(CAST(x AS BIGINT))"
-        val minI = add(expr(s"array_min($ref)"))
-        val maxI = add(expr(s"array_max($ref)"))
-        val nullI = add(expr(ref).isNull)
-        val bloomArrI = add(expr(
-          s"transform(filter($ref, x -> x IS NOT NULL), " +
-            s"x -> $elemHash & ${graft.functions.BloomBitsAgg.Mask52}L)"))
-        specs += FusedColSpec(sp.key, sp.kind, isArray = true,
-          valIdx = -1, minIdx = minI, maxIdx = maxI, nullFlagIdx = nullI,
-          kmvIdx = -1, bloomIdx = -1, bloomArrIdx = bloomArrI,
-          valueType = org.apache.spark.sql.types.NullType)
+          if (sp.kind == 's') "xxhash64(x)" else "xxhash64(CAST(x AS BIGINT))"
+        add(expr(s"array_min($ref)"))
+        add(expr(s"array_max($ref)"))
+        add(expr(ref).isNull)
+        add(expr(s"transform(filter($ref, x -> x IS NOT NULL), " +
+          s"x -> $elemHash & ${BloomBits.Mask52}L)"))
+        FoldSlot(sp.key, sp.kind, isArray = true, first, hasBloom = true,
+          org.apache.spark.sql.types.NullType)
       } else {
         val (n, k, sql) = (sp.key, sp.kind, sp.sql)
+        // canonical rendering for the NDV hash: float-family values are
+        // normalized with +0.0 first so -0.0 and 0.0 (SQL-equal, counted
+        // once by count(DISTINCT)) hash identically; date/timestamp
+        // render through their stored long form, independent of the
+        // session zone
         val canon =
           if (k == 'd') s"CAST(($sql + CAST(0.0 AS DOUBLE)) AS STRING)"
           else s"CAST($sql AS STRING)"
-        val valI = add(expr(sql))
-        val kmvI = add(
-          when(expr(sql).isNull, lit(graft.functions.KmvDistinctAgg.Skip))
-            .otherwise(expr(s"CAST(conv(substring(md5($canon), " +
-              "1, 15), 16, 10) AS BIGINT)")))
-        val bloomI =
-          if (!wantBloom(n, k)) -1
-          else {
-            val hashSql =
-              if (k == 's') s"xxhash64($sql)"
-              else s"xxhash64(CAST(($sql) AS BIGINT))"
-            add(when(expr(sql).isNull,
-                lit(graft.functions.BloomBitsAgg.Skip))
-              .otherwise(expr(
-                s"$hashSql & ${graft.functions.BloomBitsAgg.Mask52}L")))
-          }
-        specs += FusedColSpec(n, k, isArray = false,
-          valIdx = valI, minIdx = -1, maxIdx = -1, nullFlagIdx = -1,
-          kmvIdx = kmvI, bloomIdx = bloomI,
-          valueType = org.apache.spark.sql.types.NullType, bloomArrIdx = -1)
+        add(expr(sql))
+        add(when(expr(sql).isNull, lit(KmvDistinctAgg.Skip))
+          .otherwise(expr(s"CAST(conv(substring(md5($canon), 1, 15), 16, 10) AS BIGINT)")))
+        // declared-column Bloom: ONE xxhash64 per row, whose low 52 bits
+        // carry all four 13-bit positions; long kinds hash the stored
+        // long form so the read-side probe (XxHash64 of the literal's
+        // long) matches, strings hash their UTF-8 bytes
+        val bloom = bloomCols.contains(n) && (k == 'l' || k == 's')
+        if (bloom) {
+          val hashSql =
+            if (k == 's') s"xxhash64($sql)" else s"xxhash64(CAST(($sql) AS BIGINT))"
+          add(when(expr(sql).isNull, lit(BloomBits.Skip))
+            .otherwise(expr(s"$hashSql & ${BloomBits.Mask52}L")))
+        }
+        FoldSlot(n, k, isArray = false, first, hasBloom = bloom,
+          org.apache.spark.sql.types.NullType)
       }
     }
-    (exprs.result(), specs.result())
+    (exprs.result(), slots)
   }
 
-  /** Fold one internal row into the task's stats (valueType in each
-    * spec must already be resolved from the probe schema). */
-  private def fusedUpdate(specs: Array[FusedColSpec],
-      cmps: Array[(Any, Any) => Int], st: CommitPartStats,
-      row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-    st.rows += 1
-    var c = 0
-    while (c < specs.length) {
-      val sp = specs(c)
-      if (sp.isArray) {
-        if (row.getBoolean(sp.nullFlagIdx)) st.nulls(c) += 1
-        else {
-          if (!row.isNullAt(sp.minIdx)) {
-            val v = row.get(sp.minIdx, sp.valueType)
-            if (st.minV(c) == null || cmps(c)(v, st.minV(c)) < 0)
-              st.minV(c) = statRetain(v)
-          }
-          if (!row.isNullAt(sp.maxIdx)) {
-            val v = row.get(sp.maxIdx, sp.valueType)
-            if (st.maxV(c) == null || cmps(c)(v, st.maxV(c)) > 0)
-              st.maxV(c) = statRetain(v)
-          }
-          // non-null array (even empty): allocate — a file of empty
-          // arrays records an all-zero bloom, not "no bloom recorded"
-          // (the BloomBitsArrayAgg rule)
-          val hs = row.getArray(sp.bloomArrIdx)
-          var buf = st.bloom(c)
-          if (buf.length != graft.functions.BloomBitsAgg.Bits / 8)
-            buf = new Array[Byte](graft.functions.BloomBitsAgg.Bits / 8)
-          var i = 0
-          val n = hs.numElements()
-          while (i < n) {
-            buf = graft.functions.BloomBitsAgg.reduce(buf, hs.getLong(i))
-            i += 1
-          }
-          st.bloom(c) = buf
-        }
-      } else {
-        if (row.isNullAt(sp.valIdx)) st.nulls(c) += 1
-        else {
-          val v = row.get(sp.valIdx, sp.valueType)
-          if (st.minV(c) == null || cmps(c)(v, st.minV(c)) < 0)
-            st.minV(c) = statRetain(v)
-          if (st.maxV(c) == null || cmps(c)(v, st.maxV(c)) > 0)
-            st.maxV(c) = statRetain(v)
-          if (sp.kind == 's') {
-            st.bytes(c) += v
-              .asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-              .numBytes()
-            st.bytesSeen(c) = true
-          }
-        }
-        st.kmv(c) = graft.functions.KmvDistinctAgg.reduce(
-          st.kmv(c), row.getLong(sp.kmvIdx))
-        if (sp.bloomIdx >= 0)
-          st.bloom(c) = graft.functions.BloomBitsAgg.reduce(
-            st.bloom(c), row.getLong(sp.bloomIdx))
-      }
-      c += 1
-    }
+  /** The per-file stats fold over `df`: the frame evaluating `prefix`
+    * then the stat inputs of `paths`, and the [[StatsFold]] reading it
+    * (slot value types resolved from that frame's schema). */
+  private def statsFold(df: DataFrame, paths: Seq[StatPath],
+      bloomCols: Set[String], prefix: Seq[org.apache.spark.sql.Column] = Nil)
+      : (DataFrame, StatsFold) = {
+    val (inputs, slots) = statInputs(paths, bloomCols, prefix.size)
+    val probe = df.select(prefix ++ inputs: _*)
+    (probe, new StatsFold(slots.map(sl =>
+      sl.copy(valueType = probe.schema(sl.first).dataType)).toArray))
   }
 
+  /** Write `df` into a fresh, race-free uniquely-named data directory
+    * (staged + renamed) and return it with the manifest entries
+    * (path, size, rows, zone maps) of its files and the batch's NDV
+    * sketches. With `bucket` set, the batch is hash-clustered into `n`
+    * buckets first (`repartition(n, col)` — partition index i IS
+    * Spark's bucket id: both are `pmod(murmur3(key), n)`), sorted
+    * within each bucket, and each output file is renamed to carry its
+    * bucket id in Spark's `_%05d` bucket-file convention so the scan
+    * can group by bucket. `preShaped`: the caller already laid the rows
+    * out (a per-partition Z-order rewrite range-partitions by
+    * (partition cols, z)) — skip the hive-writer clustering
+    * repartition that would destroy it.
+    *
+    * The per-file stats come from ONE fold inside the write job, for
+    * every layout: a [[StatsFoldJobTracker]] rides the writer (Spark's
+    * per-file `WriteTaskStatsTracker` hook, keyed by the real file
+    * path, so hive directories and `maxRecordsPerFile` splits need no
+    * matching), evaluates the stat inputs ([[statInputs]]) on each
+    * written row and folds them per file. No job starts after the write
+    * job: the stats need no read-back of the batch. */
   private def writeDataDir(s: SparkSession, tableDir: String, df0: DataFrame,
       uniq: String, bucket: Option[(Int, String)] = None,
       partitionBy: Seq[String] = Nil,
@@ -2818,72 +2540,26 @@ object SnapshotTable {
         }
       case _ => df0
     }
-    // FUSED single-pass commit stats (guide §6/§2.4): for the flat
-    // non-bucketed layout — where each write task emits exactly one
-    // `part-NNNNN` file (no partition dirs, no maxRecordsPerFile
-    // splitting) — the per-file zone maps, byte totals, KMV NDV and
-    // Bloom bits fold INSIDE the write job via a per-task observer +
-    // collection accumulator, instead of a second job re-reading the
-    // just-written batch. Halves commit I/O at scale and drops one job
-    // + one exchange per commit. Stat INPUTS stay Spark expressions
-    // (the exact statsAggregate fragments: statSql stored forms, the
-    // md5 canon, xxhash64 bloom hashes), so the oracle-pinned
-    // estimator semantics are untouched; only the order-insensitive
-    // fold moves into the task. Accumulator updates inside a result
-    // stage are applied exactly once per task, so retries/speculation
-    // cannot double-count.
-    val fusedPaths: Seq[StatPath] =
-      statCols(df.schema) ++ mapStatPaths(df.schema, mapKeys) ++
-        arrayElemStatPaths(df.schema, bloomCols)
-    val fusable = fuseCommitStats && bucket.isEmpty && partitionBy.isEmpty &&
-      fusedPaths.nonEmpty &&
-      s.conf.get("spark.sql.files.maxRecordsPerFile", "0") == "0"
-    val fusedAcc: Option[org.apache.spark.util.CollectionAccumulator[
-      (Int, CommitPartStats)]] =
-      if (!fusable) None
-      else {
-        def esc(n: String) = "`" + n.replace("`", "``") + "`"
-        val dataCols = df.columns.toIndexedSeq.map(n => col(esc(n)))
-        val (extraCols, specs0) =
-          fusedStatInputs(fusedPaths, bloomCols, df.columns.length)
-        val probe = df.select(dataCols ++ extraCols: _*)
-        val pSchema = probe.schema
-        val specs = specs0.map { sp =>
-          val vi = if (sp.isArray) sp.minIdx else sp.valIdx
-          sp.copy(valueType = pSchema(vi).dataType)
-        }.toArray
-        val cmps: Array[(Any, Any) => Int] =
-          specs.map(sp => statCompare(sp.valueType))
-        val acc = s.sparkContext
-          .collectionAccumulator[(Int, CommitPartStats)]("graft.commit.stats")
-        val nCols = specs.length
-        val rdd = probe.queryExecution.toRdd.mapPartitionsWithIndex {
-          (pid, it) =>
-            val st = new CommitPartStats(nCols)
-            new scala.collection.AbstractIterator[
-              org.apache.spark.sql.catalyst.InternalRow] {
-              private var flushed = false
-              override def hasNext: Boolean = {
-                val h = it.hasNext
-                if (!h && !flushed) { acc.add((pid, st)); flushed = true }
-                h
-              }
-              override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-                val r = it.next(); fusedUpdate(specs, cmps, st, r); r
-              }
-            }
-        }
-        org.apache.spark.sql.GraftSqlShim.ofInternalRows(s, rdd, pSchema)
-          .select(df.columns.toIndexedSeq.map(n => col(esc(n))): _*)
-          .write.mode("overwrite").parquet(staging.toString)
-        Some(acc)
+    val statPaths = statCols(df.schema) ++ mapStatPaths(df.schema, mapKeys) ++
+      arrayElemStatPaths(df.schema, bloomCols)
+    val fold = if (statPaths.isEmpty) None
+      else Some(statsFold(df, statPaths, bloomCols))
+    val tracker = fold.map { case (probe, fd) =>
+      import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences}
+      // the stat inputs as analyzed over `df`, runtime-replaceable
+      // functions lowered, bound to the row the writer hands over
+      val layout = org.apache.spark.sql.graft.GraftSqlShims.writerRowLayout(df, partitionBy)
+      val inputs = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+        probe.queryExecution.analyzed) match {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+          BindReferences.bindReferences(p.projectList, new AttributeSeq(layout))
+        case other => throw new IllegalStateException(
+          s"stats fold: unexpected stat input plan ${other.nodeName}")
       }
-    if (fusedAcc.isEmpty) {
-      val writer = df.write.mode("overwrite")
-      (if (partitionBy.isEmpty) writer
-       else writer.partitionBy(partitionBy: _*))
-        .parquet(staging.toString)
+      new StatsFoldJobTracker(fd, inputs, partitionBy.size)
     }
+    org.apache.spark.sql.graft.GraftSqlShims.writeParquet(df, staging.toString,
+      partitionBy, tracker)
     f.mkdirs(dataDir.getParent)
     require(f.rename(staging, dataDir),
       s"snapshot commit: data rename failed $staging -> $dataDir")
@@ -2912,6 +2588,11 @@ object SnapshotTable {
         val renamed = name.substring(0, dot) + f"_$bid%05d" + name.substring(dot)
         require(f.rename(st.getPath, new HPath(st.getPath.getParent, renamed)),
           s"bucketed commit: rename failed for $name")
+        tracker.foreach { t =>
+          val key = StatsFold.relKey(st.getPath.toString, partitionBy.size + 1)
+          t.files.remove(key).foreach(ff =>
+            t.files(key.stripSuffix(name) + renamed) = ff)
+        }
       }
     }
     // flat layout lists files directly; hive layout walks one
@@ -2942,56 +2623,15 @@ object SnapshotTable {
           .map(_ -> None)
       else walkParts(dataDir, 0, Nil).map { case (st, vs) => st -> Some(vs) }
     val statuses = listed.map(_._1)
-    // fused-path assembly: task partition index ↔ part-file index. Any
-    // mismatch (a file whose index has no stats entry — should be
-    // impossible for this layout) falls back to the read-back job
-    // rather than publishing wrong stats.
-    def assembleFused(acc: org.apache.spark.util.CollectionAccumulator[
-        (Int, CommitPartStats)]): Option[(Map[String, (Long, String)],
-        Map[String, Seq[Long]])] = {
-      import scala.jdk.CollectionConverters._
-      val byPid = acc.value.asScala.map(t => t._1 -> t._2).toMap
-      val partRe = """part-(\d+)-.*""".r
-      val entries = statuses.flatMap { st =>
-        st.getPath.getName match {
-          case partRe(idx) => byPid.get(idx.toInt).map(st -> _)
-          case _ => None
-        }
-      }
-      if (entries.size != statuses.size) None
-      else {
-        // a zero-row task's file carries NO stats entry — the legacy
-        // aggregation has no group for it, and writeDataDir then
-        // records the bare zero-row form; match that exactly
-        val fm = entries.filter(_._2.rows > 0L).map { case (st, ps) =>
-          val fields = fusedPaths.zipWithIndex.map { case (sp, c) =>
-            statFieldString(sp.key, sp.kind, ps.minV(c), ps.maxV(c),
-              ps.nulls(c),
-              bytes = if (ps.bytesSeen(c)) Some(ps.bytes(c)) else None,
-              bloom = if (ps.bloom(c).isEmpty) None else Some(ps.bloom(c)))
-          }
-          st.getPath.toUri.getPath -> (ps.rows, fields.mkString(";"))
-        }.toMap
-        val ndv = fusedPaths.zipWithIndex
-          .filterNot(_._1.key.endsWith("[]")).map { case (sp, c) =>
-            sp.key -> entries.map(_._2.kmv(c))
-              .foldLeft(Array.empty[Long])(
-                graft.functions.KmvDistinctAgg.merge).toSeq
-          }.toMap
-        Some((fm, ndv))
-      }
-    }
     val stats =
       if (statuses.isEmpty) None
-      else fusedAcc.flatMap(assembleFused)
-        .orElse(collectFileStats(s, dataDir.toString, df.schema,
-          partitioned = partitionBy.nonEmpty, bloomCols = bloomCols,
-          mapKeys = mapKeys))
+      else tracker.map(t => t.fold.result(t.files.toMap))
     (dataDir, listed.map { case (st, part) =>
       val partField = part.fold("")(vs =>
         "\tP" + vs.map(_.fold("N")(b64e)).mkString(","))
       stats match {
-        case Some((m, _)) => m.get(st.getPath.toUri.getPath) match {
+        case Some((m, _)) =>
+          m.get(StatsFold.relKey(st.getPath.toString, partitionBy.size + 1)) match {
           // the trailing `*:N` coverage marker asserts these stats are
           // COMPLETE for the batch schema at format N — see FileEntry;
           // a budget/collision-truncated nested enumeration earns only
@@ -2999,9 +2639,9 @@ object SnapshotTable {
           case Some((rows, cols)) =>
             s"${st.getPath.toString}\t${st.getLen}\t$rows\t" +
               s"$cols;*:${statsMarkerVersion(df.schema)}$partField"
-          // the stats pass covered the whole dir, so a file it never
-          // grouped is a ZERO-ROW file (a writer task with an empty
-          // partition) — record that, don't leave the count unknown
+          // the fold saw every written file, so a file without stats
+          // is a ZERO-ROW file (a writer task with an empty partition)
+          // — record that, don't leave the count unknown
           case None => s"${st.getPath.toString}\t${st.getLen}\t0\t$partField"
         }
         case None => s"${st.getPath.toString}\t${st.getLen}\t\t$partField"
@@ -3899,7 +3539,7 @@ object SnapshotTable {
   }
 
   /** Declare the columns future commits collect a per-file membership
-    * BLOOM for ([[graft.functions.BloomBitsAgg]] — 1 KiB per (file,
+    * BLOOM for ([[graft.functions.BloomBits]] — 1 KiB per (file,
     * column), riding the one existing commit-stats pass): the manifest
     * then refutes `col = v` point probes on files whose min/max range
     * cannot (the UNCLUSTERED point lookup — on an append-ordered
@@ -5642,9 +5282,10 @@ object SnapshotTable {
     *    under a gated collection) carry no bounds — ANALYZE reads them
     *    and makes the manifest uniformly stat-bearing (coverage-marked,
     *    so [[metaAgg]]/CBO regain `bounds_exact`).
-    * Cost: ONE distributed aggregation over the live files (the same
-    * O(batch) pass every commit runs, here O(table) because the table
-    * is the batch) plus O(manifest) driver work — partition-column
+    * Cost: ONE Spark job over the live files — the per-file stats fold
+    * every commit runs inside its write job ([[StatsFold]]), here over
+    * a scan keyed by file, so O(table) because the table is the batch —
+    * plus O(manifest) driver work — partition-column
     * stats and NDV are synthesized from the manifest's recorded
     * directory values, zero extra reads. Declared [[setBloomColumns]]
     * columns are (re)collected too — ANALYZE is also the Bloom
@@ -5670,23 +5311,39 @@ object SnapshotTable {
     // the files store PHYSICAL names — read and (re)key stats on them
     val dataSchema = physicalSchema(StructType(
       sc0.fields.filterNot(f => m0.partBy.contains(f.name))))
-    val paths = es0.map(_.status.getPath.toString)
-    // ONE distributed pass over the live files: rows + zone maps + NDV
-    // for every eligible DATA column (partition columns are not stored
-    // in the files — synthesized below from the manifest). Explicit
-    // file paths, so hive directory discovery never kicks in.
-    val data = s.read.schema(dataSchema).parquet(paths: _*)
-    val (fileMap, dataNdv) = statsAggregate(s, data, dataSchema,
-        bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-      .getOrElse {
-        // no eligible data column: a count-only pass still refreshes
-        // the per-file row counts the other metadata ops rely on
-        val counts = data.groupBy(input_file_name().as("__f"))
-          .agg(count(lit(1)).as("__rows")).collect()
-          .map(r => new HPath(r.getString(0)).toUri.getPath ->
-            (r.getLong(1), "")).toMap
-        (counts, Map.empty[String, Seq[Long]])
+    // ONE job over the live files: the per-file stats fold (the same
+    // inputs and fold every commit runs inside its write job) on a scan
+    // of the manifest's entries keyed by input file — no listing, no
+    // hive discovery, no shuffle. Partition columns are not stored in
+    // the files: synthesized below from the manifest.
+    val scan = s.baseRelationToDataFrame(
+      fsRelation(s, tableDir, dataSchema, es0, None, Nil))
+    val bloomCols = bloomPhysCols(sc0)
+    val (probe, fold) = statsFold(scan,
+      statCols(dataSchema) ++ mapStatPaths(dataSchema, mapStatDecls(sc0)) ++
+        arrayElemStatPaths(dataSchema, bloomCols),
+      bloomCols, prefix = Seq(input_file_name()))
+    val qe = probe.queryExecution
+    val perTask = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("analyze")) {
+        qe.toRdd.mapPartitions { it =>
+          val files = scala.collection.mutable.HashMap.empty[String, FileFold]
+          // a scan task reads each file's rows contiguously
+          var file: org.apache.spark.unsafe.types.UTF8String = null
+          var cur: FileFold = null
+          it.foreach { r =>
+            if (r.getUTF8String(0) != file) {
+              file = r.getUTF8String(0).clone()
+              cur = files.getOrElseUpdate(file.toString, fold.newFile())
+            }
+            fold.update(cur, r)
+          }
+          Iterator.single(files.toMap)
+        }.collect()
       }
+    // a file split across scan tasks folds once per task: merge
+    val (fileMap, dataNdv) = fold.result(perTask.toSeq.flatten
+      .groupMapReduce(kv => new HPath(kv._1).toUri.getPath)(_._2)(fold.merge))
     // partition-column stats, synthesized per entry from its recorded
     // value tuple: min = max = the value (constant within a file),
     // nulls = rows for the null partition — exact, zero data reads
@@ -5731,7 +5388,7 @@ object SnapshotTable {
           val all = (Seq(cols).filter(_.nonEmpty) ++ partCols ++
             Seq(s"*:${statsMarkerVersion(dataSchema)}")).mkString(";")
           s"${st.getPath.toString}\t${st.getLen}\t$rows\t$all$partField"
-        // a file the pass never grouped holds zero rows
+        // a file the fold saw no row of holds zero rows
         case None => s"${st.getPath.toString}\t${st.getLen}\t0\t$partField"
       }
     }.sorted

@@ -26,17 +26,6 @@ object GraftSqlShim {
       org.apache.spark.sql.execution.datasources.LogicalRelation(
         relation, table))
 
-  /** A DataFrame over an RDD of INTERNAL rows — the
-    * `internalCreateDataFrame` doorway (no external Row round-trip,
-    * no encoder pass): what a write path needs to thread a
-    * side-effecting per-partition observer between an executed plan
-    * and the file writer without paying row conversion. */
-  def ofInternalRows(spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
-
   /** A forked session sharing the SparkContext and a COPY of the
     * parent's session state (confs, temp views, extensions) — conf
     * writes on the fork never touch the parent. The isolation doorway

@@ -1,24 +1,37 @@
 package graft.sources
 
 import graft.GraftSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The FUSED single-pass commit stats (round-19 optimization: zone
-  * maps / byte totals / KMV NDV / Bloom bits fold inside the write job
-  * via a per-task observer, instead of a second job re-reading the
-  * batch) must publish BIT-IDENTICAL manifest stats to the legacy
-  * read-back aggregation — the stats feed oracle-pinned outputs
-  * (metaAgg's est_ndv, zone-map bounds) and the file-skipping pruner,
-  * so equivalence is asserted at the manifest TEXT level on a frame
-  * exercising every stat kind: integral/date/timestamp/decimal longs,
-  * float/double (with NaN and +Inf bounds that must drop), strings
-  * with nulls and multi-byte UTF-8, struct leaves, a declared scalar
-  * Bloom, and an all-null column. */
+/** The per-file stats fold (zone maps, string byte totals, KMV NDV,
+  * declared Bloom bits) must publish manifest stats BYTE-IDENTICAL to
+  * the golden manifests under `src/test/resources/golden/stats/`. The
+  * goldens were captured from the earlier two-job commit path, which
+  * re-read every written batch through a grouped aggregation with
+  * three aggregators, so this spec pins the single fold to the
+  * semantics the stats always had: they feed oracle-pinned outputs
+  * (metaAgg's est_ndv, zone-map bounds) and the file-skipping pruner.
+  *
+  * Every commit layout is covered — flat, hive, bucketed,
+  * hive+bucketed, and `maxRecordsPerFile` splitting (flat and hive) —
+  * each followed by an [[SnapshotTable.analyze]] whose recollected
+  * manifest is pinned too. The frame carries every stat kind:
+  * integral/date/timestamp/decimal longs, doubles with NaN and ±Inf,
+  * multi-byte strings with nulls, struct leaves, declared map keys,
+  * declared scalar, struct-leaf and array-element Blooms, an all-null
+  * column, and (first commit of every table) a zero-row batch. One
+  * more golden pins a table whose first, non-empty commit precedes its
+  * Bloom declaration. */
 class SnapshotFusedStatsSpec extends GraftSpec {
 
-  /** Latest manifest's (sorted per-entry "rows|stats" strings, sorted
-    * #ndv lines) — everything path/size/uuid-independent. */
-  private def statsFingerprint(t: String): (Seq[String], Seq[String]) = {
+  /** The latest manifest of `t`, made independent of the run: entry
+    * paths relative to the table's data dir with the commit dir and
+    * the writer's job uuid masked, the file size and the commit
+    * timestamp dropped; lines sorted. Rows, stats, partition values
+    * and every other header line (schema, layout, #ndv sketches) stay
+    * verbatim. */
+  private def normalizedManifest(t: String): String = {
     val dir = new org.apache.hadoop.fs.Path(t, "_commits")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val last = fs.listStatus(dir).map(_.getPath)
@@ -29,76 +42,174 @@ class SnapshotFusedStatsSpec extends GraftSpec {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     }
-    val lines = text.split("\n").toSeq
-    val entries = lines.filterNot(_.startsWith("#")).map { l =>
-      val f = l.split("\t", -1)
-      // f(0)=path f(1)=size f(2)=rows f(3)=stats [f(4+)=era tags]
-      s"${f(2)}|${f.lift(3).getOrElse("")}"
-    }.sorted
-    val ndv = lines.filter(_.startsWith("#ndv:")).sorted
-    (entries, ndv)
+    text.split("\n").toSeq.filterNot(_.startsWith("#ts:")).map { l =>
+      if (l.startsWith("#")) l
+      else {
+        val f = l.split("\t", -1)
+        val rel = f(0).substring(f(0).indexOf("/data/") + "/data/".length)
+          .replaceFirst("^c-[^/]+/", "c-*/")
+          .replaceAll("part-(\\d+)-[0-9a-f-]{36}", "part-$1")
+        (rel +: f.drop(2)).mkString("\t")
+      }
+    }.sorted.mkString("", "\n", "\n")
   }
 
-  private def mixedFrame = {
-    import spark.implicits._
-    val rows = (1L to 300L).map { i =>
-      (i,
-        if (i % 11 == 0) null else s"säg_${i % 13}",
+  private def golden(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/golden/stats/$name.txt")
+    assert(in != null, s"missing golden manifest golden/stats/$name.txt")
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  private def check(name: String, t: String): Unit = {
+    val got = normalizedManifest(t)
+    val want = golden(name)
+    if (got != want) {
+      val g = got.split("\n").toSet
+      val w = want.split("\n").toSet
+      fail(s"$name: manifest differs from its golden\n" +
+        s"only in fold  : ${(g -- w).toSeq.sorted.mkString("\n  ")}\n" +
+        s"only in golden: ${(w -- g).toSeq.sorted.mkString("\n  ")}")
+    }
+  }
+
+  private val schemaDdl = "id BIGINT, name STRING, score DOUBLE, grp INT, " +
+    "d DATE, ts TIMESTAMP, money DECIMAL(12,2), " +
+    "meta STRUCT<a: BIGINT, b: STRING>, attrs MAP<STRING, BIGINT>, " +
+    "tags ARRAY<STRING>, refs ARRAY<BIGINT>, allnull BIGINT, day INT"
+
+  /** 400 rows over 4 `day` values; deterministic content and order. */
+  private def mixedFrame: DataFrame = {
+    val rows = (1L to 400L).map { i =>
+      org.apache.spark.sql.Row(
+        i,
+        if (i % 11 == 0) null else s"säg_${i % 13}_名",
         if (i % 7 == 0) Double.NaN
         else if (i == 5L) Double.PositiveInfinity
+        else if (i == 6L) Double.NegativeInfinity
         else i * 1.5 - 100.0,
         (i % 17).toInt,
         java.sql.Date.valueOf("2024-03-%02d".format((i % 28 + 1).toInt)),
-        java.sql.Timestamp.valueOf("2024-03-01 10:%02d:00".format((i % 60).toInt)),
-        new java.math.BigDecimal(s"${i % 50}.25"),
-        (i % 5, if (i % 3 == 0) null else s"leaf${i % 4}"),
-        null.asInstanceOf[java.lang.Long])
+        java.sql.Timestamp.valueOf(
+          "2024-03-01 10:%02d:%02d".format((i % 60).toInt, (i % 7).toInt)),
+        new java.math.BigDecimal(s"${i % 50 - 20}.25"),
+        org.apache.spark.sql.Row(i % 5, if (i % 3 == 0) null else s"leaf${i % 4}"),
+        if (i % 9 == 0) null
+        else Map("a" -> i % 23, "b" -> (if (i % 4 == 0) null else i * 3)),
+        if (i % 10 == 0) null
+        else if (i % 10 == 1) Seq.empty[String]
+        else Seq(s"t${i % 31}", null, s"ü${i % 7}"),
+        if (i % 8 == 0) null else Seq(i, i * 2),
+        null,
+        (i % 4).toInt)
     }
-    rows.toDF("id", "name", "score", "grp", "d", "ts", "money",
-        "meta", "allnull")
-      .withColumn("money", col("money").cast("decimal(12,2)"))
-      .withColumn("meta", struct(col("meta._1").as("a"), col("meta._2").as("b")))
-      .repartition(5)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
   }
 
+  private def emptyFrame: DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
+
+  /** A zero-row first commit, the declarations, then the mixed batch
+    * — all through `commitWith` — pinned after the commit and again
+    * after ANALYZE. */
+  private def scenario(name: String, maxRecordsPerFile: Option[Int] = None)(
+      commitWith: (String, DataFrame) => Unit): Unit = {
+    val t = java.nio.file.Files.createTempDirectory(s"graft-golden-$name-")
+      .toString + "/tbl"
+    val df = mixedFrame
+    commitWith(t, emptyFrame)
+    SnapshotTable.setBloomColumns(spark, t,
+      Seq("id", "name", "meta.b", "tags", "refs"))
+    SnapshotTable.setMapStatKeys(spark, t, Seq("attrs['a']", "attrs['b']"))
+    val key = "spark.sql.files.maxRecordsPerFile"
+    maxRecordsPerFile.foreach(n => spark.conf.set(key, n.toLong))
+    try commitWith(t, df)
+    finally if (maxRecordsPerFile.nonEmpty) spark.conf.unset(key)
+    check(s"$name.commit", t)
+    assert(SnapshotTable.analyze(spark, t).nonEmpty, s"$name: analyze refused")
+    check(s"$name.analyze", t)
+  }
+
+  // the flat goldens are the read-back path's stats for this frame
   test("fused write-job stats == legacy read-back stats, manifest-exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fused-").toString
-    val df = mixedFrame.localCheckpoint(true) // pin identical input rows
-    val old = SnapshotTable.fuseCommitStats
-    try {
-      SnapshotTable.fuseCommitStats = true
-      SnapshotTable.commit(spark, s"$dir/fused", df, overwrite = false)
-      SnapshotTable.fuseCommitStats = false
-      SnapshotTable.commit(spark, s"$dir/legacy", df, overwrite = false)
-    } finally SnapshotTable.fuseCommitStats = old
-    val (eF, nF) = statsFingerprint(s"$dir/fused")
-    val (eL, nL) = statsFingerprint(s"$dir/legacy")
-    assert(eF == eL, s"entry stats differ:\nfused : $eF\nlegacy: $eL")
-    assert(nF == nL, s"#ndv lines differ:\nfused : $nF\nlegacy: $nL")
-    assert(eF.nonEmpty && nF.nonEmpty)
+    scenario("flat") { (t, df) =>
+      SnapshotTable.commit(spark, t, df.repartition(5), overwrite = false) }
   }
 
   test("fused stats under a declared Bloom column match legacy") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fusedb-").toString
-    val df = mixedFrame.localCheckpoint(true)
-    val old = SnapshotTable.fuseCommitStats
-    try {
-      Seq(("fused", true), ("legacy", false)).foreach { case (name, on) =>
-        SnapshotTable.fuseCommitStats = on
-        val t = s"$dir/$name"
-        SnapshotTable.commit(spark, t, df.limit(10), overwrite = false)
-        SnapshotTable.setBloomColumns(spark, t, Seq("id", "name"))
-        // post-declaration commit collects the declared Blooms
-        SnapshotTable.commit(spark, t, df, overwrite = false)
-      }
-    } finally SnapshotTable.fuseCommitStats = old
-    val (eF, nF) = statsFingerprint(s"$dir/fused")
-    val (eL, nL) = statsFingerprint(s"$dir/legacy")
-    assert(eF == eL, s"bloom entry stats differ:\nfused : $eF\nlegacy: $eL")
-    assert(nF == nL)
-    // the declared blooms actually landed (7-field stat for id/name)
-    assert(eF.exists(_.split(";").exists(f =>
-      f.split(":").length == 7)), s"no bloom field found in $eF")
+    // a commit before the declaration writes Bloom-free stats; the one
+    // after it adds Bloom bits to id and name only
+    val t = java.nio.file.Files.createTempDirectory("graft-golden-bloom-")
+      .toString + "/tbl"
+    val df = mixedFrame
+    SnapshotTable.commit(spark, t, df.limit(10), overwrite = false)
+    SnapshotTable.setBloomColumns(spark, t, Seq("id", "name"))
+    SnapshotTable.commit(spark, t, df.repartition(5), overwrite = false)
+    check("bloom.commit", t)
+    val entries = normalizedManifest(t).split("\n").filterNot(_.startsWith("#"))
+      .map(_.split("\t", -1))
+    def bloomCols(e: Array[String]): Set[String] =
+      e(2).split(";").map(_.split(":")).filter(_.length == 7)
+        .map(f => new String(java.util.Base64.getDecoder.decode(f(0)), "UTF-8")).toSet
+    val (before, after) = entries.partition(_(1) != "80")
+    assert(before.map(_(1).toLong).sum == 10L && after.length == 5,
+      entries.map(_(1)).mkString(","))
+    before.foreach(e => assert(bloomCols(e).isEmpty, e.mkString("\t")))
+    after.foreach(e => assert(bloomCols(e) == Set("id", "name"), e.mkString("\t")))
+  }
+
+  test("flat layout with maxRecordsPerFile: fold == golden") {
+    scenario("flat_maxrec", Some(70)) { (t, df) =>
+      SnapshotTable.commit(spark, t, df.repartition(3), overwrite = false) }
+  }
+
+  test("hive layout: fold == golden") {
+    scenario("hive") { (t, df) =>
+      SnapshotTable.commitPartitionedBy(spark, t, df, Seq("day")) }
+  }
+
+  test("hive layout with maxRecordsPerFile: fold == golden") {
+    scenario("hive_maxrec", Some(30)) { (t, df) =>
+      SnapshotTable.commitPartitionedBy(spark, t, df, Seq("day")) }
+  }
+
+  test("bucketed layout: fold == golden") {
+    scenario("bucketed") { (t, df) =>
+      SnapshotTable.commitBucketed(spark, t, df, overwrite = false, 4, "id") }
+  }
+
+  test("hive+bucketed layout: fold == golden") {
+    scenario("hive_bucketed") { (t, df) =>
+      SnapshotTable.commitPartitionedBucketed(spark, t, df, Seq("day"), 3, "id") }
+  }
+
+  test("concurrent hive writers: each file's partition stats are its directory's") {
+    // with concurrent output writers a task interleaves its partitions'
+    // files (one shuffle partition keeps the input's day-interleaved row
+    // order), so a file rolled over by maxRecordsPerFile opens long
+    // after its partition was first announced
+    val t = java.nio.file.Files.createTempDirectory("graft-golden-conc-")
+      .toString + "/tbl"
+    val confs = Seq("spark.sql.maxConcurrentOutputFileWriters" -> "4",
+      "spark.sql.files.maxRecordsPerFile" -> "30", "spark.sql.shuffle.partitions" -> "1")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try SnapshotTable.commitPartitionedBy(spark, t, mixedFrame.coalesce(1), Seq("day"))
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val entries = normalizedManifest(t).split("\n").filterNot(_.startsWith("#"))
+    assert(entries.length > 4, entries.mkString("\n"))
+    val dayKey = java.util.Base64.getEncoder.encodeToString("day".getBytes("UTF-8"))
+    entries.foreach { e =>
+      val f = e.split("\t", -1)
+      val dir = f(0).split("/")(1).stripPrefix("day=")
+      val b64 = java.util.Base64.getEncoder.encodeToString(dir.getBytes("UTF-8"))
+      assert(f(2).split(";").contains(s"$dayKey:l:$b64:$b64:0:"), e)
+    }
   }
 
   test("merge + readChanges stay correct with fused stats on") {
