@@ -31,7 +31,9 @@ object CacheRegistry {
   }
 
   /** Source-derived memo bounded to ONE live generation per
-    * (application, path): entries are keyed by (application, path) and
+    * (application, path, variant): entries are keyed by (application,
+    * path, variant) — the variant names a setting the value depends on
+    * beyond the data — and
     * carry the source's data version — a fold of every underlying
     * file's name, length, and mtime — so regenerating the source in
     * place (same path, new data) misses instead of silently serving
@@ -52,8 +54,8 @@ object CacheRegistry {
     private val m =
       new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
     CacheRegistry.onClear(() => clear())
-    def getOrBuild(s: SparkSession, path: String)(build: => V): V =
-      m.compute(s.sparkContext.applicationId + "|" + path, (_, old) => {
+    def getOrBuild(s: SparkSession, path: String, variant: String = "")(build: => V): V =
+      m.compute(s.sparkContext.applicationId + "|" + path + "|" + variant, (_, old) => {
         val ver = dataVersion(s, path)
         if (old != null && old._1 == ver) old
         else {
@@ -65,7 +67,7 @@ object CacheRegistry {
           fresh
         }
       })._2
-    /** Live entry count — at most one per (application, path). */
+    /** Live entry count — at most one per (application, path, variant). */
     def size: Int = m.size
     def clear(): Unit = {
       m.values.forEach(v => dispose(v._2))

@@ -910,6 +910,26 @@ object PlanCheck {
       noAdaptive = true, noAutoBroadcast = true,
       build = Some((s, d) => graft.operators.DedupOps.starRoundPlan(s, d)),
       maxNodes = Seq("Exchange" -> 4)),
+    // connected components, the per-round convergence test: is the
+    // round's output a star forest? One keyed aggregate over the pairs —
+    // one exchange, no join, no second pass over the previous round.
+    Check("dedup_components_converged",
+      mustContain = Seq("HashAggregate"),
+      mustNot = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"),
+      noAdaptive = true, noAutoBroadcast = true,
+      build = Some((s, d) => graft.operators.DedupOps.starForestPlan(s, d)),
+      maxNodes = Seq("Exchange" -> 1)),
+    // k-core, ONE peeling round over the folded lineitem edges: one
+    // degree aggregate whose weak-node set is broadcast once and reused
+    // by both anti-joins (ReusedExchange) — one exchange. The round's
+    // convergence count rides its checkpoint, so this is the whole
+    // per-round budget.
+    Check("graph_kcore_round",
+      mustContain = Seq("LeftAnti", "ReusedExchange"),
+      mustNot = Seq("CartesianProduct", "BroadcastNestedLoopJoin"),
+      noAdaptive = true,
+      build = Some((s, d) => graft.operators.GraphOps.kcoreRoundPlan(s, d)),
+      maxNodes = Seq("Exchange" -> 1)),
   )
 
   /** One check's outcome: the query name, pass/fail, and on failure a

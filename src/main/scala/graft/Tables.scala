@@ -1,14 +1,28 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated star schema
   * (TESTDATA.md / FIXTURES.md §B). All queries take an `sfDir` so the
   * same plan runs at any scale factor — nothing is hard-coded to a SF.
   */
 object Tables {
-  def apply(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    s.read.schema(schemaOf(s, path)).parquet(path)
+  }
+
+  /** A table's schema, inferred once per data version: inference reads a
+    * parquet footer in a one-task Spark job, which every read would pay
+    * again. Keyed on the nanosAsLong setting too, since [[events]] flips
+    * it and it changes the inferred type of a nanosecond timestamp. */
+  private val schemas = new CacheRegistry.VersionedMemo[StructType]()
+
+  private[graft] def schemaOf(s: SparkSession, path: String): StructType = {
+    val nanos = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    schemas.getOrBuild(s, path, nanos)(s.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -59,13 +59,19 @@ object MapReduceJob {
     override def hashCode: Int = numPartitions
   }
 
-  /** Map stage: stripe lines over `numMappers` tasks and pipe each
+  /** Map stage: spread lines over `numMappers` tasks and pipe each
     * partition through the mapper executable (flatMap semantics — the
     * executable emits 0..n output lines per input line, exactly the
-    * reference's `new_worker_task` contract). */
+    * reference's `new_worker_task` contract). Input that already has
+    * `numMappers` splits is used as it is and more splits are merged
+    * without a shuffle; only fewer splits are shuffled out. */
   def mapStage(lines: RDD[String], mapperCmd: Seq[String], numMappers: Int): RDD[String] = {
-    val repart = if (numMappers > 0) lines.repartition(numMappers) else lines
-    if (mapperCmd.isEmpty) repart else repart.pipe(mapperCmd)
+    val splits = lines.getNumPartitions
+    val tasks =
+      if (numMappers <= 0 || splits == numMappers) lines
+      else if (splits > numMappers) lines.coalesce(numMappers)
+      else lines.repartition(numMappers)
+    if (mapperCmd.isEmpty) tasks else tasks.pipe(mapperCmd)
   }
 
   /** Group stage (intent semantics): shuffle lines so every line with the

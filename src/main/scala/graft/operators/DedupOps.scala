@@ -500,12 +500,10 @@ object DedupOps extends QueryPack {
     // vector's cosine to ANYTHING is NULL, so its exact twin could never
     // connect at >= SemTau and the n_dropped_twins == n_planted audit
     // would mismatch on any corpus containing an all-zero embedding.
-    val base = base0.unionByName(
+    val (base, n) = Checkpoint.counted(base0.unionByName(
       base0.filter(col("vec_id") % 101 === 0 &&
           SimilarityOps.cosine(col("embedding"), col("embedding")).isNotNull)
-        .withColumn("vec_id", col("vec_id") + 1000000000000L))
-      .localCheckpoint(true)
-    val n = base.count()
+        .withColumn("vec_id", col("vec_id") + 1000000000000L)))
     val auditCols = Seq("n_vectors", "n_planted", "n_dropped_twins",
       "dropped_covered", "kept_no_dups", "conservation_ok")
     if (n == 0)
@@ -689,10 +687,12 @@ object DedupOps extends QueryPack {
     * at a sliding threshold) do.
     *
     * Each round is two keyed groupBy+join pairs — partial-aggregated,
-    * no driver data beyond the convergence counter — and the edge
-    * frame is `localCheckpoint`ed so lineage stays flat. At the
-    * fixpoint the edges form one star per component, centered at its
-    * minimum — which IS the survivor id. Returns (labels, rounds). */
+    * no driver data beyond the convergence test — and the edge frame is
+    * `localCheckpoint`ed so lineage stays flat. At the fixpoint the
+    * edges form one star per component, centered at its minimum — which
+    * IS the survivor id — and the loop stops on the round that first
+    * produces that star forest ([[starForestBreaks]]), with no
+    * confirmation round. Returns (labels, rounds). */
   /** ONE alternating-star round over the canonical pair set — the loop
     * body of [[componentsWithRounds]], extracted so [[graft.PlanCheck]]
     * can pin its plan shape. The LARGE-STAR OUTPUT is repartitioned
@@ -732,37 +732,48 @@ object DedupOps extends QueryPack {
   /** [[starRound]] over a deterministic small pair set — the
     * un-checkpointed one-round dataflow for plan assertions. */
   private[graft] def starRoundPlan(s: SparkSession, d: String): DataFrame =
-    starRound(Tables.documents(s, d).filter(col("doc_id").isNotNull)
+    starRound(planPairs(s, d))
+
+  private def planPairs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(col("doc_id").isNotNull)
       .select((col("doc_id") + 1).as("a"), (col("doc_id") % 97).as("b"))
-      .filter(col("a") =!= col("b")))
+      .filter(col("a") =!= col("b"))
+
+  /** Canonical pairs (a > b) that break the star-forest shape: a node
+    * that is an `a` of more than one pair, or both an `a` and a `b`.
+    * Empty exactly when every `a` has one `b` and no node is on both
+    * sides — each component is then one star on its minimum, which
+    * [[starRound]] maps to itself, so the loop stops on the round that
+    * produced it. One keyed aggregate over the round's output. */
+  private[graft] def starForestBreaks(pairs: DataFrame): DataFrame =
+    pairs.select(col("a").as("node"), lit(1L).as("as_a"))
+      .unionByName(pairs.select(col("b").as("node"), lit(0L).as("as_a")))
+      .groupBy(col("node"))
+      .agg(sum(col("as_a")).as("n_a"), count(lit(1)).as("n"))
+      .filter(col("n_a") > 1 || (col("n_a") === 1 && col("n") > 1))
+
+  /** [[starForestBreaks]] over the [[starRoundPlan]] pair set — the
+    * convergence test's dataflow for plan assertions. */
+  private[graft] def starForestPlan(s: SparkSession, d: String): DataFrame =
+    starForestBreaks(planPairs(s, d))
 
   private[operators] def componentsWithRounds(
       nodes: DataFrame, edges: DataFrame): (DataFrame, Int) = {
     // canonical (hi → lo) pair set; self-loops dropped. Materialized ONCE —
     // it feeds every round, and without this the full pair-generation
-    // pipeline (the expensive part) would re-execute per round.
-    var pairs = edges.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+    // pipeline (the expensive part) would re-execute per round. Its
+    // observed row count is the emptiness test.
+    val (canonical, n) = Checkpoint.counted(
+      edges.filter(col("a") =!= col("b"))
+        .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
+        .distinct())
+    var pairs = canonical
     var rounds = 0
-    var converged = pairs.isEmpty
+    var converged = n == 0
     while (!converged) {
       rounds += 1
-      val next = starRound(pairs).localCheckpoint(true)
-      // fixpoint: the canonical pair set stopped changing (both stars are
-      // then identities and every component is a star on its minimum).
-      // ONE exact symmetric-difference job over the two checkpointed sets
-      // (±1-tagged union → groupBy on the pair → any nonzero tag sum),
-      // replacing the count()+count()+except() trio — each round now pays
-      // a single convergence job, and partial aggregation collapses the
-      // all-zero tag sums map-side (both inputs are distinct pair sets).
-      converged = next.select(col("a"), col("b"), lit(1L).as("t"))
-        .unionByName(pairs.select(col("a"), col("b"), lit(-1L).as("t")))
-        .groupBy(col("a"), col("b")).agg(sum(col("t")).as("t"))
-        .filter(col("t") =!= 0)
-        .isEmpty
-      pairs = next
+      pairs = starRound(pairs).localCheckpoint(true)
+      converged = starForestBreaks(pairs).isEmpty
     }
     val labels = nodes
       .join(pairs.select(col("a").as("doc_id"), col("b").as("component")),

@@ -98,6 +98,9 @@ object GraphOps extends QueryPack {
     * triangles), the same axis the PageRank fold uses, instead of
     * re-saturating one fixed fold. */
   private def foldedEdges(s: SparkSession, d: String): DataFrame =
+    foldedPairs(s, d).distinct()
+
+  private def foldedPairs(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .filter(col("l_linenumber") === 1)
       .select(
@@ -106,7 +109,6 @@ object GraphOps extends QueryPack {
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
-      .distinct()
 
   def graphTriangles(s: SparkSession, d: String): DataFrame =
     triangleStats(foldedEdges(s, d))
@@ -150,25 +152,39 @@ object GraphOps extends QueryPack {
   /** k-CORE membership by distributed peeling: repeatedly delete every
     * node of degree < k until none remains — the survivor IS the
     * unique MAXIMAL subgraph of minimum degree ≥ k (peeling order
-    * cannot change the fixpoint). Each round is one symmetric degree
-    * aggregate + two keyed anti-joins over the live edge list,
-    * `localCheckpoint`ed so lineage stays flat; round count = peeling
-    * depth. Returns the surviving canonical edges. */
+    * cannot change the fixpoint). Each round is one [[kcorePeel]] over
+    * the live edge list, `localCheckpoint`ed so lineage stays flat, and
+    * that checkpoint's observed row count is the convergence test: a
+    * weak node always has an edge to lose, so the peel is a fixpoint
+    * exactly when the count stops changing (or reaches 0). Round count
+    * = peeling depth + 1. Returns the surviving canonical edges. */
   def kcoreEdges(edges: DataFrame, k: Int): DataFrame = {
-    var live = edges.localCheckpoint(true)
-    var converged = false
-    while (!converged) {
-      val weak = live.select(explode(array(col("u"), col("v"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k).select(col("node"))
-      if (weak.isEmpty) converged = true
-      else live = live
-        .join(weak.select(col("node").as("u")), Seq("u"), "left_anti")
-        .join(weak.select(col("node").as("v")), Seq("v"), "left_anti")
-        .localCheckpoint(true)
+    var (live, n) = Checkpoint.counted(edges)
+    var before = -1L
+    while (n > 0 && n != before) {
+      before = n
+      val (next, m) = Checkpoint.counted(kcorePeel(live, k))
+      live = next
+      n = m
     }
     live
   }
+
+  /** One peeling round: drop every edge with an endpoint of degree < k
+    * — one symmetric degree aggregate feeding two keyed anti-joins. */
+  private[graft] def kcorePeel(live: DataFrame, k: Int): DataFrame = {
+    val weak = live.select(explode(array(col("u"), col("v"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") < k).select(col("node"))
+    live
+      .join(weak.select(col("node").as("u")), Seq("u"), "left_anti")
+      .join(weak.select(col("node").as("v")), Seq("v"), "left_anti")
+  }
+
+  /** [[kcorePeel]] at k = 2 over the folded lineitem edge scan — one
+    * peeling round's dataflow for plan assertions. */
+  private[graft] def kcoreRoundPlan(s: SparkSession, d: String): DataFrame =
+    kcorePeel(foldedPairs(s, d), 2)
 
   /** Reserved id range for the planted clique — far above every folded
     * node id (bands are small integers; 1000·P clears them all). */

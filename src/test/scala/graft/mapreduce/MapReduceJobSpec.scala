@@ -102,4 +102,24 @@ class MapReduceJobSpec extends GraftSpec {
     }.map { l => val Array(w, c) = l.split("\t"); (w, c.toLong) }.toMap
     assert(all === Map("hello" -> 2L, "world" -> 2L, "bye" -> 1L, "spark" -> 1L))
   }
+
+  test("map stage over a one-file input shuffles nothing") {
+    val in = java.nio.file.Files.createTempDirectory("mr-split-").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in, "file01"),
+      (1 to 400).map(i => s"line $i").mkString("", "\n", "\n"))
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+    for (mappers <- Seq(1, 3)) {
+      val lines = spark.sparkContext.textFile(in, mappers)
+      val mapped = mapStage(lines, wcMapper, mappers)
+      assert(mapped.getNumPartitions == mappers)
+      assert(shuffles(mapped) == 0, s"numMappers=$mappers: ${mapped.toDebugString}")
+      assert(mapped.count() == 800L)
+    }
+    // fewer splits than mappers still spreads the lines out
+    val one = spark.sparkContext.parallelize(Seq("a b", "c d"), 1)
+    assert(mapStage(one, Nil, 2).getNumPartitions == 2)
+  }
 }
