@@ -987,16 +987,7 @@ object PlanCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // parity with Bench/Verify: plan assertions must hold under the
-      // same stats-aware planning the measured runs use
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", "ERROR")
     // optional second arg: comma-separated query names to check alone
     val only = args.lift(1).map(_.split(",").toSet)
     val results = runAll(spark, sfDir, only)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named queries to files — the
   * committed plan evidence of an optimization round
   * (`plans/r<N>/<query>_{before,after}.txt`).
@@ -18,15 +16,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args(3).split(",").toSeq
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", "ERROR", "spark.sql.adaptive.enabled" -> "false")
     names.foreach { n =>
       try {
         val df = PlanCheck.buildFor(n)

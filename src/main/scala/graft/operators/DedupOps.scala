@@ -572,13 +572,17 @@ object DedupOps extends QueryPack {
     * Output: every doc (singletons included) with its component label =
     * min doc_id reachable, which IS the component's survivor id.
     *
-    * Algorithm: iterative min-label propagation (each round, every node
-    * takes the min label in its closed neighborhood) — one keyed
-    * equi-join + partial-aggregated groupBy per round, no driver data
-    * beyond the convergence counter; rounds needed = graph diameter
-    * (near-dup components are clique-like, so a handful at any scale —
-    * same structure GraphX's CC uses). `localCheckpoint` cuts the
-    * per-round lineage so the plan doesn't grow superlinearly. */
+    * Algorithm: alternating large-star / small-star rounds
+    * ([[starRound]], the Kiveris et al. star contraction) over the
+    * canonical (hi → lo) pair set. Each round re-points every node at
+    * the minimum of its neighborhood, so components contract in
+    * O(log diameter) rounds rather than the diameter that plain
+    * min-label propagation needs. The loop stops on the first round
+    * whose pairs form a star forest ([[starForestBreaks]] finds no
+    * break): every component is then one star on its minimum, which is
+    * its label. Per round: a few keyed exchanges and one
+    * `localCheckpoint`, which keeps the lineage flat; no driver data
+    * beyond the convergence test (see [[componentsWithRounds]]). */
   def connectedComponents(s: SparkSession, d: String): DataFrame =
     componentLabels(s, d).orderBy(col("doc_id"))
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{BloomBits, KmvDistinctAgg}
+import graft.sources.ManifestCodec.ColStat
 
 /** One stat path's slots in an evaluated stat-input row, starting at
   * `first`. A scalar path reads (value, KMV hash[, Bloom hash]); an
@@ -108,13 +110,14 @@ private[sources] final class StatsFold(val slots: Array[FoldSlot])
     a
   }
 
-  /** The file's manifest stats text (`;`-joined fields, slot order). */
-  def fields(st: FileFold): String = slots.indices.map { c =>
+  /** The file's column stats, slot order. */
+  def stats(st: FileFold): VectorMap[String, ColStat] = slots.indices.map { c =>
     val sl = slots(c)
-    StatsFold.field(sl.key, sl.kind, st.minV(c), st.maxV(c), st.nulls(c),
+    sl.key -> ColStat(sl.kind, StatsFold.bound(st.minV(c)),
+      StatsFold.bound(st.maxV(c)), st.nulls(c),
       bytes = if (st.bytesSeen(c)) Some(st.bytes(c)) else None,
       bloom = if (st.bloom(c).isEmpty) None else Some(st.bloom(c)))
-  }.mkString(";")
+  }.to(VectorMap)
 
   /** Per-column NDV sketches over `files`, min-K-merged (array-element
     * paths carry none). */
@@ -124,12 +127,12 @@ private[sources] final class StatsFold(val slots: Array[FoldSlot])
         KmvDistinctAgg.merge(k, f.kmv(c))).toSeq
     }.toMap
 
-  /** (rows, stats text) per file key for every file holding rows — a
+  /** (rows, column stats) per file key for every file holding rows — a
     * zero-row file gets no entry and is recorded as such — plus the
     * merged NDV sketches. */
   def result(files: Map[String, FileFold])
-      : (Map[String, (Long, String)], Map[String, Seq[Long]]) =
-    (files.collect { case (k, f) if f.rows > 0L => k -> (f.rows, fields(f)) },
+      : (Map[String, (Long, VectorMap[String, ColStat])], Map[String, Seq[Long]]) =
+    (files.collect { case (k, f) if f.rows > 0L => k -> (f.rows, stats(f)) },
       ndv(files.values))
 }
 
@@ -158,25 +161,16 @@ private[sources] object StatsFold {
     case other => other
   }
 
-  /** Manifest stat-value rendering: "" for null and non-finite bounds
-    * (NaN/±Inf cannot anchor a sound range), floats widened to double
-    * BEFORE encoding so the stored decimal round-trips exactly. */
-  private def encValue(v: Any): String = v match {
-    case null => ""
-    case d: java.lang.Double if d.isNaN || d.isInfinite => ""
-    case fl: java.lang.Float => encValue(Double.box(fl.doubleValue))
-    case other => b64e(other.toString)
-  }
-
-  def b64e(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-
-  /** One manifest stats FIELD: `name:kind:min:max:nulls:bytes[:bloom]`. */
-  def field(name: String, kind: Char, minV: Any, maxV: Any, nulls: Long,
-      bytes: Option[Long], bloom: Option[Array[Byte]]): String = {
-    val head = s"${b64e(name)}:$kind:${encValue(minV)}:${encValue(maxV)}:" +
-      s"$nulls:${bytes.map(_.toString).getOrElse("")}"
-    bloom.fold(head)(b => s"$head:${java.util.Base64.getEncoder.encodeToString(b)}")
+  /** A folded bound in its manifest form: unknown for null and
+    * non-finite bounds (NaN/±Inf cannot anchor a sound range), floats
+    * widened to double so the stored decimal round-trips exactly,
+    * strings as their UTF-8 bytes, every long-family value as a Long. */
+  def bound(v: Any): Option[Any] = v match {
+    case null => None
+    case fl: java.lang.Float => bound(Double.box(fl.doubleValue))
+    case d: java.lang.Double => if (d.isNaN || d.isInfinite) None else Some(d.doubleValue)
+    case n: java.lang.Number => Some(n.longValue)
+    case u: UTF8String => Some(u.toString.getBytes("UTF-8"))
   }
 
   /** The last `n` segments of a file path: the file's key relative to

@@ -88,7 +88,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    independent of table size for appends.
   */
 object SnapshotTable {
-  import StatsFold.b64e
+  import ManifestCodec.{ColStat, Manifest}
 
   /** Data-file-manifest reads performed since process start — the
     * instrumentation hook for the O(1)-reads-per-commit contract
@@ -120,54 +120,25 @@ object SnapshotTable {
       .sorted
   }
 
-  private def manifestLines(s: SparkSession, tableDir: String,
-      version: Int): Seq[String] = {
+  /** One manifest read and one decode. A manifest the codec rejects
+    * fails here, naming the table and version. */
+  private def readManifest(s: SparkSession, tableDir: String,
+      version: Int): Manifest = {
     manifestReads.incrementAndGet()
     val f = fs(s, tableDir)
     val in = f.open(manifestPath(tableDir, version))
-    try scala.io.Source.fromInputStream(in, "UTF-8")
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().filter(_.nonEmpty).toList
     finally in.close()
+    try ManifestCodec.decode(lines) catch {
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"unreadable manifest v$version of $tableDir: ${e.getMessage}", e)
+    }
   }
 
-  /** Per-file column statistic (zone map): the value range and null
-    * count of one column in one data file, decoded to comparable form —
-    * Long ('l'), Double ('d'), or UTF-8 bytes ('s'). `min`/`max` absent
-    * means that bound is UNKNOWN (all-null column, or a non-finite
-    * float bound that cannot be stored soundly) — pruning treats it as
-    * ∓∞. */
-  private[sources] final case class ColStat(kind: Char, min: Option[Any],
-      max: Option[Any], nulls: Long,
-      // total UTF-8 payload bytes of the column in the file (string
-      // kind only): Σbytes/Σnon-null is the avg width Catalyst's
-      // size-from-row-count estimate needs — without it every string
-      // column reads as the 20-byte default and a wide text table can
-      // be under-sized into a broadcast
-      bytes: Option[Long] = None,
-      // optional per-file membership Bloom (declared columns only —
-      // [[SnapshotTable.setBloomColumns]]): refutes `col = v` probes
-      // min/max cannot (the unclustered point lookup, where every
-      // file's range straddles every key)
-      bloom: Option[Array[Byte]] = None)
-
-  /** One manifest data entry: the file plus its planning metadata.
-    * `part` is the file's hive-partition value TUPLE on a partitioned
-    * layout (one element per partition level, directory-nesting order;
-    * None elements are the null partition) — `None` overall means an
-    * unpartitioned entry. `statsVer` is the entry's stats-COVERAGE
-    * marker (the `*:N` field): Some(v) asserts "this entry's stats
-    * cover every column whose type was stat-eligible at format v and
-    * present in the batch — an eligible column with NO stat here was
-    * ABSENT from the batch, i.e. all its rows read NULL". Without the
-    * marker (pre-v15 writers) that absence is ambiguous — the file may
-    * instead predate the column TYPE's eligibility (values unknown) —
-    * so metadata consumers must degrade, not claim. */
-  private[sources] final case class FileEntry(status: FileStatus,
-      rows: Option[Long],
-      stats: Map[String, ColStat],
-      part: Option[Seq[Option[String]]] = None,
-      statsVer: Option[Int] = None,
-      era: Option[Int] = None)
+  /** The manifest's file entry ([[ManifestCodec.FileEntry]]). */
+  private[sources] type FileEntry = ManifestCodec.FileEntry
+  private[sources] val FileEntry = ManifestCodec.FileEntry
 
   /** Current stats-format version stamped into the coverage marker.
     * v2 = the round-15 kind set (long family incl. date/timestamp/NTZ/
@@ -194,126 +165,6 @@ object SnapshotTable {
   private def accountsFor(e: FileEntry, f: StructField): Boolean =
     e.rows.contains(0L) || e.stats.contains(physName(f)) ||
       e.statsVer.exists(_ >= kindSinceVersion(f.dataType))
-
-  private def b64d(s: String): Array[Byte] =
-    java.util.Base64.getDecoder.decode(s)
-
-  /** Decode one `b64(name):kind:b64(min):b64(max):nulls[:bytes[:bloom]]`
-    * column stat (the trailing total-byte and Bloom fields are newer;
-    * shorter legacy entries parse with them unknown). */
-  private def parseColStat(field: String): Option[(String, ColStat)] = {
-    val p = field.split(":", -1)
-    if (p.length < 5 || p.length > 7) return None
-    val kind = if (p(1).length == 1) p(1).charAt(0) else return None
-    def v(b64: String): Option[Any] =
-      if (b64.isEmpty) None
-      else kind match {
-        case 'l' => Some(new String(b64d(b64), "UTF-8").toLong)
-        case 'd' => Some(new String(b64d(b64), "UTF-8").toDouble)
-        case 's' => Some(b64d(b64)) // raw UTF-8 bytes, binary collation
-        case _ => None
-      }
-    try Some((new String(b64d(p(0)), "UTF-8"),
-      ColStat(kind, v(p(2)), v(p(3)), p(4).toLong,
-        p.lift(5).filter(_.nonEmpty).map(_.toLong),
-        p.lift(6).filter(_.nonEmpty).map(b64d))))
-    catch { case _: RuntimeException => None }
-  }
-
-  /** One manifest, decoded: cumulative txn ids, recorded schema (absent
-    * on legacy manifests), data file entries. '#'-prefixed lines are
-    * metadata; everything else is a data file entry
-    * `path<TAB>length<TAB>rows<TAB>colstats` — size, row count, and
-    * per-column zone maps ride IN the manifest so [[readAsOf]] can plan
-    * (and data-skip) with ZERO per-file filesystem calls. Shorter
-    * legacy entries degrade gracefully (no stats → no skipping; bare
-    * path → driver-side resolution). */
-  private case class Manifest(txns: Map[String, Long],
-      legacyTxns: Set[String],
-      schema: Option[StructType],
-      files: Seq[String], bucket: Option[(Int, String)] = None,
-      dels: Seq[String] = Seq.empty, ts: Option[Long] = None,
-      constraints: Map[String, String] = Map.empty,
-      dropped: Set[String] = Set.empty,
-      ndv: Map[String, Seq[Long]] = Map.empty,
-      // hive-style partition columns of the layout (directory-nesting
-      // order; empty = unpartitioned): data files live under nested
-      // `<col>=<value>/` directories and do NOT store these columns —
-      // reads reconstruct them from each entry's recorded value tuple
-      partBy: Seq[String] = Nil,
-      // partition-scheme HISTORY ([[SnapshotTable.repartitionBy]]):
-      // every scheme the table ever carried, era order, the last one
-      // being the CURRENT `partBy`; each entry's `E<n>` field indexes
-      // into it. None = the table never changed scheme (every entry
-      // belongs to `partBy`). An old-era file stays readable under ITS
-      // era's directory layout; pruning consults each era's own
-      // machinery (directory pruning for its hive columns, zone maps
-      // for everything it stores as data).
-      partEras: Option[Seq[Seq[String]]] = None,
-      // the KIND of the operation that produced THIS version
-      // (append/overwrite/delete/update/merge/compact — never carried
-      // forward): what lets the change feed relabel an UPDATE commit's
-      // diff legs `update_preimage`/`update_postimage` (Delta's CDF
-      // convention) instead of an unkeyed delete+insert. None on
-      // metadata-only commits and on manifests predating the field.
-      kind: Option[String] = None) {
-    def paths: Seq[String] = files.map(_.takeWhile(_ != '\t'))
-    /** The scheme era entry `e` was committed under. */
-    def eraOf(e: FileEntry): Int =
-      e.era.getOrElse(partEras.map(_.size - 1).getOrElse(0))
-    /** Era index -> partition scheme. */
-    def eraScheme(i: Int): Seq[String] =
-      partEras.map(_(i)).getOrElse(partBy)
-    /** One (scheme, entries) leg per era present in `es`, era order —
-      * a single leg for every table that never changed scheme. */
-    def eraLegs(es: Seq[FileEntry]): Seq[(Seq[String], Seq[FileEntry])] =
-      es.groupBy(eraOf).toSeq.sortBy(_._1)
-        .map { case (i, ees) => (eraScheme(i), ees) }
-    /** Do `es` span MORE than one scheme era? */
-    def mixedEras(es: Seq[FileEntry]): Boolean =
-      es.iterator.map(eraOf).distinct.size > 1
-    def entries: Option[Seq[FileEntry]] =
-      if (files.exists(!_.contains('\t'))) None
-      else Some(files.map(parseEntry))
-    /** Deletion-vector files (`__path`,`__pos` parquet) of this
-      * snapshot — always written with full metadata, so parsing never
-      * degrades. Row counts are exact (each live position is deleted at
-      * most once — [[deleteWhere]] matches against the del-applied
-      * read), which keeps [[rowCount]] metadata-only under deletes. */
-    def delEntries: Seq[FileEntry] = dels.map(parseEntry)
-    def delRowCount: Long = delEntries.map(_.rows.getOrElse(0L)).sum
-  }
-
-  private def parseEntry(e: String): FileEntry = {
-    val f = e.split("\t", -1)
-    FileEntry(
-      new FileStatus(f(1).toLong, false, 1, 128L * 1024 * 1024, 0L,
-        new HPath(f(0))),
-      rows = f.lift(2).filter(_.nonEmpty).map(_.toLong),
-      stats = f.lift(3).map(_.split(";").toSeq.filter(_.nonEmpty)
-        .flatMap(parseColStat).toMap).getOrElse(Map.empty),
-      statsVer = f.lift(3).toSeq.flatMap(_.split(";"))
-        .collectFirst { case m if m.startsWith("*:") &&
-          m.drop(2).forall(_.isDigit) && m.length > 2 => m.drop(2).toInt },
-      // 5th field (partitioned layouts only): `P` + one segment per
-      // partition level joined by ',' — `N` the null partition, else
-      // the b64 value (a single-level entry is byte-identical to the
-      // original one-column format)
-      part = f.lift(4).collect {
-        case p if p.startsWith("P") =>
-          p.stripPrefix("P").split(",", -1).toSeq.map {
-            case "N" => None
-            case b => Some(new String(b64d(b), "UTF-8"))
-          }
-      },
-      // scheme-era marker `E<n>` ([[repartitionBy]]) — positionally
-      // after the part field, but matched by shape so a FLAT entry
-      // (no part field) parses its era from slot 4 too
-      era = f.drop(4).collectFirst {
-        case e if e.length > 1 && e.charAt(0) == 'E' &&
-          e.drop(1).forall(_.isDigit) => e.drop(1).toInt
-      })
-  }
 
   /** A snapshot's scan plan, served straight from manifest metadata —
     * file list, sizes, schema, and zone maps all come from the one
@@ -669,77 +520,6 @@ object SnapshotTable {
     }
   }
 
-  private def readManifest(s: SparkSession, tableDir: String,
-      version: Int): Manifest = {
-    val lines = manifestLines(s, tableDir, version)
-    Manifest(
-      // two generations of replay-detection lines:
-      //  - `#txnv:<b64 writer>:<version>` — ONE line per writer,
-      //    carrying that writer's highest committed version (the Delta
-      //    txnAppId/txnVersion convention; bounds the manifest at
-      //    O(writers) no matter how many micro-batches ever committed)
-      //  - legacy `#txn:<id>` — one line per opaque txn id, decoded as
-      //    writer=<id> at version 0 (identical replay semantics: the
-      //    id either landed or it didn't). Tracked SEPARATELY in
-      //    `legacyTxns` too: only genuinely-legacy ids may satisfy the
-      //    upgrade-seam composite check in [[txnLanded]] — a NEW
-      //    one-shot id that happens to spell "<writer>-<batch>" must
-      //    never mark another writer's batch as a replay.
-      txns = {
-        val pairs = lines.collect {
-          case l if l.startsWith("#txnv:") =>
-            val p = l.stripPrefix("#txnv:").split(":", 2)
-            (new String(b64d(p(0)), "UTF-8"), p(1).toLong)
-          case l if l.startsWith("#txn:") => (l.stripPrefix("#txn:"), 0L)
-        }
-        pairs.groupMapReduce(_._1)(_._2)(math.max)
-      },
-      legacyTxns = lines.collect {
-        case l if l.startsWith("#txn:") => l.stripPrefix("#txn:") }.toSet,
-      schema = lines.collectFirst {
-        case l if l.startsWith("#schema:") =>
-          DataType.fromJson(l.stripPrefix("#schema:")).asInstanceOf[StructType] },
-      files = lines.filterNot(_.startsWith("#")),
-      bucket = lines.collectFirst {
-        case l if l.startsWith("#bucket:") =>
-          val p = l.stripPrefix("#bucket:").split(":", 2)
-          (p(0).toInt, new String(b64d(p(1)), "UTF-8")) },
-      dels = lines.collect {
-        case l if l.startsWith("#del:") => l.stripPrefix("#del:") },
-      ts = lines.collectFirst {
-        case l if l.startsWith("#ts:") => l.stripPrefix("#ts:").toLong },
-      constraints = lines.collect {
-        case l if l.startsWith("#check:") =>
-          val p = l.stripPrefix("#check:").split(":", 2)
-          new String(b64d(p(0)), "UTF-8") -> new String(b64d(p(1)), "UTF-8")
-      }.toMap,
-      dropped = lines.collect {
-        case l if l.startsWith("#dropped:") =>
-          new String(b64d(l.stripPrefix("#dropped:")), "UTF-8") }.toSet,
-      ndv = lines.collect {
-        case l if l.startsWith("#ndv:") =>
-          val p = l.stripPrefix("#ndv:").split(":", 2)
-          new String(b64d(p(0)), "UTF-8") ->
-            (if (p(1).isEmpty) Seq.empty[Long]
-             else p(1).split(",").toSeq.map(_.toLong))
-      }.toMap,
-      partBy = lines.collectFirst {
-        case l if l.startsWith("#partby:") =>
-          l.stripPrefix("#partby:").split(":", -1).toSeq
-            .map(b => new String(b64d(b), "UTF-8")) }.getOrElse(Nil),
-      // scheme history: '|'-joined eras, each era's columns b64-joined
-      // by ':'; an empty segment is a FLAT era
-      partEras = lines.collectFirst {
-        case l if l.startsWith("#parteras:") =>
-          l.stripPrefix("#parteras:").split("\\|", -1).toSeq.map { seg =>
-            if (seg.isEmpty) Nil
-            else seg.split(":", -1).toSeq
-              .map(b => new String(b64d(b), "UTF-8"))
-          } },
-      kind = lines.collectFirst {
-        case l if l.startsWith("#kind:") => l.stripPrefix("#kind:") })
-  }
-
   /** Writer ids with at least one committed transaction on this table —
     * the replay-detection surface of [[commitIdempotent]] (an opaque
     * txn id IS its writer id at version 0). ONE manifest read: every
@@ -903,8 +683,7 @@ object SnapshotTable {
     * maps inside it); it declines with None when a Z dimension is the
     * partition column (constant within any directory) — and, exactly
     * as on flat tables, on outstanding deletion vectors
-    * (absorbDeletes first), bucketed layouts, and legacy/empty
-    * snapshots. */
+    * (absorbDeletes first), bucketed layouts, and empty snapshots. */
   def commitPartitioned(s: SparkSession, tableDir: String, df: DataFrame,
       partitionBy: String, overwrite: Boolean = false): Int =
     commitPartitionedBy(s, tableDir, df, Seq(partitionBy), overwrite)
@@ -1011,8 +790,8 @@ object SnapshotTable {
           // serializability: the rewrite read exactly m0's file +
           // vector state — publishing over a mid-flight commit would
           // erase its rows while claiming to preserve them
-          if (m.files != m0.files || m.dels != m0.dels) None
-          else Some((written._2, storedSchema(cur.schema), m.txns,
+          if (m.entries != m0.entries || m.dels != m0.dels) None
+          else Some(Prepared(written._2, storedSchema(cur.schema), m.txns,
             bucketBy, Seq.empty, m.constraints,
             // all pre-drop files are rewritten away: dropped names are
             // safely re-usable, exactly as after any overwrite
@@ -1717,8 +1496,7 @@ object SnapshotTable {
       require(prev.nonEmpty,
         s"setMapStatKeys: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"setMapStatKeys: legacy manifest without schema in $tableDir"))
+      val sc0 = m0.schema
       parsed.foreach { case (c, _) =>
         val f = sc0.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -1745,10 +1523,9 @@ object SnapshotTable {
       })
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None
-          else Some((m.files, next, m.txns, m.bucket, m.dels,
-            m.constraints, m.dropped, m.ndv))
+          else Some(Prepared.of(m).copy(schema = next))
         }
       }
       res match {
@@ -1924,7 +1701,7 @@ object SnapshotTable {
     * relation — empty when the snapshot has none. */
   private def delFrame(s: SparkSession, tableDir: String,
       m: Manifest): DataFrame =
-    relationFor(s, tableDir, delSchema, m.delEntries)
+    relationFor(s, tableDir, delSchema, m.dels)
 
   /** Subtract a snapshot's deletion vectors from its base scan: one
     * anti-join on the reader's (file, row-position) identity. The
@@ -1960,8 +1737,7 @@ object SnapshotTable {
     * never be re-deleted, keeping [[rowCount]] exact under metadata
     * arithmetic), and the publish aborts + re-plans if ANY commit
     * landed in between. Returns the new version, or None when no row
-    * matched (no commit published). Tables whose manifests predate
-    * schema/stats recording fall back to a copy-on-write overwrite. */
+    * matched (no commit published). */
   def deleteWhere(s: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Option[Int] = {
     import org.apache.spark.sql.functions._
@@ -1972,99 +1748,78 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"deleteWhere: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      (m0.schema, m0.entries) match {
-        case (Some(sc0), Some(es0)) if es0.nonEmpty =>
-          // layout- AND era-agnostic: deletion vectors key on (file,
-          // position), so merge-on-read deletes work unchanged on
-          // hive-partitioned tables (the GDPR-delete-on-an-event-feed
-          // case) and across partition-scheme ERAS ([[repartitionBy]])
-          // — the probe plans one leg per era, each file read under
-          // ITS era's layout with the positional identity selected
-          // per leg (hidden _metadata does not cross a Union); no
-          // data file is touched, so every layout survives by
-          // construction
-          val withMeta = m0.eraLegs(es0).map { case (scheme, ees) =>
-            relationFor(s, tableDir, storedSchema(sc0), ees,
-              m0.bucket, partBy = scheme)
-              .select(col("_metadata.file_path").as("__path"),
-                col("_metadata.row_index").as("__pos"), col("*"))
-          }.reduce(_.unionByName(_))
-          val live =
-            if (m0.dels.isEmpty) withMeta
-            else withMeta.join(delFrame(s, tableDir, m0),
-              Seq("__path", "__pos"), "left_anti")
-          val matched = live.filter(predicate)
-            .select(col("__path"), col("__pos"))
-          writeDelDir(s, tableDir, matched) match {
-            case None => return None // nothing matched: nothing to publish
-            case Some((delDir, delLines)) =>
-              beforePublishHook()
-              val m0paths = m0.paths.toSet
-              val scStored = storedSchema(sc0)
-              val res = publishNext(s, tableDir,
-                  kind = Some("delete")) { pm =>
-                pm.flatMap { m =>
-                  // The positions were computed against m0's file +
-                  // vector state. They stay valid — and the publish
-                  // REBASES instead of re-planning — as long as every
-                  // file they point into is still live; a rewrite that
-                  // dropped any m0 file (merge/compact/overwrite)
-                  // invalidates positions into it. A concurrent vector
-                  // DELETE composes as a union with no extra work (a
-                  // position deleted twice anti-joins identically).
-                  if (!m0paths.subsetOf(m.paths.toSet)) None
-                  else {
-                    // STRICT serializability across concurrent commits
-                    // that ADDED files: their rows may match the
-                    // predicate, and the delete — serialized after
-                    // them — must cover those rows, so any match
-                    // forces the full re-plan. The probe reads ONLY
-                    // the added files (zone-map pruned); a
-                    // non-matching append then composes retry-free
-                    // (identical final state in either serial order).
-                    val addedOk = m.entries match {
-                      case Some(es) =>
-                        val added = es.filterNot(e =>
-                          m0paths.contains(e.status.getPath.toString))
-                        added.isEmpty ||
-                          (m.schema.map(storedSchema).contains(scStored) &&
-                            m.partBy == m0.partBy &&
-                            m.partEras == m0.partEras &&
-                            m.eraLegs(added).map { case (scheme, ees) =>
-                              relationFor(s, tableDir, scStored, ees,
-                                m.bucket, partBy = scheme)
-                            }.reduce(_.unionByName(_))
-                              .filter(predicate).isEmpty)
-                      case None => false // legacy entries: re-plan
-                    }
-                    if (!addedOk) None
-                    // rows removed: a bottom-k sketch cannot subtract —
-                    // NDV unknown until a full rewrite recollects
-                    else Some((m.files,
-                      m.schema.getOrElse(storedSchema(sc0)),
-                      m.txns, m.bucket, m.dels ++ delLines,
-                      m.constraints, m.dropped,
-                      Map.empty[String, Seq[Long]]))
-                  }
-                }
+      val (sc0, es0) = (m0.schema, m0.entries)
+      // an empty snapshot (flat or hive) has nothing to delete
+      if (es0.isEmpty) return None
+      // layout- AND era-agnostic: deletion vectors key on (file,
+      // position), so merge-on-read deletes work unchanged on
+      // hive-partitioned tables (the GDPR-delete-on-an-event-feed
+      // case) and across partition-scheme ERAS ([[repartitionBy]])
+      // — the probe plans one leg per era, each file read under
+      // ITS era's layout with the positional identity selected
+      // per leg (hidden _metadata does not cross a Union); no
+      // data file is touched, so every layout survives by
+      // construction
+      val withMeta = m0.eraLegs(es0).map { case (scheme, ees) =>
+        relationFor(s, tableDir, storedSchema(sc0), ees,
+          m0.bucket, partBy = scheme)
+          .select(col("_metadata.file_path").as("__path"),
+            col("_metadata.row_index").as("__pos"), col("*"))
+      }.reduce(_.unionByName(_))
+      val live =
+        if (m0.dels.isEmpty) withMeta
+        else withMeta.join(delFrame(s, tableDir, m0),
+          Seq("__path", "__pos"), "left_anti")
+      val matched = live.filter(predicate)
+        .select(col("__path"), col("__pos"))
+      writeDelDir(s, tableDir, matched) match {
+        case None => return None // nothing matched: nothing to publish
+        case Some((delDir, delLines)) =>
+          beforePublishHook()
+          val m0paths = m0.paths.toSet
+          val scStored = storedSchema(sc0)
+          val res = publishNext(s, tableDir,
+              kind = Some("delete")) { pm =>
+            pm.flatMap { m =>
+              // The positions were computed against m0's file +
+              // vector state. They stay valid — and the publish
+              // REBASES instead of re-planning — as long as every
+              // file they point into is still live; a rewrite that
+              // dropped any m0 file (merge/compact/overwrite)
+              // invalidates positions into it. A concurrent vector
+              // DELETE composes as a union with no extra work (a
+              // position deleted twice anti-joins identically).
+              if (!m0paths.subsetOf(m.paths.toSet)) None
+              else {
+                // STRICT serializability across concurrent commits
+                // that ADDED files: their rows may match the
+                // predicate, and the delete — serialized after
+                // them — must cover those rows, so any match
+                // forces the full re-plan. The probe reads ONLY
+                // the added files (zone-map pruned); a
+                // non-matching append then composes retry-free
+                // (identical final state in either serial order).
+                val added = m.entries.filterNot(e =>
+                  m0paths.contains(e.path))
+                val addedOk = added.isEmpty ||
+                  (storedSchema(m.schema) == scStored &&
+                    m.partBy == m0.partBy &&
+                    m.partEras == m0.partEras &&
+                    m.eraLegs(added).map { case (scheme, ees) =>
+                      relationFor(s, tableDir, scStored, ees,
+                        m.bucket, partBy = scheme)
+                    }.reduce(_.unionByName(_))
+                      .filter(predicate).isEmpty)
+                if (!addedOk) None
+                // rows removed: a bottom-k sketch cannot subtract —
+                // NDV unknown until a full rewrite recollects
+                else Some(Prepared.of(m).copy(dels = m.dels ++ delLines,
+                  ndv = Map.empty))
               }
-              if (res.isEmpty) f.delete(delDir, true) // conflict: re-plan
-              else return res
+            }
           }
-        case _ =>
-          // an EMPTY partitioned snapshot has nothing to delete — and
-          // the flat copy-on-write below would silently drop its layout
-          if (m0.partBy.nonEmpty) return None
-          // legacy manifest (or empty snapshot): copy-on-write fallback —
-          // keep rows where the predicate is FALSE or NULL (SQL DELETE
-          // WHERE semantics: only provably-true rows go). The contract
-          // holds here too: nothing matched → None, NO version published
-          // (and no pointless full-table rewrite)
-          val cur = readAsOf(s, tableDir, Int.MaxValue)
-          if (cur.columns.isEmpty) return None
-          if (cur.filter(coalesce(predicate, lit(false))).isEmpty) return None
-          return Some(commit(s, tableDir,
-            cur.filter(!coalesce(predicate, lit(false))), overwrite = true))
+          if (res.isEmpty) f.delete(delDir, true) // conflict: re-plan
+          else return res
       }
     }
     throw new IllegalStateException(
@@ -2112,11 +1867,8 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"updateWhere: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0raw = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"updateWhere: legacy manifest without schema in $tableDir"))
-      val es0 = m0.entries.getOrElse(throw new IllegalArgumentException(
-        s"updateWhere: legacy manifest without file metadata in $tableDir"))
-      val sc0 = storedSchema(sc0raw)
+      val es0 = m0.entries
+      val sc0 = storedSchema(m0.schema)
       sets.keys.foreach { c =>
         require(sc0.fieldNames.contains(c),
           s"updateWhere: no column '$c' in ${sc0.fieldNames.mkString(",")}")
@@ -2167,7 +1919,7 @@ object SnapshotTable {
       val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
         toPhysical(upd, sc0), uniq, partitionBy = m0.partBy,
         bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-      val affectedEntryPaths = affected.map(_.status.getPath.toString).toSet
+      val affectedEntryPaths = affected.map(_.path).toSet
       beforePublishHook()
       val setPhys = sc0.fields.filter(fl => sets.contains(fl.name))
         .map(physName).toSet
@@ -2192,36 +1944,31 @@ object SnapshotTable {
           // full re-plan, the same strict rule the delete path pins).
           // Two UPDATEs on disjoint hive partitions therefore BOTH
           // commit with zero rewrite retries.
-          val exact = m.files == m0.files && m.dels == m0.dels &&
+          val exact = m.entries == m0.entries && m.dels == m0.dels &&
             m.constraints == m0.constraints
           lazy val structuralOk =
             m.dels == m0.dels && m.constraints == m0.constraints &&
               m.schema == m0.schema && m.bucket.isEmpty &&
               m.partBy == m0.partBy && m.partEras == m0.partEras &&
               affectedEntryPaths.subsetOf(m.paths.toSet)
-          lazy val addedClean = m.entries match {
-            case Some(es) =>
-              val added = es.filterNot(e =>
-                m0pathsAll.contains(e.status.getPath.toString))
-              added.isEmpty ||
-                m.eraLegs(added).map { case (scheme, ees) =>
-                  relationFor(s, tableDir, sc0, ees, partBy = scheme)
-                }.reduce(_.unionByName(_))
-                  .filter(predicate).isEmpty
-            case None => false // legacy entries: re-plan
+          lazy val addedClean = {
+            val added = m.entries.filterNot(e => m0pathsAll.contains(e.path))
+            added.isEmpty ||
+              m.eraLegs(added).map { case (scheme, ees) =>
+                relationFor(s, tableDir, sc0, ees, partBy = scheme)
+              }.reduce(_.unionByName(_))
+                .filter(predicate).isEmpty
           }
           if (!exact && !(structuralOk && addedClean)) None
-          else Some((
+          else Some(Prepared.of(m).copy(
             // keep every CURRENT file except the ones this update
             // rewrites (covers both the exact and rebased cases)
-            m.files.filterNot(e =>
-              affectedEntryPaths.contains(e.takeWhile(_ != '\t')))
-              ++ newFiles,
-            m.schema.getOrElse(sc0), m.txns, m.bucket, Seq.empty,
-            m.constraints, m.dropped,
+            entries = m.entries.filterNot(e =>
+              affectedEntryPaths.contains(e.path)) ++ newFiles,
+            dels = Seq.empty,
             // SET columns' values changed (no sketch subtraction);
             // every other column's row SET is preserved — carry
-            m.ndv -- setPhys))
+            ndv = m.ndv -- setPhys))
         }
       }
       res match {
@@ -2235,12 +1982,12 @@ object SnapshotTable {
 
   /** Write the matched delete positions as a `data/del-*` parquet
     * (staged + renamed, race-free like every data write) and return
-    * its manifest entry lines; None — and no directory left behind —
+    * its manifest entries; None — and no directory left behind —
     * when nothing matched. Positions are range-clustered and sorted by
     * (file, position) so the vector files RLE-compress the path column
     * and probe in file order. */
   private def writeDelDir(s: SparkSession, tableDir: String,
-      matched: DataFrame): Option[(HPath, Seq[String])] = {
+      matched: DataFrame): Option[(HPath, Seq[FileEntry])] = {
     import org.apache.spark.sql.functions._
     val f = fs(s, tableDir)
     val uniq = java.util.UUID.randomUUID.toString.take(8)
@@ -2259,14 +2006,14 @@ object SnapshotTable {
     val counts = counter.fold.result(counter.files.toMap)._1
     val statuses = f.listStatus(delDir).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val lines = statuses.flatMap { st =>
+    val entries = statuses.flatMap { st =>
       counts.get(st.getPath.getName) match {
-        case Some((n, _)) => Some(s"${st.getPath.toString}\t${st.getLen}\t$n\t")
+        case Some((n, _)) => Some(FileEntry(st, Some(n), Map.empty))
         case None => f.delete(st.getPath, false); None // zero-row part
       }
     }
-    if (lines.isEmpty) { f.delete(delDir, true); None }
-    else Some((delDir, lines.sorted))
+    if (entries.isEmpty) { f.delete(delDir, true); None }
+    else Some((delDir, entries.sortBy(_.path)))
   }
 
   /** Retire a table's deletion vectors: rewrite ONLY the data files
@@ -2287,10 +2034,7 @@ object SnapshotTable {
     if (prev.isEmpty) return None
     val m0 = readManifest(s, tableDir, prev.last)
     if (m0.dels.isEmpty) return None
-    val (sc0, es0) = (m0.schema, m0.entries) match {
-      case (Some(a), Some(b)) => (storedSchema(a), b)
-      case _ => return None // legacy manifests never carry vectors
-    }
+    val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
     // affected files come from the vectors themselves — vector-sized
     // driver work, never table-sized
     val affectedPaths = delFrame(s, tableDir, m0).select("__path").distinct()
@@ -2316,17 +2060,16 @@ object SnapshotTable {
     val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
       toPhysical(rewritten, sc0),
       uniq, partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-    val carriedPaths = carried.map(_.status.getPath.toString).toSet
+    val carriedPaths = carried.map(_.path).toSet
     beforePublishHook()
     val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
       pm.flatMap { m =>
-        if (m.files != m0.files || m.dels != m0.dels) None // conflict
-        else Some((
-          m.files.filter(e => carriedPaths.contains(e.takeWhile(_ != '\t')))
+        if (m.entries != m0.entries || m.dels != m0.dels) None // conflict
+        else Some(Prepared.of(m).copy(
+          entries = m.entries.filter(e => carriedPaths.contains(e.path))
             ++ newFiles,
-          m.schema.getOrElse(sc0), m.txns,
-          if (affected.isEmpty) m.bucket else None,
-          Seq.empty, m.constraints, m.dropped, m.ndv))
+          bucket = if (affected.isEmpty) m.bucket else None,
+          dels = Seq.empty))
       }
     }
     if (res.isEmpty) f.delete(dataDir, true)
@@ -2481,7 +2224,7 @@ object SnapshotTable {
       preShaped: Boolean = false,
       bloomCols: Set[String] = Set.empty,
       mapKeys: Map[String, Seq[String]] = Map.empty)
-      : (HPath, Seq[String], Map[String, Seq[Long]]) = {
+      : (HPath, Seq[FileEntry], Map[String, Seq[Long]]) = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod, raise_error, when}
     val f = fs(s, tableDir)
     val staging = new HPath(tableDir, s".staging-$uniq")
@@ -2627,52 +2370,57 @@ object SnapshotTable {
       if (statuses.isEmpty) None
       else tracker.map(t => t.fold.result(t.files.toMap))
     (dataDir, listed.map { case (st, part) =>
-      val partField = part.fold("")(vs =>
-        "\tP" + vs.map(_.fold("N")(b64e)).mkString(","))
       stats match {
         case Some((m, _)) =>
           m.get(StatsFold.relKey(st.getPath.toString, partitionBy.size + 1)) match {
-          // the trailing `*:N` coverage marker asserts these stats are
-          // COMPLETE for the batch schema at format N — see FileEntry;
-          // a budget/collision-truncated nested enumeration earns only
-          // v2 (see statsMarkerVersion)
-          case Some((rows, cols)) =>
-            s"${st.getPath.toString}\t${st.getLen}\t$rows\t" +
-              s"$cols;*:${statsMarkerVersion(df.schema)}$partField"
+          // the coverage marker asserts these stats are COMPLETE for the
+          // batch schema at format N — see FileEntry; a
+          // budget/collision-truncated nested enumeration earns only v2
+          // (see statsMarkerVersion)
+          case Some((rows, cols)) => FileEntry(st, Some(rows), cols, part,
+            statsVer = Some(statsMarkerVersion(df.schema)))
           // the fold saw every written file, so a file without stats
           // is a ZERO-ROW file (a writer task with an empty partition)
           // — record that, don't leave the count unknown
-          case None => s"${st.getPath.toString}\t${st.getLen}\t0\t$partField"
+          case None => FileEntry(st, Some(0L), Map.empty, part)
         }
-        case None => s"${st.getPath.toString}\t${st.getLen}\t\t$partField"
+        case None => FileEntry(st, None, Map.empty, part)
       }
-    }.sorted,
+    }.sortBy(_.path),
       stats.map(_._2).getOrElse(Map.empty))
   }
 
-  /** The optimistic-commit loop shared by [[commitInternal]] and
-    * [[compact]]: each attempt reads the latest manifest, asks `prepare`
-    * for the next snapshot's content (entries, schema, txn set), and
-    * publishes it under the next version number with the atomic
-    * create-exclusive; a lost version race re-reads and retries, so
-    * `prepare` always sees the manifest it will be serialized after.
-    * `prepare` returning None aborts (replayed txn, maintenance
-    * conflict) and publishNext returns None. */
   /** Per-snapshot content handed back by a `prepare` callback: data
-    * entries, read schema, cumulative txn ids, bucket layout, deletion
-    * vectors, and CHECK constraints. The commit timestamp is stamped by
-    * [[publishNext]] itself at publish time. */
-  /** 3rd element: per-writer txn watermarks (see [[committedTxnVersions]]).
-    * 8th element: cumulative per-column NDV sketches (the bottom-64 KMV
-    * of md5 value hashes — see [[metaAgg]]'s `est_ndv`). Carried/merged
-    * by ops that preserve or append rows, DROPPED (unknown) by ops that
-    * remove or rewrite row values (merge, deleteWhere) — a bottom-k
-    * sketch cannot subtract. */
-  private type Prepared =
-    (Seq[String], StructType, Map[String, Long], Option[(Int, String)],
-      Seq[String], Map[String, String], Set[String], Map[String, Seq[Long]])
+    * entries, read schema, per-writer txn watermarks (see
+    * [[committedTxnVersions]]), bucket layout, deletion vectors, CHECK
+    * constraints, reserved dropped names, and cumulative per-column NDV
+    * sketches (the bottom-64 KMV of md5 value hashes — see
+    * [[metaAgg]]'s `est_ndv`; carried/merged by ops that preserve or
+    * append rows, DROPPED (unknown) by ops that remove or rewrite row
+    * values — a bottom-k sketch cannot subtract). The commit timestamp,
+    * layout history, legacy txn ids and operation kind are stamped by
+    * [[publishNext]] itself. */
+  private final case class Prepared(entries: Seq[FileEntry],
+      schema: StructType, txns: Map[String, Long],
+      bucket: Option[(Int, String)], dels: Seq[FileEntry],
+      constraints: Map[String, String], dropped: Set[String],
+      ndv: Map[String, Seq[Long]])
 
-  /** `partByOverride`: None carries the previous manifest's partition
+  private object Prepared {
+    /** `m`'s content carried forward unchanged. */
+    def of(m: Manifest): Prepared = Prepared(m.entries, m.schema, m.txns,
+      m.bucket, m.dels, m.constraints, m.dropped, m.ndv)
+  }
+
+  /** The optimistic-commit loop shared by every commit path: each
+    * attempt reads the latest manifest, asks `prepare` for the next
+    * snapshot's content, and publishes it under the next version number
+    * with the atomic create-exclusive; a lost version race re-reads and
+    * retries, so `prepare` always sees the manifest it will be
+    * serialized after. `prepare` returning None aborts (replayed txn,
+    * maintenance conflict) and publishNext returns None.
+    *
+    * `partByOverride`: None carries the previous manifest's partition
     * columns forward unchanged (every metadata/maintenance op);
     * Some(cols) SETS them — only data-commit paths that (re)define the
     * layout pass this. */
@@ -2691,13 +2439,7 @@ object SnapshotTable {
       val prevManifest = prev.lastOption.map(readManifest(s, tableDir, _))
       prepare(prevManifest) match {
         case None => return None
-        case Some((entries, schema, txns, bucket, dels, checks, droppedCols,
-            ndv)) =>
-          val v = prev.lastOption.getOrElse(0) + 1
-          val cd = commitsDir(tableDir)
-          f.mkdirs(cd)
-          val tmp = new HPath(cd, s".tmp-$uniq-$attempt")
-          val out = f.create(tmp, true)
+        case Some(p) =>
           val partBy = partByOverride.getOrElse(
             prevManifest.map(_.partBy).getOrElse(Nil))
           // scheme-era history ([[repartitionBy]]): carried as long as
@@ -2706,48 +2448,30 @@ object SnapshotTable {
           // again. Fresh entries landing on an era'd table are tagged
           // with the CURRENT era here, so every entry always knows its
           // directory layout.
-          def hasEraTag(l: String): Boolean =
-            l.split("\t", -1).drop(4).exists(f =>
-              f.length > 1 && f.charAt(0) == 'E' &&
-                f.drop(1).forall(_.isDigit))
+          val tagged = p.entries.exists(_.era.isDefined)
           val partEras = partErasOverride.orElse(
-            prevManifest.flatMap(_.partEras)
-              .filter(_ => entries.exists(hasEraTag)))
-          require(partEras.isDefined || !entries.exists(hasEraTag),
+            prevManifest.flatMap(_.partEras).filter(_ => tagged))
+          require(partEras.isDefined || !tagged,
             "snapshot publish: era-tagged entries without a #parteras " +
               "history — the caller must carry it (partErasOverride)")
-          val entriesTagged = partEras match {
-            case Some(eras) => entries.map(l =>
-              if (hasEraTag(l)) l else s"$l\tE${eras.size - 1}")
-            case None => entries
-          }
+          val entries = partEras.fold(p.entries)(eras => p.entries.map(e =>
+            if (e.era.isDefined) e else e.copy(era = Some(eras.size - 1))))
           // genuinely-legacy one-shot ids keep their own `#txn:` line
           // form forever: re-encoding them as `#txnv:` would erase the
           // provenance the upgrade-seam composite check keys on
-          val legacy = prevManifest.map(_.legacyTxns).getOrElse(Set.empty)
-          val meta = legacy.toSeq.sorted.map(id => s"#txn:$id") ++
-            txns.toSeq.filterNot { case (w, v) =>
-              v == 0L && legacy.contains(w) }
-            .sortBy(_._1).map { case (w, ver) =>
-            s"#txnv:${b64e(w)}:$ver" } ++
-            Seq(s"#schema:${schema.json}",
-              s"#ts:${System.currentTimeMillis()}") ++
-            (if (partBy.isEmpty) Nil
-             else Seq(s"#partby:${partBy.map(b64e).mkString(":")}")) ++
-            partEras.toSeq.map(eras => "#parteras:" +
-              eras.map(_.map(b64e).mkString(":")).mkString("|")) ++
+          val next = Manifest(p.txns,
+            prevManifest.map(_.legacyTxns).getOrElse(Set.empty), p.schema,
+            entries, p.bucket, p.dels, Some(System.currentTimeMillis()),
+            p.constraints, p.dropped, p.ndv, partBy, partEras,
             // the producing operation's kind — THIS commit's, never
             // carried from the previous manifest
-            kind.toSeq.map(k => s"#kind:$k") ++
-            bucket.map { case (n, c) => s"#bucket:$n:${b64e(c)}" } ++
-            dels.map(d => s"#del:$d") ++
-            checks.toSeq.sortBy(_._1).map { case (n, e) =>
-              s"#check:${b64e(n)}:${b64e(e)}" } ++
-            droppedCols.toSeq.sorted.map(n => s"#dropped:${b64e(n)}") ++
-            ndv.toSeq.sortBy(_._1).map { case (c, sk) =>
-              s"#ndv:${b64e(c)}:${sk.mkString(",")}" }
-          try out.write(
-            (meta ++ entriesTagged).mkString("\n").getBytes("UTF-8"))
+            kind)
+          val v = prev.lastOption.getOrElse(0) + 1
+          val cd = commitsDir(tableDir)
+          f.mkdirs(cd)
+          val tmp = new HPath(cd, s".tmp-$uniq-$attempt")
+          val out = f.create(tmp, true)
+          try out.write(ManifestCodec.encode(next).getBytes("UTF-8"))
           finally out.close()
           // the commit point: atomic create-exclusive of the version name
           if (publish(f, tmp, manifestPath(tableDir, v))) return Some(v)
@@ -2788,7 +2512,7 @@ object SnapshotTable {
     // the data write happens ONCE; version races retry only the (tiny)
     // manifest publish
     val uniq = java.util.UUID.randomUUID.toString.take(8)
-    var written: Option[(HPath, Seq[String], Map[String, Seq[Long]])] = None
+    var written: Option[(HPath, Seq[FileEntry], Map[String, Seq[Long]])] = None
     // the logical→physical rename map the staged write used (a lost
     // race against a concurrent rename must restage under the new map)
     var writtenRen: Map[String, String] = Map.empty
@@ -2818,7 +2542,7 @@ object SnapshotTable {
         // bucket spec (its file names must all parse bucket ids, and
         // mixed specs have no partitioning meaning)
         if (bucket.isDefined && !overwrite)
-          prevManifest.filter(_.files.nonEmpty).foreach { m =>
+          prevManifest.filter(_.entries.nonEmpty).foreach { m =>
             require(m.bucket == bucket,
               s"bucketed append ${bucket.get} onto a table laid out as " +
                 s"${m.bucket.map(_.toString).getOrElse("unbucketed")} — " +
@@ -2828,7 +2552,7 @@ object SnapshotTable {
         // exactly — a plain append's files would lack partition values,
         // a differently-partitioned one would shear the directory scheme
         if (!overwrite)
-          prevManifest.filter(_.files.nonEmpty).foreach { m =>
+          prevManifest.filter(_.entries.nonEmpty).foreach { m =>
             require(m.partBy == partitionBy,
               s"append partitioned by " +
                 s"${if (partitionBy.isEmpty) "(none)" else partitionBy.mkString(",")} " +
@@ -2842,8 +2566,8 @@ object SnapshotTable {
         // (owned by the renamed logical column) would resurface under
         // the newcomer — the haunted-column hazard, physical edition
         if (!overwrite) {
-          val reserved = prevManifest.flatMap(_.schema)
-            .map(sc => renamesOf(sc).values.toSet).getOrElse(Set.empty)
+          val reserved = prevManifest
+            .map(m => renamesOf(m.schema).values.toSet).getOrElse(Set.empty)
           val clash = df.columns.toSet.intersect(reserved)
           require(clash.isEmpty,
             s"append writes column(s) ${clash.mkString(",")} under a " +
@@ -2857,7 +2581,7 @@ object SnapshotTable {
           // overwrite / first commit: all-new files under the batch's
           // own (logical) names — rename indirections reset
           if (overwrite) stripPhys(df.schema)
-          else prevManifest.flatMap(_.schema)
+          else prevManifest.map(_.schema)
             .map(mergeSchemas(_, df.schema,
               frozen = prevManifest.toSet.flatMap((m: Manifest) =>
                 m.bucket.map(_._2).toSet ++ m.partBy) ++
@@ -2881,7 +2605,7 @@ object SnapshotTable {
           writtenRen = renNow
         }
         val base = if (overwrite) Seq.empty
-          else prevManifest.map(_.files).getOrElse(Seq.empty)
+          else prevManifest.map(_.entries).getOrElse(Seq.empty)
         // txn watermarks accumulate across commits — including
         // overwrites: replay detection must survive a table rewrite
         val txns = txnMerge(
@@ -2906,18 +2630,17 @@ object SnapshotTable {
         // counts non-null distincts); a column the previous TABLE never
         // had (schema evolution) takes the batch's alone (old rows are
         // all-null for it); a column whose previous sketch is UNKNOWN
-        // (legacy manifest, or dropped by a row-removing op) stays
+        // (dropped by a row-removing op) stays
         // unknown — merging against an incomplete history would
         // undercount silently.
         val batchNdv = written.get._3
         val ndv =
-          if (overwrite || prevManifest.forall(_.files.isEmpty)) batchNdv
+          if (overwrite || prevManifest.forall(_.entries.isEmpty)) batchNdv
           else {
             val pm = prevManifest.get
             // NDV sketches key on PHYSICAL names (what the stats pass
             // sees) — so does this whole merge
-            val prevCols = pm.schema
-              .map(_.fields.map(physName).toSet).getOrElse(Set.empty)
+            val prevCols = pm.schema.fields.map(physName).toSet
             val carried = pm.ndv.flatMap { case (c, sk) =>
               batchNdv.get(c) match {
                 case Some(b) => Some(c -> graft.functions.KmvDistinctAgg
@@ -2946,7 +2669,7 @@ object SnapshotTable {
               !carried.contains(c) && !prevCols.contains(c) }
           }
         // constraints are table properties: they survive overwrites
-        Some((base ++ written.get._2, schema, txns, outBucket, dels,
+        Some(Prepared(base ++ written.get._2, schema, txns, outBucket, dels,
           prevManifest.map(_.constraints).getOrElse(Map.empty),
           if (overwrite) Set.empty[String]
           else prevManifest.map(_.dropped).getOrElse(Set.empty),
@@ -3046,51 +2769,44 @@ object SnapshotTable {
     // mixed/superseded partition-scheme eras: the pack read+rewrite
     // assumes ONE current layout — relayout()/overwrite unifies
     if (!eraUniform(m0)) return None
-    (m0.schema, m0.entries) match {
-      case (Some(schema0), Some(es0)) =>
-        val small = es0.filter(_.status.getLen < smallFileBytes)
-        if (small.size <= 1) return None
-        val nOut = math.max(1, math.ceil(
-          small.map(_.status.getLen).sum.toDouble / targetFileBytes).toInt)
-        val f = fs(s, tableDir)
-        val uniq = java.util.UUID.randomUUID.toString.take(8)
-        // hive layout packs PER PARTITION: the partitioned writer
-        // re-clusters by value and emits packed files inside fresh
-        // `<col>=<value>/` dirs — the maintenance a partitioned
-        // streaming sink's small-file tail needs (one packed file per
-        // partition per sweep; only files under `smallFileBytes` are
-        // selected, so output stays near the small-file mass per value)
-        val (dataDir, newFiles, _) =
-          if (m0.partBy.nonEmpty) writeDataDir(s, tableDir,
-            toPhysical(relationFor(s, tableDir, storedSchema(schema0), small,
-              partBy = m0.partBy), storedSchema(schema0)),
-            uniq, partitionBy = m0.partBy,
-            bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-          else writeDataDir(s, tableDir,
-            toPhysical(relationFor(s, tableDir, storedSchema(schema0), small)
-              .repartition(nOut), storedSchema(schema0)), uniq,
-            bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-        val compacted = small.map(_.status.getPath.toString).toSet
-        beforePublishHook()
-        val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-          pm.flatMap { m =>
-            // conflict: a compacted file left the live set, or a
-            // deletion vector landed mid-compaction (the rewrite read
-            // the small files WITHOUT it — publishing would resurrect
-            // the deleted rows)
-            if (!compacted.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-            else Some((
-              m.files.filterNot(e => compacted.contains(e.takeWhile(_ != '\t')))
-                ++ newFiles,
-              m.schema.getOrElse(storedSchema(schema0)),
-              m.txns,
-              m.bucket, Seq.empty, m.constraints, m.dropped, m.ndv))
-          }
-        }
-        if (res.isEmpty) f.delete(dataDir, true)
-        res
-      case _ => None // legacy manifest without schema/sizes: not compactable
+    val schema0 = m0.schema
+    val small = m0.entries.filter(_.status.getLen < smallFileBytes)
+    if (small.size <= 1) return None
+    val nOut = math.max(1, math.ceil(
+      small.map(_.status.getLen).sum.toDouble / targetFileBytes).toInt)
+    val f = fs(s, tableDir)
+    val uniq = java.util.UUID.randomUUID.toString.take(8)
+    // hive layout packs PER PARTITION: the partitioned writer
+    // re-clusters by value and emits packed files inside fresh
+    // `<col>=<value>/` dirs — the maintenance a partitioned
+    // streaming sink's small-file tail needs (one packed file per
+    // partition per sweep; only files under `smallFileBytes` are
+    // selected, so output stays near the small-file mass per value)
+    val (dataDir, newFiles, _) =
+      if (m0.partBy.nonEmpty) writeDataDir(s, tableDir,
+        toPhysical(relationFor(s, tableDir, storedSchema(schema0), small,
+          partBy = m0.partBy), storedSchema(schema0)),
+        uniq, partitionBy = m0.partBy,
+        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      else writeDataDir(s, tableDir,
+        toPhysical(relationFor(s, tableDir, storedSchema(schema0), small)
+          .repartition(nOut), storedSchema(schema0)), uniq,
+        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+    val compacted = small.map(_.path).toSet
+    beforePublishHook()
+    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
+      pm.flatMap { m =>
+        // conflict: a compacted file left the live set, or a
+        // deletion vector landed mid-compaction (the rewrite read
+        // the small files WITHOUT it — publishing would resurrect
+        // the deleted rows)
+        if (!compacted.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
+        else Some(Prepared.of(m).copy(entries =
+          m.entries.filterNot(e => compacted.contains(e.path)) ++ newFiles))
+      }
     }
+    if (res.isEmpty) f.delete(dataDir, true)
+    res
   }
 
   /** Per-BUCKET compaction — the maintenance op of the bucketed
@@ -3111,53 +2827,46 @@ object SnapshotTable {
     * any packed file left the live set or a deletion vector landed
     * mid-pack; concurrent appends commute. None when every bucket is
     * already single-file, on outstanding vectors (absorbDeletes
-    * first), on unbucketed tables, or on legacy manifests. */
+    * first), or on unbucketed tables. */
   def compactBuckets(s: SparkSession, tableDir: String): Option[Int] = {
     val prev = versions(s, tableDir)
     if (prev.isEmpty) return None
     val m0 = readManifest(s, tableDir, prev.last)
     val (nBuckets, bucketCol) = m0.bucket.getOrElse(return None)
     if (m0.dels.nonEmpty) return None
-    (m0.schema, m0.entries) match {
-      case (Some(schema0), Some(es0)) =>
-        // bucket id from the writer's `_%05d` file-name stamp; every
-        // file of a bucketed manifest carries one by construction
-        val idRe = """.*_(\d{5})\.[^/]*$""".r
-        def bucketId(e: FileEntry): Int = e.status.getPath.getName match {
-          case idRe(id) => id.toInt
-          case other => throw new IllegalStateException(
-            s"compactBuckets: no bucket id in file name $other")
-        }
-        val affected = es0.groupBy(e => (e.part, bucketId(e)))
-          .filter(_._2.size > 1).values.flatten.toSeq
-        if (affected.isEmpty) return None
-        val f = fs(s, tableDir)
-        val uniq = java.util.UUID.randomUUID.toString.take(8)
-        // the subset read reconstructs partition values (partBy) but
-        // claims NO bucket partitioning (it is a plain row source for
-        // the re-bucketing writer, which re-derives the ids)
-        val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-          toPhysical(relationFor(s, tableDir, storedSchema(schema0), affected,
-            partBy = m0.partBy), storedSchema(schema0)),
-          uniq, bucket = Some((nBuckets, bucketCol)),
-          partitionBy = m0.partBy, bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-        val packed = affected.map(_.status.getPath.toString).toSet
-        beforePublishHook()
-        val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-          pm.flatMap { m =>
-            if (!packed.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-            else Some((
-              m.files.filterNot(e => packed.contains(e.takeWhile(_ != '\t')))
-                ++ newFiles,
-              m.schema.getOrElse(storedSchema(schema0)),
-              m.txns,
-              m.bucket, Seq.empty, m.constraints, m.dropped, m.ndv))
-          }
-        }
-        if (res.isEmpty) f.delete(dataDir, true)
-        res
-      case _ => None // legacy manifest: not packable
+    val (schema0, es0) = (m0.schema, m0.entries)
+    // bucket id from the writer's `_%05d` file-name stamp; every
+    // file of a bucketed manifest carries one by construction
+    val idRe = """.*_(\d{5})\.[^/]*$""".r
+    def bucketId(e: FileEntry): Int = e.status.getPath.getName match {
+      case idRe(id) => id.toInt
+      case other => throw new IllegalStateException(
+        s"compactBuckets: no bucket id in file name $other")
     }
+    val affected = es0.groupBy(e => (e.part, bucketId(e)))
+      .filter(_._2.size > 1).values.flatten.toSeq
+    if (affected.isEmpty) return None
+    val f = fs(s, tableDir)
+    val uniq = java.util.UUID.randomUUID.toString.take(8)
+    // the subset read reconstructs partition values (partBy) but
+    // claims NO bucket partitioning (it is a plain row source for
+    // the re-bucketing writer, which re-derives the ids)
+    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
+      toPhysical(relationFor(s, tableDir, storedSchema(schema0), affected,
+        partBy = m0.partBy), storedSchema(schema0)),
+      uniq, bucket = Some((nBuckets, bucketCol)),
+      partitionBy = m0.partBy, bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+    val packed = affected.map(_.path).toSet
+    beforePublishHook()
+    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
+      pm.flatMap { m =>
+        if (!packed.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
+        else Some(Prepared.of(m).copy(entries =
+          m.entries.filterNot(e => packed.contains(e.path)) ++ newFiles))
+      }
+    }
+    if (res.isEmpty) f.delete(dataDir, true)
+    res
   }
 
   /** OPTIMIZE ZORDER: rewrite the current snapshot's ENTIRE live file
@@ -3178,7 +2887,7 @@ object SnapshotTable {
     * unclustered and the next OPTIMIZE picks them up. Refused (None,
     * not an error) on bucketed layouts (the bucket mapping IS the
     * layout), snapshots with outstanding deletion vectors
-    * ([[absorbDeletes]] first), and legacy manifests. */
+    * ([[absorbDeletes]] first), and empty snapshots. */
   def rewriteZordered(s: SparkSession, tableDir: String,
       colA: String, colB: String, nFiles: Int = 0): Option[Int] =
     rewriteZorderedBy(s, tableDir, Seq(colA, colB), nFiles)
@@ -3211,59 +2920,53 @@ object SnapshotTable {
     // partitioned by `k` must decline, not silently burn a rewrite
     if (m0.partBy.exists(p => zCols.exists(p.equalsIgnoreCase)))
       return None
-    (m0.schema, m0.entries) match {
-      case (Some(schema0), Some(es0)) if es0.nonEmpty =>
-        // every dimension must resolve — a top-level column, or a
-        // DOTTED struct leaf (`meta.k`): the curve then clusters by
-        // the leaf and the nested zone maps prune on it. Validated
-        // here so a typo fails before any rewrite job runs.
-        zCols.foreach { c =>
-          val resolves = schema0.fields.exists(_.name == c) ||
-            (c.contains('.') && {
-              val segs = c.split('.').toSeq
-              schema0.fields.find(_.name == segs.head)
-                .flatMap(f => leafType(f.dataType, segs.tail)).isDefined
-            })
-          require(resolves, s"rewriteZorderedBy: '$c' is neither a " +
-            s"column nor a struct leaf of ${schema0.fieldNames.mkString(",")}")
-        }
-        val n =
-          if (nFiles > 0) nFiles
-          else math.max(1, math.ceil(es0.map(_.status.getLen).sum.toDouble /
-            (128L * 1024 * 1024)).toInt)
-        val all = es0.map(_.status.getPath.toString).toSet
-        val f = fs(s, tableDir)
-        val uniq = java.util.UUID.randomUUID.toString.take(8)
-        // hive layout: cluster WITHIN partitions (range by
-        // (partition cols, z) — each output stripe is one value's
-        // contiguous z-run) and hand the pre-shaped frame to the
-        // partitioned writer untouched; flat tables are the
-        // empty-partCols case of the same pipeline
-        val clustered = graft.operators.LayoutOps.zClusterWithinN(
-          relationFor(s, tableDir, storedSchema(schema0), es0,
-            partBy = m0.partBy), m0.partBy, zCols, n)
-        // toPhysical is a pure projection — per-partition z-run order
-        // survives, so preShaped stays valid
-        val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-          toPhysical(clustered, storedSchema(schema0)),
-          uniq, partitionBy = m0.partBy, preShaped = true,
-          bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-        beforePublishHook()
-        val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-          pm.flatMap { m =>
-            if (!all.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-            else Some((
-              m.files.filterNot(e => all.contains(e.takeWhile(_ != '\t')))
-                ++ newFiles,
-              m.schema.getOrElse(storedSchema(schema0)),
-              m.txns,
-              m.bucket, Seq.empty, m.constraints, m.dropped, m.ndv))
-          }
-        }
-        if (res.isEmpty) f.delete(dataDir, true)
-        res
-      case _ => None
+    val (schema0, es0) = (m0.schema, m0.entries)
+if (es0.isEmpty) return None
+    // every dimension must resolve — a top-level column, or a
+    // DOTTED struct leaf (`meta.k`): the curve then clusters by
+    // the leaf and the nested zone maps prune on it. Validated
+    // here so a typo fails before any rewrite job runs.
+    zCols.foreach { c =>
+      val resolves = schema0.fields.exists(_.name == c) ||
+        (c.contains('.') && {
+          val segs = c.split('.').toSeq
+          schema0.fields.find(_.name == segs.head)
+            .flatMap(f => leafType(f.dataType, segs.tail)).isDefined
+        })
+      require(resolves, s"rewriteZorderedBy: '$c' is neither a " +
+        s"column nor a struct leaf of ${schema0.fieldNames.mkString(",")}")
     }
+    val n =
+      if (nFiles > 0) nFiles
+      else math.max(1, math.ceil(es0.map(_.status.getLen).sum.toDouble /
+        (128L * 1024 * 1024)).toInt)
+    val all = es0.map(_.path).toSet
+    val f = fs(s, tableDir)
+    val uniq = java.util.UUID.randomUUID.toString.take(8)
+    // hive layout: cluster WITHIN partitions (range by
+    // (partition cols, z) — each output stripe is one value's
+    // contiguous z-run) and hand the pre-shaped frame to the
+    // partitioned writer untouched; flat tables are the
+    // empty-partCols case of the same pipeline
+    val clustered = graft.operators.LayoutOps.zClusterWithinN(
+      relationFor(s, tableDir, storedSchema(schema0), es0,
+        partBy = m0.partBy), m0.partBy, zCols, n)
+    // toPhysical is a pure projection — per-partition z-run order
+    // survives, so preShaped stays valid
+    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
+      toPhysical(clustered, storedSchema(schema0)),
+      uniq, partitionBy = m0.partBy, preShaped = true,
+      bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+    beforePublishHook()
+    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
+      pm.flatMap { m =>
+        if (!all.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
+        else Some(Prepared.of(m).copy(entries =
+          m.entries.filterNot(e => all.contains(e.path)) ++ newFiles))
+      }
+    }
+    if (res.isEmpty) f.delete(dataDir, true)
+    res
   }
 
   /** CHECK-constraint gate over a batch about to commit: SQL CHECK
@@ -3302,8 +3005,6 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"addConstraint: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      require(m0.schema.nonEmpty,
-        s"addConstraint: legacy manifest without schema in $tableDir")
       require(!m0.constraints.contains(name),
         s"constraint '$name' already exists on $tableDir")
       enforceConstraints(readAsOf(s, tableDir, Int.MaxValue),
@@ -3312,10 +3013,9 @@ object SnapshotTable {
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
           // the validation ran against m0's exact state
-          if (m.files != m0.files || m.dels != m0.dels) None
-          else Some((m.files, m.schema.getOrElse(StructType(Nil)),
-            m.txns, m.bucket, m.dels,
-            m.constraints + (name -> sqlExpr), m.dropped, m.ndv))
+          if (m.entries != m0.entries || m.dels != m0.dels) None
+          else Some(Prepared.of(m).copy(
+            constraints = m.constraints + (name -> sqlExpr)))
         }
       }
       res match {
@@ -3332,11 +3032,8 @@ object SnapshotTable {
   def dropConstraint(s: SparkSession, tableDir: String,
       name: String): Option[Int] =
     publishNext(s, tableDir) { pm =>
-      pm.filter(_.constraints.contains(name)).map { m =>
-        (m.files, m.schema.getOrElse(StructType(Nil)),
-          m.txns, m.bucket, m.dels, m.constraints - name,
-          m.dropped, m.ndv)
-      }
+      pm.filter(_.constraints.contains(name)).map(m =>
+        Prepared.of(m).copy(constraints = m.constraints - name))
     }
 
   /** A version's recorded commit timestamp (epoch millis); None for
@@ -3365,8 +3062,7 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"dropColumn: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"dropColumn: legacy manifest without schema in $tableDir"))
+      val sc0 = m0.schema
       require(sc0.fieldNames.contains(colName),
         s"dropColumn: no column '$colName' in ${sc0.fieldNames.mkString(",")}")
       require(sc0.fields.length > 1,
@@ -3388,11 +3084,10 @@ object SnapshotTable {
       val phys = physName(sc0(colName))
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None // racing commit: re-check
-          else Some((m.files, next, m.txns, m.bucket,
-            m.dels, m.constraints, m.dropped + colName + phys,
-            m.ndv - phys))
+          else Some(Prepared.of(m).copy(schema = next,
+            dropped = m.dropped + colName + phys, ndv = m.ndv - phys))
         }
       }
       res match {
@@ -3413,8 +3108,7 @@ object SnapshotTable {
     * the EXPLICIT doorway for declaring the column before any data
     * arrives (a type contract the next append must then match or
     * widen). Refused: existing names, reserved dropped names, another
-    * column's physical storage name (the haunted-name hazards), and
-    * legacy manifests. */
+    * column's physical storage name (the haunted-name hazards). */
   def addColumn(s: SparkSession, tableDir: String, name: String,
       dataType: DataType): Int = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
@@ -3425,8 +3119,7 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"addColumn: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"addColumn: legacy manifest without schema in $tableDir"))
+      val sc0 = m0.schema
       require(!sc0.fieldNames.contains(name),
         s"addColumn: column '$name' already exists in $tableDir")
       require(!m0.dropped.contains(name),
@@ -3440,10 +3133,9 @@ object SnapshotTable {
           nullable = true))
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None
-          else Some((m.files, next, m.txns, m.bucket, m.dels,
-            m.constraints, m.dropped, m.ndv))
+          else Some(Prepared.of(m).copy(schema = next))
         }
       }
       res match {
@@ -3468,7 +3160,7 @@ object SnapshotTable {
     * BACK to the original name removes the indirection; any full
     * rewrite (overwrite, [[relayout]]) retires it.
     *
-    * Refused: legacy manifests; a target name that already exists, is
+    * Refused: a target name that already exists, is
     * a reserved dropped name, or is another column's physical storage
     * name (pre-rename files would resurface foreign values under it);
     * layout keys (bucket/partition columns — their file placement and
@@ -3487,8 +3179,7 @@ object SnapshotTable {
       val prev = versions(s, tableDir)
       require(prev.nonEmpty, s"renameColumn: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"renameColumn: legacy manifest without schema in $tableDir"))
+      val sc0 = m0.schema
       require(sc0.fieldNames.contains(from),
         s"renameColumn: no column '$from' in ${sc0.fieldNames.mkString(",")}")
       require(!sc0.fieldNames.contains(to),
@@ -3521,12 +3212,11 @@ object SnapshotTable {
         if (f.name == from) f.copy(name = to, metadata = newMeta) else f))
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None // racing commit: re-validate
           // stats/NDV stay keyed on the physical name — values did not
           // change, so neither does any statistic
-          else Some((m.files, next, m.txns, m.bucket, m.dels,
-            m.constraints, m.dropped, m.ndv))
+          else Some(Prepared.of(m).copy(schema = next))
         }
       }
       res match {
@@ -3568,8 +3258,7 @@ object SnapshotTable {
       require(prev.nonEmpty,
         s"setBloomColumns: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"setBloomColumns: legacy manifest without schema in $tableDir"))
+      val sc0 = m0.schema
       // a `col['key']` item declares a MAP KEY; a dotted name declares
       // a STRUCT LEAF (`meta.request_id`) when its first segment names
       // a struct column; otherwise it must match a top-level column
@@ -3649,10 +3338,9 @@ object SnapshotTable {
       })
       val res = publishNext(s, tableDir) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None
-          else Some((m.files, next, m.txns, m.bucket, m.dels,
-            m.constraints, m.dropped, m.ndv))
+          else Some(Prepared.of(m).copy(schema = next))
         }
       }
       res match {
@@ -3696,10 +3384,7 @@ object SnapshotTable {
       require(prev.nonEmpty,
         s"repartitionBy: no published version in $tableDir")
       val m0 = readManifest(s, tableDir, prev.last)
-      val sc0 = m0.schema.getOrElse(throw new IllegalArgumentException(
-        s"repartitionBy: legacy manifest without schema in $tableDir"))
-      require(m0.entries.isDefined,
-        s"repartitionBy: legacy manifest without file metadata in $tableDir")
+      val sc0 = m0.schema
       require(m0.bucket.isEmpty,
         s"repartitionBy: $tableDir is bucketed — overwrite/relayout to " +
           "change the scheme")
@@ -3723,18 +3408,13 @@ object SnapshotTable {
         partByOverride = Some(newBy),
         partErasOverride = Some(oldEras :+ newBy)) { pm =>
         pm.flatMap { m =>
-          if (m.files != m0.files || m.dels != m0.dels ||
+          if (m.entries != m0.entries || m.dels != m0.dels ||
             m.schema != m0.schema) None
-          else Some((m.files.map(l =>
-            // tag the surviving entries with the era they were
-            // written under (publishNext's auto-tag would wrongly
-            // claim the NEW era for them)
-            if (l.split("\t", -1).drop(4).exists(f =>
-              f.length > 1 && f.charAt(0) == 'E' &&
-                f.drop(1).forall(_.isDigit))) l
-            else s"$l\tE$oldIdx"),
-            m.schema.get, m.txns, m.bucket, m.dels,
-            m.constraints, m.dropped, m.ndv))
+          // tag the surviving entries with the era they were written
+          // under (publishNext's auto-tag would wrongly claim the NEW
+          // era for them)
+          else Some(Prepared.of(m).copy(entries = m.entries.map(e =>
+            if (e.era.isDefined) e else e.copy(era = Some(oldIdx)))))
         }
       }
       res match {
@@ -3751,8 +3431,8 @@ object SnapshotTable {
     * single era's files live under a superseded scheme (right after a
     * repartition, before any new-era commit). */
   private def eraUniform(m: Manifest): Boolean =
-    m.entries.forall(es => !m.mixedEras(es) &&
-      es.headOption.forall(e => m.eraScheme(m.eraOf(e)) == m.partBy))
+    !m.mixedEras(m.entries) &&
+      m.entries.headOption.forall(e => m.eraScheme(m.eraOf(e)) == m.partBy)
 
   /** Refusal gate for whole-table layout/stats ops on a table whose
     * files are not all under the CURRENT partition scheme
@@ -3891,14 +3571,11 @@ object SnapshotTable {
       // (after the state read, before the publish) must abort the
       // planned fast-forward and replan it as a rebase
       beforePublishHook()
-      val ffwd = cur == forkV && mM.files == mF.files &&
+      val ffwd = cur == forkV && mM.entries == mF.entries &&
         mM.dels == mF.dels && mM.schema == mF.schema
-      val prepared: Option[(Seq[String], StructType, Option[(Int, String)],
-          Seq[String], Map[String, String], Map[String, Seq[Long]],
-          Option[HPath])] =
-        if (ffwd)
-          Some((mB.files, mB.schema.get, mB.bucket, mB.dels,
-            mB.constraints, mB.ndv, None))
+      // the branch-side content and a vector dir written for this plan
+      val (branchSide, spliceDir): (Prepared, Option[HPath]) =
+        if (ffwd) (Prepared.of(mB), None)
         else {
           // file-granularity rebase: both sides' metadata must be
           // untouched since the fork, and the removed-file sets must
@@ -3918,7 +3595,6 @@ object SnapshotTable {
             mM.partEras != mF.partEras || mB.partEras != mF.partEras)
             fail("layout changed")
           val forkPaths = mF.paths.toSet
-          def key(line: String): String = line.takeWhile(_ != '\t')
           val branchRemoved = forkPaths -- mB.paths.toSet
           val mainRemoved = forkPaths -- mM.paths.toSet
           val clash = branchRemoved.intersect(mainRemoved)
@@ -3939,12 +3615,12 @@ object SnapshotTable {
           val addedBDels = mB.dels.filterNot(forkDels)
           val addedMDels = mM.dels.filterNot(forkDels)
           val retiredB = forkDels -- mB.dels.toSet
-          def delConflict(lines: Seq[String], removed: Set[String],
+          def delConflict(vecs: Seq[FileEntry], removed: Set[String],
               who: String, whose: String): Unit =
-            if (lines.nonEmpty && removed.nonEmpty) {
+            if (vecs.nonEmpty && removed.nonEmpty) {
               import s.implicits._
-              val vecPaths = relationFor(s, tableDir, delSchema,
-                lines.map(parseEntry)).select("__path").distinct()
+              val vecPaths = relationFor(s, tableDir, delSchema, vecs)
+                .select("__path").distinct()
               val hits = vecPaths.join(
                 removed.toSeq.toDF("__path"), Seq("__path"), "left_semi")
                 .count()
@@ -3966,64 +3642,56 @@ object SnapshotTable {
           // with the inherited vectors applied, and a dead row is
           // never re-deleted — so only addedB × addedM needs the
           // check; both frames are vector-sized.
-          val spliced: (Seq[String], Option[HPath]) =
+          val spliced: (Seq[FileEntry], Option[HPath]) =
             if (addedBDels.isEmpty || addedMDels.isEmpty)
               (addedBDels, None)
             else {
-              val dfB = relationFor(s, tableDir, delSchema,
-                addedBDels.map(parseEntry))
-              val dfM = relationFor(s, tableDir, delSchema,
-                addedMDels.map(parseEntry))
+              val dfB = relationFor(s, tableDir, delSchema, addedBDels)
+              val dfM = relationFor(s, tableDir, delSchema, addedMDels)
               if (dfB.join(dfM, Seq("__path", "__pos"), "left_semi")
                   .isEmpty) (addedBDels, None)
               else writeDelDir(s, tableDir,
                 dfB.join(dfM, Seq("__path", "__pos"), "left_anti"))
-                .map { case (dd, lines) =>
-                  (lines, Some(dd): Option[HPath]) }
-                .getOrElse((Seq.empty[String], None))
+                .map { case (dd, vecs) => (vecs, Some(dd)) }
+                .getOrElse((Seq.empty, None))
             }
           val rebasedDels = mM.dels.filterNot(retiredB) ++
             spliced._1.filterNot(mM.dels.toSet)
-          val branchAddedLines =
-            mB.files.filterNot(l => forkPaths.contains(key(l)))
-          val mainLines =
-            mM.files.filterNot(l => branchRemoved.contains(key(l)))
-          Some(((mainLines ++ branchAddedLines).sorted, mB.schema.get,
-            mB.bucket, rebasedDels, mB.constraints,
-            Map.empty[String, Seq[Long]], spliced._2))
+          val branchAdded = mB.entries.filterNot(e => forkPaths.contains(e.path))
+          val mainKept = mM.entries.filterNot(e => branchRemoved.contains(e.path))
+          (Prepared.of(mB).copy(
+            entries = (mainKept ++ branchAdded).sortBy(_.path),
+            dels = rebasedDels, ndv = Map.empty), spliced._2)
         }
-      prepared.foreach { case (files, sc, bucket, dels, checks, ndv,
-          spliceDir) =>
-        val res = publishNext(s, tableDir,
-          partByOverride = Some(mB.partBy),
-          partErasOverride = mB.partEras) { pm =>
-          pm.flatMap { m =>
-            // the state this publish was planned against must still be
-            // current — a racing commit re-plans (ffwd may become a
-            // rebase, a rebase re-merges)
-            if (m.files != mM.files || m.dels != mM.dels ||
-              m.schema != mM.schema) None
-            else {
-              // idempotency watermarks stay MONOTONE across the merge:
-              // per writer, the max of both sides
-              val txns = (m.txns.keySet ++ mB.txns.keySet).map { w =>
-                w -> math.max(m.txns.getOrElse(w, 0L),
-                  mB.txns.getOrElse(w, 0L))
-              }.toMap
-              Some((files, sc, txns, bucket, dels, checks,
-                m.dropped ++ mB.dropped, ndv))
-            }
+      val res = publishNext(s, tableDir,
+        partByOverride = Some(mB.partBy),
+        partErasOverride = mB.partEras) { pm =>
+        pm.flatMap { m =>
+          // the state this publish was planned against must still be
+          // current — a racing commit re-plans (ffwd may become a
+          // rebase, a rebase re-merges)
+          if (m.entries != mM.entries || m.dels != mM.dels ||
+            m.schema != mM.schema) None
+          else {
+            // idempotency watermarks stay MONOTONE across the merge:
+            // per writer, the max of both sides
+            val txns = (m.txns.keySet ++ mB.txns.keySet).map { w =>
+              w -> math.max(m.txns.getOrElse(w, 0L),
+                mB.txns.getOrElse(w, 0L))
+            }.toMap
+            Some(branchSide.copy(txns = txns,
+              dropped = m.dropped ++ mB.dropped))
           }
         }
-        res match {
-          case Some(v) =>
-            f.delete(forkFile(tableDir, name), false) // marker consumed
-            return v
-          case None => // lost the race — replan against the new state
-            // (a deduped vector dir written for THIS plan is never
-            // referenced; drop it like deleteWhere does on conflict)
-            spliceDir.foreach(f.delete(_, true))
-        }
+      }
+      res match {
+        case Some(v) =>
+          f.delete(forkFile(tableDir, name), false) // marker consumed
+          return v
+        case None => // lost the race — replan against the new state
+          // (a deduped vector dir written for THIS plan is never
+          // referenced; drop it like deleteWhere does on conflict)
+          spliceDir.foreach(f.delete(_, true))
       }
     }
     throw new IllegalStateException(
@@ -4045,8 +3713,7 @@ object SnapshotTable {
     val marker = s"/_branches/$name/"
     versions(s, tableDir).find { v =>
       val m = readManifest(s, tableDir, v)
-      (m.paths.iterator ++ m.dels.iterator.map(_.takeWhile(_ != '\t')))
-        .exists(_.contains(marker))
+      (m.entries.iterator ++ m.dels.iterator).exists(_.path.contains(marker))
     }.foreach { v =>
       throw new IllegalArgumentException(
         s"dropBranch: retained version $v of main still references data " +
@@ -4141,12 +3808,10 @@ object SnapshotTable {
       s"restore: version $version is not published in $tableDir " +
         s"(published: ${vs.mkString(",")})")
     val m = readManifest(s, tableDir, version)
-    val sc = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"restore: legacy manifest without schema at v$version in $tableDir"))
     publishNext(s, tableDir, partByOverride = Some(m.partBy),
         partErasOverride = m.partEras) { pm =>
-      Some((m.files, sc, pm.map(_.txns).getOrElse(Map.empty[String, Long]),
-        m.bucket, m.dels, m.constraints, m.dropped, m.ndv))
+      Some(Prepared.of(m).copy(
+        txns = pm.map(_.txns).getOrElse(Map.empty[String, Long])))
     }.getOrElse(throw new IllegalStateException(
       s"restore: publish failed in $tableDir"))
   }
@@ -4180,16 +3845,12 @@ object SnapshotTable {
     val vs = all.filter(_ <= asOf)
     require(vs.nonEmpty, s"cloneTable: no published version <= $asOf in $srcDir")
     val m = readManifest(s, srcDir, vs.last)
-    val sc = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"cloneTable: legacy manifest without schema in $srcDir — " +
-        "cannot clone what readers cannot plan"))
     val res = publishNext(s, dstDir,
         partByOverride = Some(m.partBy),
         partErasOverride = m.partEras) { pm =>
       require(pm.isEmpty,
         s"cloneTable: destination $dstDir already has published versions")
-      Some((m.files, sc, Map.empty[String, Long], m.bucket, m.dels,
-        m.constraints, m.dropped, m.ndv))
+      Some(Prepared.of(m).copy(txns = Map.empty))
     }
     res.getOrElse(throw new IllegalStateException(
       s"cloneTable: publish into $dstDir failed"))
@@ -4207,8 +3868,7 @@ object SnapshotTable {
     val vs = versions(s, tableDir)
     require(vs.nonEmpty, s"describeColumns: no published version in $tableDir")
     val m = readManifest(s, tableDir, vs.last)
-    val sc = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"describeColumns: legacy manifest without schema in $tableDir"))
+    val sc = m.schema
     // the SAME budgeted enumeration the stats pass uses, computed once
     // for the whole schema; `since >= 3` marks struct leaves (a
     // top-level atomic whose NAME contains a dot is since-2 and must
@@ -4317,39 +3977,31 @@ object SnapshotTable {
     val vs = versions(s, tableDir).filter(_ <= asOf)
     require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
     val m = readManifest(s, tableDir, vs.last)
-    if (m.files.isEmpty)
-      m.schema
-        .map(sc => s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-        .getOrElse(s.emptyDataFrame)
-    else (m.schema, m.entries) match {
-      // a table spanning partition-scheme ERAS ([[repartitionBy]]):
-      // one relation per era, each planned under ITS scheme (new-era
-      // files prune by directory, old-era files by the zone maps they
-      // carry for the same columns), deletion vectors subtracted per
-      // leg (hidden _metadata does not cross a Union), unioned by name
-      case (Some(sc), Some(es)) if m.mixedEras(es) =>
-        m.eraLegs(es).map { case (scheme, ees) =>
-          applyDels(s, tableDir,
-            relationFor(s, tableDir, sc, ees, partBy = scheme), m)
-        }.reduce(_.unionByName(_))
-      case (Some(sc), Some(es)) =>
-        // the zero-RPC plan: file list, sizes, schema, zone maps, row
-        // counts/NDV (as catalog statistics), and bucket layout all
-        // from the manifest — constant driver cost no matter how many
-        // files, pushed-down filters data-skip whole files, a bucketed
-        // layout reports its hash partitioning, and join planning sees
-        // exact cardinalities; outstanding deletion vectors subtract
-        // as one anti-join. An EVOLVED table whose entries all belong
-        // to one era plans under that era's scheme (not necessarily
-        // the current one — new commits will be).
+    val (sc, es) = (m.schema, m.entries)
+    if (es.isEmpty)
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+    // a table spanning partition-scheme ERAS ([[repartitionBy]]): one
+    // relation per era, each planned under ITS scheme (new-era files
+    // prune by directory, old-era files by the zone maps they carry for
+    // the same columns), deletion vectors subtracted per leg (hidden
+    // _metadata does not cross a Union), unioned by name
+    else if (m.mixedEras(es))
+      m.eraLegs(es).map { case (scheme, ees) =>
         applyDels(s, tableDir,
-          relationFor(s, tableDir, sc, es, m.bucket, withStats = Some(m),
-            partBy = m.eraLegs(es).headOption.map(_._1)
-              .getOrElse(m.partBy)), m)
-      case (Some(sc), None) => s.read.schema(sc).parquet(m.paths: _*)
-      case (None, _) => s.read.parquet(m.paths: _*) // legacy manifest
-    }
+          relationFor(s, tableDir, sc, ees, partBy = scheme), m)
+      }.reduce(_.unionByName(_))
+    // the zero-RPC plan: file list, sizes, schema, zone maps, row
+    // counts/NDV (as catalog statistics), and bucket layout all from the
+    // manifest — constant driver cost no matter how many files,
+    // pushed-down filters data-skip whole files, a bucketed layout
+    // reports its hash partitioning, and join planning sees exact
+    // cardinalities; outstanding deletion vectors subtract as one
+    // anti-join. An EVOLVED table whose entries all belong to one era
+    // plans under that era's scheme (not necessarily the current one —
+    // new commits will be).
+    else applyDels(s, tableDir,
+      relationFor(s, tableDir, sc, es, m.bucket, withStats = Some(m),
+        partBy = m.eraScheme(m.eraOf(es.head))), m)
   }
 
   /** MERGE (upsert + delete) as a new snapshot version: rows of the
@@ -4368,7 +4020,7 @@ object SnapshotTable {
     * aborts and the whole merge re-plans against the new state —
     * serializable read-modify-write, unlike a blind overwrite which
     * would silently drop a concurrent append. Falls back to the
-    * full-rewrite overwrite for fresh/legacy/bucketed tables or when
+    * full-rewrite overwrite for fresh/bucketed tables or when
     * the upsert schema diverges from the table's. */
   def merge(s: SparkSession, tableDir: String, upserts: DataFrame,
       deleteKeys: DataFrame, key: String): Int =
@@ -4419,31 +4071,28 @@ object SnapshotTable {
       // and lands here
       if (txnLanded(m0opt, txn)) return None
       val sel = m0opt match {
+        // outstanding deletion vectors route to the full rewrite
+        // (readAsOf applies them; the overwrite retires them). A
+        // hive-partitioned table takes the selective path even when
+        // EMPTY (merge can bootstrap it — the rewrite re-lands under
+        // hive dirs either way); a flat empty table keeps the cheaper
+        // full path.
+        case Some(m0) if m0.bucket.isEmpty && m0.dels.isEmpty &&
+            (m0.entries.nonEmpty || m0.partBy.nonEmpty) &&
+            upserts.columns.sorted.sameElements(m0.schema.fieldNames.sorted) =>
+          mergeSelective(s, tableDir, m0, storedSchema(m0.schema),
+            m0.entries, upserts, deleteKeys, key, txn, touchedKeys)
         case Some(m0) =>
-          (m0.schema, m0.entries) match {
-            // outstanding deletion vectors route to the full rewrite
-            // (readAsOf applies them; the overwrite retires them). A
-            // hive-partitioned table takes the selective path even when
-            // EMPTY (merge can bootstrap it — the rewrite re-lands
-            // under hive dirs either way); a flat empty table keeps the
-            // cheaper full path.
-            case (Some(sc0), Some(es0)) if m0.bucket.isEmpty && m0.dels.isEmpty &&
-                (es0.nonEmpty || m0.partBy.nonEmpty) &&
-                upserts.columns.sorted.sameElements(sc0.fieldNames.sorted) =>
-              mergeSelective(s, tableDir, m0, storedSchema(sc0), es0,
-                upserts, deleteKeys, key, txn, touchedKeys)
-            case _ =>
-              // the full-rewrite fallback would FLATTEN a hive layout —
-              // refuse loudly (one site: exactly the conditions that did
-              // not route selective above)
-              require(m0.partBy.isEmpty,
-                s"merge: $tableDir uses the hive partition layout — " +
-                  "merging needs the selective path (upserts covering " +
-                  "the full schema, no outstanding deletion vectors, no " +
-                  "bucket layout); run absorbDeletes / align the upsert " +
-                  "columns, or relayout() to re-lay")
-              mergeFull(s, tableDir, upserts, deleteKeys, key, txn)
-          }
+          // the full-rewrite fallback would FLATTEN a hive layout —
+          // refuse loudly (one site: exactly the conditions that did
+          // not route selective above)
+          require(m0.partBy.isEmpty,
+            s"merge: $tableDir uses the hive partition layout — " +
+              "merging needs the selective path (upserts covering " +
+              "the full schema, no outstanding deletion vectors, no " +
+              "bucket layout); run absorbDeletes / align the upsert " +
+              "columns, or relayout() to re-lay")
+          mergeFull(s, tableDir, upserts, deleteKeys, key, txn)
         case None => mergeFull(s, tableDir, upserts, deleteKeys, key, txn)
       }
       sel match {
@@ -4516,7 +4165,7 @@ object SnapshotTable {
       upserts.select(col(key)).filter(lit(false)), key, txn)
   }
 
-  /** The full-rewrite merge path (fresh/legacy/bucketed tables,
+  /** The full-rewrite merge path (fresh/bucketed tables,
     * outstanding deletion vectors, diverging upsert schema): anti-join
     * the whole current snapshot and land everything as one overwrite.
     * SERIALIZABLE like the selective path: the rewrite reads an exact
@@ -4558,18 +4207,18 @@ object SnapshotTable {
     // declared table's point-probe skipping silently degraded to
     // zone-map-only after every full merge until an explicit ANALYZE.
     val pubSchema = carryBloomDecls(stripPhys(storedSchema(out.schema)),
-      m0.flatMap(_.schema))
+      m0.map(_.schema))
     val (dataDir, newFiles, _) = writeDataDir(s, tableDir, out, uniq,
       bloomCols = bloomPhysCols(pubSchema), mapKeys = mapStatDecls(pubSchema))
     val res = publishNext(s, tableDir, kind = Some("merge")) { pm =>
       // a replayed txn aborts here; the caller's loop re-reads, sees
       // the txn, and returns the no-op
       if (txnLanded(pm, txn)) None
-      else if (pm.map(_.files) != m0.map(_.files) ||
+      else if (pm.map(_.entries) != m0.map(_.entries) ||
           pm.map(_.dels) != m0.map(_.dels) ||
           pm.map(_.constraints) != m0.map(_.constraints)) None // conflict
       // rows updated/deleted: the cumulative NDV sketch cannot subtract
-      else Some((newFiles, pubSchema,
+      else Some(Prepared(newFiles, pubSchema,
         txnMerge(pm.map(_.txns).getOrElse(Map.empty), txn),
         None, Seq.empty,
         pm.map(_.constraints).getOrElse(Map.empty),
@@ -4671,7 +4320,7 @@ object SnapshotTable {
       toPhysical(kept.unionByName(upserts, allowMissingColumns = true)
         .select(sc0.fieldNames.map(col).toSeq: _*), sc0), uniq,
       partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-    val carriedPaths = carried.map(_.status.getPath.toString).toSet
+    val carriedPaths = carried.map(_.path).toSet
     beforePublishHook()
     val res = publishNext(s, tableDir, kind = Some("merge")) { pm =>
       pm.flatMap { m =>
@@ -4681,15 +4330,14 @@ object SnapshotTable {
         // its vectors were not applied to the rewrite; an
         // addConstraint — the upserts were not validated against it)
         // invalidates the plan
-        if (m.files != m0.files || m.dels != m0.dels ||
+        if (m.entries != m0.entries || m.dels != m0.dels ||
           m.constraints != m0.constraints) None
-        else Some((
-          m.files.filter(e => carriedPaths.contains(e.takeWhile(_ != '\t')))
+        else Some(Prepared.of(m).copy(
+          entries = m.entries.filter(e => carriedPaths.contains(e.path))
             ++ newFiles,
-          m.schema.getOrElse(sc0), txnMerge(m.txns, txn),
+          txns = txnMerge(m.txns, txn),
           // rows updated/deleted: NDV unknown (no sketch subtraction)
-          m.bucket, Seq.empty, m.constraints, m.dropped,
-          Map.empty[String, Seq[Long]]))
+          ndv = Map.empty))
       }
     }
     if (res.isEmpty) f.delete(dataDir, true) // conflicting plan: re-plan
@@ -4739,7 +4387,7 @@ object SnapshotTable {
       .getOrElse(throw new IllegalArgumentException(
         s"no published version <= $toV in $tableDir"))
     val m2 = readManifest(s, tableDir, v2)
-    val schema2 = m2.schema.map(storedSchema)
+    val sc = storedSchema(m2.schema)
     // a range covering EXACTLY one commit whose recorded kind is
     // "update" ([[publishNext]]'s `#kind:` stamp) serves its diff legs
     // as PAIRED update images — `update_preimage` / `update_postimage`,
@@ -4754,150 +4402,135 @@ object SnapshotTable {
       vs.filter(v => v > v1.getOrElse(0) && v <= v2) == Seq(v2)
     def tag(df: DataFrame, t: String): DataFrame =
       df.select(lit(t).as("change_type") +: df.columns.toIndexedSeq.map(col): _*)
-    def emptyChanges: DataFrame = schema2 match {
-      case Some(sc) => tag(s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), "insert")
-        .filter(lit(false))
-      case None => s.emptyDataFrame
-    }
+    def emptyChanges: DataFrame = tag(s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), "insert")
+      .filter(lit(false))
     if (v1 == Some(v2)) return emptyChanges
     val m1 = v1.map(readManifest(s, tableDir, _))
     val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
-    (schema2, m2.entries) match {
-      case (Some(sc), Some(es2))
-          if paths1.subsetOf(es2.map(_.status.getPath.toString).toSet) &&
-            m1.map(_.dels).getOrElse(Seq.empty) == m2.dels =>
-        // pure append chain (same deletion-vector state — a delete
-        // commit keeps the file set and so must NOT take this path):
-        // the delta IS the added files
-        val added = es2.filterNot(e => paths1.contains(e.status.getPath.toString))
-        if (added.isEmpty) emptyChanges
-        // era-aware: a range spanning a repartitionBy adds files under
-        // BOTH schemes — each leg reads under its own layout
-        else tag(m2.eraLegs(added).map { case (scheme, ees) =>
-          relationFor(s, tableDir, sc, ees, partBy = scheme)
-        }.reduce(_.unionByName(_)), "insert")
-      case _ =>
-        // a rewrite (or delete) happened in between: exact multiset
-        // diff, both versions ALIGNED to toV's column set so evolution
-        // can't skew it, each under its OWN deletion vectors. The
-        // alignment reads each version under ITS OWN schema (whose
-        // physical markers are the valid mapping for ITS files — toV's
-        // markers may be gone if the in-between rewrite materialized a
-        // rename) and matches toV's columns by LOGICAL name first
-        // (stable across rewrites), physical storage name second
-        // (stable across renames); a column the old version had under
-        // neither identity reads NULL, a widened column casts up.
-        //
-        // O(CHANGED FILES), never O(table): a file carried through BY
-        // REFERENCE with unchanged deletion-vector coverage serves the
-        // IDENTICAL row multiset on both sides — it cancels in
-        // exceptAll exactly, so the diff legs read only the files the
-        // rewrite actually removed/added, plus carried files whose del
-        // coverage changed (their paths come from the symmetric-
-        // difference VECTOR files — tiny by the MOR-delete design). A
-        // 100 TB table whose UPDATE touched 0.1% of files diffs 0.2%
-        // of bytes.
-        val paths2 = m2.paths.toSet
-        val symDels: Seq[FileEntry] = {
-          val d1 = m1.map(_.dels.toSet).getOrElse(Set.empty)
-          val d2 = m2.dels.toSet
-          ((d1 union d2) -- (d1 intersect d2)).toSeq.map(parseEntry)
-        }
-        // Carried files whose del coverage changed normally resolve
-        // DRIVER-side (distinct paths of the tiny changed-vector files
-        // — the MOR design). A pathological DELETE touching very many
-        // files would materialize very many path strings on the
-        // driver, so above [[delDiffCollectRows]] changed vector rows
-        // the intersection stays DISTRIBUTED instead: carried entries
-        // ride the diff legs and a LEFT SEMI join against the changed
-        // vector paths keeps only the files whose coverage moved —
-        // same multiset, zero driver materialization (the carried
-        // scan is plan-wide, but at that scale affected ~ carried).
-        val distributedDelDiff = symDels.nonEmpty &&
-          symDels.map(_.rows.getOrElse(0L)).sum > delDiffCollectRows
-        val delsChangedPaths: Set[String] =
-          if (symDels.isEmpty || distributedDelDiff) Set.empty
-          else relationFor(s, tableDir, delSchema, symDels)
-            .select("__path").distinct().collect()
-            .map(_.getString(0)).toSet
-        val carriedPaths = paths1.intersect(paths2)
-        val affected: Set[String] =
-          (paths1 -- paths2) ++ (paths2 -- paths1) ++
-            carriedPaths.intersect(delsChangedPaths)
-        if (affected.isEmpty && !distributedDelDiff) return emptyChanges
-        lazy val changedVecPaths =
-          relationFor(s, tableDir, delSchema, symDels)
-            .select("__path").distinct()
-        def readUnder(v: Option[Int]): DataFrame = (v, schema2) match {
-          case (None, Some(sc)) => s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-          case (Some(ver), Some(sc)) =>
-            val mv = readManifest(s, tableDir, ver)
-            (mv.entries, mv.schema.map(storedSchema)) match {
-              case (Some(esAll), Some(osc)) =>
-                val es = esAll.filter(e =>
-                  affected.contains(e.status.getPath.toString))
-                val carried =
-                  if (!distributedDelDiff) Nil
-                  else esAll.filter(e => carriedPaths.contains(
-                    e.status.getPath.toString))
-                if (es.isEmpty && carried.isEmpty)
-                  return s.createDataFrame(
-                    s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    stripPhys(sc))
-                // era-aware ([[repartitionBy]]): each scheme era reads
-                // under its own directory layout, dels subtracted per
-                // leg (hidden _metadata does not cross a Union)
-                def eraRead(ees0: Seq[FileEntry]): DataFrame =
-                  mv.eraLegs(ees0).map { case (scheme, ees) =>
-                    applyDels(s, tableDir,
-                      relationFor(s, tableDir, osc, ees, partBy = scheme),
-                      mv)
-                  }.reduce(_.unionByName(_))
-                // the distributed carried leg: positional identity and
-                // del subtraction per era leg, then ONE semi-join keeps
-                // only files whose vector coverage changed
-                def carriedRead(ees0: Seq[FileEntry]): DataFrame = {
-                  val legs = mv.eraLegs(ees0).map { case (scheme, ees) =>
-                    val base0 = relationFor(s, tableDir, osc, ees,
-                      partBy = scheme)
-                    val withMeta = base0.select(
-                      col("_metadata.file_path").as("__path"),
-                      col("_metadata.row_index").as("__pos"), col("*"))
-                    val live =
-                      if (mv.dels.isEmpty) withMeta
-                      else withMeta.join(delFrame(s, tableDir, mv),
-                        Seq("__path", "__pos"), "left_anti")
-                    live
-                  }.reduce(_.unionByName(_))
-                  legs.join(changedVecPaths, Seq("__path"), "left_semi")
-                    .drop("__path", "__pos")
-                }
-                val direct = if (es.isEmpty) None else Some(eraRead(es))
-                val semi =
-                  if (carried.isEmpty) None else Some(carriedRead(carried))
-                val base = (direct.toSeq ++ semi.toSeq)
-                  .reduce(_.unionByName(_))
-                base.select(sc.fields.toIndexedSeq.map { f =>
-                  val src = osc.fields.find(_.name == f.name)
-                    .orElse(osc.fields.find(g => physName(g) == physName(f)))
-                  src.map(g => col(g.name).cast(f.dataType))
-                    .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-                }: _*)
-              case (Some(es), None) => // legacy: pre-rename format
-                applyDels(s, tableDir,
-                  relationFor(s, tableDir, sc, es, partBy = mv.partBy), mv)
-              case _ => readAsOf(s, tableDir, ver)
-            }
-          case (Some(ver), None) => readAsOf(s, tableDir, ver)
-          case (None, None) => s.emptyDataFrame
-        }
-        val a = readUnder(v1)
-        val b = readUnder(Some(v2))
-        diffLegs(s, b, a,
-          if (updatePair) "update_postimage" else "insert",
-          if (updatePair) "update_preimage" else "delete")
+    val paths2 = m2.paths.toSet
+    if (paths1.subsetOf(paths2) &&
+      m1.map(_.dels).getOrElse(Seq.empty) == m2.dels) {
+      // pure append chain (same deletion-vector state — a delete
+      // commit keeps the file set and so must NOT take this path):
+      // the delta IS the added files
+      val added = m2.entries.filterNot(e => paths1.contains(e.path))
+      if (added.isEmpty) emptyChanges
+      // era-aware: a range spanning a repartitionBy adds files under
+      // BOTH schemes — each leg reads under its own layout
+      else tag(m2.eraLegs(added).map { case (scheme, ees) =>
+        relationFor(s, tableDir, sc, ees, partBy = scheme)
+      }.reduce(_.unionByName(_)), "insert")
+    } else {
+      // a rewrite (or delete) happened in between: exact multiset
+      // diff, both versions ALIGNED to toV's column set so evolution
+      // can't skew it, each under its OWN deletion vectors. The
+      // alignment reads each version under ITS OWN schema (whose
+      // physical markers are the valid mapping for ITS files — toV's
+      // markers may be gone if the in-between rewrite materialized a
+      // rename) and matches toV's columns by LOGICAL name first
+      // (stable across rewrites), physical storage name second
+      // (stable across renames); a column the old version had under
+      // neither identity reads NULL, a widened column casts up.
+      //
+      // O(CHANGED FILES), never O(table): a file carried through BY
+      // REFERENCE with unchanged deletion-vector coverage serves the
+      // IDENTICAL row multiset on both sides — it cancels in
+      // exceptAll exactly, so the diff legs read only the files the
+      // rewrite actually removed/added, plus carried files whose del
+      // coverage changed (their paths come from the symmetric-
+      // difference VECTOR files — tiny by the MOR-delete design). A
+      // 100 TB table whose UPDATE touched 0.1% of files diffs 0.2%
+      // of bytes.
+      val symDels: Seq[FileEntry] = {
+        val d1 = m1.map(_.dels.toSet).getOrElse(Set.empty)
+        val d2 = m2.dels.toSet
+        ((d1 union d2) -- (d1 intersect d2)).toSeq
+      }
+      // Carried files whose del coverage changed normally resolve
+      // DRIVER-side (distinct paths of the tiny changed-vector files
+      // — the MOR design). A pathological DELETE touching very many
+      // files would materialize very many path strings on the
+      // driver, so above [[delDiffCollectRows]] changed vector rows
+      // the intersection stays DISTRIBUTED instead: carried entries
+      // ride the diff legs and a LEFT SEMI join against the changed
+      // vector paths keeps only the files whose coverage moved —
+      // same multiset, zero driver materialization (the carried
+      // scan is plan-wide, but at that scale affected ~ carried).
+      val distributedDelDiff = symDels.nonEmpty &&
+        symDels.map(_.rows.getOrElse(0L)).sum > delDiffCollectRows
+      val delsChangedPaths: Set[String] =
+        if (symDels.isEmpty || distributedDelDiff) Set.empty
+        else relationFor(s, tableDir, delSchema, symDels)
+          .select("__path").distinct().collect()
+          .map(_.getString(0)).toSet
+      val carriedPaths = paths1.intersect(paths2)
+      val affected: Set[String] =
+        (paths1 -- paths2) ++ (paths2 -- paths1) ++
+          carriedPaths.intersect(delsChangedPaths)
+      if (affected.isEmpty && !distributedDelDiff) return emptyChanges
+      lazy val changedVecPaths =
+        relationFor(s, tableDir, delSchema, symDels)
+          .select("__path").distinct()
+      def readUnder(v: Option[Int]): DataFrame = v match {
+        case None => s.createDataFrame(
+          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+        case Some(ver) =>
+          val mv = readManifest(s, tableDir, ver)
+          val osc = storedSchema(mv.schema)
+          val es = mv.entries.filter(e => affected.contains(e.path))
+          val carried =
+            if (!distributedDelDiff) Nil
+            else mv.entries.filter(e => carriedPaths.contains(e.path))
+          if (es.isEmpty && carried.isEmpty)
+            return s.createDataFrame(
+              s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              stripPhys(sc))
+          // era-aware ([[repartitionBy]]): each scheme era reads
+          // under its own directory layout, dels subtracted per
+          // leg (hidden _metadata does not cross a Union)
+          def eraRead(ees0: Seq[FileEntry]): DataFrame =
+            mv.eraLegs(ees0).map { case (scheme, ees) =>
+              applyDels(s, tableDir,
+                relationFor(s, tableDir, osc, ees, partBy = scheme),
+                mv)
+            }.reduce(_.unionByName(_))
+          // the distributed carried leg: positional identity and
+          // del subtraction per era leg, then ONE semi-join keeps
+          // only files whose vector coverage changed
+          def carriedRead(ees0: Seq[FileEntry]): DataFrame = {
+            val legs = mv.eraLegs(ees0).map { case (scheme, ees) =>
+              val base0 = relationFor(s, tableDir, osc, ees,
+                partBy = scheme)
+              val withMeta = base0.select(
+                col("_metadata.file_path").as("__path"),
+                col("_metadata.row_index").as("__pos"), col("*"))
+              val live =
+                if (mv.dels.isEmpty) withMeta
+                else withMeta.join(delFrame(s, tableDir, mv),
+                  Seq("__path", "__pos"), "left_anti")
+              live
+            }.reduce(_.unionByName(_))
+            legs.join(changedVecPaths, Seq("__path"), "left_semi")
+              .drop("__path", "__pos")
+          }
+          val direct = if (es.isEmpty) None else Some(eraRead(es))
+          val semi =
+            if (carried.isEmpty) None else Some(carriedRead(carried))
+          val base = (direct.toSeq ++ semi.toSeq)
+            .reduce(_.unionByName(_))
+          base.select(sc.fields.toIndexedSeq.map { f =>
+            val src = osc.fields.find(_.name == f.name)
+              .orElse(osc.fields.find(g => physName(g) == physName(f)))
+            src.map(g => col(g.name).cast(f.dataType))
+              .getOrElse(lit(null).cast(f.dataType)).as(f.name)
+          }: _*)
+      }
+      val a = readUnder(v1)
+      val b = readUnder(Some(v2))
+      diffLegs(s, b, a,
+        if (updatePair) "update_postimage" else "insert",
+        if (updatePair) "update_preimage" else "delete")
     }
   }
 
@@ -4968,9 +4601,7 @@ object SnapshotTable {
     val v2 = all.filter(_ <= toV).lastOption.getOrElse(
       throw new IllegalArgumentException(
         s"no published version <= $toV in $tableDir"))
-    val sc2 = readManifest(s, tableDir, v2).schema.map(storedSchema)
-      .getOrElse(throw new IllegalArgumentException(
-        s"change-feed stream: legacy manifest without schema in $tableDir"))
+    val sc2 = storedSchema(readManifest(s, tableDir, v2).schema)
     val vs = all.filter(v => v > fromV && v <= toV)
     def emptySlice: DataFrame = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -4987,8 +4618,8 @@ object SnapshotTable {
       // (stable across rewrites), physical storage name second (stable
       // across renames); a column toV gained reads NULL, a widened one
       // casts up — the readChanges readUnder rule, applied stream-side
-      val scB = readManifest(s, tableDir,
-        all.filter(_ <= b).last).schema.map(storedSchema).getOrElse(sc2)
+      val scB = storedSchema(
+        readManifest(s, tableDir, all.filter(_ <= b).last).schema)
       df.select(col("change_type") +:
         sc2.fields.toIndexedSeq.map { f =>
           val src = scB.fields.find(_.name == f.name)
@@ -5096,10 +4727,7 @@ object SnapshotTable {
     val vs = versions(s, tableDir).filter(_ <= asOf)
     require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
     val m = readManifest(s, tableDir, vs.last)
-    val sc = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"legacy manifest without schema in $tableDir — read via SnapshotTable.readAsOf"))
-    val es = m.entries.getOrElse(throw new IllegalArgumentException(
-      s"legacy manifest without file metadata in $tableDir — read via SnapshotTable.readAsOf"))
+    val (sc, es) = (m.schema, m.entries)
     requireSingleEra(m, "relation doorway")
     require(m.dels.isEmpty,
       s"snapshot table $tableDir has outstanding deletion vectors — the bare " +
@@ -5129,7 +4757,7 @@ object SnapshotTable {
   private[sources] def tableSchema(s: SparkSession,
       tableDir: String): Option[StructType] =
     versions(s, tableDir).lastOption
-      .flatMap(v => readManifest(s, tableDir, v).schema)
+      .map(v => readManifest(s, tableDir, v).schema)
       // marker-free: the stream's FIXED output schema must match the
       // batches relationFor serves (whose aliases carry empty metadata)
       .map(sc => stripPhys(storedSchema(sc)))
@@ -5152,18 +4780,15 @@ object SnapshotTable {
       s"snapshot stream: version $fromV expired in $tableDir — the stream " +
         "fell behind the vacuum retention window; restart from scratch")
     val m2 = readManifest(s, tableDir, v2)
-    val sc = m2.schema.map(storedSchema).getOrElse(throw new IllegalArgumentException(
-      s"snapshot stream: legacy manifest without schema in $tableDir"))
-    val es2 = m2.entries.getOrElse(throw new IllegalArgumentException(
-      s"snapshot stream: legacy manifest without file metadata in $tableDir"))
+    val sc = storedSchema(m2.schema)
     val m1 = v1.map(readManifest(s, tableDir, _))
     val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
-    require((paths1.subsetOf(es2.map(_.status.getPath.toString).toSet) &&
+    require((paths1.subsetOf(m2.paths.toSet) &&
         m1.map(_.dels).getOrElse(Seq.empty) == m2.dels) || ignoreChanges,
       s"snapshot stream: $tableDir was REWRITTEN (overwrite/merge/compaction/" +
         s"delete) between versions $fromV and $toV — append semantics broken; " +
         "pass option ignoreChanges=true to stream new/rewritten files anyway")
-    val added = es2.filterNot(e => paths1.contains(e.status.getPath.toString))
+    val added = m2.entries.filterNot(e => paths1.contains(e.path))
     if (added.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
     else m2.eraLegs(added).map { case (scheme, ees) =>
@@ -5173,19 +4798,21 @@ object SnapshotTable {
 
   /** Metadata-only row count of a snapshot: the per-file row counts the
     * manifest already carries, summed — no scan, no Spark job, O(1)
-    * filesystem reads. None when any entry predates row-count
-    * collection (legacy manifest) — callers fall back to `count()`. */
+    * filesystem reads. None when any entry carries no row count (a
+    * commit with no stat-eligible column) — callers fall back to
+    * `count()`. */
   def rowCount(s: SparkSession, tableDir: String, asOf: Int): Option[Long] = {
     val vs = versions(s, tableDir).filter(_ <= asOf)
     require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
-    m.entries.flatMap { es =>
-      val rs = es.map(_.rows)
-      // deletion vectors subtract exactly: each position is deleted at
-      // most once ([[deleteWhere]] matches the del-applied read)
-      if (rs.exists(_.isEmpty)) None
-      else Some(rs.flatten.sum - m.delRowCount)
-    }
+    liveRows(readManifest(s, tableDir, vs.last))
+  }
+
+  /** Σ entry rows − deleted rows; None when an entry has no row count.
+    * Deletion vectors subtract exactly: each position is deleted at
+    * most once ([[deleteWhere]] matches the del-applied read). */
+  private def liveRows(m: Manifest): Option[Long] = {
+    val rs = m.entries.map(_.rows)
+    if (rs.exists(_.isEmpty)) None else Some(rs.flatten.sum - m.delRowCount)
   }
 
   /** Table history as a DataFrame — one row per RETAINED version with
@@ -5200,12 +4827,8 @@ object SnapshotTable {
     import s.implicits._
     versions(s, tableDir).map { v =>
       val m = readManifest(s, tableDir, v)
-      val rows = m.entries.flatMap { es =>
-        val rs = es.map(_.rows)
-        if (rs.exists(_.isEmpty)) None else Some(rs.flatten.sum - m.delRowCount)
-      }
-      val bytes = m.entries.map(_.map(_.status.getLen).sum)
-      (v, m.kind, m.files.size.toLong, rows, bytes, m.txns.size.toLong,
+      (v, m.kind, m.entries.size.toLong, liveRows(m),
+        m.entries.map(_.status.getLen).sum, m.txns.size.toLong,
         m.bucket.map { case (n, c) => s"$n:$c" }, m.delRowCount, m.ts)
     }.toDF("version", "operation", "n_files", "n_rows", "total_bytes",
       "n_txns", "bucket", "n_del_rows", "commit_ts")
@@ -5223,8 +4846,8 @@ object SnapshotTable {
     * One manifest read, zero data I/O. Columns with an unknowable
     * field (legacy files, sketch dropped by a row-removing op,
     * unstorable bounds) read NULL there — the same degradation the
-    * planner sees. Refused on legacy manifests without row counts
-    * (there are no planner stats to describe). */
+    * planner sees. Refused when a file entry has no row count (there
+    * are no planner stats to describe). */
   def plannerStats(s: SparkSession, tableDir: String,
       asOf: Int = Int.MaxValue): DataFrame = {
     import s.implicits._
@@ -5236,10 +4859,7 @@ object SnapshotTable {
     require(vs.nonEmpty,
       s"plannerStats: no published version <= $asOf in $tableDir")
     val m = readManifest(s, tableDir, vs.last)
-    val sc = m.schema.getOrElse(throw new IllegalArgumentException(
-      s"plannerStats: legacy manifest without schema in $tableDir"))
-    val es = m.entries.getOrElse(throw new IllegalArgumentException(
-      s"plannerStats: legacy manifest without file metadata in $tableDir"))
+    val (sc, es) = (m.schema, m.entries)
     // the catalog keys on PHYSICAL names (as the scan relation does);
     // this user-facing view reports the LOGICAL ones
     val cat = catalogStats(s, tableDir, physicalSchema(sc), es, Some(m))
@@ -5293,8 +4913,7 @@ object SnapshotTable {
     *
     * Refused (None, not an error) on: outstanding deletion vectors
     * (per-file stats would describe dead rows — run [[absorbDeletes]]
-    * first), legacy manifests without schema/entry metadata, empty
-    * snapshots, and on conflict with ANY concurrent commit (the
+    * first), empty snapshots, and on conflict with ANY concurrent commit (the
     * [[compact]] optimistic discipline — re-run to analyze the new
     * state). */
   def analyze(s: SparkSession, tableDir: String): Option[Int] = {
@@ -5304,8 +4923,7 @@ object SnapshotTable {
     val m0 = readManifest(s, tableDir, prev.last)
     if (m0.dels.nonEmpty) return None // absorbDeletes first
     if (!eraUniform(m0)) return None // superseded-era files: relayout first
-    val sc0 = m0.schema.map(storedSchema).getOrElse(return None)
-    val es0 = m0.entries.getOrElse(return None)
+    val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
     if (es0.isEmpty) return None
     val partFields = m0.partBy.flatMap(c => sc0.fields.find(_.name == c))
     // the files store PHYSICAL names — read and (re)key stats on them
@@ -5352,19 +4970,19 @@ object SnapshotTable {
         java.time.LocalDate.parse(v).toEpochDay
       case _ => v.toLong
     }
-    def partStatField(f: StructField, level: Int, e: FileEntry,
-        rows: Long): String = {
+    def partStat(f: StructField, level: Int, e: FileEntry,
+        rows: Long): (String, ColStat) = {
       val kind = statKind(f.dataType).get // part types are all eligible
-      val v = e.part.flatMap(_.lift(level)).flatten
-      v match {
+      f.name -> (e.part.flatMap(_.lift(level)).flatten match {
         case Some(value) =>
-          val stored =
-            if (kind == 'l') partLong(f.dataType, value).toString else value
-          val bytes = if (kind == 's')
-            (value.getBytes("UTF-8").length * rows).toString else ""
-          s"${b64e(f.name)}:$kind:${b64e(stored)}:${b64e(stored)}:0:$bytes"
-        case None => s"${b64e(f.name)}:$kind:::$rows:"
-      }
+          val stored: Any =
+            if (kind == 'l') partLong(f.dataType, value)
+            else value.getBytes("UTF-8")
+          ColStat(kind, Some(stored), Some(stored), 0L,
+            bytes = if (kind == 's')
+              Some(value.getBytes("UTF-8").length * rows) else None)
+        case None => ColStat(kind, None, None, rows)
+      })
     }
     val partNdv = partFields.zipWithIndex.map { case (f, i) =>
       val hashes = es0.flatMap(_.part.flatMap(_.lift(i)).flatten).distinct
@@ -5376,29 +4994,27 @@ object SnapshotTable {
       f.name -> hashes.distinct.sorted
         .take(graft.functions.KmvDistinctAgg.K).toSeq
     }.toMap
+    // fresh stats for every entry; its era tag retires with the
+    // single-era table's history
     val entries = es0.map { e =>
-      val st = e.status
-      val key = st.getPath.toUri.getPath
-      val partField = e.part.fold("")(vs =>
-        "\tP" + vs.map(_.fold("N")(b64e)).mkString(","))
-      fileMap.get(key) match {
+      fileMap.get(e.status.getPath.toUri.getPath) match {
         case Some((rows, cols)) =>
           val partCols = partFields.zipWithIndex.map { case (f, i) =>
-            partStatField(f, i, e, rows) }
-          val all = (Seq(cols).filter(_.nonEmpty) ++ partCols ++
-            Seq(s"*:${statsMarkerVersion(dataSchema)}")).mkString(";")
-          s"${st.getPath.toString}\t${st.getLen}\t$rows\t$all$partField"
+            partStat(f, i, e, rows) }
+          e.copy(rows = Some(rows), stats = cols ++ partCols,
+            statsVer = Some(statsMarkerVersion(dataSchema)), era = None)
         // a file the fold saw no row of holds zero rows
-        case None => s"${st.getPath.toString}\t${st.getLen}\t0\t$partField"
+        case None => e.copy(rows = Some(0L), stats = Map.empty,
+          statsVer = None, era = None)
       }
-    }.sorted
+    }.sortBy(_.path)
     publishNext(s, tableDir) { pm =>
       pm.flatMap { m =>
         // the pass read exactly m0's file set; any concurrent commit
         // (or a racing delete) invalidates what was measured
-        if (m.files != m0.files || m.dels.nonEmpty) None
-        else Some((entries, m.schema.getOrElse(sc0), m.txns, m.bucket,
-          Seq.empty, m.constraints, m.dropped, dataNdv ++ partNdv))
+        if (m.entries != m0.entries || m.dels.nonEmpty) None
+        else Some(Prepared.of(m).copy(entries = entries,
+          ndv = dataNdv ++ partNdv))
       }
     }
   }
@@ -5423,7 +5039,7 @@ object SnapshotTable {
     *    derivable — served as NULL with `bounds_exact=false` rather
     *    than refused (a `SELECT count(*)` still costs zero reads on a
     *    MOR table). [[absorbDeletes]] restores full eligibility.
-    *  - REFUSED on legacy manifests without per-file row counts.
+    *  - REFUSED when a file entry has no row count.
     *  - A file entry with no recorded stat for a column reads NULL for
     *    it (schema evolution: the file predates the column, or its
     *    append omitted it) — it contributes rows but no non-nulls.
@@ -5450,8 +5066,7 @@ object SnapshotTable {
     require(vs.nonEmpty, s"metaAgg: no published version <= $asOf in $tableDir")
     val m = readManifest(s, tableDir, vs.last)
     requireSingleEra(m, "metaAgg")
-    val es = m.entries.getOrElse(throw new IllegalArgumentException(
-      s"metaAgg: legacy manifest without file metadata in $tableDir"))
+    val es = m.entries
     require(es.forall(_.rows.isDefined),
       s"metaAgg: a file entry predates row-count collection in $tableDir")
     // outstanding merge-on-read deletes: a deleted row may have been the
@@ -5459,7 +5074,7 @@ object SnapshotTable {
     // degrades to unknown (count stays exact — the rowCount arithmetic)
     val hasDels = m.dels.nonEmpty
     val nRows = es.flatMap(_.rows).sum - m.delRowCount
-    val sc = m.schema.getOrElse(StructType(Nil))
+    val sc = m.schema
     // UTF-8 byte order — the binary collation Spark's string min/max and
     // the stored bounds both use (UTF-16 String ordering differs above
     // the BMP, so decode-then-compare would be wrong)
@@ -5589,7 +5204,7 @@ object SnapshotTable {
       retained.flatMap { v =>
         val m = readManifest(s, tableDir, v)
         // retained deletion-vector files are as load-bearing as data
-        m.paths ++ m.dels.map(_.takeWhile(_ != '\t'))
+        (m.entries ++ m.dels).map(_.path)
       }.toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     // Every walk below tolerates paths VANISHING underfoot: an aborted
