@@ -161,10 +161,11 @@ private[sources] object StatsFold {
     case other => other
   }
 
-  /** A folded bound in its manifest form: unknown for null and
-    * non-finite bounds (NaN/±Inf cannot anchor a sound range), floats
-    * widened to double so the stored decimal round-trips exactly,
-    * strings as their UTF-8 bytes, every long-family value as a Long. */
+  /** A folded bound as a [[ManifestCodec.ColStat]] bound: unknown for
+    * null and non-finite bounds (NaN/±Inf cannot anchor a sound range),
+    * floats widened to double so the stored decimal round-trips
+    * exactly, strings as their UTF-8 bytes, every long-family value as
+    * a Long. */
   def bound(v: Any): Option[Any] = v match {
     case null => None
     case fl: java.lang.Float => bound(Double.box(fl.doubleValue))

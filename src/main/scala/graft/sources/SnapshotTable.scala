@@ -1774,7 +1774,7 @@ object SnapshotTable {
         .select(col("__path"), col("__pos"))
       writeDelDir(s, tableDir, matched) match {
         case None => return None // nothing matched: nothing to publish
-        case Some((delDir, delLines)) =>
+        case Some((delDir, vectors)) =>
           beforePublishHook()
           val m0paths = m0.paths.toSet
           val scStored = storedSchema(sc0)
@@ -1813,7 +1813,7 @@ object SnapshotTable {
                 if (!addedOk) None
                 // rows removed: a bottom-k sketch cannot subtract —
                 // NDV unknown until a full rewrite recollects
-                else Some(Prepared.of(m).copy(dels = m.dels ++ delLines,
+                else Some(Prepared.of(m).copy(dels = m.dels ++ vectors,
                   ndv = Map.empty))
               }
             }
