@@ -144,7 +144,7 @@ private[sources] object ManifestCodec {
     def delRowCount: Long = dels.map(_.rows.getOrElse(0L)).sum
   }
 
-  def b64e(s: String): String = b64(s.getBytes("UTF-8"))
+  private def b64e(s: String): String = b64(s.getBytes("UTF-8"))
   private def b64(b: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(b)
   private def b64d(s: String): Array[Byte] =
