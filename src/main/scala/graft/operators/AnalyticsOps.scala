@@ -931,42 +931,13 @@ object AnalyticsOps extends QueryPack {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  /** Exact global rank of every row by `ord` WITHOUT a single-task
-    * window: range-repartition on the order keys, number locally, add
-    * broadcast per-partition offsets — the [[graft.operators.LayoutOps
-    * .layoutGlobalIndex]] discipline, bit-identical to the naive
-    * `row_number() OVER (ORDER BY …)` at any scale. The partitioned
-    * frame is localCheckpoint'ed so the offset and numbering jobs see
-    * the same sampled range boundaries. `ord` must be a TOTAL order
-    * (include a unique tiebreak). */
-  private def globalRank(in: DataFrame, ord: Seq[Column],
-      out: String): DataFrame = {
-    // width = max(16, defaultParallelism) — scales with the cluster
-    val parted = in
-      .repartitionByRange(SkewUtils.rankWidth(in.sparkSession), ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = parted.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off",
-        coalesce(sum(col("__cnt")).over(Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    parted
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__pid")).orderBy(ord: _*)).cast("long"))
-      .join(broadcast(offsets), "__pid")
-      .withColumn(out, col("__off") + col("__rn"))
-      .drop("__pid", "__rn", "__off")
-  }
-
   /** RFM segmentation — the recency/frequency/monetary customer grid
     * every growth team cuts: per user the days since their last event,
     * their event count, and their finite-value spend in exact cents;
     * each metric quintiled (1 = best: most recent / most frequent /
     * highest spend) and the corpus rolled up per (r,f,m) cell. The
     * quintile is `((rank−1)·5) div n + 1` over an EXACT global rank
-    * with a user_id tiebreak — computed by [[globalRank]]'s
+    * with a user_id tiebreak — computed by [[SkewUtils.globalRank]]'s
     * range-partition + offset scheme, so no single-task global window
     * touches the per-user table (at 100 TB that table is billions of
     * rows; the naive `ntile() OVER (ORDER BY …)` serializes it through
@@ -988,6 +959,7 @@ object AnalyticsOps extends QueryPack {
         datediff(col("md"), col("last_day")).cast("long").as("recency"),
         col("freq"), col("mon_c"))
     val n = per.agg(count(lit(1)).as("cnt"))
+    import SkewUtils.globalRank
     val ranked =
       globalRank(
         globalRank(

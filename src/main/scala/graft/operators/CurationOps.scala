@@ -432,29 +432,12 @@ object CurationOps extends QueryPack {
     * oracle IS the naive global window over the same key — agreement
     * proves the two-phase numbering is exact. */
   def curationShuffle(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val seed = 20240814L
     val docs = Tables.documents(s, d)
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), shuffleKey(col("doc_id"), seed).as("shuf_key"))
-    // width = max(16, defaultParallelism) — scales with the cluster
-    val parted = docs.repartitionByRange(SkewUtils.rankWidth(s),
-      col("shuf_key"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = parted.groupBy(col("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum(col("cnt")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val local = Window.partitionBy(col("pid"))
-      .orderBy(col("shuf_key"), col("doc_id"))
-    parted
-      .withColumn("local_rn", row_number().over(local).cast("long"))
-      .join(broadcast(offsets), "pid")
-      .select(col("doc_id"), col("shuf_key"),
-        (col("offset") + col("local_rn")).as("shuf_seq"))
+    SkewUtils.globalRank(docs, Seq(col("shuf_key"), col("doc_id")), "shuf_seq")
+      .select(col("doc_id"), col("shuf_key"), col("shuf_seq"))
       .orderBy(col("shuf_seq"))
   }
 

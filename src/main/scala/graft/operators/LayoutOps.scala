@@ -325,42 +325,17 @@ object LayoutOps extends QueryPack {
     * "zipWithIndex" a training-data writer needs for deterministic
     * record addressing. The naive formulation (`row_number() OVER
     * (ORDER BY key)`) collapses to ONE task holding the whole corpus;
-    * this is the scalable identity instead: range-repartition by key,
-    * per-partition local row numbers (parallel), plus per-partition
-    * offsets — a ≤|partitions|-row aggregate the driver can always hold
-    * — broadcast back. The result is bit-identical to the naive global
-    * window regardless of where the sampled range boundaries fall
-    * (offsets are computed from the actual partition sizes, and range
-    * partition order equals key order), which is exactly what the
-    * oracle proves.
-    *
-    * The partitioned frame is localCheckpoint'ed so the offset job and
-    * the numbering job see the SAME sampled boundaries (a re-sample
-    * between jobs would shift rows across partitions and corrupt the
-    * offsets); executor-stored blocks — same durability trade as the
-    * deep-mode PageRank cadence. */
+    * this is the scalable identity instead ([[SkewUtils.globalRank]]):
+    * range-repartition by key, per-partition local row numbers
+    * (parallel), plus per-partition offsets broadcast back —
+    * bit-identical to the naive global window, which is exactly what
+    * the oracle proves. */
   def layoutGlobalIndex(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), coalesce(col("n_chars"), lit(0L)).as("nc"))
-    // width = max(16, defaultParallelism) — scales with the cluster
-    val parted = docs
-      .repartitionByRange(SkewUtils.rankWidth(s), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = parted.groupBy(col("pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum(col("cnt")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    val local = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-    parted
-      .withColumn("local_rn", row_number().over(local).cast("long"))
-      .join(broadcast(offsets), "pid")
-      .select(col("doc_id"), (col("offset") + col("local_rn")).as("global_seq"),
-        col("nc").as("n_chars_v"))
+    SkewUtils.globalRank(docs, Seq(col("doc_id")), "global_seq")
+      .select(col("doc_id"), col("global_seq"), col("nc").as("n_chars_v"))
       .orderBy(col("global_seq"))
   }
 

@@ -27,6 +27,37 @@ object SkewUtils {
   def rankWidth(s: org.apache.spark.sql.SparkSession): Int =
     math.max(16, s.sparkContext.defaultParallelism)
 
+  /** Exact global rank of every row of `in` by `ord`, as column `out`,
+    * WITHOUT a single-task window: range-repartition on the order keys
+    * ([[rankWidth]] ranges), number rows within each range, and add
+    * per-range offsets — a ≤|ranges|-row aggregate, broadcast back. The
+    * result is bit-identical to the naive `row_number() OVER (ORDER BY
+    * …)` wherever the sampled range boundaries fall (offsets come from
+    * the actual range sizes, and range order is key order). The
+    * partitioned frame is localCheckpoint'ed so the offset job and the
+    * numbering job see the SAME sampled boundaries (a re-sample between
+    * them would shift rows across ranges and corrupt the offsets).
+    * `ord` must be a TOTAL order (include a unique tiebreak). */
+  def globalRank(in: DataFrame, ord: Seq[Column], out: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val parted = in
+      .repartitionByRange(rankWidth(in.sparkSession), ord: _*)
+      .withColumn("__pid", spark_partition_id())
+      .localCheckpoint(true)
+    val offsets = parted.groupBy(col("__pid"))
+      .agg(count(lit(1)).as("__cnt"))
+      .withColumn("__off",
+        coalesce(sum(col("__cnt")).over(Window.orderBy(col("__pid"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("__pid"), col("__off"))
+    parted
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("__pid")).orderBy(ord: _*)).cast("long"))
+      .join(broadcast(offsets), "__pid")
+      .withColumn(out, col("__off") + col("__rn"))
+      .drop("__pid", "__rn", "__off")
+  }
+
   /** Inner-join `skewed` with `small` on `key`, spreading each key over
     * `salts` shuffle partitions. `small` is replicated `salts` times. */
   def saltedJoin(skewed: DataFrame, small: DataFrame, key: String, salts: Int): DataFrame = {

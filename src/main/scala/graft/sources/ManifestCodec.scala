@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    column collects no counts);
   *  - `stats` is `;`-joined column stats
   *    `b64(name):kind:b64(min):b64(max):nulls:bytes[:b64(bloom)]`
+  *    (an empty bound field is an unknown bound; `=` is the empty
+  *    string);
   *    followed by the coverage marker `*:N` (absent on zero-row files
   *    and stat-less commits);
   *  - `P` carries the hive partition value tuple (one `,`-joined
@@ -57,6 +59,35 @@ private[sources] object ManifestCodec {
     }
     override def hashCode: Int = key.hashCode
   }
+
+  /** The order of a stat kind's stored bounds, shared by the pruner,
+    * the catalog statistics and the metadata aggregates: signed longs
+    * ('l'), doubles ('d', with IEEE `lt`, so signed zeros tie — stored
+    * bounds are finite), and unsigned byte-wise UTF-8 ('s' — the binary
+    * collation of Spark's string min/max; UTF-16 order differs above
+    * the BMP, so decode-then-compare would be wrong). */
+  def boundOrdering(kind: Char): Ordering[Any] = (kind match {
+    case 'l' => Ordering.Long
+    case 'd' => Ordering.Double.IeeeOrdering
+    case 's' => UnsignedBytes
+    case k => throw new IllegalArgumentException(s"unknown stat kind '$k'")
+  }).asInstanceOf[Ordering[Any]]
+
+  private object UnsignedBytes extends Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int = {
+      var i = 0
+      while (i < a.length && i < b.length) {
+        val x = (a(i) & 0xff) - (b(i) & 0xff)
+        if (x != 0) return x
+        i += 1
+      }
+      a.length - b.length
+    }
+  }
+
+  /** The stored form of an EMPTY string bound. Base64 of a non-empty
+    * value is never this, and an empty field stays "bound unknown". */
+  private val EmptyBound = "="
 
   private def byContent(v: Any): Any = v match {
     case b: Array[Byte] => b.toSeq
@@ -257,7 +288,8 @@ private[sources] object ManifestCodec {
       else kind match {
         case 'l' => Some(str(b64).toLong)
         case 'd' => Some(str(b64).toDouble)
-        case 's' => Some(b64d(b64)) // raw UTF-8 bytes, binary collation
+        // raw UTF-8 bytes, binary collation
+        case 's' => Some(if (b64 == EmptyBound) Array.empty[Byte] else b64d(b64))
         case k => throw new IllegalArgumentException(
           s"unknown stat kind '$k' in '$field'")
       }
@@ -304,7 +336,7 @@ private[sources] object ManifestCodec {
 
   private def encodeStat(name: String, c: ColStat): String = {
     def bound(v: Option[Any]): String = v.fold("") {
-      case b: Array[Byte] => b64(b)
+      case b: Array[Byte] => if (b.isEmpty) EmptyBound else b64(b)
       case other => b64e(other.toString)
     }
     val head = s"${b64e(name)}:${c.kind}:${bound(c.min)}:${bound(c.max)}:" +

@@ -136,6 +136,47 @@ object SnapshotTable {
     }
   }
 
+  /** The greatest version of `vs` (a [[versions]] listing) at or below
+    * `asOf`, with its manifest — one decode; None when there is none.
+    * THE version resolver: the commit loop and every reader go through
+    * it (or [[snapshotAt]], which lists first). */
+  private def snapshotIn(s: SparkSession, tableDir: String, vs: Seq[Int],
+      asOf: Int): Option[(Int, Manifest)] =
+    vs.takeWhile(_ <= asOf).lastOption.map(v => v -> readManifest(s, tableDir, v))
+
+  /** [[snapshotIn]] over a fresh listing: one `_commits` listing and one
+    * manifest decode. */
+  private def snapshotAt(s: SparkSession, tableDir: String,
+      asOf: Int = Int.MaxValue): Option[(Int, Manifest)] =
+    snapshotIn(s, tableDir, versions(s, tableDir), asOf)
+
+  /** [[snapshotAt]] for operations that need a published version. */
+  private def requireSnapshot(s: SparkSession, tableDir: String, op: String,
+      asOf: Int = Int.MaxValue): (Int, Manifest) =
+    snapshotAt(s, tableDir, asOf).getOrElse(throw new IllegalArgumentException(
+      s"$op: no published version <= $asOf in $tableDir"))
+
+  /** The manifest of version `asOf`, or of the latest version for the
+    * Int.MaxValue sentinel. An EXPLICIT `VERSION AS OF n` must name a
+    * retained version — a floor would silently serve an older snapshot
+    * labeled as the requested one when n was vacuumed or never
+    * published (restore() and Delta both error). */
+  private def retainedSnapshot(s: SparkSession, tableDir: String, asOf: Int,
+      op: String): Manifest = {
+    val (v, m) = requireSnapshot(s, tableDir, op, asOf)
+    require(asOf == Int.MaxValue || v == asOf,
+      s"$op: version $asOf of $tableDir is not a retained published " +
+        s"version (the latest below it is v$v)")
+    m
+  }
+
+  /** The manifest a commit plan needs: refuses a table with no
+    * published version. */
+  private def requirePublished(m: Option[Manifest], op: String,
+      tableDir: String): Manifest =
+    m.getOrElse(throw new IllegalArgumentException(
+      s"$op: no published version in $tableDir"))
+
   /** The manifest's file entry ([[ManifestCodec.FileEntry]]). */
   private[sources] type FileEntry = ManifestCodec.FileEntry
   private[sources] val FileEntry = ManifestCodec.FileEntry
@@ -370,17 +411,6 @@ object SnapshotTable {
       }
     }
 
-    /** Byte-wise unsigned compare — parquet/Spark binary string order. */
-    private def bcmp(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      while (i < a.length && i < b.length) {
-        val x = (a(i) & 0xff) - (b(i) & 0xff)
-        if (x != 0) return x
-        i += 1
-      }
-      a.length - b.length
-    }
-
     /** compare(storedBound, literal) in the column's collation; None =
       * incomparable (type mismatch, NaN literal) → caller keeps file. */
     private def cmp(kind: Char, bound: Any, lit: Any): Option[Int] =
@@ -409,7 +439,7 @@ object SnapshotTable {
             else Some(java.lang.Double.compare(b, d))
           }
         case ('s', u: UTF8String) =>
-          Some(bcmp(bound.asInstanceOf[Array[Byte]], u.getBytes))
+          Some(ManifestCodec.boundOrdering('s').compare(bound, u.getBytes))
         case _ => None
       }
 
@@ -535,10 +565,7 @@ object SnapshotTable {
     * per writer instead of one per micro-batch ever committed. */
   def committedTxnVersions(s: SparkSession,
       tableDir: String): Map[String, Long] =
-    versions(s, tableDir).lastOption match {
-      case None => Map.empty
-      case Some(v) => readManifest(s, tableDir, v).txns
-    }
+    snapshotAt(s, tableDir).fold(Map.empty[String, Long])(_._2.txns)
 
   /** Has `txn` (writer id, version) already landed per `m`'s per-writer
     * watermarks? Monotone: any version at or below the stored watermark
@@ -555,7 +582,7 @@ object SnapshotTable {
     * here is what keeps that replay a no-op instead of a double
     * commit. The check consults ONLY ids that arrived as `#txn:` lines
     * (`legacyTxns` — manifests carry them in that form forever, see
-    * publishNext): a NEW one-shot id that merely spells
+    * nextManifest): a NEW one-shot id that merely spells
     * `"<writer>-<batch>"` lives in the `#txnv:` namespace and can
     * never mark another writer's batch as a replay — the composite
     * match would otherwise silently DROP that writer's batch, which is
@@ -607,19 +634,6 @@ object SnapshotTable {
       txn: Option[(String, Long)]): Map[String, Long] =
     txn.fold(prev) { case (w, v) =>
       prev + (w -> prev.get(w).map(math.max(_, v)).getOrElse(v)) }
-
-  /** FLAT-rewrite paths refuse the hive-partition layout: they emit
-    * files outside the directory scheme (and without recorded
-    * partition values), shearing it out from under readers. Deletes,
-    * selective merges, and per-partition compaction have
-    * layout-preserving routes instead — see [[commitPartitioned]]. */
-  private def requireUnpartitioned(m: Manifest, tableDir: String,
-      op: String): Unit =
-    require(m.partBy.isEmpty,
-      s"$op: $tableDir uses the hive partition layout " +
-        s"(by '${m.partBy.mkString(", ")}') — row-level rewrites are not " +
-        "supported on it; overwrite to re-layout, or keep rewrite-heavy " +
-        "tables on the zone-map-clustered flat layout")
 
   /** Commit `df` as the next version. `overwrite = false` appends to the
     * previous snapshot's file list; `overwrite = true` replaces it.
@@ -748,13 +762,10 @@ object SnapshotTable {
       partitionBy: Seq[String] = Nil,
       bucketBy: Option[(Int, String)] = None): Int = {
     val f = fs(s, tableDir)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"relayout: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
-      val cur = readAsOf(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "relayout", replan = true,
+        kind = Some("compact")) { (_, pm) =>
+      val m0 = requirePublished(pm, "relayout", tableDir)
+      val cur = snapshotFrame(s, tableDir, m0)
       require(cur.columns.nonEmpty,
         s"relayout: $tableDir has no published schema to re-lay")
       bucketBy.foreach { case (n, c) =>
@@ -783,28 +794,18 @@ object SnapshotTable {
       val written = writeDataDir(s, tableDir, cur, uniq, bucketBy,
         partitionBy, partSpread = partitionedWriteSpread(s))
       beforePublishHook()
-      val res = publishNext(s, tableDir,
-          partByOverride = Some(partitionBy),
-          kind = Some("compact")) { pm =>
-        pm.flatMap { m =>
-          // serializability: the rewrite read exactly m0's file +
-          // vector state — publishing over a mid-flight commit would
-          // erase its rows while claiming to preserve them
-          if (m.entries != m0.entries || m.dels != m0.dels) None
-          else Some(Prepared(written._2, storedSchema(cur.schema), m.txns,
-            bucketBy, Seq.empty, m.constraints,
-            // all pre-drop files are rewritten away: dropped names are
-            // safely re-usable, exactly as after any overwrite
-            Set.empty[String], written._3))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => f.delete(written._1, true) // conflict: re-plan
-      }
-    }
-    throw new IllegalStateException(
-      s"relayout: lost $MaxCommitAttempts re-plan races in $tableDir")
+      Some(Plan(_.flatMap { m =>
+        // serializability: the rewrite read exactly m0's file + vector
+        // state — publishing over a mid-flight commit would erase its
+        // rows while claiming to preserve them
+        if (m.entries != m0.entries || m.dels != m0.dels) None
+        else Some(Prepared(written._2, storedSchema(cur.schema), m.txns,
+          bucketBy, Seq.empty, m.constraints,
+          // all pre-drop files are rewritten away: dropped names are
+          // safely re-usable, exactly as after any overwrite
+          Set.empty[String], written._3, partBy = Some(partitionBy)))
+      }, () => f.delete(written._1, true)))
+    }.get
   }
 
   /** [[commitPartitioned]] × [[commitIdempotent]]: the partitioned
@@ -1259,15 +1260,13 @@ object SnapshotTable {
                 Some(CatalogColumnStat.toExternalString(
                   internal, f.name, f.dataType))
               }
-            def lt(a: Any, b: Any): Boolean =
-              if (kind == 'l') a.asInstanceOf[Long] < b.asInstanceOf[Long]
-              else a.asInstanceOf[Double] < b.asInstanceOf[Double]
+            val ord = ManifestCodec.boundOrdering(kind)
             f.name -> CatalogColumnStat(
               distinctCount = m.ndv.get(f.name)
                 .map(sk => BigInt(math.round(
                   graft.functions.KmvDistinctAgg.estimate(sk)))),
-              min = fold(lt, _.min),
-              max = fold((a, b) => lt(b, a), _.max),
+              min = fold(ord.lt, _.min),
+              max = fold(ord.gt, _.max),
               nullCount = Some(BigInt(nulls)),
               avgLen = avgLen)
             }
@@ -1489,13 +1488,8 @@ object SnapshotTable {
             "(expected col['key'], key quote-free)")
       }
     }.groupMap(_._1)(_._2).map { case (c, ks) => c -> ks.distinct }
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty,
-        s"setMapStatKeys: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "setMapStatKeys", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "setMapStatKeys", tableDir)
       val sc0 = m0.schema
       parsed.foreach { case (c, _) =>
         val f = sc0.fields.find(_.name == c).getOrElse(
@@ -1521,20 +1515,8 @@ object SnapshotTable {
         val nm = mb.build()
         if (nm == f.metadata) f else f.copy(metadata = nm)
       })
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None
-          else Some(Prepared.of(m).copy(schema = next))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"setMapStatKeys: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(schema = next))))
+    }.get
   }
 
   /** Field-metadata key on a top-level MAP column listing its
@@ -1742,88 +1724,77 @@ object SnapshotTable {
       predicate: org.apache.spark.sql.Column): Option[Int] = {
     import org.apache.spark.sql.functions._
     val f = fs(s, tableDir)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"deleteWhere: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "deleteWhere", replan = true,
+        kind = Some("delete")) { (_, pm) =>
+      val m0 = requirePublished(pm, "deleteWhere", tableDir)
       val (sc0, es0) = (m0.schema, m0.entries)
       // an empty snapshot (flat or hive) has nothing to delete
-      if (es0.isEmpty) return None
-      // layout- AND era-agnostic: deletion vectors key on (file,
-      // position), so merge-on-read deletes work unchanged on
-      // hive-partitioned tables (the GDPR-delete-on-an-event-feed
-      // case) and across partition-scheme ERAS ([[repartitionBy]])
-      // — the probe plans one leg per era, each file read under
-      // ITS era's layout with the positional identity selected
-      // per leg (hidden _metadata does not cross a Union); no
-      // data file is touched, so every layout survives by
-      // construction
-      val withMeta = m0.eraLegs(es0).map { case (scheme, ees) =>
-        relationFor(s, tableDir, storedSchema(sc0), ees,
-          m0.bucket, partBy = scheme)
-          .select(col("_metadata.file_path").as("__path"),
-            col("_metadata.row_index").as("__pos"), col("*"))
-      }.reduce(_.unionByName(_))
-      val live =
-        if (m0.dels.isEmpty) withMeta
-        else withMeta.join(delFrame(s, tableDir, m0),
-          Seq("__path", "__pos"), "left_anti")
-      val matched = live.filter(predicate)
-        .select(col("__path"), col("__pos"))
-      writeDelDir(s, tableDir, matched) match {
-        case None => return None // nothing matched: nothing to publish
-        case Some((delDir, vectors)) =>
+      if (es0.isEmpty) None
+      else {
+        // layout- AND era-agnostic: deletion vectors key on (file,
+        // position), so merge-on-read deletes work unchanged on
+        // hive-partitioned tables (the GDPR-delete-on-an-event-feed
+        // case) and across partition-scheme ERAS ([[repartitionBy]])
+        // — the probe plans one leg per era, each file read under
+        // ITS era's layout with the positional identity selected
+        // per leg (hidden _metadata does not cross a Union); no
+        // data file is touched, so every layout survives by
+        // construction
+        val withMeta = m0.eraLegs(es0).map { case (scheme, ees) =>
+          relationFor(s, tableDir, storedSchema(sc0), ees,
+            m0.bucket, partBy = scheme)
+            .select(col("_metadata.file_path").as("__path"),
+              col("_metadata.row_index").as("__pos"), col("*"))
+        }.reduce(_.unionByName(_))
+        val live =
+          if (m0.dels.isEmpty) withMeta
+          else withMeta.join(delFrame(s, tableDir, m0),
+            Seq("__path", "__pos"), "left_anti")
+        val matched = live.filter(predicate)
+          .select(col("__path"), col("__pos"))
+        // nothing matched: nothing to publish
+        writeDelDir(s, tableDir, matched).map { case (delDir, vectors) =>
           beforePublishHook()
           val m0paths = m0.paths.toSet
           val scStored = storedSchema(sc0)
-          val res = publishNext(s, tableDir,
-              kind = Some("delete")) { pm =>
-            pm.flatMap { m =>
-              // The positions were computed against m0's file +
-              // vector state. They stay valid — and the publish
-              // REBASES instead of re-planning — as long as every
-              // file they point into is still live; a rewrite that
-              // dropped any m0 file (merge/compact/overwrite)
-              // invalidates positions into it. A concurrent vector
-              // DELETE composes as a union with no extra work (a
-              // position deleted twice anti-joins identically).
-              if (!m0paths.subsetOf(m.paths.toSet)) None
-              else {
-                // STRICT serializability across concurrent commits
-                // that ADDED files: their rows may match the
-                // predicate, and the delete — serialized after
-                // them — must cover those rows, so any match
-                // forces the full re-plan. The probe reads ONLY
-                // the added files (zone-map pruned); a
-                // non-matching append then composes retry-free
-                // (identical final state in either serial order).
-                val added = m.entries.filterNot(e =>
-                  m0paths.contains(e.path))
-                val addedOk = added.isEmpty ||
-                  (storedSchema(m.schema) == scStored &&
-                    m.partBy == m0.partBy &&
-                    m.partEras == m0.partEras &&
-                    m.eraLegs(added).map { case (scheme, ees) =>
-                      relationFor(s, tableDir, scStored, ees,
-                        m.bucket, partBy = scheme)
-                    }.reduce(_.unionByName(_))
-                      .filter(predicate).isEmpty)
-                if (!addedOk) None
-                // rows removed: a bottom-k sketch cannot subtract —
-                // NDV unknown until a full rewrite recollects
-                else Some(Prepared.of(m).copy(dels = m.dels ++ vectors,
-                  ndv = Map.empty))
-              }
+          Plan(_.flatMap { m =>
+            // The positions were computed against m0's file + vector
+            // state. They stay valid — and the publish REBASES instead
+            // of re-planning — as long as every file they point into
+            // is still live; a rewrite that dropped any m0 file
+            // (merge/compact/overwrite) invalidates positions into it.
+            // A concurrent vector DELETE composes as a union with no
+            // extra work (a position deleted twice anti-joins
+            // identically).
+            if (!m0paths.subsetOf(m.paths.toSet)) None
+            else {
+              // STRICT serializability across concurrent commits that
+              // ADDED files: their rows may match the predicate, and
+              // the delete — serialized after them — must cover those
+              // rows, so any match forces the full re-plan. The probe
+              // reads ONLY the added files (zone-map pruned); a
+              // non-matching append then composes retry-free
+              // (identical final state in either serial order).
+              val added = m.entries.filterNot(e => m0paths.contains(e.path))
+              val addedOk = added.isEmpty ||
+                (storedSchema(m.schema) == scStored &&
+                  m.partBy == m0.partBy &&
+                  m.partEras == m0.partEras &&
+                  m.eraLegs(added).map { case (scheme, ees) =>
+                    relationFor(s, tableDir, scStored, ees,
+                      m.bucket, partBy = scheme)
+                  }.reduce(_.unionByName(_))
+                    .filter(predicate).isEmpty)
+              if (!addedOk) None
+              // rows removed: a bottom-k sketch cannot subtract — NDV
+              // unknown until a full rewrite recollects
+              else Some(Prepared.of(m).copy(dels = m.dels ++ vectors,
+                ndv = Map.empty))
             }
-          }
-          if (res.isEmpty) f.delete(delDir, true) // conflict: re-plan
-          else return res
+          }, () => f.delete(delDir, true))
+        }
       }
     }
-    throw new IllegalStateException(
-      s"deleteWhere: lost $MaxCommitAttempts re-plan races in $tableDir")
   }
 
   /** UPDATE ... SET ... WHERE as ONE serializable commit — the third
@@ -1861,12 +1832,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions._
     require(sets.nonEmpty, "updateWhere: no SET assignments")
     val f = fs(s, tableDir)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"updateWhere: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    def plan(m0: Manifest): Option[Plan] = {
       val es0 = m0.entries
       val sc0 = storedSchema(m0.schema)
       sets.keys.foreach { c =>
@@ -1924,60 +1890,56 @@ object SnapshotTable {
       val setPhys = sc0.fields.filter(fl => sets.contains(fl.name))
         .map(physName).toSet
       val m0pathsAll = m0.paths.toSet
-      val res = publishNext(s, tableDir, kind = Some("update")) { pm =>
-        pm.flatMap { m =>
-          // STRICT serializability at FILE granularity: an identical
-          // manifest publishes directly; a manifest a CONCURRENT
-          // commit advanced still publishes — REBASED, the expensive
-          // rewrite reused — when the update is equivalent to running
-          // AFTER that commit: (a) every file this update rewrites is
-          // still live (the other commit read/removed none of them —
-          // and since the probe put every matching file in
-          // affectedPaths, any file the other commit rewrote held no
-          // matches); (b) no new deletion vectors (the rewrite would
-          // resurrect their rows), no constraint/schema/layout change
-          // (the rewrite was validated and physically named against
-          // m0's); (c) files the other commit ADDED hold NO row
-          // matching the predicate — probed here over ONLY those
-          // files (zone-map pruned), because an update serialized
-          // after an append must cover its matching rows (any match →
-          // full re-plan, the same strict rule the delete path pins).
-          // Two UPDATEs on disjoint hive partitions therefore BOTH
-          // commit with zero rewrite retries.
-          val exact = m.entries == m0.entries && m.dels == m0.dels &&
-            m.constraints == m0.constraints
-          lazy val structuralOk =
-            m.dels == m0.dels && m.constraints == m0.constraints &&
-              m.schema == m0.schema && m.bucket.isEmpty &&
-              m.partBy == m0.partBy && m.partEras == m0.partEras &&
-              affectedEntryPaths.subsetOf(m.paths.toSet)
-          lazy val addedClean = {
-            val added = m.entries.filterNot(e => m0pathsAll.contains(e.path))
-            added.isEmpty ||
-              m.eraLegs(added).map { case (scheme, ees) =>
-                relationFor(s, tableDir, sc0, ees, partBy = scheme)
-              }.reduce(_.unionByName(_))
-                .filter(predicate).isEmpty
-          }
-          if (!exact && !(structuralOk && addedClean)) None
-          else Some(Prepared.of(m).copy(
-            // keep every CURRENT file except the ones this update
-            // rewrites (covers both the exact and rebased cases)
-            entries = m.entries.filterNot(e =>
-              affectedEntryPaths.contains(e.path)) ++ newFiles,
-            dels = Seq.empty,
-            // SET columns' values changed (no sketch subtraction);
-            // every other column's row SET is preserved — carry
-            ndv = m.ndv -- setPhys))
+      Some(Plan(_.flatMap { m =>
+        // STRICT serializability at FILE granularity: an identical
+        // manifest publishes directly; a manifest a CONCURRENT
+        // commit advanced still publishes — REBASED, the expensive
+        // rewrite reused — when the update is equivalent to running
+        // AFTER that commit: (a) every file this update rewrites is
+        // still live (the other commit read/removed none of them —
+        // and since the probe put every matching file in
+        // affectedPaths, any file the other commit rewrote held no
+        // matches); (b) no new deletion vectors (the rewrite would
+        // resurrect their rows), no constraint/schema/layout change
+        // (the rewrite was validated and physically named against
+        // m0's); (c) files the other commit ADDED hold NO row
+        // matching the predicate — probed here over ONLY those
+        // files (zone-map pruned), because an update serialized
+        // after an append must cover its matching rows (any match →
+        // full re-plan, the same strict rule the delete path pins).
+        // Two UPDATEs on disjoint hive partitions therefore BOTH
+        // commit with zero rewrite retries.
+        val exact = m.entries == m0.entries && m.dels == m0.dels &&
+          m.constraints == m0.constraints
+        lazy val structuralOk =
+          m.dels == m0.dels && m.constraints == m0.constraints &&
+            m.schema == m0.schema && m.bucket.isEmpty &&
+            m.partBy == m0.partBy && m.partEras == m0.partEras &&
+            affectedEntryPaths.subsetOf(m.paths.toSet)
+        lazy val addedClean = {
+          val added = m.entries.filterNot(e => m0pathsAll.contains(e.path))
+          added.isEmpty ||
+            m.eraLegs(added).map { case (scheme, ees) =>
+              relationFor(s, tableDir, sc0, ees, partBy = scheme)
+            }.reduce(_.unionByName(_))
+              .filter(predicate).isEmpty
         }
-      }
-      res match {
-        case Some(_) => return res
-        case None => f.delete(dataDir, true) // conflict: re-plan
-      }
+        if (!exact && !(structuralOk && addedClean)) None
+        else Some(Prepared.of(m).copy(
+          // keep every CURRENT file except the ones this update
+          // rewrites (covers both the exact and rebased cases)
+          entries = m.entries.filterNot(e =>
+            affectedEntryPaths.contains(e.path)) ++ newFiles,
+          dels = Seq.empty,
+          // SET columns' values changed (no sketch subtraction);
+          // every other column's row SET is preserved — carry
+          ndv = m.ndv -- setPhys))
+      }, () => f.delete(dataDir, true)))
     }
-    throw new IllegalStateException(
-      s"updateWhere: lost $MaxCommitAttempts re-plan races in $tableDir")
+    commitLoop(s, tableDir, "updateWhere", replan = true,
+        kind = Some("update")) { (_, pm) =>
+      plan(requirePublished(pm, "updateWhere", tableDir))
+    }
   }
 
   /** Write the matched delete positions as a `data/del-*` parquet
@@ -2030,50 +1992,47 @@ object SnapshotTable {
     * version; None when there is nothing to absorb or on conflict. */
   def absorbDeletes(s: SparkSession, tableDir: String): Option[Int] = {
     val f = fs(s, tableDir)
-    val prev = versions(s, tableDir)
-    if (prev.isEmpty) return None
-    val m0 = readManifest(s, tableDir, prev.last)
-    if (m0.dels.isEmpty) return None
-    val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
-    // affected files come from the vectors themselves — vector-sized
-    // driver work, never table-sized
-    val affectedPaths = delFrame(s, tableDir, m0).select("__path").distinct()
-      .collect().map(r => new HPath(r.getString(0)).toUri.getPath).toSet
-    val (affected, carried) = es0.partition(e =>
-      affectedPaths.contains(e.status.getPath.toUri.getPath))
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
-    // the rewrite keeps the table's layout: a partitioned table's
-    // affected files re-land under their hive directories (the new
-    // entries carry fresh partition values). Era-aware like the other
-    // row-level rewrites: each affected file reads under ITS era's
-    // layout (vectors subtracted per leg) and re-lands under the
-    // CURRENT scheme — absorbing deletes incrementally migrates an
-    // evolved table too.
-    val rewritten =
-      if (affected.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          sc0)
-      else m0.eraLegs(affected).map { case (scheme, ees) =>
-        applyDels(s, tableDir,
-          relationFor(s, tableDir, sc0, ees, partBy = scheme), m0)
-      }.reduce(_.unionByName(_))
-    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-      toPhysical(rewritten, sc0),
-      uniq, partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-    val carriedPaths = carried.map(_.path).toSet
-    beforePublishHook()
-    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-      pm.flatMap { m =>
+    def plan(m0: Manifest): Option[Plan] = {
+      if (m0.dels.isEmpty) return None
+      val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
+      // affected files come from the vectors themselves — vector-sized
+      // driver work, never table-sized
+      val affectedPaths = delFrame(s, tableDir, m0).select("__path").distinct()
+        .collect().map(r => new HPath(r.getString(0)).toUri.getPath).toSet
+      val (affected, carried) = es0.partition(e =>
+        affectedPaths.contains(e.status.getPath.toUri.getPath))
+      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      // the rewrite keeps the table's layout: a partitioned table's
+      // affected files re-land under their hive directories (the new
+      // entries carry fresh partition values). Era-aware like the other
+      // row-level rewrites: each affected file reads under ITS era's
+      // layout (vectors subtracted per leg) and re-lands under the
+      // CURRENT scheme — absorbing deletes incrementally migrates an
+      // evolved table too.
+      val rewritten =
+        if (affected.isEmpty)
+          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            sc0)
+        else m0.eraLegs(affected).map { case (scheme, ees) =>
+          applyDels(s, tableDir,
+            relationFor(s, tableDir, sc0, ees, partBy = scheme), m0)
+        }.reduce(_.unionByName(_))
+      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
+        toPhysical(rewritten, sc0),
+        uniq, partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
+      val carriedPaths = carried.map(_.path).toSet
+      beforePublishHook()
+      Some(Plan(_.flatMap { m =>
         if (m.entries != m0.entries || m.dels != m0.dels) None // conflict
         else Some(Prepared.of(m).copy(
           entries = m.entries.filter(e => carriedPaths.contains(e.path))
             ++ newFiles,
           bucket = if (affected.isEmpty) m.bucket else None,
           dels = Seq.empty))
-      }
+      }, () => f.delete(dataDir, true)))
     }
-    if (res.isEmpty) f.delete(dataDir, true)
-    res
+    commitLoop(s, tableDir, "absorbDeletes", replan = false,
+      kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
   }
 
   /** Filesystem schemes whose `rename` is atomic no-overwrite (fails,
@@ -2397,14 +2356,20 @@ object SnapshotTable {
     * sketches (the bottom-64 KMV of md5 value hashes — see
     * [[metaAgg]]'s `est_ndv`; carried/merged by ops that preserve or
     * append rows, DROPPED (unknown) by ops that remove or rewrite row
-    * values — a bottom-k sketch cannot subtract). The commit timestamp,
-    * layout history, legacy txn ids and operation kind are stamped by
-    * [[publishNext]] itself. */
+    * values — a bottom-k sketch cannot subtract), and the layout when the
+    * operation sets it. The commit timestamp, legacy txn ids and
+    * operation kind are stamped by [[nextManifest]]. */
   private final case class Prepared(entries: Seq[FileEntry],
       schema: StructType, txns: Map[String, Long],
       bucket: Option[(Int, String)], dels: Seq[FileEntry],
       constraints: Map[String, String], dropped: Set[String],
-      ndv: Map[String, Seq[Long]])
+      ndv: Map[String, Seq[Long]],
+      // None carries the previous manifest's partition columns (every
+      // metadata/maintenance op); Some(cols) SETS them — only paths that
+      // (re)define the layout pass them. `partEras` None: the previous
+      // history rides on while an era-tagged entry survives.
+      partBy: Option[Seq[String]] = None,
+      partEras: Option[Seq[Seq[String]]] = None)
 
   private object Prepared {
     /** `m`'s content carried forward unchanged. */
@@ -2412,61 +2377,66 @@ object SnapshotTable {
       m.bucket, m.dels, m.constraints, m.dropped, m.ndv)
   }
 
-  /** The optimistic-commit loop shared by every commit path: each
-    * attempt reads the latest manifest, asks `prepare` for the next
-    * snapshot's content, and publishes it under the next version number
-    * with the atomic create-exclusive; a lost version race re-reads and
-    * retries, so `prepare` always sees the manifest it will be
-    * serialized after. `prepare` returning None aborts (replayed txn,
-    * maintenance conflict) and publishNext returns None.
-    *
-    * `partByOverride`: None carries the previous manifest's partition
-    * columns forward unchanged (every metadata/maintenance op);
-    * Some(cols) SETS them — only data-commit paths that (re)define the
-    * layout pass this. */
-  private def publishNext(s: SparkSession, tableDir: String,
-      partByOverride: Option[Seq[String]] = None,
-      partErasOverride: Option[Seq[Seq[String]]] = None,
+  /** One plan of an operation's commit. `rebase` derives the next
+    * snapshot's content from the latest manifest — the one the plan was
+    * made against on its first attempt, the winner's after a lost race —
+    * and returns None when the plan conflicts with it; `discard` removes
+    * what the plan wrote once it is abandoned. */
+  private final case class Plan(rebase: Option[Manifest] => Option[Prepared],
+      discard: () => Unit = () => ())
+
+  /** The rebase of a metadata-only commit planned against `m0`: it
+    * publishes `next(latest)` only while the latest manifest still holds
+    * m0's files, deletion vectors and schema — the state the operation
+    * validated; any other commit in between re-plans it. */
+  private def metadataRebase(m0: Manifest)(next: Manifest => Prepared)
+      : Option[Manifest] => Option[Prepared] =
+    _.filter(m => m.entries == m0.entries && m.dels == m0.dels &&
+      m.schema == m0.schema).map(next)
+
+  /** THE optimistic-commit loop: every operation that publishes a
+    * version goes through it. Each attempt holds the latest published
+    * version and its manifest, read once (one `_commits` listing, one
+    * decode):
+    *  - `plan` does the operation's work against that snapshot (None:
+    *    nothing to publish, the loop returns None);
+    *  - the plan's rebase is applied to that same manifest and the
+    *    result published with the atomic create-exclusive at exactly the
+    *    next version — an uncontended commit lists and reads once;
+    *  - a lost race reads the new latest snapshot once and the next
+    *    attempt rebases the plan onto it; a rebase that conflicts
+    *    discards the plan, and the operation either re-plans against the
+    *    manifest just read (`replan`) or gives up with None.
+    * `txn`'s replay check runs against every manifest the loop reads: a
+    * landed txn discards the plan and returns None. One bound,
+    * [[MaxCommitAttempts]], covers all attempts of an operation. `kind`
+    * is the operation kind the published manifest records. */
+  private def commitLoop(s: SparkSession, tableDir: String, op: String,
+      replan: Boolean, txn: Option[(String, Long)] = None,
       kind: Option[String] = None)(
-      prepare: Option[Manifest] => Option[Prepared])
-      : Option[Int] = {
+      plan: (Int, Option[Manifest]) => Option[Plan]): Option[Int] = {
     val f = fs(s, tableDir)
     val uniq = java.util.UUID.randomUUID.toString.take(8)
+    def latest(): (Int, Option[Manifest]) =
+      snapshotAt(s, tableDir).fold((0, Option.empty[Manifest])) {
+        case (v, m) => (v, Some(m)) }
+    var (version, prev) = latest()
+    var planned = Option.empty[Plan]
+    def abandon(): Unit = { planned.foreach(_.discard()); planned = None }
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       attempt += 1
-      val prev = versions(s, tableDir)
-      val prevManifest = prev.lastOption.map(readManifest(s, tableDir, _))
-      prepare(prevManifest) match {
+      if (txnLanded(prev, txn)) { abandon(); return None }
+      if (planned.isEmpty) planned = plan(version, prev) match {
         case None => return None
+        case p => p
+      }
+      planned.get.rebase(prev) match {
+        case None =>
+          abandon()
+          if (!replan) return None
         case Some(p) =>
-          val partBy = partByOverride.getOrElse(
-            prevManifest.map(_.partBy).getOrElse(Nil))
-          // scheme-era history ([[repartitionBy]]): carried as long as
-          // any era-tagged entry survives; a FULL rewrite (all-fresh
-          // untagged entries) retires it — the table is single-era
-          // again. Fresh entries landing on an era'd table are tagged
-          // with the CURRENT era here, so every entry always knows its
-          // directory layout.
-          val tagged = p.entries.exists(_.era.isDefined)
-          val partEras = partErasOverride.orElse(
-            prevManifest.flatMap(_.partEras).filter(_ => tagged))
-          require(partEras.isDefined || !tagged,
-            "snapshot publish: era-tagged entries without a #parteras " +
-              "history — the caller must carry it (partErasOverride)")
-          val entries = partEras.fold(p.entries)(eras => p.entries.map(e =>
-            if (e.era.isDefined) e else e.copy(era = Some(eras.size - 1))))
-          // genuinely-legacy one-shot ids keep their own `#txn:` line
-          // form forever: re-encoding them as `#txnv:` would erase the
-          // provenance the upgrade-seam composite check keys on
-          val next = Manifest(p.txns,
-            prevManifest.map(_.legacyTxns).getOrElse(Set.empty), p.schema,
-            entries, p.bucket, p.dels, Some(System.currentTimeMillis()),
-            p.constraints, p.dropped, p.ndv, partBy, partEras,
-            // the producing operation's kind — THIS commit's, never
-            // carried from the previous manifest
-            kind)
-          val v = prev.lastOption.getOrElse(0) + 1
+          val next = nextManifest(p, prev, kind)
           val cd = commitsDir(tableDir)
           f.mkdirs(cd)
           val tmp = new HPath(cd, s".tmp-$uniq-$attempt")
@@ -2474,12 +2444,47 @@ object SnapshotTable {
           try out.write(ManifestCodec.encode(next).getBytes("UTF-8"))
           finally out.close()
           // the commit point: atomic create-exclusive of the version name
-          if (publish(f, tmp, manifestPath(tableDir, v))) return Some(v)
-        // lost the race — someone else published v; retry against v+1
+          if (publish(f, tmp, manifestPath(tableDir, version + 1)))
+            return Some(version + 1)
+          // lost the race: the next attempt rebases onto the winner
+          val (v, m) = latest()
+          version = v
+          prev = m
       }
     }
+    abandon()
     throw new IllegalStateException(
-      s"snapshot commit: lost $MaxCommitAttempts version races in $tableDir")
+      s"$op: lost $MaxCommitAttempts commit races in $tableDir")
+  }
+
+  /** The manifest a commit publishes: `p` stamped with the commit time,
+    * the operation's `kind`, the layout and its era history, and the
+    * legacy txn ids carried from `prev`. */
+  private def nextManifest(p: Prepared, prev: Option[Manifest],
+      kind: Option[String]): Manifest = {
+    val partBy = p.partBy.getOrElse(prev.map(_.partBy).getOrElse(Nil))
+    // scheme-era history ([[repartitionBy]]): carried as long as any
+    // era-tagged entry survives; a FULL rewrite (all-fresh untagged
+    // entries) retires it — the table is single-era again. Fresh entries
+    // landing on an era'd table are tagged with the CURRENT era here, so
+    // every entry always knows its directory layout.
+    val tagged = p.entries.exists(_.era.isDefined)
+    val partEras = p.partEras.orElse(
+      prev.flatMap(_.partEras).filter(_ => tagged))
+    require(partEras.isDefined || !tagged,
+      "snapshot publish: era-tagged entries without a #parteras " +
+        "history — the caller must carry it (Prepared.partEras)")
+    val entries = partEras.fold(p.entries)(eras => p.entries.map(e =>
+      if (e.era.isDefined) e else e.copy(era = Some(eras.size - 1))))
+    // genuinely-legacy one-shot ids keep their own `#txn:` line form
+    // forever: re-encoding them as `#txnv:` would erase the provenance
+    // the upgrade-seam composite check keys on
+    Manifest(p.txns, prev.map(_.legacyTxns).getOrElse(Set.empty), p.schema,
+      entries, p.bucket, p.dels, Some(System.currentTimeMillis()),
+      p.constraints, p.dropped, p.ndv, partBy, partEras,
+      // the producing operation's kind — THIS commit's, never carried
+      // from the previous manifest
+      kind)
   }
 
   private def commitInternal(s: SparkSession, tableDir: String, df: DataFrame,
@@ -2516,14 +2521,12 @@ object SnapshotTable {
     // the logical→physical rename map the staged write used (a lost
     // race against a concurrent rename must restage under the new map)
     var writtenRen: Map[String, String] = Map.empty
-    val res = publishNext(s, tableDir,
-        partByOverride = Some(partitionBy),
-        kind = Some(if (overwrite) "overwrite" else "append")) { prevManifest =>
-      // replay check INSIDE the retry loop: a zombie writer racing the
-      // live one with the same txn loses the version race, re-reads,
-      // and sees the txn landed
-      if (txnLanded(prevManifest, txn)) None
-      else {
+    // the replay check runs in the loop on every manifest it reads: a
+    // zombie writer racing the live one with the same txn loses the
+    // version race, re-reads, and sees the txn landed
+    commitLoop(s, tableDir, "commit", replan = false, txn = txn,
+        kind = Some(if (overwrite) "overwrite" else "append")) { (_, _) =>
+      Some(Plan({ prevManifest =>
         // CHECK gate per attempt: a lost race may have added a
         // constraint mid-commit — the retry re-reads and re-validates
         enforceConstraints(df,
@@ -2673,11 +2676,9 @@ object SnapshotTable {
           prevManifest.map(_.constraints).getOrElse(Map.empty),
           if (overwrite) Set.empty[String]
           else prevManifest.map(_.dropped).getOrElse(Set.empty),
-          ndv))
-      }
+          ndv, partBy = Some(partitionBy)))
+      }, () => written.foreach(w => f.delete(w._1, true))))
     }
-    if (res.isEmpty) written.foreach(w => f.delete(w._1, true)) // orphan
-    res
   }
 
   /** Commit hash-CLUSTERED by `bucketCol` into `nBuckets` buckets —
@@ -2756,46 +2757,43 @@ object SnapshotTable {
       targetFileBytes: Long): Option[Int] = {
     require(smallFileBytes > 0 && targetFileBytes > 0,
       "compact thresholds must be positive")
-    val prev = versions(s, tableDir)
-    if (prev.isEmpty) return None
-    val m0 = readManifest(s, tableDir, prev.last)
-    // a bucketed table's file-per-bucket mapping IS its layout —
-    // bin-packing across buckets would destroy it; per-bucket
-    // compaction is a re-bucketing overwrite (commitBucketed) instead
-    if (m0.bucket.isDefined) return None
-    // outstanding deletion vectors: the bin-pack read would resurrect
-    // deleted rows — absorbDeletes IS the compaction of those files
-    if (m0.dels.nonEmpty) return None
-    // mixed/superseded partition-scheme eras: the pack read+rewrite
-    // assumes ONE current layout — relayout()/overwrite unifies
-    if (!eraUniform(m0)) return None
-    val schema0 = m0.schema
-    val small = m0.entries.filter(_.status.getLen < smallFileBytes)
-    if (small.size <= 1) return None
-    val nOut = math.max(1, math.ceil(
-      small.map(_.status.getLen).sum.toDouble / targetFileBytes).toInt)
-    val f = fs(s, tableDir)
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
-    // hive layout packs PER PARTITION: the partitioned writer
-    // re-clusters by value and emits packed files inside fresh
-    // `<col>=<value>/` dirs — the maintenance a partitioned
-    // streaming sink's small-file tail needs (one packed file per
-    // partition per sweep; only files under `smallFileBytes` are
-    // selected, so output stays near the small-file mass per value)
-    val (dataDir, newFiles, _) =
-      if (m0.partBy.nonEmpty) writeDataDir(s, tableDir,
-        toPhysical(relationFor(s, tableDir, storedSchema(schema0), small,
-          partBy = m0.partBy), storedSchema(schema0)),
-        uniq, partitionBy = m0.partBy,
-        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-      else writeDataDir(s, tableDir,
-        toPhysical(relationFor(s, tableDir, storedSchema(schema0), small)
-          .repartition(nOut), storedSchema(schema0)), uniq,
-        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-    val compacted = small.map(_.path).toSet
-    beforePublishHook()
-    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-      pm.flatMap { m =>
+    def plan(m0: Manifest): Option[Plan] = {
+      // a bucketed table's file-per-bucket mapping IS its layout —
+      // bin-packing across buckets would destroy it; per-bucket
+      // compaction is a re-bucketing overwrite (commitBucketed) instead
+      if (m0.bucket.isDefined) return None
+      // outstanding deletion vectors: the bin-pack read would resurrect
+      // deleted rows — absorbDeletes IS the compaction of those files
+      if (m0.dels.nonEmpty) return None
+      // mixed/superseded partition-scheme eras: the pack read+rewrite
+      // assumes ONE current layout — relayout()/overwrite unifies
+      if (!eraUniform(m0)) return None
+      val schema0 = m0.schema
+      val small = m0.entries.filter(_.status.getLen < smallFileBytes)
+      if (small.size <= 1) return None
+      val nOut = math.max(1, math.ceil(
+        small.map(_.status.getLen).sum.toDouble / targetFileBytes).toInt)
+      val f = fs(s, tableDir)
+      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      // hive layout packs PER PARTITION: the partitioned writer
+      // re-clusters by value and emits packed files inside fresh
+      // `<col>=<value>/` dirs — the maintenance a partitioned
+      // streaming sink's small-file tail needs (one packed file per
+      // partition per sweep; only files under `smallFileBytes` are
+      // selected, so output stays near the small-file mass per value)
+      val (dataDir, newFiles, _) =
+        if (m0.partBy.nonEmpty) writeDataDir(s, tableDir,
+          toPhysical(relationFor(s, tableDir, storedSchema(schema0), small,
+            partBy = m0.partBy), storedSchema(schema0)),
+          uniq, partitionBy = m0.partBy,
+          bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+        else writeDataDir(s, tableDir,
+          toPhysical(relationFor(s, tableDir, storedSchema(schema0), small)
+            .repartition(nOut), storedSchema(schema0)), uniq,
+          bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      val compacted = small.map(_.path).toSet
+      beforePublishHook()
+      Some(Plan(_.flatMap { m =>
         // conflict: a compacted file left the live set, or a
         // deletion vector landed mid-compaction (the rewrite read
         // the small files WITHOUT it — publishing would resurrect
@@ -2803,10 +2801,10 @@ object SnapshotTable {
         if (!compacted.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
         else Some(Prepared.of(m).copy(entries =
           m.entries.filterNot(e => compacted.contains(e.path)) ++ newFiles))
-      }
+      }, () => f.delete(dataDir, true)))
     }
-    if (res.isEmpty) f.delete(dataDir, true)
-    res
+    commitLoop(s, tableDir, "compact", replan = false,
+      kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
   }
 
   /** Per-BUCKET compaction — the maintenance op of the bucketed
@@ -2829,44 +2827,41 @@ object SnapshotTable {
     * already single-file, on outstanding vectors (absorbDeletes
     * first), or on unbucketed tables. */
   def compactBuckets(s: SparkSession, tableDir: String): Option[Int] = {
-    val prev = versions(s, tableDir)
-    if (prev.isEmpty) return None
-    val m0 = readManifest(s, tableDir, prev.last)
-    val (nBuckets, bucketCol) = m0.bucket.getOrElse(return None)
-    if (m0.dels.nonEmpty) return None
-    val (schema0, es0) = (m0.schema, m0.entries)
-    // bucket id from the writer's `_%05d` file-name stamp; every
-    // file of a bucketed manifest carries one by construction
-    val idRe = """.*_(\d{5})\.[^/]*$""".r
-    def bucketId(e: FileEntry): Int = e.status.getPath.getName match {
-      case idRe(id) => id.toInt
-      case other => throw new IllegalStateException(
-        s"compactBuckets: no bucket id in file name $other")
-    }
-    val affected = es0.groupBy(e => (e.part, bucketId(e)))
-      .filter(_._2.size > 1).values.flatten.toSeq
-    if (affected.isEmpty) return None
-    val f = fs(s, tableDir)
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
-    // the subset read reconstructs partition values (partBy) but
-    // claims NO bucket partitioning (it is a plain row source for
-    // the re-bucketing writer, which re-derives the ids)
-    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-      toPhysical(relationFor(s, tableDir, storedSchema(schema0), affected,
-        partBy = m0.partBy), storedSchema(schema0)),
-      uniq, bucket = Some((nBuckets, bucketCol)),
-      partitionBy = m0.partBy, bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-    val packed = affected.map(_.path).toSet
-    beforePublishHook()
-    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-      pm.flatMap { m =>
+    def plan(m0: Manifest): Option[Plan] = {
+      val (nBuckets, bucketCol) = m0.bucket.getOrElse(return None)
+      if (m0.dels.nonEmpty) return None
+      val (schema0, es0) = (m0.schema, m0.entries)
+      // bucket id from the writer's `_%05d` file-name stamp; every
+      // file of a bucketed manifest carries one by construction
+      val idRe = """.*_(\d{5})\.[^/]*$""".r
+      def bucketId(e: FileEntry): Int = e.status.getPath.getName match {
+        case idRe(id) => id.toInt
+        case other => throw new IllegalStateException(
+          s"compactBuckets: no bucket id in file name $other")
+      }
+      val affected = es0.groupBy(e => (e.part, bucketId(e)))
+        .filter(_._2.size > 1).values.flatten.toSeq
+      if (affected.isEmpty) return None
+      val f = fs(s, tableDir)
+      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      // the subset read reconstructs partition values (partBy) but
+      // claims NO bucket partitioning (it is a plain row source for
+      // the re-bucketing writer, which re-derives the ids)
+      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
+        toPhysical(relationFor(s, tableDir, storedSchema(schema0), affected,
+          partBy = m0.partBy), storedSchema(schema0)),
+        uniq, bucket = Some((nBuckets, bucketCol)),
+        partitionBy = m0.partBy, bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      val packed = affected.map(_.path).toSet
+      beforePublishHook()
+      Some(Plan(_.flatMap { m =>
         if (!packed.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
         else Some(Prepared.of(m).copy(entries =
           m.entries.filterNot(e => packed.contains(e.path)) ++ newFiles))
-      }
+      }, () => f.delete(dataDir, true)))
     }
-    if (res.isEmpty) f.delete(dataDir, true)
-    res
+    commitLoop(s, tableDir, "compactBuckets", replan = false,
+      kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
   }
 
   /** OPTIMIZE ZORDER: rewrite the current snapshot's ENTIRE live file
@@ -2908,65 +2903,62 @@ object SnapshotTable {
       s"rewriteZorderedBy: 2..4 dimensions, got ${zCols.mkString(",")}")
     require(zCols.map(_.toLowerCase).distinct.size == zCols.size,
       s"rewriteZorderedBy: duplicate dimensions in ${zCols.mkString(",")}")
-    val prev = versions(s, tableDir)
-    if (prev.isEmpty) return None
-    val m0 = readManifest(s, tableDir, prev.last)
-    if (m0.bucket.isDefined || m0.dels.nonEmpty) return None
-    if (!eraUniform(m0)) return None // superseded-era files: relayout first
-    // a partition column cannot also be a Z-order dimension: within any
-    // one directory it is constant, so the curve would degenerate to a
-    // plain sort on the other columns. Case-INSENSITIVE like Spark's
-    // default column resolution — `ZORDER BY (K, v)` on a table
-    // partitioned by `k` must decline, not silently burn a rewrite
-    if (m0.partBy.exists(p => zCols.exists(p.equalsIgnoreCase)))
-      return None
-    val (schema0, es0) = (m0.schema, m0.entries)
-if (es0.isEmpty) return None
-    // every dimension must resolve — a top-level column, or a
-    // DOTTED struct leaf (`meta.k`): the curve then clusters by
-    // the leaf and the nested zone maps prune on it. Validated
-    // here so a typo fails before any rewrite job runs.
-    zCols.foreach { c =>
-      val resolves = schema0.fields.exists(_.name == c) ||
-        (c.contains('.') && {
-          val segs = c.split('.').toSeq
-          schema0.fields.find(_.name == segs.head)
-            .flatMap(f => leafType(f.dataType, segs.tail)).isDefined
-        })
-      require(resolves, s"rewriteZorderedBy: '$c' is neither a " +
-        s"column nor a struct leaf of ${schema0.fieldNames.mkString(",")}")
-    }
-    val n =
-      if (nFiles > 0) nFiles
-      else math.max(1, math.ceil(es0.map(_.status.getLen).sum.toDouble /
-        (128L * 1024 * 1024)).toInt)
-    val all = es0.map(_.path).toSet
-    val f = fs(s, tableDir)
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
-    // hive layout: cluster WITHIN partitions (range by
-    // (partition cols, z) — each output stripe is one value's
-    // contiguous z-run) and hand the pre-shaped frame to the
-    // partitioned writer untouched; flat tables are the
-    // empty-partCols case of the same pipeline
-    val clustered = graft.operators.LayoutOps.zClusterWithinN(
-      relationFor(s, tableDir, storedSchema(schema0), es0,
-        partBy = m0.partBy), m0.partBy, zCols, n)
-    // toPhysical is a pure projection — per-partition z-run order
-    // survives, so preShaped stays valid
-    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-      toPhysical(clustered, storedSchema(schema0)),
-      uniq, partitionBy = m0.partBy, preShaped = true,
-      bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-    beforePublishHook()
-    val res = publishNext(s, tableDir, kind = Some("compact")) { pm =>
-      pm.flatMap { m =>
+    def plan(m0: Manifest): Option[Plan] = {
+      if (m0.bucket.isDefined || m0.dels.nonEmpty) return None
+      if (!eraUniform(m0)) return None // superseded-era files: relayout first
+      // a partition column cannot also be a Z-order dimension: within any
+      // one directory it is constant, so the curve would degenerate to a
+      // plain sort on the other columns. Case-INSENSITIVE like Spark's
+      // default column resolution — `ZORDER BY (K, v)` on a table
+      // partitioned by `k` must decline, not silently burn a rewrite
+      if (m0.partBy.exists(p => zCols.exists(p.equalsIgnoreCase)))
+        return None
+      val (schema0, es0) = (m0.schema, m0.entries)
+      if (es0.isEmpty) return None
+      // every dimension must resolve — a top-level column, or a
+      // DOTTED struct leaf (`meta.k`): the curve then clusters by
+      // the leaf and the nested zone maps prune on it. Validated
+      // here so a typo fails before any rewrite job runs.
+      zCols.foreach { c =>
+        val resolves = schema0.fields.exists(_.name == c) ||
+          (c.contains('.') && {
+            val segs = c.split('.').toSeq
+            schema0.fields.find(_.name == segs.head)
+              .flatMap(f => leafType(f.dataType, segs.tail)).isDefined
+          })
+        require(resolves, s"rewriteZorderedBy: '$c' is neither a " +
+          s"column nor a struct leaf of ${schema0.fieldNames.mkString(",")}")
+      }
+      val n =
+        if (nFiles > 0) nFiles
+        else math.max(1, math.ceil(es0.map(_.status.getLen).sum.toDouble /
+          (128L * 1024 * 1024)).toInt)
+      val all = es0.map(_.path).toSet
+      val f = fs(s, tableDir)
+      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      // hive layout: cluster WITHIN partitions (range by
+      // (partition cols, z) — each output stripe is one value's
+      // contiguous z-run) and hand the pre-shaped frame to the
+      // partitioned writer untouched; flat tables are the
+      // empty-partCols case of the same pipeline
+      val clustered = graft.operators.LayoutOps.zClusterWithinN(
+        relationFor(s, tableDir, storedSchema(schema0), es0,
+          partBy = m0.partBy), m0.partBy, zCols, n)
+      // toPhysical is a pure projection — per-partition z-run order
+      // survives, so preShaped stays valid
+      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
+        toPhysical(clustered, storedSchema(schema0)),
+        uniq, partitionBy = m0.partBy, preShaped = true,
+        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      beforePublishHook()
+      Some(Plan(_.flatMap { m =>
         if (!all.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
         else Some(Prepared.of(m).copy(entries =
           m.entries.filterNot(e => all.contains(e.path)) ++ newFiles))
-      }
+      }, () => f.delete(dataDir, true)))
     }
-    if (res.isEmpty) f.delete(dataDir, true)
-    res
+    commitLoop(s, tableDir, "rewriteZorderedBy", replan = false,
+      kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
   }
 
   /** CHECK-constraint gate over a batch about to commit: SQL CHECK
@@ -2999,41 +2991,29 @@ if (es0.isEmpty) return None
   def addConstraint(s: SparkSession, tableDir: String, name: String,
       sqlExpr: String): Int = {
     require(name.nonEmpty, "constraint name must be non-empty")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"addConstraint: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "addConstraint", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "addConstraint", tableDir)
       require(!m0.constraints.contains(name),
         s"constraint '$name' already exists on $tableDir")
-      enforceConstraints(readAsOf(s, tableDir, Int.MaxValue),
-        Map(name -> sqlExpr))
+      enforceConstraints(snapshotFrame(s, tableDir, m0), Map(name -> sqlExpr))
       beforePublishHook()
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          // the validation ran against m0's exact state
-          if (m.entries != m0.entries || m.dels != m0.dels) None
-          else Some(Prepared.of(m).copy(
-            constraints = m.constraints + (name -> sqlExpr)))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // a commit landed mid-validation: re-validate
-      }
-    }
-    throw new IllegalStateException(
-      s"addConstraint: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(_.flatMap { m =>
+        // the validation ran against m0's exact state: a commit landing
+        // mid-validation re-validates
+        if (m.entries != m0.entries || m.dels != m0.dels) None
+        else Some(Prepared.of(m).copy(
+          constraints = m.constraints + (name -> sqlExpr)))
+      }))
+    }.get
   }
 
   /** Drop a named CHECK constraint as a metadata-only commit. No-op
     * returning None when the constraint does not exist. */
   def dropConstraint(s: SparkSession, tableDir: String,
       name: String): Option[Int] =
-    publishNext(s, tableDir) { pm =>
-      pm.filter(_.constraints.contains(name)).map(m =>
-        Prepared.of(m).copy(constraints = m.constraints - name))
+    commitLoop(s, tableDir, "dropConstraint", replan = false) { (_, _) =>
+      Some(Plan(_.filter(_.constraints.contains(name)).map(m =>
+        Prepared.of(m).copy(constraints = m.constraints - name))))
     }
 
   /** A version's recorded commit timestamp (epoch millis); None for
@@ -3056,12 +3036,8 @@ if (es0.isEmpty) return None
     * id-based column mapping, this format by refusing reuse) until an
     * OVERWRITE resets the table. */
   def dropColumn(s: SparkSession, tableDir: String, colName: String): Int = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"dropColumn: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "dropColumn", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "dropColumn", tableDir)
       val sc0 = m0.schema
       require(sc0.fieldNames.contains(colName),
         s"dropColumn: no column '$colName' in ${sc0.fieldNames.mkString(",")}")
@@ -3082,21 +3058,9 @@ if (es0.isEmpty) return None
       // it under that name, and a future append re-adding it would
       // resurface the dropped values exactly like the logical hazard
       val phys = physName(sc0(colName))
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None // racing commit: re-check
-          else Some(Prepared.of(m).copy(schema = next,
-            dropped = m.dropped + colName + phys, ndv = m.ndv - phys))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"dropColumn: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(schema = next,
+        dropped = m.dropped + colName + phys, ndv = m.ndv - phys))))
+    }.get
   }
 
   /** ADD COLUMN, metadata-only: publish the schema with one appended
@@ -3113,12 +3077,8 @@ if (es0.isEmpty) return None
       dataType: DataType): Int = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"addColumn: '$name' is not a plain identifier")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"addColumn: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "addColumn", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "addColumn", tableDir)
       val sc0 = m0.schema
       require(!sc0.fieldNames.contains(name),
         s"addColumn: column '$name' already exists in $tableDir")
@@ -3131,20 +3091,8 @@ if (es0.isEmpty) return None
       val next = StructType(sc0.fields :+
         org.apache.spark.sql.types.StructField(name, dataType,
           nullable = true))
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None
-          else Some(Prepared.of(m).copy(schema = next))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"addColumn: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(schema = next))))
+    }.get
   }
 
   /** RENAME COLUMN, metadata-only (the Iceberg field-id / Delta
@@ -3173,12 +3121,8 @@ if (es0.isEmpty) return None
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"renameColumn: '$to' is not a plain identifier")
     require(from != to, s"renameColumn: '$from' -> '$to' is a no-op")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty, s"renameColumn: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "renameColumn", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "renameColumn", tableDir)
       val sc0 = m0.schema
       require(sc0.fieldNames.contains(from),
         s"renameColumn: no column '$from' in ${sc0.fieldNames.mkString(",")}")
@@ -3210,22 +3154,10 @@ if (es0.isEmpty) return None
         else mb.putString(PhysKey, phys).build()
       val next = StructType(sc0.fields.map(f =>
         if (f.name == from) f.copy(name = to, metadata = newMeta) else f))
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None // racing commit: re-validate
-          // stats/NDV stay keyed on the physical name — values did not
-          // change, so neither does any statistic
-          else Some(Prepared.of(m).copy(schema = next))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"renameColumn: lost $MaxCommitAttempts races in $tableDir")
+      // stats/NDV stay keyed on the physical name — values did not
+      // change, so neither does any statistic
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(schema = next))))
+    }.get
   }
 
   /** Declare the columns future commits collect a per-file membership
@@ -3251,13 +3183,8 @@ if (es0.isEmpty) return None
     * backfills them in one pass. */
   def setBloomColumns(s: SparkSession, tableDir: String,
       cols: Seq[String]): Int = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty,
-        s"setBloomColumns: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "setBloomColumns", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "setBloomColumns", tableDir)
       val sc0 = m0.schema
       // a `col['key']` item declares a MAP KEY; a dotted name declares
       // a STRUCT LEAF (`meta.request_id`) when its first segment names
@@ -3336,20 +3263,8 @@ if (es0.isEmpty) return None
         val nm = mb.build()
         if (nm == f.metadata) f else f.copy(metadata = nm)
       })
-      val res = publishNext(s, tableDir) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None
-          else Some(Prepared.of(m).copy(schema = next))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"setBloomColumns: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(schema = next))))
+    }.get
   }
 
   /** PARTITION EVOLUTION — change the hive directory scheme for FUTURE
@@ -3377,13 +3292,8 @@ if (es0.isEmpty) return None
       newBy: Seq[String]): Int = {
     require(newBy.distinct.size == newBy.size,
       s"repartitionBy: duplicate column in ${newBy.mkString(",")}")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      require(prev.nonEmpty,
-        s"repartitionBy: no published version in $tableDir")
-      val m0 = readManifest(s, tableDir, prev.last)
+    commitLoop(s, tableDir, "repartitionBy", replan = true) { (_, pm) =>
+      val m0 = requirePublished(pm, "repartitionBy", tableDir)
       val sc0 = m0.schema
       require(m0.bucket.isEmpty,
         s"repartitionBy: $tableDir is bucketed — overwrite/relayout to " +
@@ -3404,26 +3314,14 @@ if (es0.isEmpty) return None
       }
       val oldEras = m0.partEras.getOrElse(Seq(m0.partBy))
       val oldIdx = oldEras.size - 1
-      val res = publishNext(s, tableDir,
-        partByOverride = Some(newBy),
-        partErasOverride = Some(oldEras :+ newBy)) { pm =>
-        pm.flatMap { m =>
-          if (m.entries != m0.entries || m.dels != m0.dels ||
-            m.schema != m0.schema) None
-          // tag the surviving entries with the era they were written
-          // under (publishNext's auto-tag would wrongly claim the NEW
-          // era for them)
-          else Some(Prepared.of(m).copy(entries = m.entries.map(e =>
-            if (e.era.isDefined) e else e.copy(era = Some(oldIdx)))))
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => // lost a race — re-validate against the new state
-      }
-    }
-    throw new IllegalStateException(
-      s"repartitionBy: lost $MaxCommitAttempts races in $tableDir")
+      Some(Plan(metadataRebase(m0)(m => Prepared.of(m).copy(
+        // tag the surviving entries with the era they were written
+        // under (nextManifest's auto-tag would wrongly claim the NEW
+        // era for them)
+        entries = m.entries.map(e =>
+          if (e.era.isDefined) e else e.copy(era = Some(oldIdx))),
+        partBy = Some(newBy), partEras = Some(oldEras :+ newBy)))))
+    }.get
   }
 
   /** Is every data file plannable under the CURRENT `partBy` scheme?
@@ -3557,16 +3455,12 @@ if (es0.isEmpty) return None
       s"publishBranch: fork version $forkV of $tableDir expired " +
         "(vacuumed) — the branch's base is gone; re-branch from the " +
         "current state")
-    val bDir = branchDir(tableDir, name)
-    val bVs = versions(s, bDir)
-    require(bVs.nonEmpty, s"publishBranch: branch '$name' has no versions")
-    val mB = readManifest(s, bDir, bVs.last)
+    val (_, mB) = snapshotAt(s, branchDir(tableDir, name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"publishBranch: branch '$name' has no versions"))
     val mF = readManifest(s, tableDir, forkV)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val cur = versions(s, tableDir).last
-      val mM = readManifest(s, tableDir, cur)
+    val v = commitLoop(s, tableDir, "publishBranch", replan = true) { (cur, pm) =>
+      val mM = requirePublished(pm, "publishBranch", tableDir)
       // deterministic-interleave test point: a commit racing in HERE
       // (after the state read, before the publish) must abort the
       // planned fast-forward and replan it as a rebase
@@ -3663,39 +3557,22 @@ if (es0.isEmpty) return None
             entries = (mainKept ++ branchAdded).sortBy(_.path),
             dels = rebasedDels, ndv = Map.empty), spliced._2)
         }
-      val res = publishNext(s, tableDir,
-        partByOverride = Some(mB.partBy),
-        partErasOverride = mB.partEras) { pm =>
-        pm.flatMap { m =>
-          // the state this publish was planned against must still be
-          // current — a racing commit re-plans (ffwd may become a
-          // rebase, a rebase re-merges)
-          if (m.entries != mM.entries || m.dels != mM.dels ||
-            m.schema != mM.schema) None
-          else {
-            // idempotency watermarks stay MONOTONE across the merge:
-            // per writer, the max of both sides
-            val txns = (m.txns.keySet ++ mB.txns.keySet).map { w =>
-              w -> math.max(m.txns.getOrElse(w, 0L),
-                mB.txns.getOrElse(w, 0L))
-            }.toMap
-            Some(branchSide.copy(txns = txns,
-              dropped = m.dropped ++ mB.dropped))
-          }
-        }
-      }
-      res match {
-        case Some(v) =>
-          f.delete(forkFile(tableDir, name), false) // marker consumed
-          return v
-        case None => // lost the race — replan against the new state
-          // (a deduped vector dir written for THIS plan is never
-          // referenced; drop it like deleteWhere does on conflict)
-          spliceDir.foreach(f.delete(_, true))
-      }
-    }
-    throw new IllegalStateException(
-      s"publishBranch: lost $MaxCommitAttempts races in $tableDir")
+      // the state this publish was planned against must still be
+      // current — a racing commit re-plans (ffwd may become a rebase, a
+      // rebase re-merges) and drops the deduped vector dir written for
+      // this plan
+      Some(Plan(metadataRebase(mM) { m =>
+        // idempotency watermarks stay MONOTONE across the merge: per
+        // writer, the max of both sides
+        val txns = (m.txns.keySet ++ mB.txns.keySet).map { w =>
+          w -> math.max(m.txns.getOrElse(w, 0L), mB.txns.getOrElse(w, 0L))
+        }.toMap
+        branchSide.copy(txns = txns, dropped = m.dropped ++ mB.dropped,
+          partBy = Some(mB.partBy), partEras = mB.partEras)
+      }, () => spliceDir.foreach(f.delete(_, true))))
+    }.get
+    f.delete(forkFile(tableDir, name), false) // marker consumed
+    v
   }
 
   /** DROP a branch: delete its directory and fork marker. Refused
@@ -3808,12 +3685,11 @@ if (es0.isEmpty) return None
       s"restore: version $version is not published in $tableDir " +
         s"(published: ${vs.mkString(",")})")
     val m = readManifest(s, tableDir, version)
-    publishNext(s, tableDir, partByOverride = Some(m.partBy),
-        partErasOverride = m.partEras) { pm =>
-      Some(Prepared.of(m).copy(
-        txns = pm.map(_.txns).getOrElse(Map.empty[String, Long])))
-    }.getOrElse(throw new IllegalStateException(
-      s"restore: publish failed in $tableDir"))
+    commitLoop(s, tableDir, "restore", replan = false) { (_, _) =>
+      Some(Plan(pm => Some(Prepared.of(m).copy(
+        txns = pm.map(_.txns).getOrElse(Map.empty[String, Long]),
+        partBy = Some(m.partBy), partEras = m.partEras))))
+    }.get
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` shape):
@@ -3834,26 +3710,15 @@ if (es0.isEmpty) return None
     * migrate the borrowed bytes into its own data dirs first. */
   def cloneTable(s: SparkSession, srcDir: String, dstDir: String,
       asOf: Int = Int.MaxValue): Int = {
-    val all = versions(s, srcDir)
-    // An EXPLICIT `VERSION AS OF n` must name a retained version — a
-    // floor here would silently clone an older snapshot when n was
-    // vacuumed or never published (restore() and Delta both error).
-    // The floor survives only for the Int.MaxValue "latest" sentinel.
-    if (asOf != Int.MaxValue) require(all.contains(asOf),
-      s"cloneTable: version $asOf of $srcDir is not a retained " +
-        s"published version (retained: ${all.mkString(",")})")
-    val vs = all.filter(_ <= asOf)
-    require(vs.nonEmpty, s"cloneTable: no published version <= $asOf in $srcDir")
-    val m = readManifest(s, srcDir, vs.last)
-    val res = publishNext(s, dstDir,
-        partByOverride = Some(m.partBy),
-        partErasOverride = m.partEras) { pm =>
-      require(pm.isEmpty,
-        s"cloneTable: destination $dstDir already has published versions")
-      Some(Prepared.of(m).copy(txns = Map.empty))
-    }
-    res.getOrElse(throw new IllegalStateException(
-      s"cloneTable: publish into $dstDir failed"))
+    val m = retainedSnapshot(s, srcDir, asOf, "cloneTable")
+    commitLoop(s, dstDir, "cloneTable", replan = false) { (_, _) =>
+      Some(Plan { pm =>
+        require(pm.isEmpty,
+          s"cloneTable: destination $dstDir already has published versions")
+        Some(Prepared.of(m).copy(txns = Map.empty,
+          partBy = Some(m.partBy), partEras = m.partEras))
+      })
+    }.get
   }
 
   /** Schema introspection for the SQL doorway — one row per column of
@@ -3865,9 +3730,7 @@ if (es0.isEmpty) return None
     * actually recorded. */
   def describeColumns(s: SparkSession, tableDir: String): DataFrame = {
     import s.implicits._
-    val vs = versions(s, tableDir)
-    require(vs.nonEmpty, s"describeColumns: no published version in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
+    val (_, m) = requireSnapshot(s, tableDir, "describeColumns")
     val sc = m.schema
     // the SAME budgeted enumeration the stats pass uses, computed once
     // for the whole schema; `since >= 3` marks struct leaves (a
@@ -3902,8 +3765,7 @@ if (es0.isEmpty) return None
 
   /** The table's CHECK constraints (name → SQL expression). */
   def constraints(s: SparkSession, tableDir: String): Map[String, String] =
-    versions(s, tableDir).lastOption
-      .map(readManifest(s, tableDir, _).constraints).getOrElse(Map.empty)
+    snapshotAt(s, tableDir).fold(Map.empty[String, String])(_._2.constraints)
 
   /** Time travel by WALL-CLOCK time: the greatest version whose
     * recorded commit timestamp is <= `tsMillis` (the Delta
@@ -3973,10 +3835,13 @@ if (es0.isEmpty) return None
     * recorded schema — files committed before a column was added read
     * NULL for it, and a version committed before the column existed
     * never shows it. */
-  def readAsOf(s: SparkSession, tableDir: String, asOf: Int): DataFrame = {
-    val vs = versions(s, tableDir).filter(_ <= asOf)
-    require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
+  def readAsOf(s: SparkSession, tableDir: String, asOf: Int): DataFrame =
+    snapshotFrame(s, tableDir, requireSnapshot(s, tableDir, "readAsOf", asOf)._2)
+
+  /** The rows of the snapshot `m` describes — [[readAsOf]] for a
+    * manifest already in hand. */
+  private def snapshotFrame(s: SparkSession, tableDir: String,
+      m: Manifest): DataFrame = {
     val (sc, es) = (m.schema, m.entries)
     if (es.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
@@ -4060,19 +3925,15 @@ if (es0.isEmpty) return None
   private def mergeInternal(s: SparkSession, tableDir: String,
       upserts: DataFrame, deleteKeys: DataFrame, key: String,
       txn: Option[(String, Long)],
-      touchedKeys: Option[Seq[Any]] = None): Option[Int] = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
-      val prev = versions(s, tableDir)
-      val m0opt = prev.lastOption.map(readManifest(s, tableDir, _))
-      // replay check each attempt: a conflict-aborted selective merge
-      // whose conflicting commit WAS this txn (zombie writer) re-reads
-      // and lands here
-      if (txnLanded(m0opt, txn)) return None
-      val sel = m0opt match {
-        // outstanding deletion vectors route to the full rewrite
-        // (readAsOf applies them; the overwrite retires them). A
+      touchedKeys: Option[Seq[Any]] = None): Option[Int] =
+    // the replay check runs on every manifest the loop reads: a merge
+    // whose conflicting commit WAS this txn (zombie writer) sees it
+    // landed and returns the no-op
+    commitLoop(s, tableDir, "merge", replan = true, txn = txn,
+        kind = Some("merge")) { (_, pm) =>
+      Some(pm match {
+        // outstanding deletion vectors route to the full rewrite (the
+        // snapshot read applies them; the overwrite retires them). A
         // hive-partitioned table takes the selective path even when
         // EMPTY (merge can bootstrap it — the rewrite re-lands under
         // hive dirs either way); a flat empty table keeps the cheaper
@@ -4080,31 +3941,21 @@ if (es0.isEmpty) return None
         case Some(m0) if m0.bucket.isEmpty && m0.dels.isEmpty &&
             (m0.entries.nonEmpty || m0.partBy.nonEmpty) &&
             upserts.columns.sorted.sameElements(m0.schema.fieldNames.sorted) =>
-          mergeSelective(s, tableDir, m0, storedSchema(m0.schema),
-            m0.entries, upserts, deleteKeys, key, txn, touchedKeys)
-        case Some(m0) =>
+          mergeSelective(s, tableDir, m0, upserts, deleteKeys, key, txn,
+            touchedKeys)
+        case _ =>
           // the full-rewrite fallback would FLATTEN a hive layout —
           // refuse loudly (one site: exactly the conditions that did
           // not route selective above)
-          require(m0.partBy.isEmpty,
+          pm.foreach(m0 => require(m0.partBy.isEmpty,
             s"merge: $tableDir uses the hive partition layout — " +
               "merging needs the selective path (upserts covering " +
               "the full schema, no outstanding deletion vectors, no " +
               "bucket layout); run absorbDeletes / align the upsert " +
-              "columns, or relayout() to re-lay")
-          mergeFull(s, tableDir, upserts, deleteKeys, key, txn)
-        case None => mergeFull(s, tableDir, upserts, deleteKeys, key, txn)
-      }
-      sel match {
-        case Some(v) => return Some(v)
-        case None => // a commit landed mid-merge: re-plan against it
-          // (or the txn just landed via a twin — the next attempt's
-          // replay check returns None)
-      }
+              "columns, or relayout() to re-lay"))
+          mergeFull(s, tableDir, pm, upserts, deleteKeys, key, txn)
+      })
     }
-    throw new IllegalStateException(
-      s"merge: lost $MaxCommitAttempts re-plan races in $tableDir")
-  }
 
   /** CDC apply with per-key event ordering — the streaming-upsert-sink
     * primitive: among `upserts` the row with the greatest `orderCols`
@@ -4126,18 +3977,17 @@ if (es0.isEmpty) return None
     import org.apache.spark.sql.functions._
     require(orderCols.nonEmpty, "mergeLatest needs at least one order column")
     val txn = txnId.map(_ -> txnVersion)
-    if (txn.exists { case (w, v) =>
-        committedTxnVersions(s, tableDir).get(w).exists(_ >= v) }) return None
+    val m0 = snapshotAt(s, tableDir).map(_._2)
+    if (txnLanded(m0, txn)) return None
     val ord = struct(orderCols.map(col): _*)
     val winners = upserts.filter(col(key).isNotNull)
       .groupBy(col(key).as("__k"))
       .agg(max_by(struct(upserts.columns.toIndexedSeq.map(col): _*), ord)
         .as("__r"))
       .select(col("__r.*"))
-    val effective =
-      if (versions(s, tableDir).isEmpty) winners
-      else {
-        val cur = readAsOf(s, tableDir, Int.MaxValue)
+    val effective = m0.map(snapshotFrame(s, tableDir, _)) match {
+      case None => winners
+      case Some(cur) =>
         if (cur.columns.isEmpty) winners
         else {
           // the newer-than probe: winners are batch-sized, so the join
@@ -4160,36 +4010,27 @@ if (es0.isEmpty) return None
             .filter(col("__cord").isNull || ord > col("__cord"))
             .drop("__ck", "__cord")
         }
-      }
+    }
     mergeInternal(s, tableDir, effective,
       upserts.select(col(key)).filter(lit(false)), key, txn)
   }
 
-  /** The full-rewrite merge path (fresh/bucketed tables,
+  /** The full-rewrite merge plan against `m0` (fresh/bucketed tables,
     * outstanding deletion vectors, diverging upsert schema): anti-join
     * the whole current snapshot and land everything as one overwrite.
     * SERIALIZABLE like the selective path: the rewrite reads an exact
-    * (file, vector) state and the publish aborts — returning None so
-    * the caller re-plans — if ANY commit (or constraint change) landed
-    * in between; a blind overwrite here would silently drop a racing
-    * append. Also None when `txnId` replayed. */
-  private def mergeFull(s: SparkSession, tableDir: String, upserts: DataFrame,
-      deleteKeys: DataFrame, key: String,
-      txn: Option[(String, Long)]): Option[Int] = {
+    * (file, vector) state and the rebase refuses — the caller re-plans —
+    * if ANY commit (or constraint change) landed in between; a blind
+    * overwrite here would silently drop a racing append. */
+  private def mergeFull(s: SparkSession, tableDir: String, m0: Option[Manifest],
+      upserts: DataFrame, deleteKeys: DataFrame, key: String,
+      txn: Option[(String, Long)]): Plan = {
     import org.apache.spark.sql.functions.{col, lit}
     val f = fs(s, tableDir)
-    val prev = versions(s, tableDir)
-    val m0 = prev.lastOption.map(readManifest(s, tableDir, _))
-    // belt and braces: mergeInternal routes partitioned tables to the
-    // selective path or refuses — a flat full rewrite would shear the
-    // hive layout
-    m0.foreach(requireUnpartitioned(_, tableDir, "merge (full rewrite)"))
     // merging into a fresh (or empty-snapshot) table: the current state
     // is the empty relation in the upserts' schema
-    val cur0 =
-      if (prev.isEmpty) upserts.filter(lit(false))
-      else readAsOf(s, tableDir, prev.last)
-    val cur = if (cur0.columns.isEmpty) upserts.filter(lit(false)) else cur0
+    val cur = m0.map(snapshotFrame(s, tableDir, _))
+      .filter(_.columns.nonEmpty).getOrElse(upserts.filter(lit(false)))
     // one anti-join against the union of upsert + delete keys instead
     // of two sequential anti-joins (one distinct exchange, identical
     // semantics — see the mergeSelective survivor rule)
@@ -4210,11 +4051,8 @@ if (es0.isEmpty) return None
       m0.map(_.schema))
     val (dataDir, newFiles, _) = writeDataDir(s, tableDir, out, uniq,
       bloomCols = bloomPhysCols(pubSchema), mapKeys = mapStatDecls(pubSchema))
-    val res = publishNext(s, tableDir, kind = Some("merge")) { pm =>
-      // a replayed txn aborts here; the caller's loop re-reads, sees
-      // the txn, and returns the no-op
-      if (txnLanded(pm, txn)) None
-      else if (pm.map(_.entries) != m0.map(_.entries) ||
+    Plan({ pm =>
+      if (pm.map(_.entries) != m0.map(_.entries) ||
           pm.map(_.dels) != m0.map(_.dels) ||
           pm.map(_.constraints) != m0.map(_.constraints)) None // conflict
       // rows updated/deleted: the cumulative NDV sketch cannot subtract
@@ -4224,20 +4062,18 @@ if (es0.isEmpty) return None
         pm.map(_.constraints).getOrElse(Map.empty),
         pm.map(_.dropped).getOrElse(Set.empty),
         Map.empty[String, Seq[Long]]))
-    }
-    if (res.isEmpty) f.delete(dataDir, true)
-    res
+    }, () => f.delete(dataDir, true))
   }
 
-  /** One selective-merge attempt against manifest `m0`. Returns None
-    * when a concurrent commit invalidated the plan (caller re-plans). */
+  /** The selective merge plan against manifest `m0`: its rebase
+    * refuses any concurrent commit (the caller re-plans). */
   private def mergeSelective(s: SparkSession, tableDir: String, m0: Manifest,
-      sc0: StructType, es0: Seq[FileEntry], upserts: DataFrame,
-      deleteKeys: DataFrame, key: String,
-      txn: Option[(String, Long)] = None,
-      touchedKeys: Option[Seq[Any]] = None): Option[Int] = {
+      upserts: DataFrame, deleteKeys: DataFrame, key: String,
+      txn: Option[(String, Long)],
+      touchedKeys: Option[Seq[Any]]): Plan = {
     import org.apache.spark.sql.functions._
     val f = fs(s, tableDir)
+    val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
     // only the upserts are NEW rows; carried/kept rows already passed
     enforceConstraints(upserts, m0.constraints)
     lazy val touched = upserts.select(col(key))
@@ -4322,26 +4158,21 @@ if (es0.isEmpty) return None
       partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
     val carriedPaths = carried.map(_.path).toSet
     beforePublishHook()
-    val res = publishNext(s, tableDir, kind = Some("merge")) { pm =>
-      pm.flatMap { m =>
-        // serializability: the merge planned against m0's EXACT file
-        // and deletion-vector state; any concurrent commit (append
-        // included — its rows were not merged over; a deleteWhere —
-        // its vectors were not applied to the rewrite; an
-        // addConstraint — the upserts were not validated against it)
-        // invalidates the plan
-        if (m.entries != m0.entries || m.dels != m0.dels ||
-          m.constraints != m0.constraints) None
-        else Some(Prepared.of(m).copy(
-          entries = m.entries.filter(e => carriedPaths.contains(e.path))
-            ++ newFiles,
-          txns = txnMerge(m.txns, txn),
-          // rows updated/deleted: NDV unknown (no sketch subtraction)
-          ndv = Map.empty))
-      }
-    }
-    if (res.isEmpty) f.delete(dataDir, true) // conflicting plan: re-plan
-    res
+    Plan(_.flatMap { m =>
+      // serializability: the merge planned against m0's EXACT file and
+      // deletion-vector state; any concurrent commit (append included —
+      // its rows were not merged over; a deleteWhere — its vectors were
+      // not applied to the rewrite; an addConstraint — the upserts were
+      // not validated against it) invalidates the plan
+      if (m.entries != m0.entries || m.dels != m0.dels ||
+        m.constraints != m0.constraints) None
+      else Some(Prepared.of(m).copy(
+        entries = m.entries.filter(e => carriedPaths.contains(e.path))
+          ++ newFiles,
+        txns = txnMerge(m.txns, txn),
+        // rows updated/deleted: NDV unknown (no sketch subtraction)
+        ndv = Map.empty))
+    }, () => f.delete(dataDir, true))
   }
 
   /** Change feed between two published versions — every row added or
@@ -4375,7 +4206,8 @@ if (es0.isEmpty) return None
     import org.apache.spark.sql.functions._
     require(fromV <= toV, s"readChanges: fromV $fromV > toV $toV")
     val vs = versions(s, tableDir)
-    val v1 = vs.filter(_ <= fromV).lastOption
+    val from = snapshotIn(s, tableDir, vs, fromV)
+    val (v1, m1) = (from.map(_._1), from.map(_._2))
     // fromV = 0 means "from genesis" (everything is an insert); any
     // OTHER unresolvable fromV is an EXPIRED version — vacuum dropped
     // the baseline, so the delta is uncomputable and reporting the
@@ -4383,13 +4215,12 @@ if (es0.isEmpty) return None
     // consumer. Refuse, like any CDF over a vacuumed range.
     require(fromV == 0 || v1.nonEmpty,
       s"readChanges: version $fromV expired (retained: ${vs.headOption.getOrElse("-")}..${vs.lastOption.getOrElse("-")}) in $tableDir")
-    val v2 = vs.filter(_ <= toV).lastOption
+    val (v2, m2) = snapshotIn(s, tableDir, vs, toV)
       .getOrElse(throw new IllegalArgumentException(
         s"no published version <= $toV in $tableDir"))
-    val m2 = readManifest(s, tableDir, v2)
     val sc = storedSchema(m2.schema)
     // a range covering EXACTLY one commit whose recorded kind is
-    // "update" ([[publishNext]]'s `#kind:` stamp) serves its diff legs
+    // "update" ([[nextManifest]]'s `#kind:` stamp) serves its diff legs
     // as PAIRED update images — `update_preimage` / `update_postimage`,
     // the Delta CDF convention — so a downstream merge/upsert consumer
     // can key the two sides of the UPDATE instead of treating it as an
@@ -4406,7 +4237,6 @@ if (es0.isEmpty) return None
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), "insert")
       .filter(lit(false))
     if (v1 == Some(v2)) return emptyChanges
-    val m1 = v1.map(readManifest(s, tableDir, _))
     val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
     val paths2 = m2.paths.toSet
     if (paths1.subsetOf(paths2) &&
@@ -4472,11 +4302,10 @@ if (es0.isEmpty) return None
       lazy val changedVecPaths =
         relationFor(s, tableDir, delSchema, symDels)
           .select("__path").distinct()
-      def readUnder(v: Option[Int]): DataFrame = v match {
+      def readUnder(m: Option[Manifest]): DataFrame = m match {
         case None => s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-        case Some(ver) =>
-          val mv = readManifest(s, tableDir, ver)
+        case Some(mv) =>
           val osc = storedSchema(mv.schema)
           val es = mv.entries.filter(e => affected.contains(e.path))
           val carried =
@@ -4526,8 +4355,8 @@ if (es0.isEmpty) return None
               .getOrElse(lit(null).cast(f.dataType)).as(f.name)
           }: _*)
       }
-      val a = readUnder(v1)
-      val b = readUnder(Some(v2))
+      val a = readUnder(m1)
+      val b = readUnder(Some(m2))
       diffLegs(s, b, a,
         if (updatePair) "update_postimage" else "insert",
         if (updatePair) "update_preimage" else "delete")
@@ -4598,10 +4427,9 @@ if (es0.isEmpty) return None
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     val all = versions(s, tableDir)
-    val v2 = all.filter(_ <= toV).lastOption.getOrElse(
+    val sc2 = storedSchema(snapshotIn(s, tableDir, all, toV).getOrElse(
       throw new IllegalArgumentException(
-        s"no published version <= $toV in $tableDir"))
-    val sc2 = storedSchema(readManifest(s, tableDir, v2).schema)
+        s"no published version <= $toV in $tableDir"))._2.schema)
     val vs = all.filter(v => v > fromV && v <= toV)
     def emptySlice: DataFrame = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -4618,8 +4446,7 @@ if (es0.isEmpty) return None
       // (stable across rewrites), physical storage name second (stable
       // across renames); a column toV gained reads NULL, a widened one
       // casts up — the readChanges readUnder rule, applied stream-side
-      val scB = storedSchema(
-        readManifest(s, tableDir, all.filter(_ <= b).last).schema)
+      val scB = storedSchema(readManifest(s, tableDir, b).schema)
       df.select(col("change_type") +:
         sc2.fields.toIndexedSeq.map { f =>
           val src = scB.fields.find(_.name == f.name)
@@ -4655,11 +4482,8 @@ if (es0.isEmpty) return None
   private[sources] def isAppendChain(s: SparkSession, tableDir: String,
       fromV: Int, toV: Int): Boolean = {
     val vs = versions(s, tableDir)
-    val v1 = vs.filter(_ <= fromV).lastOption
-    val v2 = vs.filter(_ <= toV).lastOption
-    v2.forall { vv2 =>
-      val m2 = readManifest(s, tableDir, vv2)
-      val m1 = v1.map(readManifest(s, tableDir, _))
+    snapshotIn(s, tableDir, vs, toV).forall { case (_, m2) =>
+      val m1 = snapshotIn(s, tableDir, vs, fromV).map(_._2)
       m1.map(_.paths.toSet).getOrElse(Set.empty)
         .subsetOf(m2.paths.toSet) &&
         m1.map(_.dels).getOrElse(Seq.empty) == m2.dels
@@ -4724,9 +4548,7 @@ if (es0.isEmpty) return None
     * `spark.read.format(...)` doorway. */
   private[sources] def baseRelation(s: SparkSession, tableDir: String,
       asOf: Int): org.apache.spark.sql.sources.BaseRelation = {
-    val vs = versions(s, tableDir).filter(_ <= asOf)
-    require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
+    val (_, m) = requireSnapshot(s, tableDir, "relation doorway", asOf)
     val (sc, es) = (m.schema, m.entries)
     requireSingleEra(m, "relation doorway")
     require(m.dels.isEmpty,
@@ -4756,8 +4578,7 @@ if (es0.isEmpty) return None
     * read fixes its output schema to. */
   private[sources] def tableSchema(s: SparkSession,
       tableDir: String): Option[StructType] =
-    versions(s, tableDir).lastOption
-      .map(v => readManifest(s, tableDir, v).schema)
+    snapshotAt(s, tableDir).map(_._2.schema)
       // marker-free: the stream's FIXED output schema must match the
       // batches relationFor serves (whose aliases carry empty metadata)
       .map(sc => stripPhys(storedSchema(sc)))
@@ -4772,16 +4593,14 @@ if (es0.isEmpty) return None
   private[sources] def streamBatch(s: SparkSession, tableDir: String,
       fromV: Int, toV: Int, ignoreChanges: Boolean): DataFrame = {
     val vs = versions(s, tableDir)
-    val v2 = vs.filter(_ <= toV).lastOption.getOrElse(
+    val (_, m2) = snapshotIn(s, tableDir, vs, toV).getOrElse(
       throw new IllegalArgumentException(
         s"no published version <= $toV in $tableDir"))
-    val v1 = vs.filter(_ <= fromV).lastOption
-    require(fromV == 0 || v1.nonEmpty,
+    val m1 = snapshotIn(s, tableDir, vs, fromV).map(_._2)
+    require(fromV == 0 || m1.nonEmpty,
       s"snapshot stream: version $fromV expired in $tableDir — the stream " +
         "fell behind the vacuum retention window; restart from scratch")
-    val m2 = readManifest(s, tableDir, v2)
     val sc = storedSchema(m2.schema)
-    val m1 = v1.map(readManifest(s, tableDir, _))
     val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
     require((paths1.subsetOf(m2.paths.toSet) &&
         m1.map(_.dels).getOrElse(Seq.empty) == m2.dels) || ignoreChanges,
@@ -4801,11 +4620,8 @@ if (es0.isEmpty) return None
     * filesystem reads. None when any entry carries no row count (a
     * commit with no stat-eligible column) — callers fall back to
     * `count()`. */
-  def rowCount(s: SparkSession, tableDir: String, asOf: Int): Option[Long] = {
-    val vs = versions(s, tableDir).filter(_ <= asOf)
-    require(vs.nonEmpty, s"no published version <= $asOf in $tableDir")
-    liveRows(readManifest(s, tableDir, vs.last))
-  }
+  def rowCount(s: SparkSession, tableDir: String, asOf: Int): Option[Long] =
+    liveRows(requireSnapshot(s, tableDir, "rowCount", asOf)._2)
 
   /** Σ entry rows − deleted rows; None when an entry has no row count.
     * Deletion vectors subtract exactly: each position is deleted at
@@ -4851,14 +4667,7 @@ if (es0.isEmpty) return None
   def plannerStats(s: SparkSession, tableDir: String,
       asOf: Int = Int.MaxValue): DataFrame = {
     import s.implicits._
-    val all = versions(s, tableDir)
-    if (asOf != Int.MaxValue) require(all.contains(asOf),
-      s"plannerStats: version $asOf of $tableDir is not a retained " +
-        s"published version (retained: ${all.mkString(",")})")
-    val vs = all.filter(_ <= asOf)
-    require(vs.nonEmpty,
-      s"plannerStats: no published version <= $asOf in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
+    val m = retainedSnapshot(s, tableDir, asOf, "plannerStats")
     val (sc, es) = (m.schema, m.entries)
     // the catalog keys on PHYSICAL names (as the scan relation does);
     // this user-facing view reports the LOGICAL ones
@@ -4918,105 +4727,104 @@ if (es0.isEmpty) return None
     * state). */
   def analyze(s: SparkSession, tableDir: String): Option[Int] = {
     import org.apache.spark.sql.functions._
-    val prev = versions(s, tableDir)
-    if (prev.isEmpty) return None
-    val m0 = readManifest(s, tableDir, prev.last)
-    if (m0.dels.nonEmpty) return None // absorbDeletes first
-    if (!eraUniform(m0)) return None // superseded-era files: relayout first
-    val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
-    if (es0.isEmpty) return None
-    val partFields = m0.partBy.flatMap(c => sc0.fields.find(_.name == c))
-    // the files store PHYSICAL names — read and (re)key stats on them
-    val dataSchema = physicalSchema(StructType(
-      sc0.fields.filterNot(f => m0.partBy.contains(f.name))))
-    // ONE job over the live files: the per-file stats fold (the same
-    // inputs and fold every commit runs inside its write job) on a scan
-    // of the manifest's entries keyed by input file — no listing, no
-    // hive discovery, no shuffle. Partition columns are not stored in
-    // the files: synthesized below from the manifest.
-    val scan = s.baseRelationToDataFrame(
-      fsRelation(s, tableDir, dataSchema, es0, None, Nil))
-    val bloomCols = bloomPhysCols(sc0)
-    val (probe, fold) = statsFold(scan,
-      statCols(dataSchema) ++ mapStatPaths(dataSchema, mapStatDecls(sc0)) ++
-        arrayElemStatPaths(dataSchema, bloomCols),
-      bloomCols, prefix = Seq(input_file_name()))
-    val qe = probe.queryExecution
-    val perTask = org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(qe, Some("analyze")) {
-        qe.toRdd.mapPartitions { it =>
-          val files = scala.collection.mutable.HashMap.empty[String, FileFold]
-          // a scan task reads each file's rows contiguously
-          var file: org.apache.spark.unsafe.types.UTF8String = null
-          var cur: FileFold = null
-          it.foreach { r =>
-            if (r.getUTF8String(0) != file) {
-              file = r.getUTF8String(0).clone()
-              cur = files.getOrElseUpdate(file.toString, fold.newFile())
+    def plan(m0: Manifest): Option[Plan] = {
+      if (m0.dels.nonEmpty) return None // absorbDeletes first
+      if (!eraUniform(m0)) return None // superseded-era files: relayout first
+      val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
+      if (es0.isEmpty) return None
+      val partFields = m0.partBy.flatMap(c => sc0.fields.find(_.name == c))
+      // the files store PHYSICAL names — read and (re)key stats on them
+      val dataSchema = physicalSchema(StructType(
+        sc0.fields.filterNot(f => m0.partBy.contains(f.name))))
+      // ONE job over the live files: the per-file stats fold (the same
+      // inputs and fold every commit runs inside its write job) on a scan
+      // of the manifest's entries keyed by input file — no listing, no
+      // hive discovery, no shuffle. Partition columns are not stored in
+      // the files: synthesized below from the manifest.
+      val scan = s.baseRelationToDataFrame(
+        fsRelation(s, tableDir, dataSchema, es0, None, Nil))
+      val bloomCols = bloomPhysCols(sc0)
+      val (probe, fold) = statsFold(scan,
+        statCols(dataSchema) ++ mapStatPaths(dataSchema, mapStatDecls(sc0)) ++
+          arrayElemStatPaths(dataSchema, bloomCols),
+        bloomCols, prefix = Seq(input_file_name()))
+      val qe = probe.queryExecution
+      val perTask = org.apache.spark.sql.execution.SQLExecution
+        .withNewExecutionId(qe, Some("analyze")) {
+          qe.toRdd.mapPartitions { it =>
+            val files = scala.collection.mutable.HashMap.empty[String, FileFold]
+            // a scan task reads each file's rows contiguously
+            var file: org.apache.spark.unsafe.types.UTF8String = null
+            var cur: FileFold = null
+            it.foreach { r =>
+              if (r.getUTF8String(0) != file) {
+                file = r.getUTF8String(0).clone()
+                cur = files.getOrElseUpdate(file.toString, fold.newFile())
+              }
+              fold.update(cur, r)
             }
-            fold.update(cur, r)
-          }
-          Iterator.single(files.toMap)
-        }.collect()
-      }
-    // a file split across scan tasks folds once per task: merge
-    val (fileMap, dataNdv) = fold.result(perTask.toSeq.flatten
-      .groupMapReduce(kv => new HPath(kv._1).toUri.getPath)(_._2)(fold.merge))
-    // partition-column stats, synthesized per entry from its recorded
-    // value tuple: min = max = the value (constant within a file),
-    // nulls = rows for the null partition — exact, zero data reads
-    def partLong(dt: DataType, v: String): Long = dt match {
-      case org.apache.spark.sql.types.DateType =>
-        java.time.LocalDate.parse(v).toEpochDay
-      case _ => v.toLong
-    }
-    def partStat(f: StructField, level: Int, e: FileEntry,
-        rows: Long): (String, ColStat) = {
-      val kind = statKind(f.dataType).get // part types are all eligible
-      f.name -> (e.part.flatMap(_.lift(level)).flatten match {
-        case Some(value) =>
-          val stored: Any =
-            if (kind == 'l') partLong(f.dataType, value)
-            else value.getBytes("UTF-8")
-          ColStat(kind, Some(stored), Some(stored), 0L,
-            bytes = if (kind == 's')
-              Some(value.getBytes("UTF-8").length * rows) else None)
-        case None => ColStat(kind, None, None, rows)
-      })
-    }
-    val partNdv = partFields.zipWithIndex.map { case (f, i) =>
-      val hashes = es0.flatMap(_.part.flatMap(_.lift(i)).flatten).distinct
-        .map { v =>
-          val canon = if (statKind(f.dataType).contains('l'))
-            partLong(f.dataType, v).toString else v
-          kmvValueHash(canon)
+            Iterator.single(files.toMap)
+          }.collect()
         }
-      f.name -> hashes.distinct.sorted
-        .take(graft.functions.KmvDistinctAgg.K).toSeq
-    }.toMap
-    // fresh stats for every entry; its era tag retires with the
-    // single-era table's history
-    val entries = es0.map { e =>
-      fileMap.get(e.status.getPath.toUri.getPath) match {
-        case Some((rows, cols)) =>
-          val partCols = partFields.zipWithIndex.map { case (f, i) =>
-            partStat(f, i, e, rows) }
-          e.copy(rows = Some(rows), stats = cols ++ partCols,
-            statsVer = Some(statsMarkerVersion(dataSchema)), era = None)
-        // a file the fold saw no row of holds zero rows
-        case None => e.copy(rows = Some(0L), stats = Map.empty,
-          statsVer = None, era = None)
+      // a file split across scan tasks folds once per task: merge
+      val (fileMap, dataNdv) = fold.result(perTask.toSeq.flatten
+        .groupMapReduce(kv => new HPath(kv._1).toUri.getPath)(_._2)(fold.merge))
+      // partition-column stats, synthesized per entry from its recorded
+      // value tuple: min = max = the value (constant within a file),
+      // nulls = rows for the null partition — exact, zero data reads
+      def partLong(dt: DataType, v: String): Long = dt match {
+        case org.apache.spark.sql.types.DateType =>
+          java.time.LocalDate.parse(v).toEpochDay
+        case _ => v.toLong
       }
-    }.sortBy(_.path)
-    publishNext(s, tableDir) { pm =>
-      pm.flatMap { m =>
-        // the pass read exactly m0's file set; any concurrent commit
-        // (or a racing delete) invalidates what was measured
+      def partStat(f: StructField, level: Int, e: FileEntry,
+          rows: Long): (String, ColStat) = {
+        val kind = statKind(f.dataType).get // part types are all eligible
+        f.name -> (e.part.flatMap(_.lift(level)).flatten match {
+          case Some(value) =>
+            val stored: Any =
+              if (kind == 'l') partLong(f.dataType, value)
+              else value.getBytes("UTF-8")
+            ColStat(kind, Some(stored), Some(stored), 0L,
+              bytes = if (kind == 's')
+                Some(value.getBytes("UTF-8").length * rows) else None)
+          case None => ColStat(kind, None, None, rows)
+        })
+      }
+      val partNdv = partFields.zipWithIndex.map { case (f, i) =>
+        val hashes = es0.flatMap(_.part.flatMap(_.lift(i)).flatten).distinct
+          .map { v =>
+            val canon = if (statKind(f.dataType).contains('l'))
+              partLong(f.dataType, v).toString else v
+            kmvValueHash(canon)
+          }
+        f.name -> hashes.distinct.sorted
+          .take(graft.functions.KmvDistinctAgg.K).toSeq
+      }.toMap
+      // fresh stats for every entry; its era tag retires with the
+      // single-era table's history
+      val entries = es0.map { e =>
+        fileMap.get(e.status.getPath.toUri.getPath) match {
+          case Some((rows, cols)) =>
+            val partCols = partFields.zipWithIndex.map { case (f, i) =>
+              partStat(f, i, e, rows) }
+            e.copy(rows = Some(rows), stats = cols ++ partCols,
+              statsVer = Some(statsMarkerVersion(dataSchema)), era = None)
+          // a file the fold saw no row of holds zero rows
+          case None => e.copy(rows = Some(0L), stats = Map.empty,
+            statsVer = None, era = None)
+        }
+      }.sortBy(_.path)
+      Some(Plan(_.flatMap { m =>
+        // the pass read exactly m0's file set; any concurrent commit (or
+        // a racing delete) invalidates what was measured
         if (m.entries != m0.entries || m.dels.nonEmpty) None
         else Some(Prepared.of(m).copy(entries = entries,
           ndv = dataNdv ++ partNdv))
-      }
+      }))
     }
+    commitLoop(s, tableDir, "analyze", replan = false) { (_, pm) =>
+      pm.flatMap(plan) }
   }
 
   /** Metadata-only column aggregates of a snapshot: COUNT(*),
@@ -5054,17 +4862,7 @@ if (es0.isEmpty) return None
   def metaAgg(s: SparkSession, tableDir: String,
       asOf: Int = Int.MaxValue): DataFrame = {
     import s.implicits._
-    val all = versions(s, tableDir)
-    // an EXPLICIT version must be retained — flooring would serve an
-    // older snapshot's statistics labeled as the requested one (the
-    // cloneTable rule; the Int.MaxValue "latest" sentinel keeps its
-    // floor)
-    if (asOf != Int.MaxValue) require(all.contains(asOf),
-      s"metaAgg: version $asOf of $tableDir is not a retained published " +
-        s"version (retained: ${all.mkString(",")})")
-    val vs = all.filter(_ <= asOf)
-    require(vs.nonEmpty, s"metaAgg: no published version <= $asOf in $tableDir")
-    val m = readManifest(s, tableDir, vs.last)
+    val m = retainedSnapshot(s, tableDir, asOf, "metaAgg")
     requireSingleEra(m, "metaAgg")
     val es = m.entries
     require(es.forall(_.rows.isDefined),
@@ -5075,18 +4873,6 @@ if (es0.isEmpty) return None
     val hasDels = m.dels.nonEmpty
     val nRows = es.flatMap(_.rows).sum - m.delRowCount
     val sc = m.schema
-    // UTF-8 byte order — the binary collation Spark's string min/max and
-    // the stored bounds both use (UTF-16 String ordering differs above
-    // the BMP, so decode-then-compare would be wrong)
-    def bcmp(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      while (i < a.length && i < b.length) {
-        val x = (a(i) & 0xff) - (b(i) & 0xff)
-        if (x != 0) return x
-        i += 1
-      }
-      a.length - b.length
-    }
     // one row per stat-eligible PATH — top-level columns AND struct
     // leaves (dotted), so a SQL user sees `GRAFT STATS` for `meta.k`
     // exactly like a flat column
@@ -5121,14 +4907,9 @@ if (es0.isEmpty) return None
         if (!exact || contributing.isEmpty) None
         else Some(contributing.flatMap { case (_, st) => side(st) }
           .reduce((a, b) => if (pick(a, b)) a else b))
-      def lt(a: Any, b: Any): Boolean = k match {
-        case 'l' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-        case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
-        case _ => bcmp(a.asInstanceOf[Array[Byte]],
-          b.asInstanceOf[Array[Byte]]) < 0
-      }
-      val mn = extreme(lt, _.min)
-      val mx = extreme((a, b) => lt(b, a), _.max)
+      val ord = ManifestCodec.boundOrdering(k)
+      val mn = extreme(ord.lt, _.min)
+      val mx = extreme(ord.gt, _.max)
       def str(v: Option[Any]): Option[String] =
         v.map(x => new String(x.asInstanceOf[Array[Byte]], "UTF-8"))
       (sp.logical, k.toString, nRows,

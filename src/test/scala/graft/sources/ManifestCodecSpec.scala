@@ -34,8 +34,8 @@ class ManifestCodecSpec extends GraftSpec {
       rnd.nextInt(100).toLong, bloom = opt(bytes(16)))
     case 'd' => ColStat('d', opt(rnd.nextGaussian() * 1e6), opt(-0.0),
       rnd.nextInt(100).toLong)
-    // an empty string bound is stored as "unknown", so none is generated
-    case _ => ColStat('s', opt("säg名😀".getBytes("UTF-8")), opt(bytes(1 + rnd.nextInt(4))),
+    // empty string bounds included: they are stored apart from "unknown"
+    case _ => ColStat('s', opt(pick("säg名😀", "").getBytes("UTF-8")), opt(bytes(rnd.nextInt(5))),
       rnd.nextInt(100).toLong, bytes = opt(rnd.nextInt(1000).toLong),
       bloom = opt(bytes(8)))
   }
@@ -185,6 +185,24 @@ class ManifestCodecSpec extends GraftSpec {
     assert(SnapshotTable.deleteWhere(spark, t, col("id") === 8L).nonEmpty)
     assert(SnapshotTable.rowCount(spark, t, Int.MaxValue).contains(28L))
     assertByteIdentical(t)
+  }
+
+  test("an all-empty-string file keeps its bounds: pruned, and exact in GRAFT STATS") {
+    import spark.implicits._
+    val t = newTable("emptystr")
+    SnapshotTable.commit(spark, t, Seq(("", 1L), ("", 2L)).toDF("s", "id").coalesce(1),
+      overwrite = false)
+    SnapshotTable.commit(spark, t, Seq(("x", 3L)).toDF("s", "id").coalesce(1),
+      overwrite = false)
+    val probe = SnapshotTable.readAsOf(spark, t, Int.MaxValue).filter(col("s") === "x")
+    assert(probe.collect().map(_.getLong(1)).toSeq == Seq(3L))
+    val scanned = probe.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.map(_.metrics("numFiles").value).sum
+    assert(scanned == 1, s"the all-'' file must be pruned by s = 'x', scanned $scanned")
+    val st = SnapshotTable.metaAgg(spark, t).filter(col("column") === "s").head()
+    assert(st.getAs[String]("min_string") == "" && st.getAs[String]("max_string") == "x" &&
+      st.getAs[Boolean]("bounds_exact"), st)
   }
 
   // ---------- legacy forms: refused loudly ----------
