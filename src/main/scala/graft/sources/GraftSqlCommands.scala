@@ -35,10 +35,16 @@ class GraftSqlParser(delegate: ParserInterface,
         .getZoneId(s.conf.get("spark.sql.session.timeZone")))
       .getOrElse(java.time.ZoneOffset.UTC)
 
+  // the AS OF clause of the verbs that address a version: a version
+  // number, or a wall-clock stamp (Delta's TIMESTAMP AS OF) resolved
+  // against the manifests' commit stamps when the command runs
+  private val AsOfClause =
+    """(?:\s+VERSION\s+AS\s+OF\s+(\d+)|\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')"""
   private val RestoreRe =
-    """(?is)\s*GRAFT\s+RESTORE\s+'([^']+)'\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*""".r
+    ("""(?is)\s*GRAFT\s+RESTORE\s+'([^']+)'""" + AsOfClause + """\s*;?\s*""").r
   private val CloneRe =
-    """(?is)\s*GRAFT\s+CLONE\s+'([^']+)'\s+TO\s+'([^']+)'(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?\s*""".r
+    ("""(?is)\s*GRAFT\s+CLONE\s+'([^']+)'\s+TO\s+'([^']+)'""" + AsOfClause +
+      """?\s*;?\s*""").r
   private val VacuumRe =
     ("""(?is)\s*GRAFT\s+VACUUM\s+'([^']+)'\s+KEEP\s+(\d+)""" +
       """(?:\s+MIN\s+AGE\s+(\d+))?(\s+DRY\s+RUN)?\s*;?\s*""").r
@@ -64,7 +70,7 @@ class GraftSqlParser(delegate: ParserInterface,
       """([A-Za-z_][A-Za-z0-9_.]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_.]*){1,3})\s*\)""" +
       """(?:\s+FILES\s+(\d+))?\s*;?\s*""").r
   private val StatsRe =
-    """(?is)\s*GRAFT\s+STATS\s+'([^']+)'(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?\s*""".r
+    ("""(?is)\s*GRAFT\s+STATS\s+'([^']+)'""" + AsOfClause + """?\s*;?\s*""").r
   // declared map-key zone maps: the FULL desired set of col['key']
   // items (empty parens clear every declaration)
   private val StatsKeysRe =
@@ -102,7 +108,8 @@ class GraftSqlParser(delegate: ParserInterface,
     ("""(?is)\s*GRAFT\s+REPARTITION\s+'([^']+)'\s+BY\s*""" +
       """\(\s*([A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*)?\s*\)\s*;?\s*""").r
   private val DescribeStatsRe =
-    """(?is)\s*GRAFT\s+DESCRIBE\s+STATS\s+'([^']+)'(?:\s+VERSION\s+AS\s+OF\s+(\d+))?\s*;?\s*""".r
+    ("""(?is)\s*GRAFT\s+DESCRIBE\s+STATS\s+'([^']+)'""" + AsOfClause +
+      """?\s*;?\s*""").r
   private val AnalyzeRe =
     """(?is)\s*GRAFT\s+ANALYZE\s+'([^']+)'\s*;?\s*""".r
   private val DescribeRe =
@@ -156,27 +163,22 @@ class GraftSqlParser(delegate: ParserInterface,
     ("""(?is)\s*GRAFT\s+RELAYOUT\s+'([^']+)'""" +
       """(?:\s+PARTITION\s+BY\s*\(\s*([A-Za-z0-9_]+(?:\s*,\s*[A-Za-z0-9_]+)*)\s*\))?""" +
       """(?:\s+BUCKET\s+BY\s*\(\s*(\d+)\s*,\s*([A-Za-z0-9_]+)\s*\))?\s*;?\s*""").r
-  // wall-clock time travel (Delta's TIMESTAMP AS OF) for the verbs that
-  // take a version — resolved against the manifests' commit stamps
-  private val RestoreTsRe =
-    """(?is)\s*GRAFT\s+RESTORE\s+'([^']+)'\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*""".r
-  private val CloneTsRe =
-    """(?is)\s*GRAFT\s+CLONE\s+'([^']+)'\s+TO\s+'([^']+)'\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*""".r
-  private val StatsTsRe =
-    """(?is)\s*GRAFT\s+STATS\s+'([^']+)'\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*""".r
-  private val DescribeStatsTsRe =
-    """(?is)\s*GRAFT\s+DESCRIBE\s+STATS\s+'([^']+)'\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*""".r
   // Catch-all for malformed GRAFT statements (missing quotes, absent
   // KEEP/VERSION clause, unknown verb): without it they would fall
   // through to Spark's ANTLR parser and surface as a generic
   // "syntax error at GRAFT" instead of the supported grammars.
   private val GraftAnyRe = """(?is)\s*GRAFT\b.*""".r
 
+  /** The parsed AS OF clause (either capture may be null); no clause
+    * addresses the latest version. A malformed stamp fails here, at
+    * parse time. */
+  private def asOf(v: String, ts: String): AsOf =
+    if (ts != null) AsOf.Timestamp(GraftSqlParser.parseTsMillis(ts, sessionZone))
+    else AsOf.Version(Option(v).map(_.toInt).getOrElse(Int.MaxValue))
+
   override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
-    case RestoreRe(dir, v) => GraftRestoreCommand(dir, v.toInt)
-    case CloneRe(src, dst, v) =>
-      GraftCloneCommand(src, dst,
-        Option(v).map(_.toInt).getOrElse(Int.MaxValue))
+    case RestoreRe(dir, v, ts) => GraftRestoreCommand(dir, asOf(v, ts))
+    case CloneRe(src, dst, v, ts) => GraftCloneCommand(src, dst, asOf(v, ts))
     case VacuumRe(dir, k, age, dry) =>
       GraftVacuumCommand(dir, k.toInt,
         Option(age).map(_.toLong).getOrElse(0L), dryRun = dry != null)
@@ -255,12 +257,8 @@ class GraftSqlParser(delegate: ParserInterface,
       GraftRelayoutCommand(dir,
         Option(parts).map(_.split(",").toSeq.map(_.trim)).getOrElse(Nil),
         Option(n).map(nn => (nn.toInt, bcol)))
-    case DescribeStatsTsRe(dir, ts) =>
-      GraftDescribeStatsTimestampCommand(dir,
-        GraftSqlParser.parseTsMillis(ts, sessionZone))
-    case DescribeStatsRe(dir, v) =>
-      GraftDescribeStatsCommand(dir,
-        Option(v).map(_.toInt).getOrElse(Int.MaxValue))
+    case DescribeStatsRe(dir, v, ts) =>
+      GraftDescribeStatsCommand(dir, asOf(v, ts))
     case BranchCreateRe(dir, n, v) =>
       GraftBranchCreateCommand(dir, n, Option(v).map(_.toInt))
     case BranchDropRe(dir, n) => GraftBranchDropCommand(dir, n)
@@ -278,17 +276,7 @@ class GraftSqlParser(delegate: ParserInterface,
     case StatsKeysRe(dir, ds) =>
       GraftStatsKeysCommand(dir, Option(ds)
         .map(StatsKeyItemRe.findAllIn(_).toSeq).getOrElse(Nil))
-    case StatsRe(dir, v) =>
-      GraftStatsCommand(dir, Option(v).map(_.toInt).getOrElse(Int.MaxValue))
-    case RestoreTsRe(dir, ts) =>
-      GraftRestoreTimestampCommand(dir,
-        GraftSqlParser.parseTsMillis(ts, sessionZone))
-    case CloneTsRe(src, dst, ts) =>
-      GraftCloneTimestampCommand(src, dst,
-        GraftSqlParser.parseTsMillis(ts, sessionZone))
-    case StatsTsRe(dir, ts) =>
-      GraftStatsTimestampCommand(dir,
-        GraftSqlParser.parseTsMillis(ts, sessionZone))
+    case StatsRe(dir, v, ts) => GraftStatsCommand(dir, asOf(v, ts))
     case GraftAnyRe() =>
       throw new org.apache.spark.sql.catalyst.parser.ParseException(
         Option(sqlText),
@@ -489,53 +477,44 @@ object GraftSqlParser {
   }
 }
 
-/** `GRAFT RESTORE '<dir>' TIMESTAMP AS OF '<ts>'` — wall-clock rollback:
-  * restore to the greatest version committed at or before the stamp. */
-case class GraftRestoreTimestampCommand(tableDir: String, tsMillis: Long)
+/** A verb's AS OF clause: `VERSION AS OF <n>` (Int.MaxValue: no
+  * clause, the latest version) or `TIMESTAMP AS OF '<ts>'` — the
+  * greatest version committed at or before the stamp, resolved when
+  * the command RUNS (a plan parsed earlier sees the commits landed
+  * since). */
+sealed trait AsOf {
+  def version(s: SparkSession, tableDir: String): Int
+}
+
+object AsOf {
+  final case class Version(v: Int) extends AsOf {
+    def version(s: SparkSession, tableDir: String): Int = v
+  }
+  final case class Timestamp(tsMillis: Long) extends AsOf {
+    def version(s: SparkSession, tableDir: String): Int =
+      SnapshotTable.versionAtTimestamp(s, tableDir, tsMillis)
+  }
+}
+
+/** `GRAFT RESTORE '<dir>' VERSION AS OF <v>` (or `TIMESTAMP AS OF
+  * '<ts>'` — wall-clock rollback) → the new latest version. */
+case class GraftRestoreCommand(tableDir: String, asOf: AsOf)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(s: SparkSession): Seq[Row] =
-    Seq(Row(SnapshotTable.restore(s, tableDir,
-      SnapshotTable.versionAtTimestamp(s, tableDir, tsMillis))))
+    Seq(Row(SnapshotTable.restore(s, tableDir, asOf.version(s, tableDir))))
 }
 
-/** `GRAFT CLONE '<src>' TO '<dst>' TIMESTAMP AS OF '<ts>'`. */
-case class GraftCloneTimestampCommand(srcDir: String, dstDir: String,
-    tsMillis: Long) extends LeafRunnableCommand {
+/** `GRAFT CLONE '<src>' TO '<dst>' [VERSION AS OF <v> | TIMESTAMP AS OF
+  * '<ts>']` → dst's v1. */
+case class GraftCloneCommand(srcDir: String, dstDir: String, asOf: AsOf)
+    extends LeafRunnableCommand {
   override val output: Seq[Attribute] =
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(s: SparkSession): Seq[Row] =
     Seq(Row(SnapshotTable.cloneTable(s, srcDir, dstDir,
-      SnapshotTable.versionAtTimestamp(s, srcDir, tsMillis))))
-}
-
-/** `GRAFT STATS '<dir>' TIMESTAMP AS OF '<ts>'`. */
-case class GraftStatsTimestampCommand(tableDir: String, tsMillis: Long)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftStatsCommand.schema
-  override def run(s: SparkSession): Seq[Row] =
-    SnapshotTable.metaAgg(s, tableDir,
-      SnapshotTable.versionAtTimestamp(s, tableDir, tsMillis))
-      .collect().toSeq
-}
-
-/** `GRAFT RESTORE '<dir>' VERSION AS OF <v>` → the new latest version. */
-case class GraftRestoreCommand(tableDir: String, version: Int)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", IntegerType, nullable = false)())
-  override def run(s: SparkSession): Seq[Row] =
-    Seq(Row(SnapshotTable.restore(s, tableDir, version)))
-}
-
-/** `GRAFT CLONE '<src>' TO '<dst>' [VERSION AS OF <v>]` → dst's v1. */
-case class GraftCloneCommand(srcDir: String, dstDir: String, asOf: Int)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("version", IntegerType, nullable = false)())
-  override def run(s: SparkSession): Seq[Row] =
-    Seq(Row(SnapshotTable.cloneTable(s, srcDir, dstDir, asOf)))
+      asOf.version(s, srcDir))))
 }
 
 /** `GRAFT HISTORY '<dir>'` → one row per published version (the
@@ -588,24 +567,17 @@ case class GraftOptimizeZorderCommand(tableDir: String,
       .map(Integer.valueOf).orNull))
 }
 
-/** `GRAFT STATS '<dir>' [VERSION AS OF <v>]` — the metadata-served
-  * column statistics of a snapshot ([[SnapshotTable.metaAgg]]): one row
-  * per stat-eligible column with exact row/non-null counts and min/max,
-  * answered from the manifest alone (zero data-file reads). On a
-  * snapshot with outstanding merge-on-read deletes only `n_rows` stays
-  * exact; non-null counts and bounds read NULL with
-  * `bounds_exact=false` (absorbDeletes restores them). */
-case class GraftStatsCommand(tableDir: String, asOf: Int)
+/** `GRAFT STATS '<dir>' [VERSION AS OF <v> | TIMESTAMP AS OF '<ts>']` —
+  * the metadata-served column statistics of a snapshot
+  * ([[SnapshotTable.metaAgg]]): one row per stat-eligible column with
+  * exact row/non-null counts and min/max, answered from the manifest
+  * alone (zero data-file reads). On a snapshot with outstanding
+  * merge-on-read deletes only `n_rows` stays exact; non-null counts and
+  * bounds read NULL with `bounds_exact=false` (absorbDeletes restores
+  * them). */
+case class GraftStatsCommand(tableDir: String, asOf: AsOf)
     extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftStatsCommand.schema
-  override def run(s: SparkSession): Seq[Row] =
-    SnapshotTable.metaAgg(s, tableDir, asOf).collect().toSeq
-}
-
-object GraftStatsCommand {
-  /** The metaAgg result schema, shared by the VERSION- and TIMESTAMP-
-    * addressed stats commands (fresh attribute ids per call). */
-  private[sources] def schema: Seq[Attribute] = {
+  override val output: Seq[Attribute] = {
     val st = org.apache.spark.sql.types.StringType
     val dt = org.apache.spark.sql.types.DoubleType
     val bt = org.apache.spark.sql.types.BooleanType
@@ -625,27 +597,23 @@ object GraftStatsCommand {
       AttributeReference("bounds_exact", bt, nullable = false)(),
       AttributeReference("est_ndv", dt, nullable = true)())
   }
-}
-
-/** `GRAFT DESCRIBE STATS '<dir>' [VERSION AS OF <v>]` — the
-  * PLANNER-visible catalog statistics ([[SnapshotTable.plannerStats]]):
-  * per stat-eligible column the NDV estimate, null count, avg byte
-  * width, and min/max exactly as join/filter planning sees them under
-  * CBO — the verification doorway for "what does the optimizer think
-  * this table looks like", one manifest read, zero data I/O.
-  * (`GRAFT STATS` serves the metaAgg view — exact metadata-only
-  * aggregates; this serves the CATALOG view the planner consumes.) */
-case class GraftDescribeStatsCommand(tableDir: String, asOf: Int)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftDescribeStatsCommand.schema
   override def run(s: SparkSession): Seq[Row] =
-    SnapshotTable.plannerStats(s, tableDir, asOf).collect().toSeq
+    SnapshotTable.metaAgg(s, tableDir, asOf.version(s, tableDir))
+      .collect().toSeq
 }
 
-object GraftDescribeStatsCommand {
-  /** The plannerStats result schema, shared by the VERSION- and
-    * TIMESTAMP-addressed forms (fresh attribute ids per call). */
-  private[sources] def schema: Seq[Attribute] = {
+/** `GRAFT DESCRIBE STATS '<dir>' [VERSION AS OF <v> | TIMESTAMP AS OF
+  * '<ts>']` — the PLANNER-visible catalog statistics
+  * ([[SnapshotTable.plannerStats]]): per stat-eligible column the NDV
+  * estimate, null count, avg byte width, and min/max exactly as
+  * join/filter planning sees them under CBO — the verification doorway
+  * for "what does the optimizer think this table looks like", one
+  * manifest read, zero data I/O. (`GRAFT STATS` serves the metaAgg view
+  * — exact metadata-only aggregates; this serves the CATALOG view the
+  * planner consumes.) */
+case class GraftDescribeStatsCommand(tableDir: String, asOf: AsOf)
+    extends LeafRunnableCommand {
+  override val output: Seq[Attribute] = {
     val st = org.apache.spark.sql.types.StringType
     Seq(
       AttributeReference("column", st, nullable = true)(),
@@ -657,6 +625,9 @@ object GraftDescribeStatsCommand {
       AttributeReference("min", st, nullable = true)(),
       AttributeReference("max", st, nullable = true)())
   }
+  override def run(s: SparkSession): Seq[Row] =
+    SnapshotTable.plannerStats(s, tableDir, asOf.version(s, tableDir))
+      .collect().toSeq
 }
 
 /** `GRAFT OPTIMIZE '<dir>' BUCKETS` — pack every multi-file bucket
@@ -702,16 +673,6 @@ case class GraftRelayoutCommand(tableDir: String, partitionBy: Seq[String],
     Seq(AttributeReference("version", IntegerType, nullable = false)())
   override def run(s: SparkSession): Seq[Row] =
     Seq(Row(SnapshotTable.relayout(s, tableDir, partitionBy, bucketBy)))
-}
-
-/** `GRAFT DESCRIBE STATS '<dir>' TIMESTAMP AS OF '<ts>'` — the
-  * planner-visible catalog statistics at a wall-clock instant. */
-case class GraftDescribeStatsTimestampCommand(tableDir: String,
-    tsMillis: Long) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftDescribeStatsCommand.schema
-  override def run(s: SparkSession): Seq[Row] =
-    SnapshotTable.plannerStats(s, tableDir,
-      SnapshotTable.versionAtTimestamp(s, tableDir, tsMillis)).collect().toSeq
 }
 
 /** `GRAFT VACUUM '<dir>' KEEP <k> [MIN AGE <ms>] [DRY RUN]` →

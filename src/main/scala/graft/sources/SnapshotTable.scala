@@ -761,7 +761,6 @@ object SnapshotTable {
   def relayout(s: SparkSession, tableDir: String,
       partitionBy: Seq[String] = Nil,
       bucketBy: Option[(Int, String)] = None): Int = {
-    val f = fs(s, tableDir)
     commitLoop(s, tableDir, "relayout", replan = true,
         kind = Some("compact")) { (_, pm) =>
       val m0 = requirePublished(pm, "relayout", tableDir)
@@ -790,21 +789,21 @@ object SnapshotTable {
             s"${cur.schema(c).dataType.catalogString} for '$c' " +
             "(string/int/long/date)")
       }
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
-      val written = writeDataDir(s, tableDir, cur, uniq, bucketBy,
+      val sc = storedSchema(cur.schema)
+      val written = writeDataDir(s, tableDir, cur, sc, bucketBy,
         partitionBy, partSpread = partitionedWriteSpread(s))
       beforePublishHook()
-      Some(Plan(_.flatMap { m =>
-        // serializability: the rewrite read exactly m0's file + vector
-        // state — publishing over a mid-flight commit would erase its
-        // rows while claiming to preserve them
-        if (m.entries != m0.entries || m.dels != m0.dels) None
-        else Some(Prepared(written._2, storedSchema(cur.schema), m.txns,
-          bucketBy, Seq.empty, m.constraints,
-          // all pre-drop files are rewritten away: dropped names are
-          // safely re-usable, exactly as after any overwrite
-          Set.empty[String], written._3, partBy = Some(partitionBy)))
-      }, () => f.delete(written._1, true)))
+      // serializability: the rewrite read exactly m0's file + vector
+      // state under m0's schema — publishing over a mid-flight commit
+      // would erase its rows while claiming to preserve them, and over
+      // a concurrent schema change would undo it (an added column
+      // lost, a dropped one back with its data)
+      Some(Plan(metadataRebase(m0)(m => Prepared(written.entries, sc,
+        m.txns, bucketBy, Seq.empty, m.constraints,
+        // all pre-drop files are rewritten away: dropped names are
+        // safely re-usable, exactly as after any overwrite
+        Set.empty[String], written.ndv, partBy = Some(partitionBy))),
+        written.discard))
     }.get
   }
 
@@ -1685,33 +1684,68 @@ object SnapshotTable {
       m: Manifest): DataFrame =
     relationFor(s, tableDir, delSchema, m.dels)
 
-  /** Subtract a snapshot's deletion vectors from its base scan: one
-    * anti-join on the reader's (file, row-position) identity. The
-    * vector side holds only the MATCHED positions of past deletes —
-    * for the selective deletes merge-on-read exists for it is
-    * broadcast-sized, so the subtraction costs a hash probe per
-    * scanned row and never re-shuffles the table (Catalyst sizes the
-    * join from the vector files' true byte size, so a pathologically
-    * large vector set falls back to a shuffled anti-join instead of
-    * OOMing the driver). */
-  private def applyDels(s: SparkSession, tableDir: String, df: DataFrame,
-      m: Manifest): DataFrame =
-    if (m.dels.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.col
-      val cols = df.columns.toIndexedSeq.map(col)
-      df.select(col("_metadata.file_path").as("__path"),
+  /** THE file-set reader: the rows of entries `es` of manifest `m`,
+    * under schema `sc`. No entries: the empty frame of `sc`. Otherwise
+    * one manifest-planned relation per partition-scheme era
+    * ([[repartitionBy]] — each era's files read under THEIR layout:
+    * new-era files prune by directory, old-era files by the zone maps
+    * they carry for the same columns), unioned by name.
+    *
+    * `withDels` subtracts `m`'s deletion vectors per leg (hidden
+    * `_metadata` does not cross a Union): one anti-join on the
+    * reader's (file, row-position) identity. The vector side holds
+    * only the MATCHED positions of past deletes — for the selective
+    * deletes merge-on-read exists for it is broadcast-sized, so the
+    * subtraction costs a hash probe per scanned row and never
+    * re-shuffles the table (Catalyst sizes the join from the vector
+    * files' true byte size, so a pathologically large vector set falls
+    * back to a shuffled anti-join instead of OOMing the driver).
+    * `positions` keeps that identity as leading `__path`/`__pos`
+    * columns. `bucket` and `withStats` (the manifest's catalog
+    * statistics) are for whole-snapshot reads only: a subset would
+    * oversell the table-cumulative NDV. */
+  private def filesFrame(s: SparkSession, tableDir: String, m: Manifest,
+      es: Seq[FileEntry], sc: StructType,
+      bucket: Option[(Int, String)] = None, withStats: Boolean = false,
+      withDels: Boolean = true, positions: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (es.isEmpty)
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+    else m.eraLegs(es).map { case (scheme, ees) =>
+      val rel = relationFor(s, tableDir, sc, ees, bucket,
+        withStats = if (withStats) Some(m) else None, partBy = scheme)
+      val subtract = withDels && m.dels.nonEmpty
+      if (!subtract && !positions) rel
+      else {
+        val withPos = rel.select(col("_metadata.file_path").as("__path"),
           col("_metadata.row_index").as("__pos"), col("*"))
-        .join(delFrame(s, tableDir, m), Seq("__path", "__pos"), "left_anti")
-        .select(cols: _*)
-    }
+        val live =
+          if (subtract) withPos.join(delFrame(s, tableDir, m),
+            Seq("__path", "__pos"), "left_anti")
+          else withPos
+        if (positions) live
+        else live.select(rel.columns.toIndexedSeq.map(col): _*)
+      }
+    }.reduce(_.unionByName(_))
+  }
+
+  /** THE affected-file probe: the entries of `es` whose file appears
+    * in `files` (a one-column frame of file paths — `input_file_name()`
+    * of a probe, or a vector file's `__path`) — one distinct job, the
+    * paths collected to the driver. */
+  private def affectedFiles(files: DataFrame,
+      es: Seq[FileEntry]): Seq[FileEntry] = {
+    val hit = files.distinct().collect()
+      .map(r => new HPath(r.getString(0)).toUri.getPath).toSet
+    es.filter(e => hit.contains(e.status.getPath.toUri.getPath))
+  }
 
   /** MERGE-ON-READ delete: mark every current row satisfying
     * `predicate` deleted by writing its (file, row-position) pair into
     * a deletion-vector parquet and publishing a METADATA-ONLY commit —
     * no data file is rewritten, so a 0.1% delete over a 100 TB table
     * costs the matched positions, not a rewrite. Reads subtract the
-    * vectors ([[applyDels]]); [[absorbDeletes]] rewrites only the
+    * vectors ([[filesFrame]]); [[absorbDeletes]] rewrites only the
     * files that carry them when the read-side tax should be retired.
     *
     * Serializable like [[merge]]: positions are computed against the
@@ -1734,24 +1768,12 @@ object SnapshotTable {
         // layout- AND era-agnostic: deletion vectors key on (file,
         // position), so merge-on-read deletes work unchanged on
         // hive-partitioned tables (the GDPR-delete-on-an-event-feed
-        // case) and across partition-scheme ERAS ([[repartitionBy]])
-        // — the probe plans one leg per era, each file read under
-        // ITS era's layout with the positional identity selected
-        // per leg (hidden _metadata does not cross a Union); no
-        // data file is touched, so every layout survives by
+        // case) and across partition-scheme ERAS ([[repartitionBy]]);
+        // no data file is touched, so every layout survives by
         // construction
-        val withMeta = m0.eraLegs(es0).map { case (scheme, ees) =>
-          relationFor(s, tableDir, storedSchema(sc0), ees,
-            m0.bucket, partBy = scheme)
-            .select(col("_metadata.file_path").as("__path"),
-              col("_metadata.row_index").as("__pos"), col("*"))
-        }.reduce(_.unionByName(_))
-        val live =
-          if (m0.dels.isEmpty) withMeta
-          else withMeta.join(delFrame(s, tableDir, m0),
-            Seq("__path", "__pos"), "left_anti")
-        val matched = live.filter(predicate)
-          .select(col("__path"), col("__pos"))
+        val matched = filesFrame(s, tableDir, m0, es0, storedSchema(sc0),
+            m0.bucket, positions = true)
+          .filter(predicate).select(col("__path"), col("__pos"))
         // nothing matched: nothing to publish
         writeDelDir(s, tableDir, matched).map { case (delDir, vectors) =>
           beforePublishHook()
@@ -1780,11 +1802,8 @@ object SnapshotTable {
                 (storedSchema(m.schema) == scStored &&
                   m.partBy == m0.partBy &&
                   m.partEras == m0.partEras &&
-                  m.eraLegs(added).map { case (scheme, ees) =>
-                    relationFor(s, tableDir, scStored, ees,
-                      m.bucket, partBy = scheme)
-                  }.reduce(_.unionByName(_))
-                    .filter(predicate).isEmpty)
+                  filesFrame(s, tableDir, m, added, scStored, m.bucket,
+                    withDels = false).filter(predicate).isEmpty)
               if (!addedOk) None
               // rows removed: a bottom-k sketch cannot subtract — NDV
               // unknown until a full rewrite recollects
@@ -1831,7 +1850,6 @@ object SnapshotTable {
       sets: Map[String, org.apache.spark.sql.Column]): Option[Int] = {
     import org.apache.spark.sql.functions._
     require(sets.nonEmpty, "updateWhere: no SET assignments")
-    val f = fs(s, tableDir)
     def plan(m0: Manifest): Option[Plan] = {
       val es0 = m0.entries
       val sc0 = storedSchema(m0.schema)
@@ -1846,29 +1864,21 @@ object SnapshotTable {
         s"updateWhere: $tableDir has outstanding deletion vectors — the " +
           "file rewrite would resurrect deleted rows; absorbDeletes first")
       if (es0.isEmpty) return None
-      // candidate probe: pushed-down predicate + input_file_name, ONE
-      // leg per partition-scheme era ([[repartitionBy]] — each era's
-      // files probe under THEIR layout: directory pruning on its hive
-      // columns, zone maps / Blooms on what it stores as data), so the
-      // probe file-skips at plan time in every era
-      val affectedPaths = m0.eraLegs(es0).map { case (scheme, ees) =>
-        relationFor(s, tableDir, sc0, ees, partBy = scheme)
-          .filter(predicate)
-          .select(input_file_name().as("__f"))
-      }.reduce(_.unionByName(_)).distinct()
-        .collect().map(r => new HPath(r.getString(0)).toUri.getPath).toSet
-      if (affectedPaths.isEmpty) return None
-      val affected = es0.filter(e =>
-        affectedPaths.contains(e.status.getPath.toUri.getPath))
+      // candidate probe: pushed-down predicate + input_file_name; each
+      // era's files probe under THEIR layout ([[filesFrame]]: directory
+      // pruning on its hive columns, zone maps / Blooms on what it
+      // stores as data), so the probe file-skips at plan time in every
+      // era
+      val affected = affectedFiles(filesFrame(s, tableDir, m0, es0, sc0)
+        .filter(predicate).select(input_file_name()), es0)
+      if (affected.isEmpty) return None
       // each affected file reads under ITS era's layout; the rewrite
       // re-lands below under the CURRENT scheme, so row-level DML
       // incrementally MIGRATES an evolved table toward its current
       // layout (the Iceberg partition-evolution behavior) — only
       // key-bearing files in each era move, untouched files ride the
       // manifest by reference under their recorded era
-      val base = m0.eraLegs(affected).map { case (scheme, ees) =>
-        relationFor(s, tableDir, sc0, ees, partBy = scheme)
-      }.reduce(_.unionByName(_))
+      val base = filesFrame(s, tableDir, m0, affected, sc0)
       // SQL UPDATE: provably-TRUE rows take the assignment, FALSE and
       // NULL keep their row; each assignment casts back to the
       // column's recorded type — no silent evolution through DML
@@ -1881,10 +1891,8 @@ object SnapshotTable {
         }
       }: _*)
       enforceConstraints(upd, m0.constraints)
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
-      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-        toPhysical(upd, sc0), uniq, partitionBy = m0.partBy,
-        bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
+      val written = writeDataDir(s, tableDir, upd, sc0,
+        partitionBy = m0.partBy)
       val affectedEntryPaths = affected.map(_.path).toSet
       beforePublishHook()
       val setPhys = sc0.fields.filter(fl => sets.contains(fl.name))
@@ -1919,22 +1927,17 @@ object SnapshotTable {
         lazy val addedClean = {
           val added = m.entries.filterNot(e => m0pathsAll.contains(e.path))
           added.isEmpty ||
-            m.eraLegs(added).map { case (scheme, ees) =>
-              relationFor(s, tableDir, sc0, ees, partBy = scheme)
-            }.reduce(_.unionByName(_))
-              .filter(predicate).isEmpty
+            filesFrame(s, tableDir, m, added, sc0).filter(predicate).isEmpty
         }
         if (!exact && !(structuralOk && addedClean)) None
-        else Some(Prepared.of(m).copy(
-          // keep every CURRENT file except the ones this update
-          // rewrites (covers both the exact and rebased cases)
-          entries = m.entries.filterNot(e =>
-            affectedEntryPaths.contains(e.path)) ++ newFiles,
-          dels = Seq.empty,
-          // SET columns' values changed (no sketch subtraction);
-          // every other column's row SET is preserved — carry
-          ndv = m.ndv -- setPhys))
-      }, () => f.delete(dataDir, true)))
+        // keep every CURRENT file except the ones this update rewrites
+        // (covers both the exact and rebased cases)
+        else Some(Prepared.swap(m, affectedEntryPaths, written.entries)
+          .copy(dels = Seq.empty,
+            // SET columns' values changed (no sketch subtraction);
+            // every other column's row SET is preserved — carry
+            ndv = m.ndv -- setPhys))
+      }, written.discard))
     }
     commitLoop(s, tableDir, "updateWhere", replan = true,
         kind = Some("update")) { (_, pm) =>
@@ -1991,45 +1994,31 @@ object SnapshotTable {
     * correct, they lose the free partitioning). Returns the new
     * version; None when there is nothing to absorb or on conflict. */
   def absorbDeletes(s: SparkSession, tableDir: String): Option[Int] = {
-    val f = fs(s, tableDir)
     def plan(m0: Manifest): Option[Plan] = {
       if (m0.dels.isEmpty) return None
       val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
       // affected files come from the vectors themselves — vector-sized
       // driver work, never table-sized
-      val affectedPaths = delFrame(s, tableDir, m0).select("__path").distinct()
-        .collect().map(r => new HPath(r.getString(0)).toUri.getPath).toSet
-      val (affected, carried) = es0.partition(e =>
-        affectedPaths.contains(e.status.getPath.toUri.getPath))
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      val affected =
+        affectedFiles(delFrame(s, tableDir, m0).select("__path"), es0)
       // the rewrite keeps the table's layout: a partitioned table's
       // affected files re-land under their hive directories (the new
       // entries carry fresh partition values). Era-aware like the other
       // row-level rewrites: each affected file reads under ITS era's
-      // layout (vectors subtracted per leg) and re-lands under the
-      // CURRENT scheme — absorbing deletes incrementally migrates an
-      // evolved table too.
-      val rewritten =
-        if (affected.isEmpty)
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            sc0)
-        else m0.eraLegs(affected).map { case (scheme, ees) =>
-          applyDels(s, tableDir,
-            relationFor(s, tableDir, sc0, ees, partBy = scheme), m0)
-        }.reduce(_.unionByName(_))
-      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-        toPhysical(rewritten, sc0),
-        uniq, partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-      val carriedPaths = carried.map(_.path).toSet
+      // layout (vectors subtracted) and re-lands under the CURRENT
+      // scheme — absorbing deletes incrementally migrates an evolved
+      // table too.
+      val written = writeDataDir(s, tableDir,
+        filesFrame(s, tableDir, m0, affected, sc0), sc0,
+        partitionBy = m0.partBy)
       beforePublishHook()
       Some(Plan(_.flatMap { m =>
         if (m.entries != m0.entries || m.dels != m0.dels) None // conflict
-        else Some(Prepared.of(m).copy(
-          entries = m.entries.filter(e => carriedPaths.contains(e.path))
-            ++ newFiles,
+        else Some(Prepared.swap(m, affected.map(_.path).toSet,
+          written.entries).copy(
           bucket = if (affected.isEmpty) m.bucket else None,
           dels = Seq.empty))
-      }, () => f.delete(dataDir, true)))
+      }, written.discard))
     }
     commitLoop(s, tableDir, "absorbDeletes", replan = false,
       kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
@@ -2156,10 +2145,19 @@ object SnapshotTable {
       sl.copy(valueType = probe.schema(sl.first).dataType)).toArray))
   }
 
-  /** Write `df` into a fresh, race-free uniquely-named data directory
-    * (staged + renamed) and return it with the manifest entries
-    * (path, size, rows, zone maps) of its files and the batch's NDV
-    * sketches. With `bucket` set, the batch is hash-clustered into `n`
+  /** What a data write produced: the manifest entries (path, size,
+    * rows, zone maps) of its files, the batch's NDV sketches, and the
+    * `discard` that deletes them once the plan is abandoned. */
+  private final case class Written(entries: Seq[FileEntry],
+      ndv: Map[String, Seq[Long]], discard: () => Unit)
+
+  /** THE data writer: write the logically-named `rows`, published under
+    * the table schema `sc`, into a fresh, race-free uniquely-named data
+    * directory (staged + renamed). From `sc` it derives the physical
+    * column names the files store ([[toPhysical]]) and the declared
+    * Bloom and map-key stats the fold collects ([[bloomPhysCols]],
+    * [[mapStatDecls]]) — so every rewrite keeps the table's stats
+    * declarations. With `bucket` set, the batch is hash-clustered into `n`
     * buckets first (`repartition(n, col)` — partition index i IS
     * Spark's bucket id: both are `pmod(murmur3(key), n)`), sorted
     * within each bucket, and each output file is renamed to carry its
@@ -2176,16 +2174,16 @@ object SnapshotTable {
     * matching), evaluates the stat inputs ([[statInputs]]) on each
     * written row and folds them per file. No job starts after the write
     * job: the stats need no read-back of the batch. */
-  private def writeDataDir(s: SparkSession, tableDir: String, df0: DataFrame,
-      uniq: String, bucket: Option[(Int, String)] = None,
+  private def writeDataDir(s: SparkSession, tableDir: String, rows: DataFrame,
+      sc: StructType, bucket: Option[(Int, String)] = None,
       partitionBy: Seq[String] = Nil,
       partSpread: Int = 1,
-      preShaped: Boolean = false,
-      bloomCols: Set[String] = Set.empty,
-      mapKeys: Map[String, Seq[String]] = Map.empty)
-      : (HPath, Seq[FileEntry], Map[String, Seq[Long]]) = {
+      preShaped: Boolean = false): Written = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod, raise_error, when}
     val f = fs(s, tableDir)
+    val df0 = toPhysical(rows, sc)
+    val bloomCols = bloomPhysCols(sc)
+    val uniq = java.util.UUID.randomUUID.toString.take(8)
     val staging = new HPath(tableDir, s".staging-$uniq")
     val dataDir = new HPath(tableDir, s"data/c-$uniq")
     // the hive writer files an EMPTY STRING under the null-partition
@@ -2242,7 +2240,8 @@ object SnapshotTable {
         }
       case _ => df0
     }
-    val statPaths = statCols(df.schema) ++ mapStatPaths(df.schema, mapKeys) ++
+    val statPaths = statCols(df.schema) ++
+      mapStatPaths(df.schema, mapStatDecls(sc)) ++
       arrayElemStatPaths(df.schema, bloomCols)
     val fold = if (statPaths.isEmpty) None
       else Some(statsFold(df, statPaths, bloomCols))
@@ -2328,7 +2327,7 @@ object SnapshotTable {
     val stats =
       if (statuses.isEmpty) None
       else tracker.map(t => t.fold.result(t.files.toMap))
-    (dataDir, listed.map { case (st, part) =>
+    Written(listed.map { case (st, part) =>
       stats match {
         case Some((m, _)) =>
           m.get(StatsFold.relKey(st.getPath.toString, partitionBy.size + 1)) match {
@@ -2346,7 +2345,7 @@ object SnapshotTable {
         case None => FileEntry(st, None, Map.empty, part)
       }
     }.sortBy(_.path),
-      stats.map(_._2).getOrElse(Map.empty))
+      stats.map(_._2).getOrElse(Map.empty), () => f.delete(dataDir, true))
   }
 
   /** Per-snapshot content handed back by a `prepare` callback: data
@@ -2375,6 +2374,12 @@ object SnapshotTable {
     /** `m`'s content carried forward unchanged. */
     def of(m: Manifest): Prepared = Prepared(m.entries, m.schema, m.txns,
       m.bucket, m.dels, m.constraints, m.dropped, m.ndv)
+    /** `m`'s content with the files at `victims` replaced by `added` —
+      * the rebase of every file-replacing rewrite. */
+    def swap(m: Manifest, victims: Set[String],
+        added: Seq[FileEntry]): Prepared =
+      of(m).copy(entries =
+        m.entries.filterNot(e => victims.contains(e.path)) ++ added)
   }
 
   /** One plan of an operation's commit. `rebase` derives the next
@@ -2491,7 +2496,6 @@ object SnapshotTable {
       overwrite: Boolean, txn: Option[(String, Long)],
       bucket: Option[(Int, String)] = None,
       partitionBy: Seq[String] = Nil): Option[Int] = {
-    val f = fs(s, tableDir)
     // bucketed AND hive-partitioned compose (Iceberg's
     // partition + bucket-transform shape): partition directories
     // outside, bucket-id files inside each directory — but the bucket
@@ -2516,8 +2520,7 @@ object SnapshotTable {
     }
     // the data write happens ONCE; version races retry only the (tiny)
     // manifest publish
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
-    var written: Option[(HPath, Seq[FileEntry], Map[String, Seq[Long]])] = None
+    var written: Option[Written] = None
     // the logical→physical rename map the staged write used (a lost
     // race against a concurrent rename must restage under the new map)
     var writtenRen: Map[String, String] = Map.empty
@@ -2597,14 +2600,12 @@ object SnapshotTable {
         // staged files are stale — rewrite them under the new mapping.
         val renNow = renamesOf(schema)
         if (written.nonEmpty && writtenRen != renNow) {
-          f.delete(written.get._1, true)
+          written.get.discard()
           written = None
         }
         if (written.isEmpty) {
-          written = Some(writeDataDir(s, tableDir, toPhysical(df, schema),
-            uniq, bucket, partitionBy,
-            partSpread = partitionedWriteSpread(s),
-            bloomCols = bloomPhysCols(schema), mapKeys = mapStatDecls(schema)))
+          written = Some(writeDataDir(s, tableDir, df, schema, bucket,
+            partitionBy, partSpread = partitionedWriteSpread(s)))
           writtenRen = renNow
         }
         val base = if (overwrite) Seq.empty
@@ -2636,7 +2637,7 @@ object SnapshotTable {
         // (dropped by a row-removing op) stays
         // unknown — merging against an incomplete history would
         // undercount silently.
-        val batchNdv = written.get._3
+        val batchNdv = written.get.ndv
         val ndv =
           if (overwrite || prevManifest.forall(_.entries.isEmpty)) batchNdv
           else {
@@ -2664,7 +2665,7 @@ object SnapshotTable {
                       statKind(fl.dataType).isDefined)
                   // a batch that wrote NO files appended no values —
                   // the carried sketch stays exact regardless
-                  if (inBatch && written.get._2.nonEmpty) None
+                  if (inBatch && written.get.entries.nonEmpty) None
                   else Some(c -> sk)
               }
             }
@@ -2672,12 +2673,12 @@ object SnapshotTable {
               !carried.contains(c) && !prevCols.contains(c) }
           }
         // constraints are table properties: they survive overwrites
-        Some(Prepared(base ++ written.get._2, schema, txns, outBucket, dels,
+        Some(Prepared(base ++ written.get.entries, schema, txns, outBucket, dels,
           prevManifest.map(_.constraints).getOrElse(Map.empty),
           if (overwrite) Set.empty[String]
           else prevManifest.map(_.dropped).getOrElse(Set.empty),
           ndv, partBy = Some(partitionBy)))
-      }, () => written.foreach(w => f.delete(w._1, true))))
+      }, () => written.foreach(_.discard())))
     }
   }
 
@@ -2768,29 +2769,22 @@ object SnapshotTable {
       // mixed/superseded partition-scheme eras: the pack read+rewrite
       // assumes ONE current layout — relayout()/overwrite unifies
       if (!eraUniform(m0)) return None
-      val schema0 = m0.schema
+      val sc0 = storedSchema(m0.schema)
       val small = m0.entries.filter(_.status.getLen < smallFileBytes)
       if (small.size <= 1) return None
       val nOut = math.max(1, math.ceil(
         small.map(_.status.getLen).sum.toDouble / targetFileBytes).toInt)
-      val f = fs(s, tableDir)
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
       // hive layout packs PER PARTITION: the partitioned writer
       // re-clusters by value and emits packed files inside fresh
       // `<col>=<value>/` dirs — the maintenance a partitioned
       // streaming sink's small-file tail needs (one packed file per
       // partition per sweep; only files under `smallFileBytes` are
       // selected, so output stays near the small-file mass per value)
-      val (dataDir, newFiles, _) =
-        if (m0.partBy.nonEmpty) writeDataDir(s, tableDir,
-          toPhysical(relationFor(s, tableDir, storedSchema(schema0), small,
-            partBy = m0.partBy), storedSchema(schema0)),
-          uniq, partitionBy = m0.partBy,
-          bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
-        else writeDataDir(s, tableDir,
-          toPhysical(relationFor(s, tableDir, storedSchema(schema0), small)
-            .repartition(nOut), storedSchema(schema0)), uniq,
-          bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      val packed = filesFrame(s, tableDir, m0, small, sc0)
+      val written =
+        if (m0.partBy.nonEmpty)
+          writeDataDir(s, tableDir, packed, sc0, partitionBy = m0.partBy)
+        else writeDataDir(s, tableDir, packed.repartition(nOut), sc0)
       val compacted = small.map(_.path).toSet
       beforePublishHook()
       Some(Plan(_.flatMap { m =>
@@ -2799,9 +2793,8 @@ object SnapshotTable {
         // the small files WITHOUT it — publishing would resurrect
         // the deleted rows)
         if (!compacted.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-        else Some(Prepared.of(m).copy(entries =
-          m.entries.filterNot(e => compacted.contains(e.path)) ++ newFiles))
-      }, () => f.delete(dataDir, true)))
+        else Some(Prepared.swap(m, compacted, written.entries))
+      }, written.discard))
     }
     commitLoop(s, tableDir, "compact", replan = false,
       kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
@@ -2830,7 +2823,7 @@ object SnapshotTable {
     def plan(m0: Manifest): Option[Plan] = {
       val (nBuckets, bucketCol) = m0.bucket.getOrElse(return None)
       if (m0.dels.nonEmpty) return None
-      val (schema0, es0) = (m0.schema, m0.entries)
+      val es0 = m0.entries
       // bucket id from the writer's `_%05d` file-name stamp; every
       // file of a bucketed manifest carries one by construction
       val idRe = """.*_(\d{5})\.[^/]*$""".r
@@ -2842,23 +2835,19 @@ object SnapshotTable {
       val affected = es0.groupBy(e => (e.part, bucketId(e)))
         .filter(_._2.size > 1).values.flatten.toSeq
       if (affected.isEmpty) return None
-      val f = fs(s, tableDir)
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      val sc0 = storedSchema(m0.schema)
       // the subset read reconstructs partition values (partBy) but
       // claims NO bucket partitioning (it is a plain row source for
       // the re-bucketing writer, which re-derives the ids)
-      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-        toPhysical(relationFor(s, tableDir, storedSchema(schema0), affected,
-          partBy = m0.partBy), storedSchema(schema0)),
-        uniq, bucket = Some((nBuckets, bucketCol)),
-        partitionBy = m0.partBy, bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+      val written = writeDataDir(s, tableDir,
+        filesFrame(s, tableDir, m0, affected, sc0), sc0,
+        bucket = Some((nBuckets, bucketCol)), partitionBy = m0.partBy)
       val packed = affected.map(_.path).toSet
       beforePublishHook()
       Some(Plan(_.flatMap { m =>
         if (!packed.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-        else Some(Prepared.of(m).copy(entries =
-          m.entries.filterNot(e => packed.contains(e.path)) ++ newFiles))
-      }, () => f.delete(dataDir, true)))
+        else Some(Prepared.swap(m, packed, written.entries))
+      }, written.discard))
     }
     commitLoop(s, tableDir, "compactBuckets", replan = false,
       kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
@@ -2934,28 +2923,23 @@ object SnapshotTable {
         else math.max(1, math.ceil(es0.map(_.status.getLen).sum.toDouble /
           (128L * 1024 * 1024)).toInt)
       val all = es0.map(_.path).toSet
-      val f = fs(s, tableDir)
-      val uniq = java.util.UUID.randomUUID.toString.take(8)
+      val sc0 = storedSchema(schema0)
       // hive layout: cluster WITHIN partitions (range by
       // (partition cols, z) — each output stripe is one value's
       // contiguous z-run) and hand the pre-shaped frame to the
       // partitioned writer untouched; flat tables are the
       // empty-partCols case of the same pipeline
       val clustered = graft.operators.LayoutOps.zClusterWithinN(
-        relationFor(s, tableDir, storedSchema(schema0), es0,
-          partBy = m0.partBy), m0.partBy, zCols, n)
-      // toPhysical is a pure projection — per-partition z-run order
-      // survives, so preShaped stays valid
-      val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-        toPhysical(clustered, storedSchema(schema0)),
-        uniq, partitionBy = m0.partBy, preShaped = true,
-        bloomCols = bloomPhysCols(schema0), mapKeys = mapStatDecls(schema0))
+        filesFrame(s, tableDir, m0, es0, sc0), m0.partBy, zCols, n)
+      // the writer's toPhysical is a pure projection — per-partition
+      // z-run order survives, so preShaped stays valid
+      val written = writeDataDir(s, tableDir, clustered, sc0,
+        partitionBy = m0.partBy, preShaped = true)
       beforePublishHook()
       Some(Plan(_.flatMap { m =>
         if (!all.subsetOf(m.paths.toSet) || m.dels.nonEmpty) None
-        else Some(Prepared.of(m).copy(entries =
-          m.entries.filterNot(e => all.contains(e.path)) ++ newFiles))
-      }, () => f.delete(dataDir, true)))
+        else Some(Prepared.swap(m, all, written.entries))
+      }, written.discard))
     }
     commitLoop(s, tableDir, "rewriteZorderedBy", replan = false,
       kind = Some("compact")) { (_, pm) => pm.flatMap(plan) }
@@ -3842,19 +3826,6 @@ object SnapshotTable {
     * manifest already in hand. */
   private def snapshotFrame(s: SparkSession, tableDir: String,
       m: Manifest): DataFrame = {
-    val (sc, es) = (m.schema, m.entries)
-    if (es.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-    // a table spanning partition-scheme ERAS ([[repartitionBy]]): one
-    // relation per era, each planned under ITS scheme (new-era files
-    // prune by directory, old-era files by the zone maps they carry for
-    // the same columns), deletion vectors subtracted per leg (hidden
-    // _metadata does not cross a Union), unioned by name
-    else if (m.mixedEras(es))
-      m.eraLegs(es).map { case (scheme, ees) =>
-        applyDels(s, tableDir,
-          relationFor(s, tableDir, sc, ees, partBy = scheme), m)
-      }.reduce(_.unionByName(_))
     // the zero-RPC plan: file list, sizes, schema, zone maps, row
     // counts/NDV (as catalog statistics), and bucket layout all from the
     // manifest — constant driver cost no matter how many files,
@@ -3863,10 +3834,12 @@ object SnapshotTable {
     // cardinalities; outstanding deletion vectors subtract as one
     // anti-join. An EVOLVED table whose entries all belong to one era
     // plans under that era's scheme (not necessarily the current one —
-    // new commits will be).
-    else applyDels(s, tableDir,
-      relationFor(s, tableDir, sc, es, m.bucket, withStats = Some(m),
-        partBy = m.eraScheme(m.eraOf(es.head))), m)
+    // new commits will be). A table spanning partition-scheme ERAS
+    // reads one leg per era and claims neither table-wide statistics
+    // nor a bucket layout for any leg.
+    val oneEra = !m.mixedEras(m.entries)
+    filesFrame(s, tableDir, m, m.entries, m.schema,
+      m.bucket.filter(_ => oneEra), withStats = oneEra)
   }
 
   /** MERGE (upsert + delete) as a new snapshot version: rows of the
@@ -4026,7 +3999,6 @@ object SnapshotTable {
       upserts: DataFrame, deleteKeys: DataFrame, key: String,
       txn: Option[(String, Long)]): Plan = {
     import org.apache.spark.sql.functions.{col, lit}
-    val f = fs(s, tableDir)
     // merging into a fresh (or empty-snapshot) table: the current state
     // is the empty relation in the upserts' schema
     val cur = m0.map(snapshotFrame(s, tableDir, _))
@@ -4039,7 +4011,6 @@ object SnapshotTable {
         .distinct(), Seq(key), "left_anti")
     val out = kept.unionByName(upserts)
     enforceConstraints(out, m0.map(_.constraints).getOrElse(Map.empty))
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
     // the full rewrite lands under LOGICAL names (marker indirections
     // end, like overwrite) but the table's Bloom DECLARATIONS carry —
     // taken from the MANIFEST schema by logical name, so the all-new
@@ -4049,20 +4020,24 @@ object SnapshotTable {
     // zone-map-only after every full merge until an explicit ANALYZE.
     val pubSchema = carryBloomDecls(stripPhys(storedSchema(out.schema)),
       m0.map(_.schema))
-    val (dataDir, newFiles, _) = writeDataDir(s, tableDir, out, uniq,
-      bloomCols = bloomPhysCols(pubSchema), mapKeys = mapStatDecls(pubSchema))
+    val written = writeDataDir(s, tableDir, out, pubSchema)
+    beforePublishHook()
     Plan({ pm =>
+      // conflict: the rewrite read m0's files, vectors and schema and
+      // validated against its constraints — a concurrent schema change
+      // would otherwise be undone by the published schema
       if (pm.map(_.entries) != m0.map(_.entries) ||
           pm.map(_.dels) != m0.map(_.dels) ||
-          pm.map(_.constraints) != m0.map(_.constraints)) None // conflict
+          pm.map(_.schema) != m0.map(_.schema) ||
+          pm.map(_.constraints) != m0.map(_.constraints)) None
       // rows updated/deleted: the cumulative NDV sketch cannot subtract
-      else Some(Prepared(newFiles, pubSchema,
+      else Some(Prepared(written.entries, pubSchema,
         txnMerge(pm.map(_.txns).getOrElse(Map.empty), txn),
         None, Seq.empty,
         pm.map(_.constraints).getOrElse(Map.empty),
         pm.map(_.dropped).getOrElse(Set.empty),
         Map.empty[String, Seq[Long]]))
-    }, () => f.delete(dataDir, true))
+    }, written.discard)
   }
 
   /** The selective merge plan against manifest `m0`: its rebase
@@ -4072,7 +4047,6 @@ object SnapshotTable {
       txn: Option[(String, Long)],
       touchedKeys: Option[Seq[Any]]): Plan = {
     import org.apache.spark.sql.functions._
-    val f = fs(s, tableDir)
     val (sc0, es0) = (storedSchema(m0.schema), m0.entries)
     // only the upserts are NEW rows; carried/kept rows already passed
     enforceConstraints(upserts, m0.constraints)
@@ -4086,16 +4060,13 @@ object SnapshotTable {
     // only the candidate files, making a small merge metadata-bound end
     // to end. Larger sets fall back to the keyed semi-join (identical
     // EqualTo semantics either way, nulls never match in both forms).
-    // One leg per partition-scheme era ([[repartitionBy]]): each era's
-    // files key-scan under their own layout.
-    val keyScan =
-      if (es0.isEmpty) // hive bootstrap: empty relation, one leg
-        relationFor(s, tableDir, sc0, es0, partBy = m0.partBy)
-          .select(input_file_name().as("__f"), col(key))
-      else m0.eraLegs(es0).map { case (scheme, ees) =>
-        relationFor(s, tableDir, sc0, ees, partBy = scheme)
-          .select(input_file_name().as("__f"), col(key))
-      }.reduce(_.unionByName(_))
+    // Each partition-scheme era's files key-scan under their own layout
+    // ([[filesFrame]]); the hive bootstrap of an EMPTY table scans one
+    // empty relation (input_file_name needs a file source below it).
+    val keyScan = (
+      if (es0.isEmpty) relationFor(s, tableDir, sc0, es0, partBy = m0.partBy)
+      else filesFrame(s, tableDir, m0, es0, sc0)
+    ).select(input_file_name().as("__f"), col(key))
     // a caller-supplied COMPLETE key set (the keyed FOLLOW apply, which
     // already aggregated its feed per key) skips the touched-set job;
     // nulls are excluded there, which is behavior-identical — a NULL
@@ -4110,23 +4081,14 @@ object SnapshotTable {
       else if (smallSet.length <= 1024)
         keyScan.filter(col(key).isin(smallSet.toIndexedSeq: _*))
       else keyScan.join(touched, Seq(key), "left_semi")
-    val affectedPaths = matched
-      .select(col("__f")).distinct()
-      .collect().map(r => new HPath(r.getString(0)).toUri.getPath).toSet
-    val (affected, carried) = es0.partition(e =>
-      affectedPaths.contains(e.status.getPath.toUri.getPath))
+    val affected = affectedFiles(matched.select(col("__f")), es0)
     // rows to rewrite: the affected files' survivors + every upsert (an
     // untouched file cannot contain a touched key BY CONSTRUCTION of
     // the membership scan, so survivors elsewhere stay on disk as-is)
     // affected files read under THEIR era's layout; the rewrite
     // re-lands under the CURRENT scheme (incremental era migration,
     // the updateWhere rule)
-    val base =
-      if (affected.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc0)
-      else m0.eraLegs(affected).map { case (scheme, ees) =>
-        relationFor(s, tableDir, sc0, ees, partBy = scheme)
-      }.reduce(_.unionByName(_))
+    val base = filesFrame(s, tableDir, m0, affected, sc0)
     // survivors: rows whose key is NOT touched. One anti-join against
     // the union of upsert + delete keys — the same `touched` set the
     // membership scan used — instead of two sequential anti-joins with
@@ -4148,15 +4110,13 @@ object SnapshotTable {
          else base.filter(col(key).isNull ||
            !col(key).isin(keptSet.toIndexedSeq: _*)))
       else base.join(touched, Seq(key), "left_anti")
-    val uniq = java.util.UUID.randomUUID.toString.take(8)
     // a hive-partitioned table's rewrite re-lands under its directories
     // (an upsert that CHANGES a row's partition value migrates it to
     // the new value's dir naturally — the writer re-clusters by value)
-    val (dataDir, newFiles, _) = writeDataDir(s, tableDir,
-      toPhysical(kept.unionByName(upserts, allowMissingColumns = true)
-        .select(sc0.fieldNames.map(col).toSeq: _*), sc0), uniq,
-      partitionBy = m0.partBy, bloomCols = bloomPhysCols(sc0), mapKeys = mapStatDecls(sc0))
-    val carriedPaths = carried.map(_.path).toSet
+    val written = writeDataDir(s, tableDir,
+      kept.unionByName(upserts, allowMissingColumns = true)
+        .select(sc0.fieldNames.map(col).toSeq: _*), sc0,
+      partitionBy = m0.partBy)
     beforePublishHook()
     Plan(_.flatMap { m =>
       // serializability: the merge planned against m0's EXACT file and
@@ -4166,13 +4126,11 @@ object SnapshotTable {
       // not validated against it) invalidates the plan
       if (m.entries != m0.entries || m.dels != m0.dels ||
         m.constraints != m0.constraints) None
-      else Some(Prepared.of(m).copy(
-        entries = m.entries.filter(e => carriedPaths.contains(e.path))
-          ++ newFiles,
-        txns = txnMerge(m.txns, txn),
-        // rows updated/deleted: NDV unknown (no sketch subtraction)
-        ndv = Map.empty))
-    }, () => f.delete(dataDir, true))
+      else Some(Prepared.swap(m, affected.map(_.path).toSet, written.entries)
+        .copy(txns = txnMerge(m.txns, txn),
+          // rows updated/deleted: NDV unknown (no sketch subtraction)
+          ndv = Map.empty))
+    }, written.discard)
   }
 
   /** Change feed between two published versions — every row added or
@@ -4233,9 +4191,8 @@ object SnapshotTable {
       vs.filter(v => v > v1.getOrElse(0) && v <= v2) == Seq(v2)
     def tag(df: DataFrame, t: String): DataFrame =
       df.select(lit(t).as("change_type") +: df.columns.toIndexedSeq.map(col): _*)
-    def emptyChanges: DataFrame = tag(s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc), "insert")
-      .filter(lit(false))
+    def emptyChanges: DataFrame =
+      tag(filesFrame(s, tableDir, m2, Nil, sc), "insert").filter(lit(false))
     if (v1 == Some(v2)) return emptyChanges
     val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
     val paths2 = m2.paths.toSet
@@ -4247,10 +4204,10 @@ object SnapshotTable {
       val added = m2.entries.filterNot(e => paths1.contains(e.path))
       if (added.isEmpty) emptyChanges
       // era-aware: a range spanning a repartitionBy adds files under
-      // BOTH schemes — each leg reads under its own layout
-      else tag(m2.eraLegs(added).map { case (scheme, ees) =>
-        relationFor(s, tableDir, sc, ees, partBy = scheme)
-      }.reduce(_.unionByName(_)), "insert")
+      // BOTH schemes — each leg reads under its own layout. The vectors
+      // are unchanged along the chain, so none points into an added file
+      else tag(filesFrame(s, tableDir, m2, added, sc, withDels = false),
+        "insert")
     } else {
       // a rewrite (or delete) happened in between: exact multiset
       // diff, both versions ALIGNED to toV's column set so evolution
@@ -4289,22 +4246,19 @@ object SnapshotTable {
       // scan is plan-wide, but at that scale affected ~ carried).
       val distributedDelDiff = symDels.nonEmpty &&
         symDels.map(_.rows.getOrElse(0L)).sum > delDiffCollectRows
+      lazy val changedVecPaths =
+        relationFor(s, tableDir, delSchema, symDels)
+          .select("__path").distinct()
       val delsChangedPaths: Set[String] =
         if (symDels.isEmpty || distributedDelDiff) Set.empty
-        else relationFor(s, tableDir, delSchema, symDels)
-          .select("__path").distinct().collect()
-          .map(_.getString(0)).toSet
+        else changedVecPaths.collect().map(_.getString(0)).toSet
       val carriedPaths = paths1.intersect(paths2)
       val affected: Set[String] =
         (paths1 -- paths2) ++ (paths2 -- paths1) ++
           carriedPaths.intersect(delsChangedPaths)
       if (affected.isEmpty && !distributedDelDiff) return emptyChanges
-      lazy val changedVecPaths =
-        relationFor(s, tableDir, delSchema, symDels)
-          .select("__path").distinct()
       def readUnder(m: Option[Manifest]): DataFrame = m match {
-        case None => s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+        case None => filesFrame(s, tableDir, m2, Nil, sc)
         case Some(mv) =>
           val osc = storedSchema(mv.schema)
           val es = mv.entries.filter(e => affected.contains(e.path))
@@ -4312,40 +4266,19 @@ object SnapshotTable {
             if (!distributedDelDiff) Nil
             else mv.entries.filter(e => carriedPaths.contains(e.path))
           if (es.isEmpty && carried.isEmpty)
-            return s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              stripPhys(sc))
-          // era-aware ([[repartitionBy]]): each scheme era reads
-          // under its own directory layout, dels subtracted per
-          // leg (hidden _metadata does not cross a Union)
-          def eraRead(ees0: Seq[FileEntry]): DataFrame =
-            mv.eraLegs(ees0).map { case (scheme, ees) =>
-              applyDels(s, tableDir,
-                relationFor(s, tableDir, osc, ees, partBy = scheme),
-                mv)
-            }.reduce(_.unionByName(_))
-          // the distributed carried leg: positional identity and
-          // del subtraction per era leg, then ONE semi-join keeps
-          // only files whose vector coverage changed
-          def carriedRead(ees0: Seq[FileEntry]): DataFrame = {
-            val legs = mv.eraLegs(ees0).map { case (scheme, ees) =>
-              val base0 = relationFor(s, tableDir, osc, ees,
-                partBy = scheme)
-              val withMeta = base0.select(
-                col("_metadata.file_path").as("__path"),
-                col("_metadata.row_index").as("__pos"), col("*"))
-              val live =
-                if (mv.dels.isEmpty) withMeta
-                else withMeta.join(delFrame(s, tableDir, mv),
-                  Seq("__path", "__pos"), "left_anti")
-              live
-            }.reduce(_.unionByName(_))
-            legs.join(changedVecPaths, Seq("__path"), "left_semi")
-              .drop("__path", "__pos")
-          }
-          val direct = if (es.isEmpty) None else Some(eraRead(es))
+            return filesFrame(s, tableDir, mv, Nil, stripPhys(sc))
+          // each scheme era reads under its own directory layout, dels
+          // subtracted ([[filesFrame]]); the distributed carried leg
+          // keeps the positional identity, and ONE semi-join keeps only
+          // files whose vector coverage changed
+          val direct =
+            if (es.isEmpty) None else Some(filesFrame(s, tableDir, mv, es, osc))
           val semi =
-            if (carried.isEmpty) None else Some(carriedRead(carried))
+            if (carried.isEmpty) None
+            else Some(filesFrame(s, tableDir, mv, carried, osc,
+                positions = true)
+              .join(changedVecPaths, Seq("__path"), "left_semi")
+              .drop("__path", "__pos"))
           val base = (direct.toSeq ++ semi.toSeq)
             .reduce(_.unionByName(_))
           base.select(sc.fields.toIndexedSeq.map { f =>
@@ -4427,19 +4360,17 @@ object SnapshotTable {
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     val all = versions(s, tableDir)
-    val sc2 = storedSchema(snapshotIn(s, tableDir, all, toV).getOrElse(
+    val (_, m2) = snapshotIn(s, tableDir, all, toV).getOrElse(
       throw new IllegalArgumentException(
-        s"no published version <= $toV in $tableDir"))._2.schema)
+        s"no published version <= $toV in $tableDir"))
+    val sc2 = storedSchema(m2.schema)
     val vs = all.filter(v => v > fromV && v <= toV)
-    def emptySlice: DataFrame = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(
-        StructField("change_type",
-          org.apache.spark.sql.types.StringType, nullable = false) +:
-        stripPhys(sc2).fields.toSeq :+
-        StructField("_commit_version",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-    if (vs.isEmpty) return emptySlice
+    if (vs.isEmpty) return filesFrame(s, tableDir, m2, Nil, StructType(
+      StructField("change_type",
+        org.apache.spark.sql.types.StringType, nullable = false) +:
+      stripPhys(sc2).fields.toSeq :+
+      StructField("_commit_version",
+        org.apache.spark.sql.types.LongType, nullable = false)))
     ((fromV +: vs.dropRight(1)) zip vs).map { case (a, b) =>
       val df = readChanges(s, tableDir, a, b)
       // relabel b's logical names to toV's: logical identity first
@@ -4607,12 +4538,10 @@ object SnapshotTable {
       s"snapshot stream: $tableDir was REWRITTEN (overwrite/merge/compaction/" +
         s"delete) between versions $fromV and $toV — append semantics broken; " +
         "pass option ignoreChanges=true to stream new/rewritten files anyway")
-    val added = m2.entries.filterNot(e => paths1.contains(e.path))
-    if (added.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-    else m2.eraLegs(added).map { case (scheme, ees) =>
-      relationFor(s, tableDir, sc, ees, partBy = scheme)
-    }.reduce(_.unionByName(_))
+    // the added files' rows as written: under ignoreChanges a rewrite's
+    // survivors re-emit, and vectors are not subtracted
+    filesFrame(s, tableDir, m2,
+      m2.entries.filterNot(e => paths1.contains(e.path)), sc, withDels = false)
   }
 
   /** Metadata-only row count of a snapshot: the per-file row counts the

@@ -101,6 +101,34 @@ class SnapshotGovernanceSpec extends GraftSpec {
     assert(ids(t) == Set(1L, 2L), "the racing commit must survive")
   }
 
+  test("a full-rewrite merge re-plans over a concurrent schema change") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-gov5b-").toString
+    val t = s"$dir/tbl"
+    SnapshotTable.commit(spark, t,
+      Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"), overwrite = false)
+    // an outstanding deletion vector routes the merge to the full rewrite
+    SnapshotTable.deleteWhere(spark, t, col("id") === 3L)
+    // a schema-only commit (a Bloom declaration) in the merge's race
+    // window: the rewrite planned against the old schema, so publishing
+    // it would silently undo the declaration
+    var fired = false
+    SnapshotTable.beforePublishHook = () =>
+      if (!fired) {
+        fired = true
+        SnapshotTable.setBloomColumns(spark, t, Seq("id"))
+      }
+    try SnapshotTable.merge(spark, t, Seq((2L, 21L)).toDF("id", "v"),
+      Seq.empty[Long].toDF("id"), "id")
+    finally SnapshotTable.beforePublishHook = () => ()
+    assert(fired)
+    assert(SnapshotTable.describeColumns(spark, t)
+      .filter(col("column") === "id").select("bloom").head().getBoolean(0),
+      "the concurrent Bloom declaration must survive the merge")
+    assert(SnapshotTable.readAsOf(spark, t, Int.MaxValue).as[(Long, Long)]
+      .collect().toMap == Map(1L -> 10L, 2L -> 21L))
+  }
+
   test("commitClustered + zone maps: a key-band read plans a file subset") {
     val dir = java.nio.file.Files.createTempDirectory("graft-gov6-").toString
     val t = s"$dir/tbl"

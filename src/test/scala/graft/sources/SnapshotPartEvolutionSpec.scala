@@ -157,6 +157,16 @@ class SnapshotPartEvolutionSpec extends GraftSpec {
     assert(snap.count() == 198)
     assert(snap.filter(col("k").isin(10L, 110L)).count() == 0)
     assert(SnapshotTable.rowCount(spark, t, Int.MaxValue).contains(198L))
+    // the change feed's DISTRIBUTED carried leg (collect threshold 0)
+    // across both eras: positional identity and vectors per era leg
+    val vDel = SnapshotTable.versions(spark, t).last
+    val savedRows = SnapshotTable.delDiffCollectRows
+    try {
+      SnapshotTable.delDiffCollectRows = 0L
+      assert(SnapshotTable.readChanges(spark, t, vDel - 1, vDel).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet ==
+        Set(("delete", 10L), ("delete", 110L)))
+    } finally SnapshotTable.delDiffCollectRows = savedRows
     // absorb the vectors: only the 2 covered files rewritten, each
     // re-landing under the current hive scheme
     assert(SnapshotTable.absorbDeletes(spark, t).nonEmpty)
@@ -226,6 +236,14 @@ class SnapshotPartEvolutionSpec extends GraftSpec {
       == (100 until 200).map(_.toLong).sum)
     val genesis = SnapshotTable.readChanges(spark, t, 0, 3)
     assert(genesis.count() == 200)
+    // the snapshot stream source's micro-batch reads each era's added
+    // files under its own layout too
+    val batch = SnapshotTable.streamBatch(spark, t, 1, 3, ignoreChanges = false)
+    assert(batch.count() == 100)
+    assert(batch.agg(sum(col("k"))).head().getLong(0)
+      == (100 until 200).map(_.toLong).sum)
+    assert(SnapshotTable.streamBatch(spark, t, 0, 3, ignoreChanges = false)
+      .count() == 200)
     // clone carries the era history (a mixed-era clone stays readable)
     val t2 = s"$dir/clone"
     SnapshotTable.cloneTable(spark, t, t2)
