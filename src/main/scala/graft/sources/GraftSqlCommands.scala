@@ -200,17 +200,8 @@ class GraftSqlParser(delegate: ParserInterface,
           "(spark.sql.extensions installs one)"))
       val fromV = from.toInt
       val toV = Option(to).map(_.toInt).getOrElse(Int.MaxValue)
-      if (tiled != null) {
-        require(fromV <= toV, s"GRAFT CHANGES: FROM $fromV > TO $toV")
-        val vs = SnapshotTable.versions(s, dir)
-        require(fromV == 0 || vs.exists(_ <= fromV),
-          s"GRAFT CHANGES: version $fromV expired in $dir")
-        SnapshotTable.streamChangeBatch(s, dir, fromV,
-          if (toV == Int.MaxValue) vs.lastOption.getOrElse(0) else toV)
-          .queryExecution.logical
-      } else
-        SnapshotTable.readChanges(s, dir, fromV, toV)
-          .queryExecution.logical
+      (if (tiled != null) SnapshotTable.streamChangeBatch(s, dir, fromV, toV)
+       else SnapshotTable.readChanges(s, dir, fromV, toV)).queryExecution.logical
     case OptimizeZorderRe(dir, cols, n) =>
       GraftOptimizeZorderCommand(dir,
         cols.split(",").toSeq.map(_.trim),
@@ -890,7 +881,8 @@ case class GraftTagListCommand(tableDir: String)
 /** `GRAFT FOLLOW '<src>' CURSOR '<path>' INTO '<dest>' [KEY (col)]` —
   * one incremental consumption step, SQL edition: reads the change
   * feed from the durable cursor to the current latest
-  * ([[SnapshotTable.followChanges]]), applies it to `<dest>` as ONE
+  * ([[SnapshotTable.followRange]], the range-taking form of
+  * [[SnapshotTable.followChanges]]), applies it to `<dest>` as ONE
   * idempotent commit (writer = the cursor's stable identity, version
   * = the consumed `to` — so a crash between apply and cursor advance
   * replays as a no-op: exactly-once end to end, the composition
@@ -917,11 +909,13 @@ case class GraftFollowCommand(tableDir: String, cursorPath: String,
     AttributeReference("from_version", IntegerType, nullable = false)(),
     AttributeReference("to_version", IntegerType, nullable = false)())
   override def run(s: SparkSession): Seq[Row] =
-    SnapshotTable.followChanges(s, tableDir, cursorPath) { (feed, from, to) =>
+    SnapshotTable.followRange(s, tableDir, cursorPath) { range =>
       import org.apache.spark.sql.functions.col
+      val (from, to) = (range.fromV, range.toV)
+      lazy val feed = range.changes()
       key match {
         case None =>
-          if (!SnapshotTable.isAppendChain(s, tableDir, from, to))
+          if (!range.appendChain)
             throw new IllegalStateException(
               s"GRAFT FOLLOW: versions ($from, $to] of $tableDir contain a " +
                 "rewrite/DELETE/UPDATE — the feed is not inserts-only, and a " +

@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.StructType
   * with the idempotent sink. A rewrite under the stream (overwrite /
   * merge / compaction) breaks append semantics and FAILS the query
   * unless `ignoreChanges=true`, which streams new/rewritten files and
-  * may re-emit rewritten survivors (the documented Delta contract).
+  * may re-emit rewritten survivors (the documented Delta contract),
+  * never a row deleted in between.
   *
   * The provider is also the table format's STANDARD batch doorway —
   * the full DataFrame reader/writer API works against it:
@@ -256,11 +257,23 @@ class SnapshotStreamSource(ctx: SQLContext, tableDir: String,
   }
 
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    val fromV = start.map(ver).getOrElse(startFloor) // fresh: the floor
+    val toV = ver(end)
+    // fresh: the floor — capped at the end, since a restart re-runs its
+    // last batch with the CURRENT floor option, which may lie above it
+    // (the offset wins: that batch is empty, not a backwards range)
+    val fromV = math.min(start.map(ver).getOrElse(startFloor), toV)
+    // the change feed: every commit's row-level changes under its own
+    // `_commit_version` (the Delta CDF streaming shape), one per-commit
+    // tile each ([[SnapshotTable.streamChangeBatch]]) — a batch spanning
+    // several commits still reports each one's own changes, and an
+    // UPDATE commit's legs arrive as paired update images. Restart
+    // replays `(fromV, toV]` deterministically from the checkpointed
+    // version offset.
     val rel0 =
-      if (changeFeed) changeBatch(fromV, ver(end))
+      if (changeFeed)
+        SnapshotTable.streamChangeBatch(ctx.sparkSession, tableDir, fromV, toV)
       else SnapshotTable.streamBatch(ctx.sparkSession, tableDir,
-        fromV, ver(end), ignoreChanges)
+        fromV, toV, ignoreChanges)
     val rel = align(rel0)
     // MicroBatchExecution requires an isStreaming plan; the shim is the
     // one blessed constructor for it
@@ -278,25 +291,6 @@ class SnapshotStreamSource(ctx: SQLContext, tableDir: String,
     }
     rel0.select(cols: _*)
   }
-
-  /** One CHANGE-FEED micro-batch: the row-level changes of every
-    * published version in `(fromV, toV]`, each tagged with its
-    * `change_type` ('insert'/'delete'; an UPDATE commit's legs arrive
-    * paired as 'update_preimage'/'update_postimage' — the per-commit
-    * tiling guarantees single-commit ranges) and `_commit_version` — the
-    * Delta CDF streaming shape. Versions tile exactly
-    * (`fromV→v1, v1→v2, …`), so a batch spanning several commits
-    * (admission-capped by `maxVersionsPerTrigger`) reports each
-    * commit's own changes under its own version: append chains plan
-    * as pure added-file scans, DELETE/UPDATE/MERGE commits as the
-    * honest multiset diff (compaction correctly contributes an EMPTY
-    * slice), and a slice predating a metadata-only rename is relabeled
-    * by physical storage name, never null-filled
-    * ([[SnapshotTable.streamChangeBatch]]). Restart replays the same
-    * `(fromV, toV]` deterministically from the checkpointed version
-    * offset. */
-  private def changeBatch(fromV: Int, toV: Int): DataFrame =
-    SnapshotTable.streamChangeBatch(ctx.sparkSession, tableDir, fromV, toV)
 
   override def stop(): Unit = ()
 }

@@ -80,7 +80,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    insert/delete deltas, zero-compute on append chains),
   *    [[followChanges]] (durable-cursor exactly-once consumption), and
   *    a full streaming source ([[SnapshotSourceProvider]] —
-  *    `spark.readStream` with version offsets and admission control);
+  *    `spark.readStream` with version offsets and admission control),
+  *    every one a thin call on one version range ([[ChangeRange]]: one
+  *    `_commits` listing, each manifest decoded once);
   *    [[history]] and [[rowCount]] answer inspection queries from
   *    manifests alone.
   *  - At 100 TB the manifest stays tiny (one line per data file);
@@ -94,6 +96,11 @@ object SnapshotTable {
     * instrumentation hook for the O(1)-reads-per-commit contract
     * (see `SnapshotMaintenanceSpec`). */
   private[graft] val manifestReads =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** `_commits` listings ([[versions]] calls) since process start — the
+    * twin instrument of [[manifestReads]] (see `SnapshotRangeReadsSpec`). */
+  private[graft] val commitListings =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   private val MaxCommitAttempts = 64
@@ -110,6 +117,7 @@ object SnapshotTable {
     * numbers above 99999 lose their zero padding but stay fully
     * visible — parsing is numeric, so nothing caps at 100k commits. */
   def versions(s: SparkSession, tableDir: String): Seq[Int] = {
+    commitListings.incrementAndGet()
     val f = fs(s, tableDir)
     val cd = commitsDir(tableDir)
     if (!f.exists(cd)) Seq.empty
@@ -137,18 +145,17 @@ object SnapshotTable {
   }
 
   /** The greatest version of `vs` (a [[versions]] listing) at or below
-    * `asOf`, with its manifest — one decode; None when there is none.
-    * THE version resolver: the commit loop and every reader go through
-    * it (or [[snapshotAt]], which lists first). */
-  private def snapshotIn(s: SparkSession, tableDir: String, vs: Seq[Int],
-      asOf: Int): Option[(Int, Manifest)] =
-    vs.takeWhile(_ <= asOf).lastOption.map(v => v -> readManifest(s, tableDir, v))
+    * `asOf`; None when there is none. THE version resolver: the commit
+    * loop and every reader go through it, via [[snapshotAt]] or a
+    * [[ChangeRange]]. */
+  private def floorIn(vs: Seq[Int], asOf: Int): Option[Int] =
+    vs.takeWhile(_ <= asOf).lastOption
 
-  /** [[snapshotIn]] over a fresh listing: one `_commits` listing and one
-    * manifest decode. */
+  /** [[floorIn]] over a fresh listing, with the version's manifest: one
+    * `_commits` listing and one manifest decode. */
   private def snapshotAt(s: SparkSession, tableDir: String,
       asOf: Int = Int.MaxValue): Option[(Int, Manifest)] =
-    snapshotIn(s, tableDir, versions(s, tableDir), asOf)
+    floorIn(versions(s, tableDir), asOf).map(v => v -> readManifest(s, tableDir, v))
 
   /** [[snapshotAt]] for operations that need a published version. */
   private def requireSnapshot(s: SparkSession, tableDir: String, op: String,
@@ -4133,25 +4140,9 @@ object SnapshotTable {
     }, written.discard)
   }
 
-  /** Change feed between two published versions — every row added or
-    * removed going `fromV` → `toV`, tagged `change_type`
-    * ('insert' / 'delete'; a single-commit UPDATE range pairs them as
-    * 'update_preimage' / 'update_postimage' — see below), under
-    * `toV`'s schema. The consumer shape
-    * for incremental downstreams (MV refresh, index append, CDC
-    * export) that must not rescan the table.
-    *
-    * Cost model: when the older file set survives intact in the newer
-    * manifest (an append CHAIN — the streaming-sink common case), the
-    * delta is EXACTLY the added files: zero compute, the scan reads
-    * only the new data. Any rewrite in between (overwrite, merge,
-    * compaction) falls back to a multiset diff (`exceptAll` both ways
-    * — two keyed shuffles, the honest cost of diffing a rewrite), so
-    * row-preserving rewrites like compaction correctly produce an
-    * EMPTY feed rather than a spurious full-table churn. */
-  /** Changed-vector ROW threshold above which [[readChanges]] keeps
-    * the carried-file / changed-coverage intersection DISTRIBUTED (a
-    * left-semi join of the diff legs against the changed vector
+  /** Changed-vector ROW threshold above which [[ChangeRange.changes]]
+    * keeps the carried-file / changed-coverage intersection DISTRIBUTED
+    * (a left-semi join of the diff legs against the changed vector
     * paths) instead of collecting the distinct paths to the driver.
     * The collect is right for the MOR common case (vector files are
     * tiny); a pathological DELETE touching millions of files would
@@ -4159,24 +4150,68 @@ object SnapshotTable {
     * conf: the spec forces the distributed path on a small table. */
   private[sources] var delDiffCollectRows: Long = 10000L
 
-  def readChanges(s: SparkSession, tableDir: String, fromV: Int,
-      toV: Int): DataFrame = {
+  /** A change-feed version range `(fromV, toV]`, the one value every
+    * change-feed entry point derives from ([[readChanges]],
+    * [[streamChangeBatch]] and `GRAFT CHANGES … TILED`,
+    * [[followChanges]], [[streamBatch]]). Built from ONE `_commits`
+    * listing: the `fromV` floor and the `toV` snapshot resolve once, an
+    * expired `fromV` refuses here and nowhere else, and each manifest
+    * decodes at most once (memoized by version; the per-commit
+    * [[tiles]] share the listing and the memo). */
+  private[sources] final class ChangeRange private[SnapshotTable] (
+      s: SparkSession, tableDir: String, listing: Seq[Int],
+      val fromV: Int, val toV: Int, op: String,
+      memo: scala.collection.mutable.Map[Int, Manifest] =
+        scala.collection.mutable.HashMap.empty[Int, Manifest]) {
     import org.apache.spark.sql.functions._
-    require(fromV <= toV, s"readChanges: fromV $fromV > toV $toV")
-    val vs = versions(s, tableDir)
-    val from = snapshotIn(s, tableDir, vs, fromV)
-    val (v1, m1) = (from.map(_._1), from.map(_._2))
+    require(fromV <= toV, s"$op: fromV $fromV > toV $toV")
+    private val v1 = floorIn(listing, fromV)
     // fromV = 0 means "from genesis" (everything is an insert); any
     // OTHER unresolvable fromV is an EXPIRED version — vacuum dropped
     // the baseline, so the delta is uncomputable and reporting the
     // whole table as inserts would silently corrupt an incremental
     // consumer. Refuse, like any CDF over a vacuumed range.
-    require(fromV == 0 || v1.nonEmpty,
-      s"readChanges: version $fromV expired (retained: ${vs.headOption.getOrElse("-")}..${vs.lastOption.getOrElse("-")}) in $tableDir")
-    val (v2, m2) = snapshotIn(s, tableDir, vs, toV)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no published version <= $toV in $tableDir"))
-    val sc = storedSchema(m2.schema)
+    require(fromV == 0 || v1.nonEmpty, s"$op: version $fromV expired (retained: " +
+      s"${listing.headOption.getOrElse("-")}..${listing.lastOption.getOrElse("-")}) in $tableDir")
+    private val v2 = floorIn(listing, toV).getOrElse(throw
+      new IllegalArgumentException(s"$op: no published version <= $toV in $tableDir"))
+    private val commits = listing.filter(v => v > fromV && v <= toV)
+    private def manifest(v: Int): Manifest =
+      memo.getOrElseUpdate(v, readManifest(s, tableDir, v))
+    private lazy val m1 = v1.map(manifest)
+    private lazy val m2 = manifest(v2)
+    private lazy val paths1 = m1.fold(Set.empty[String])(_.paths.toSet)
+    private lazy val addedEntries =
+      m2.entries.filterNot(e => paths1.contains(e.path))
+
+    /** `toV`'s stored schema: the columns the feed serves. */
+    lazy val schema: StructType = storedSchema(m2.schema)
+
+    /** A pure APPEND CHAIN: every `fromV` file carried by reference and
+      * the deletion vectors untouched (a delete keeps the file set, so
+      * it must not pass; a rewrite renames files, so a net subset check
+      * is sound). Its delta is exactly the added files, inserts only. */
+    lazy val appendChain: Boolean = paths1.subsetOf(m2.paths.toSet) &&
+      m1.fold(Seq.empty[FileEntry])(_.dels) == m2.dels
+
+    /** The rows of the files `toV` holds and `fromV` did not, under
+      * `toV`'s deletion vectors, so a row added and deleted inside the
+      * range does not serve (no vector points into an append chain's
+      * added files). Each scheme era reads under its own layout. */
+    def added: DataFrame = filesFrame(s, tableDir, m2, addedEntries, schema,
+      withDels = !appendChain)
+
+    /** The per-commit sub-ranges `fromV→c1, c1→c2, …`. */
+    lazy val tiles: Seq[ChangeRange] =
+      ((fromV +: commits.dropRight(1)) zip commits).map { case (a, b) =>
+        new ChangeRange(s, tableDir, listing, a, b, op, memo) }
+
+    /** The deletion-vector files of exactly one side. */
+    private lazy val symDels: Seq[FileEntry] = {
+      val (d1, d2) = (m1.fold(Set.empty[FileEntry])(_.dels.toSet), m2.dels.toSet)
+      ((d1 diff d2) ++ (d2 diff d1)).toSeq
+    }
+
     // a range covering EXACTLY one commit whose recorded kind is
     // "update" ([[nextManifest]]'s `#kind:` stamp) serves its diff legs
     // as PAIRED update images — `update_preimage` / `update_postimage`,
@@ -4184,117 +4219,117 @@ object SnapshotTable {
     // can key the two sides of the UPDATE instead of treating it as an
     // unkeyed retract+assert. Multi-commit ranges keep insert/delete:
     // their diff is a NET multiset delta across unrelated commits, for
-    // which update pairing would be a false claim. The per-commit
-    // tiling of [[streamChangeBatch]] means the STREAMING feed always
-    // sees single-commit ranges, so every streamed UPDATE is paired.
-    val updatePair = m2.kind.contains("update") &&
-      vs.filter(v => v > v1.getOrElse(0) && v <= v2) == Seq(v2)
-    def tag(df: DataFrame, t: String): DataFrame =
+    // which update pairing would be a false claim. The streaming feed
+    // reads single-commit [[tiles]], so every streamed UPDATE is paired.
+    private lazy val updatePair =
+      m2.kind.contains("update") && commits == Seq(v2)
+
+    /** THE change-feed column alignment: `df`, read under manifest
+      * schema `own`, served under `target`'s columns — matched by
+      * LOGICAL name first (stable across rewrites), physical storage
+      * name second (stable across renames); a column `own` has under
+      * neither identity reads NULL, a widened one casts up. */
+    private def align(df: DataFrame, own: StructType,
+        target: StructType): DataFrame =
+      df.select(target.fields.toIndexedSeq.map { f =>
+        own.fields.find(_.name == f.name)
+          .orElse(own.fields.find(g => physName(g) == physName(f)))
+          .map(g => col(g.name).cast(f.dataType)
+            .as(f.name, org.apache.spark.sql.types.Metadata.empty))
+          .getOrElse(lit(null).cast(f.dataType).as(f.name))
+      }: _*)
+
+    private def tag(df: DataFrame, t: String): DataFrame =
       df.select(lit(t).as("change_type") +: df.columns.toIndexedSeq.map(col): _*)
-    def emptyChanges: DataFrame =
-      tag(filesFrame(s, tableDir, m2, Nil, sc), "insert").filter(lit(false))
-    if (v1 == Some(v2)) return emptyChanges
-    val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
-    val paths2 = m2.paths.toSet
-    if (paths1.subsetOf(paths2) &&
-      m1.map(_.dels).getOrElse(Seq.empty) == m2.dels) {
-      // pure append chain (same deletion-vector state — a delete
-      // commit keeps the file set and so must NOT take this path):
-      // the delta IS the added files
-      val added = m2.entries.filterNot(e => paths1.contains(e.path))
-      if (added.isEmpty) emptyChanges
-      // era-aware: a range spanning a repartitionBy adds files under
-      // BOTH schemes — each leg reads under its own layout. The vectors
-      // are unchanged along the chain, so none points into an added file
-      else tag(filesFrame(s, tableDir, m2, added, sc, withDels = false),
-        "insert")
-    } else {
-      // a rewrite (or delete) happened in between: exact multiset
-      // diff, both versions ALIGNED to toV's column set so evolution
-      // can't skew it, each under its OWN deletion vectors. The
-      // alignment reads each version under ITS OWN schema (whose
-      // physical markers are the valid mapping for ITS files — toV's
-      // markers may be gone if the in-between rewrite materialized a
-      // rename) and matches toV's columns by LOGICAL name first
-      // (stable across rewrites), physical storage name second
-      // (stable across renames); a column the old version had under
-      // neither identity reads NULL, a widened column casts up.
-      //
-      // O(CHANGED FILES), never O(table): a file carried through BY
-      // REFERENCE with unchanged deletion-vector coverage serves the
-      // IDENTICAL row multiset on both sides — it cancels in
-      // exceptAll exactly, so the diff legs read only the files the
-      // rewrite actually removed/added, plus carried files whose del
-      // coverage changed (their paths come from the symmetric-
-      // difference VECTOR files — tiny by the MOR-delete design). A
-      // 100 TB table whose UPDATE touched 0.1% of files diffs 0.2%
-      // of bytes.
-      val symDels: Seq[FileEntry] = {
-        val d1 = m1.map(_.dels.toSet).getOrElse(Set.empty)
-        val d2 = m2.dels.toSet
-        ((d1 union d2) -- (d1 intersect d2)).toSeq
-      }
-      // Carried files whose del coverage changed normally resolve
-      // DRIVER-side (distinct paths of the tiny changed-vector files
-      // — the MOR design). A pathological DELETE touching very many
-      // files would materialize very many path strings on the
-      // driver, so above [[delDiffCollectRows]] changed vector rows
-      // the intersection stays DISTRIBUTED instead: carried entries
-      // ride the diff legs and a LEFT SEMI join against the changed
-      // vector paths keeps only the files whose coverage moved —
-      // same multiset, zero driver materialization (the carried
-      // scan is plan-wide, but at that scale affected ~ carried).
-      val distributedDelDiff = symDels.nonEmpty &&
-        symDels.map(_.rows.getOrElse(0L)).sum > delDiffCollectRows
-      lazy val changedVecPaths =
-        relationFor(s, tableDir, delSchema, symDels)
-          .select("__path").distinct()
-      val delsChangedPaths: Set[String] =
-        if (symDels.isEmpty || distributedDelDiff) Set.empty
-        else changedVecPaths.collect().map(_.getString(0)).toSet
-      val carriedPaths = paths1.intersect(paths2)
-      val affected: Set[String] =
-        (paths1 -- paths2) ++ (paths2 -- paths1) ++
+
+    /** The [[readChanges]] feed of this range under `target`'s columns
+      * (default: `toV`'s); an empty range has the same schema. */
+    def changes(target: StructType = schema): DataFrame = {
+      lazy val none = align(filesFrame(s, tableDir, m2, Nil, schema), schema, target)
+      lazy val empty = tag(none, "insert").filter(lit(false))
+      if (commits.isEmpty) empty
+      else if (appendChain)
+        if (addedEntries.isEmpty) empty else tag(align(added, schema, target), "insert")
+      else {
+        // a rewrite (or delete) happened in between: exact multiset
+        // diff, both versions ALIGNED to `target` so evolution can't
+        // skew it, each under its OWN deletion vectors and read under
+        // its OWN schema, whose physical markers are the valid mapping
+        // for ITS files (toV's markers may be gone if the in-between
+        // rewrite materialized a rename).
+        //
+        // O(CHANGED FILES), never O(table): a file carried through BY
+        // REFERENCE with unchanged deletion-vector coverage serves the
+        // IDENTICAL row multiset on both sides and cancels exactly, so
+        // the diff legs read only the files the rewrite removed/added,
+        // plus carried files whose del coverage changed (their paths
+        // come from the symmetric-difference VECTOR files — tiny by the
+        // MOR-delete design). A 100 TB table whose UPDATE touched 0.1%
+        // of files diffs 0.2% of bytes.
+        //
+        // Those carried files normally resolve DRIVER-side (distinct
+        // paths of the changed-vector files). Above
+        // [[delDiffCollectRows]] changed vector rows the intersection
+        // stays DISTRIBUTED instead: carried entries ride the diff legs
+        // and a LEFT SEMI join against the changed vector paths keeps
+        // only the files whose coverage moved — same multiset, zero
+        // driver materialization.
+        val distributedDelDiff = symDels.nonEmpty &&
+          symDels.map(_.rows.getOrElse(0L)).sum > delDiffCollectRows
+        lazy val changedVecPaths =
+          relationFor(s, tableDir, delSchema, symDels).select("__path").distinct()
+        val delsChangedPaths: Set[String] =
+          if (symDels.isEmpty || distributedDelDiff) Set.empty
+          else changedVecPaths.collect().map(_.getString(0)).toSet
+        val paths2 = m2.paths.toSet
+        val carriedPaths = paths1.intersect(paths2)
+        val affected: Set[String] = (paths1 -- paths2) ++ (paths2 -- paths1) ++
           carriedPaths.intersect(delsChangedPaths)
-      if (affected.isEmpty && !distributedDelDiff) return emptyChanges
-      def readUnder(m: Option[Manifest]): DataFrame = m match {
-        case None => filesFrame(s, tableDir, m2, Nil, sc)
-        case Some(mv) =>
-          val osc = storedSchema(mv.schema)
-          val es = mv.entries.filter(e => affected.contains(e.path))
+        if (affected.isEmpty && !distributedDelDiff) return empty
+        def side(m: Manifest): DataFrame = {
+          val osc = storedSchema(m.schema)
+          val es = m.entries.filter(e => affected.contains(e.path))
           val carried =
             if (!distributedDelDiff) Nil
-            else mv.entries.filter(e => carriedPaths.contains(e.path))
-          if (es.isEmpty && carried.isEmpty)
-            return filesFrame(s, tableDir, mv, Nil, stripPhys(sc))
+            else m.entries.filter(e => carriedPaths.contains(e.path))
           // each scheme era reads under its own directory layout, dels
           // subtracted ([[filesFrame]]); the distributed carried leg
-          // keeps the positional identity, and ONE semi-join keeps only
-          // files whose vector coverage changed
+          // keeps the positional identity for ONE semi-join
           val direct =
-            if (es.isEmpty) None else Some(filesFrame(s, tableDir, mv, es, osc))
+            if (es.isEmpty) None else Some(filesFrame(s, tableDir, m, es, osc))
           val semi =
             if (carried.isEmpty) None
-            else Some(filesFrame(s, tableDir, mv, carried, osc,
-                positions = true)
+            else Some(filesFrame(s, tableDir, m, carried, osc, positions = true)
               .join(changedVecPaths, Seq("__path"), "left_semi")
               .drop("__path", "__pos"))
-          val base = (direct.toSeq ++ semi.toSeq)
-            .reduce(_.unionByName(_))
-          base.select(sc.fields.toIndexedSeq.map { f =>
-            val src = osc.fields.find(_.name == f.name)
-              .orElse(osc.fields.find(g => physName(g) == physName(f)))
-            src.map(g => col(g.name).cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-          }: _*)
+          align((direct.toSeq ++ semi.toSeq).reduceOption(_.unionByName(_))
+            .getOrElse(filesFrame(s, tableDir, m, Nil, osc)), osc, target)
+        }
+        diffLegs(s, side(m2), m1.fold(none)(side),
+          if (updatePair) "update_postimage" else "insert",
+          if (updatePair) "update_preimage" else "delete")
       }
-      val a = readUnder(m1)
-      val b = readUnder(Some(m2))
-      diffLegs(s, b, a,
-        if (updatePair) "update_postimage" else "insert",
-        if (updatePair) "update_preimage" else "delete")
     }
   }
+
+  /** Change feed between two published versions — every row added or
+    * removed going `fromV` → `toV`, tagged `change_type`
+    * ('insert' / 'delete'; a single-commit UPDATE range pairs them as
+    * 'update_preimage' / 'update_postimage'), under `toV`'s schema:
+    * the consumer shape for incremental downstreams (MV refresh, index
+    * append, CDC export) that must not rescan the table.
+    *
+    * Cost model: when the older file set survives intact in the newer
+    * manifest (an append CHAIN — the streaming-sink common case), the
+    * delta is EXACTLY the added files: zero compute, the scan reads
+    * only the new data. Any rewrite in between (overwrite, merge,
+    * compaction) falls back to a multiset diff ([[diffLegs]]), so
+    * row-preserving rewrites like compaction correctly produce an
+    * EMPTY feed rather than a spurious full-table churn. */
+  def readChanges(s: SparkSession, tableDir: String, fromV: Int,
+      toV: Int): DataFrame =
+    new ChangeRange(s, tableDir, versions(s, tableDir), fromV, toV,
+      "readChanges").changes()
 
   /** Both multiset-diff legs from ONE shared aggregation:
     * `b.exceptAll(a)` tagged `postTag` unioned with `a.exceptAll(b)`
@@ -4346,47 +4381,20 @@ object SnapshotTable {
   }
 
   /** One CHANGE-FEED streaming micro-batch: the row-level changes of
-    * every published version in `(fromV, toV]`, tiled per commit
-    * (`fromV→v1, v1→v2, …` — [[readChanges]] per pair, so appends plan
-    * as pure added-file scans and DML as the honest multiset diff) and
-    * each tagged `_commit_version`. Every slice is served under
-    * `toV`'s schema — a slice whose own version predates a
-    * metadata-only RENAME is relabeled by physical storage name
-    * (logical name first, physical second, the [[readChanges]]
-    * alignment rule), never null-filled — so a feed crossing a rename
-    * stays lossless. Deterministic for a fixed range: a restarted
-    * stream replaying `(fromV, toV]` re-emits exactly the same rows. */
+    * every published version in `(fromV, toV]`, one per-commit tile
+    * each ([[ChangeRange.tiles]] — appends plan as pure added-file
+    * scans, DML as the honest multiset diff), tagged `_commit_version`
+    * and aligned straight to `toV`'s schema, so a tile predating a
+    * metadata-only RENAME is relabeled by physical storage name, never
+    * null-filled. Deterministic for a fixed range: a restarted stream
+    * replaying `(fromV, toV]` re-emits exactly the same rows. */
   private[sources] def streamChangeBatch(s: SparkSession, tableDir: String,
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    val all = versions(s, tableDir)
-    val (_, m2) = snapshotIn(s, tableDir, all, toV).getOrElse(
-      throw new IllegalArgumentException(
-        s"no published version <= $toV in $tableDir"))
-    val sc2 = storedSchema(m2.schema)
-    val vs = all.filter(v => v > fromV && v <= toV)
-    if (vs.isEmpty) return filesFrame(s, tableDir, m2, Nil, StructType(
-      StructField("change_type",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      stripPhys(sc2).fields.toSeq :+
-      StructField("_commit_version",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    ((fromV +: vs.dropRight(1)) zip vs).map { case (a, b) =>
-      val df = readChanges(s, tableDir, a, b)
-      // relabel b's logical names to toV's: logical identity first
-      // (stable across rewrites), physical storage name second (stable
-      // across renames); a column toV gained reads NULL, a widened one
-      // casts up — the readChanges readUnder rule, applied stream-side
-      val scB = storedSchema(readManifest(s, tableDir, b).schema)
-      df.select(col("change_type") +:
-        sc2.fields.toIndexedSeq.map { f =>
-          val src = scB.fields.find(_.name == f.name)
-            .orElse(scB.fields.find(g => physName(g) == physName(f)))
-            .filter(g => df.columns.contains(g.name))
-          src.map(g => col(g.name).cast(f.dataType)
-              .as(f.name, org.apache.spark.sql.types.Metadata.empty))
-            .getOrElse(lit(null).cast(f.dataType).as(f.name))
-        } :+ lit(b.toLong).as("_commit_version"): _*)
+    val r = new ChangeRange(s, tableDir, versions(s, tableDir), fromV, toV,
+      "change feed")
+    (if (r.tiles.isEmpty) Seq(r) else r.tiles).map { t =>
+      t.changes(r.schema).select(col("*"), lit(t.toV.toLong).as("_commit_version"))
     }.reduce(_.union(_))
   }
 
@@ -4403,26 +4411,16 @@ object SnapshotTable {
     * Returns the processed `(from, to]` range, None when caught up.
     * Single consumer per cursor by contract (the cursor is plain
     * read/write state, like a Kafka consumer-group offset). */
-  /** Is the whole range `(fromV, toV]` a pure APPEND CHAIN — every
-    * old file carried by reference, deletion vectors untouched? The
-    * exact condition under which [[readChanges]] serves the delta as
-    * added-file inserts with zero diff compute (a rewrite renames
-    * files, so a net subset check is sound). What the SQL FOLLOW
-    * doorway gates on: an append-chain feed is inserts-only by
-    * construction, so applying it downstream needs no merge. */
-  private[sources] def isAppendChain(s: SparkSession, tableDir: String,
-      fromV: Int, toV: Int): Boolean = {
-    val vs = versions(s, tableDir)
-    snapshotIn(s, tableDir, vs, toV).forall { case (_, m2) =>
-      val m1 = snapshotIn(s, tableDir, vs, fromV).map(_._2)
-      m1.map(_.paths.toSet).getOrElse(Set.empty)
-        .subsetOf(m2.paths.toSet) &&
-        m1.map(_.dels).getOrElse(Seq.empty) == m2.dels
-    }
-  }
-
   def followChanges(s: SparkSession, tableDir: String, cursorPath: String)(
-      f: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] = {
+      f: (DataFrame, Int, Int) => Unit): Option[(Int, Int)] =
+    followRange(s, tableDir, cursorPath)(r => f(r.changes(), r.fromV, r.toV))
+
+  /** [[followChanges]] handing `f` the [[ChangeRange]] itself, built
+    * from the one listing that found the latest version — so a
+    * consumer can test [[ChangeRange.appendChain]] without listing or
+    * decoding again (the SQL FOLLOW doorway). */
+  private[sources] def followRange(s: SparkSession, tableDir: String,
+      cursorPath: String)(f: ChangeRange => Unit): Option[(Int, Int)] = {
     val fsys = fs(s, tableDir)
     val cp = new HPath(cursorPath)
     val from: Int =
@@ -4432,7 +4430,8 @@ object SnapshotTable {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
         finally in.close()
       }
-    val to = versions(s, tableDir).lastOption.getOrElse(0)
+    val listing = versions(s, tableDir)
+    val to = listing.lastOption.getOrElse(0)
     if (to <= from) return None
     // Gate the cursor's filesystem BEFORE consuming: on a scheme whose
     // overwrite-rename is copy/delete the advance below would refuse
@@ -4441,7 +4440,7 @@ object SnapshotTable {
     // file on a filesystem vacuum() never sweeps.
     val scheme = Option(cp.toUri.getScheme).getOrElse(fsys.getScheme)
     if ("file" != scheme) requireAtomicRenameScheme(scheme)
-    f(readChanges(s, tableDir, from, to), from, to)
+    f(new ChangeRange(s, tableDir, listing, from, to, "followChanges"))
     val tmp = new HPath(cp.getParent, s".${cp.getName}.tmp")
     val out = fsys.create(tmp, true)
     try out.write(to.toString.getBytes("UTF-8")) finally out.close()
@@ -4515,33 +4514,21 @@ object SnapshotTable {
       .map(sc => stripPhys(storedSchema(sc)))
 
   /** One streaming micro-batch of a snapshot table: the rows ADDED
-    * going version `fromV` → `toV`. Pure append chains serve exactly
-    * the added files (zero planning compute). A rewrite in between
-    * (overwrite/merge/compaction) breaks append semantics: refused
-    * unless `ignoreChanges`, which then emits the new/rewritten files'
-    * rows (rewritten survivors re-emit — the documented Delta
-    * `ignoreChanges` contract; downstream must tolerate replays). */
+    * going version `fromV` → `toV` ([[ChangeRange.added]]). A rewrite
+    * in between (overwrite/merge/compaction/delete) breaks append
+    * semantics: refused unless `ignoreChanges`, which then emits the
+    * new/rewritten files' live rows (rewritten survivors re-emit — the
+    * documented Delta `ignoreChanges` contract — but a row the table no
+    * longer holds never does). */
   private[sources] def streamBatch(s: SparkSession, tableDir: String,
       fromV: Int, toV: Int, ignoreChanges: Boolean): DataFrame = {
-    val vs = versions(s, tableDir)
-    val (_, m2) = snapshotIn(s, tableDir, vs, toV).getOrElse(
-      throw new IllegalArgumentException(
-        s"no published version <= $toV in $tableDir"))
-    val m1 = snapshotIn(s, tableDir, vs, fromV).map(_._2)
-    require(fromV == 0 || m1.nonEmpty,
-      s"snapshot stream: version $fromV expired in $tableDir — the stream " +
-        "fell behind the vacuum retention window; restart from scratch")
-    val sc = storedSchema(m2.schema)
-    val paths1 = m1.map(_.paths.toSet).getOrElse(Set.empty)
-    require((paths1.subsetOf(m2.paths.toSet) &&
-        m1.map(_.dels).getOrElse(Seq.empty) == m2.dels) || ignoreChanges,
+    val r = new ChangeRange(s, tableDir, versions(s, tableDir), fromV, toV,
+      "snapshot stream")
+    require(r.appendChain || ignoreChanges,
       s"snapshot stream: $tableDir was REWRITTEN (overwrite/merge/compaction/" +
         s"delete) between versions $fromV and $toV — append semantics broken; " +
         "pass option ignoreChanges=true to stream new/rewritten files anyway")
-    // the added files' rows as written: under ignoreChanges a rewrite's
-    // survivors re-emit, and vectors are not subtracted
-    filesFrame(s, tableDir, m2,
-      m2.entries.filterNot(e => paths1.contains(e.path)), sc, withDels = false)
+    r.added
   }
 
   /** Metadata-only row count of a snapshot: the per-file row counts the

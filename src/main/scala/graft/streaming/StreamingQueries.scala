@@ -704,8 +704,9 @@ object StreamingQueries extends QueryPack {
     * consumes each commit's row-level changes exactly once, landed via
     * idempotent txn commits. One AvailableNow batch spans the whole
     * history, yet every change row still carries ITS OWN commit's
-    * version — the per-commit tiling lives in the source
-    * ([[graft.sources.SnapshotTable.streamChangeBatch]]), not in
+    * version — the per-commit tiling lives in the source's change
+    * range (`SnapshotTable.ChangeRange.tiles`, served by
+    * [[graft.sources.SnapshotTable.streamChangeBatch]]), not in
     * trigger pacing (which `SnapshotStreamSpec` covers separately via
     * `maxVersionsPerTrigger`). This is the standing incremental
     * pipeline shape: the MV machinery's batch cursor

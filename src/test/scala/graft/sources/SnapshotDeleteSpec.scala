@@ -136,6 +136,33 @@ class SnapshotDeleteSpec extends GraftSpec {
       .count() == 0)
   }
 
+  test("ignoreChanges never streams a row deleted inside the batch's range") {
+    import spark.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft-del8b-")
+      .toString + "/tbl"
+    SnapshotTable.commit(spark, t, Seq(1L, 2L, 3L).toDF("id"), overwrite = false)
+    SnapshotTable.commit(spark, t, Seq(4L, 5L).toDF("id"), overwrite = false)
+    assert(SnapshotTable.deleteWhere(spark, t, col("id") === 4L).contains(3))
+    // v2 added 4 and 5; v3 deleted 4: the table holds 5, not 4
+    assert(SnapshotTable.streamBatch(spark, t, 1, 3, ignoreChanges = true)
+      .collect().map(_.getLong(0)).toSet == Set(5L))
+    // the same through the streaming format: a fresh stream from v2
+    // serves the batch (1, 3]; from genesis it serves readAsOf(3)
+    def streamed(starting: Option[String]): Set[Long] = {
+      val name = s"del_leak_${starting.getOrElse("all")}"
+      val reader = spark.readStream.format("graft-snapshot")
+        .option("path", t).option("ignoreChanges", "true")
+      val q = starting.fold(reader)(reader.option("startingVersion", _)).load()
+        .writeStream.format("memory").queryName(name)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      spark.table(name).select("id").collect().map(_.getLong(0)).toSet
+    }
+    assert(streamed(Some("2")) == Set(5L))
+    assert(streamed(None) == ids(t, 3))
+  }
+
   test("a concurrent append mid-delete forces a serializable re-plan") {
     import spark.implicits._
     val t = freshTable("graft-del9-", n = 100, files = 2)
