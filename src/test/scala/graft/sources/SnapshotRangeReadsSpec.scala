@@ -48,6 +48,9 @@ class SnapshotRangeReadsSpec extends GraftSpec {
     assert((listings, decodes) == ((1L, 2L)))
     assert(tagged(feed) == Set(("insert", 5L), ("insert", 6L), ("insert", 8L),
       ("insert", 9L), ("delete", 2L), ("insert", 2L)))
+    // an empty range serves the same schema with zero rows
+    val empty = SnapshotTable.readChanges(spark, t, 4, 4)
+    assert(empty.schema == feed.schema && empty.count() == 0)
   }
 
   test("a 3-commit streamChangeBatch: one listing, one decode per version") {
@@ -61,6 +64,8 @@ class SnapshotRangeReadsSpec extends GraftSpec {
       (5L until 10L).map(i => (2L, "insert", i)).toSet ++ Set(
         (3L, "update_preimage", 2L), (3L, "update_postimage", 2L),
         (4L, "delete", 7L)))
+    val empty = SnapshotTable.streamChangeBatch(spark, t, 4, 4)
+    assert(empty.schema == batch.schema && empty.count() == 0)
   }
 
   test("GRAFT CHANGES … TILED: one listing, one decode per version") {
